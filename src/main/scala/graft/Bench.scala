@@ -135,55 +135,6 @@ object Bench {
     }
   }
 
-  /** Leave-one-out relative io flags — RECORD-ONLY in r18 (`io_rel_loo_
-    * flagged` in the artifact, never a gate). The in-pool median of
-    * [[ioFlags]] is diluted on 2-pass runs: with two readings the median
-    * is their midpoint, so a storm pass must read >~1.67× its clean
-    * sibling to trip at relMax 1.25 (BENCH_NOTES_r17 run-5 case study).
-    * Here each reading is judged against the median of the OTHER
-    * under-ceiling readings, so on a 2-pass run the comparison is direct
-    * — reading vs sibling. The threshold is ~1.4, NOT the gate's 1.25:
-    * the r16 campaign contains an adjudicated-clean pass pair at ×1.32
-    * (run-wide drift, not a storm), so 1.25 would false-flag known-clean
-    * data on this host. One round of recorded data decides whether this
-    * gates in r19 — the same adjudication-first path the io gate itself
-    * took (r15 data → r16 gate). A reading with no OTHER under-ceiling
-    * reading is never flagged (no baseline), and a reading OVER the
-    * absolute ceiling is never LOO-flagged either — it is already
-    * [[ioFlags]]-flagged, and keeping the fields disjoint means
-    * `io_rel_loo_flagged` isolates exactly the signal the diluted
-    * in-pool median misses. */
-  private[graft] def ioFlagsLoo(
-      readings: Seq[Double], absMax: Double, relLooMax: Double,
-      relMinExcess: Double): Seq[Boolean] =
-    readings.zipWithIndex.map { case (r, i) =>
-      r <= absMax && {
-        val others = readings.zipWithIndex
-          .collect { case (o, j) if j != i && o <= absMax => o }
-        others.nonEmpty && {
-          val ref = median(others)
-          r > relLooMax * ref && r - ref > relMinExcess
-        }
-      }
-    }
-
-  /** Run-level spread verdict — RECORD-ONLY (`io_spread_flagged`): true
-    * when the under-ceiling readings themselves span more than the
-    * relative band (max/min > relMax with the same absolute-excess
-    * floor). This is the majority-contamination tell the per-reading
-    * bounds cannot see (r17 advice): if a storm inflates MOST passes
-    * while all stay under the absolute ceiling, the in-pool median rises
-    * to storm level and every reading passes the relative gate — but the
-    * clean minority still drags the spread open. Needs ≥ 2 under-ceiling
-    * readings; all-over-ceiling runs are already fully flagged. */
-  private[graft] def ioSpreadFlagged(
-      readings: Seq[Double], absMax: Double, relMax: Double,
-      relMinExcess: Double): Boolean = {
-    val pool = readings.filter(_ <= absMax)
-    pool.size >= 2 &&
-      pool.max > relMax * pool.min && pool.max - pool.min > relMinExcess
-  }
-
   /** The driver-facing FINAL stdout line (r17 verdict #1): headline-only
     * JSON guaranteed to fit the driver's 2,000-char tail capture. The full
     * artifact (queries, per_run, env, thresholds — ~10 kB) goes to a FILE
@@ -197,8 +148,7 @@ object Bench {
   private[graft] def compactLine(
       total: Double, sfDir: String, runs: Int, cleanPasses: Int,
       allContaminated: Boolean, fallbackQs: Seq[String], canaryMinSec: Double,
-      ioReadings: Seq[Double], ioSpreadFlagged: Boolean,
-      artifactPath: String): String = {
+      ioReadings: Seq[Double], artifactPath: String): String = {
     val fallbackJson = fallbackQs.take(8).map("\"" + _ + "\"")
       .mkString("[", ",", "]")
     val ioBand =
@@ -210,7 +160,6 @@ object Bench {
       s""","dirty_fallback_count":${fallbackQs.size}""" +
       s""","dirty_fallback_queries":$fallbackJson""" +
       s""","canary_min_sec":${fmt(canaryMinSec)},"io_band":$ioBand""" +
-      s""","io_spread_flagged":$ioSpreadFlagged""" +
       s""","artifact":"$artifactPath"}"""
   }
 
@@ -342,7 +291,6 @@ object Bench {
     // exhaust. The floor can only make the bound meaningful, never laxer
     // than "any excess at all".
     val ioRel = math.max(1.01, threshold("io_canary_rel", 1.25))
-    val ioRelLoo = math.max(1.01, threshold("io_canary_rel_loo", 1.4))
     val ioRelMinExcess = math.max(0.0, threshold("io_rel_min_excess_sec", 0.1))
     def dirtyFlags(ps: Seq[Pass]): Seq[Boolean] =
       ps.zip(ioFlags(ps.map(_.ioCanary), ioAbs, ioRel, ioRelMinExcess))
@@ -377,13 +325,6 @@ object Bench {
     // final adjudication: same function, full evidence
     val ioFlagsFinal =
       ioFlags(passes.map(_.ioCanary).toSeq, ioAbs, ioRel, ioRelMinExcess)
-    // record-only instruments (r18): the leave-one-out per-reading flag
-    // and the run-level spread verdict join the artifact but never the
-    // gate — one round of live data decides whether either earns a gate
-    val ioLooFinal =
-      ioFlagsLoo(passes.map(_.ioCanary).toSeq, ioAbs, ioRelLoo, ioRelMinExcess)
-    val ioSpread =
-      ioSpreadFlagged(passes.map(_.ioCanary).toSeq, ioAbs, ioRel, ioRelMinExcess)
     val dirty = passes.toSeq.zip(ioFlagsFinal).map { case (p, f) => p.envDirty || f }
     val clean = passes.toSeq.zip(dirty).collect { case (p, false) => p }
     val usable = if (clean.nonEmpty) clean else passes.toSeq
@@ -446,15 +387,13 @@ object Bench {
       s""","outlier_min_excess_sec":${fmt(threshold("outlier_min_excess_sec", 5.0))}""" +
       s""","io_canary_max":${fmt(ioAbs)}""" +
       s""","io_canary_rel":${fmt(ioRel)}""" +
-      s""","io_canary_rel_loo":${fmt(ioRelLoo)}""" +
       s""","io_rel_min_excess_sec":${fmt(ioRelMinExcess)}""" +
-      s""","calibrated_on":"r7 sandbox host (docs/evidence/bench_r7_*.json); io gate r15 (docs/BENCH_NOTES_r15.md); relative io bound r17 (docs/BENCH_NOTES_r17.md); loo/spread record-only r18 (docs/BENCH_NOTES_r18.md)"}"""
+      s""","calibrated_on":"r7 sandbox host (docs/evidence/bench_r7_*.json); io gate r15 (docs/BENCH_NOTES_r15.md); relative io bound r17 (docs/BENCH_NOTES_r17.md)"}"""
     val runTotals = passes.map(p => fmt(p.q.values.sum)).mkString("[", ",", "]")
     val contamArr = dirty.mkString("[", ",", "]")
     val canaryArr = passes.map(p => fmt(p.canary)).mkString("[", ",", "]")
     val ioCanaryArr = passes.map(p => fmt(p.ioCanary)).mkString("[", ",", "]")
     val ioFlaggedArr = ioFlagsFinal.mkString("[", ",", "]")
-    val ioLooArr = ioLooFinal.mkString("[", ",", "]")
     val ioWrArr = passes.map(_.ioWrDelta).mkString("[", ",", "]")
     val envArr = passes.toSeq.zip(ioFlagsFinal).zip(dirty).map {
       case ((p, ioF), d) =>
@@ -467,7 +406,7 @@ object Bench {
     val outliersJson = outliers.map { case (i, q, r) =>
       s"""{"pass":${i + 1},"query":"$q","ratio":${fmt(r)}}""" }.mkString("[", ",", "]")
     val fallbackJson = fallbackQs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":${passes.size},"clean_passes":${clean.size},"all_passes_contaminated":$allContaminated,"dirty_fallback_queries":$fallbackJson,"run_totals":$runTotals,"contaminated":$contamArr,"contamination_note":"$note","query_outliers":$outliersJson,"canary_sec":$canaryArr,"io_canary_sec":$ioCanaryArr,"io_flagged":$ioFlaggedArr,"io_rel_loo_flagged":$ioLooArr,"io_spread_flagged":$ioSpread,"io_canary_wr_delta":$ioWrArr,"io_canary_warmup_sec":${fmt(ioWarm)},"io_canary_leading_sec":${fmt(ioLead)},"io_canary_leading_wr_delta":$ioLeadWr,"canary_iters":$CanaryIters,"queries_per_canary":$qsNorm,"contamination_thresholds":$thresholds,"per_run":$runs,"env":$envArr}"""
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":${passes.size},"clean_passes":${clean.size},"all_passes_contaminated":$allContaminated,"dirty_fallback_queries":$fallbackJson,"run_totals":$runTotals,"contaminated":$contamArr,"contamination_note":"$note","query_outliers":$outliersJson,"canary_sec":$canaryArr,"io_canary_sec":$ioCanaryArr,"io_flagged":$ioFlaggedArr,"io_canary_wr_delta":$ioWrArr,"io_canary_warmup_sec":${fmt(ioWarm)},"io_canary_leading_sec":${fmt(ioLead)},"io_canary_leading_wr_delta":$ioLeadWr,"canary_iters":$CanaryIters,"queries_per_canary":$qsNorm,"contamination_thresholds":$thresholds,"per_run":$runs,"env":$envArr}"""
     // FULL artifact -> FILE; COMPACT headline -> the final stdout line
     // (r17 verdict #1): the full artifact is ~10 kB on one line (92
     // queries x per_run arrays + env) and the driver captures a 2,000-char
@@ -486,7 +425,7 @@ object Bench {
     System.err.println(s"[bench] full artifact -> $artifactPath")
     val compact = compactLine(total, sfDir, passes.size, clean.size,
       allContaminated, fallbackQs, canMin, passes.map(_.ioCanary).toSeq,
-      ioSpread, artifactPath)
+      artifactPath)
     // stop Spark BEFORE emitting the JSON line, then quiesce both streams:
     // sbt reads stdout and stderr on separate threads and interleaves them
     // by arrival, so a JSON line printed while per-query stderr lines are

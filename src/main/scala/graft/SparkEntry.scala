@@ -7,8 +7,9 @@ import org.apache.spark.sql.types._
 
 import graft.functions.ColumnOps
 import graft.functions.TextAnalysis
-import graft.operators.{Corpus, Dedup, Hierarchy, History, Merge, Multimodal, Similarity}
+import graft.operators.{Ann, Corpus, Dedup, Hierarchy, History, Merge, Multimodal, Similarity}
 import graft.quality.Checks
+import graft.streaming.Streams
 import graft.warehouse.StarSchema
 
 /** Driver contract — one `queries` entry per implemented operator from
@@ -55,6 +56,196 @@ object SparkEntry {
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
+
+  // ==========================================================================
+  // Lifecycle fixtures (q71–q92): the set-up their constructions share
+  // ==========================================================================
+
+  /** Cut `df` at the `crawled_at` instants `cuts` into `cuts.size + 1`
+    * consecutive day slices. */
+  private def slicesAt(df: DataFrame, cuts: String*): Seq[DataFrame] = {
+    val c = cuts.map(lit(_).cast(TimestampType))
+    val ts = col("crawled_at")
+    (0 to c.size).map {
+      case 0 => df.filter(ts < c(0))
+      case i if i == c.size => df.filter(ts >= c(i - 1))
+      case i => df.filter(ts >= c(i - 1) && ts < c(i))
+    }
+  }
+
+  /** `events` as CDC observations, one per event; `event_id` rides along
+    * as the latest-per-key tie-break. */
+  private def cdcObservations(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events").select(
+      col("user_id").as("product_id"),
+      col("value").as("price"),
+      (col("value") + 10.0).as("original_price"),
+      lit(null).cast(DoubleType).as("discount_percent"),
+      (col("event_id") % 100).as("sales_count"),
+      col("ts").as("crawled_at"),
+      col("event_id"))
+
+  /** Each key's latest observation derived against the history before
+    * 2024-01-16 (q33), state older than `staleHorizon` treated as absent. */
+  private def cdcDerived(s: SparkSession, dir: String,
+      staleHorizon: Option[String]): DataFrame = {
+    val ev = cdcObservations(s, dir)
+    val hist = ev.filter(col("crawled_at") < lit("2024-01-16 00:00:00").cast(TimestampType)).drop("event_id")
+    val batch = Merge.latestPerKey(ev, Seq("product_id"), "crawled_at", Seq(col("event_id").desc)).drop("event_id")
+    History.deriveEvents(batch, hist, None, staleHorizon = staleHorizon)
+      .withColumn("crawled_at", date_trunc("second", col("crawled_at")))
+      .orderBy(col("product_id"))
+  }
+
+  /** A slice's latest observation per key, as one CDC sink batch. */
+  private def latestBatch(slice: DataFrame): DataFrame =
+    // checkpointed: cdcProcessBatch evaluates its batch twice (the
+    // bucket-prune collect + the derive), and here each evaluation
+    // would re-run the latest-per-key window over the slice — pin the
+    // tiny batch once instead (the streaming sink's batches are cheap
+    // file re-reads and stay unpinned; this is the construction path)
+    Merge.latestPerKey(slice, Seq("product_id"), "crawled_at",
+      Seq(col("event_id").desc)).drop("event_id").localCheckpoint()
+
+  /** The q76 CDC sink run: three day slices through `process` (default:
+    * cdcProcessBatch) as batches 0-2 of an event tree in `query`'s
+    * scratch. Returns the tree's path. */
+  private def cdcSinkRun(s: SparkSession, dir: String, query: String)(
+      process: (DataFrame, String, Long) => Unit = Streams.cdcProcessBatch(_, _, _)): String = {
+    val histPath = s"${scratch(query, dir)}/history"
+    slicesAt(cdcObservations(s, dir), "2024-01-11 00:00:00", "2024-01-21 00:00:00")
+      .zipWithIndex.foreach { case (sl, i) => process(latestBatch(sl), histPath, i.toLong) }
+    histPath
+  }
+
+  /** An event tree's rows in full, by batch then key. */
+  private def cdcEventRows(tree: DataFrame): DataFrame =
+    tree.select(col("product_id"), col("price"), col("original_price"),
+        col("discount_percent"), col("discount_amount"),
+        col("price_change"), col("price_change_percent"),
+        col("previous_price"), col("previous_original_price"), col("previous_discount_percent"),
+        col("sales_count"), col("sales_change"), col("is_flash_sale"), col("crawl_type"),
+        date_trunc("second", col("crawled_at")).as("crawled_at"),
+        col("batch_id").cast(LongType).as("batch_id"))
+      .orderBy(col("batch_id"), col("product_id"))
+
+  /** An event tree's price/sales columns only. */
+  private def cdcEventSummary(tree: DataFrame): DataFrame =
+    tree.select(col("product_id"), col("price"), col("previous_price"),
+      col("price_change"), col("sales_count"), col("sales_change"),
+      col("crawl_type"), date_trunc("second", col("crawled_at")).as("crawled_at"),
+      col("batch_id").cast(LongType).as("batch_id"))
+
+  /** Six 5-day slices of January 2024. */
+  private val FiveDayCuts = Seq("2024-01-06", "2024-01-11", "2024-01-16", "2024-01-21",
+    "2024-01-26").map(d => s"$d 00:00:00")
+
+  private val ObsSchema = "product_id STRING, price DOUBLE, sales_count BIGINT, crawled_at TIMESTAMP"
+
+  /** `events` thinned by `thin` as streaming observations: string key,
+    * price, `optional` columns, event time. */
+  private def streamObs(s: SparkSession, dir: String, thin: Column,
+      optional: Column*): DataFrame =
+    t(s, dir, "events").filter(thin).select(
+      Seq(concat(lit("u"), col("user_id").cast(StringType)).as("product_id"),
+        col("value").as("price")) ++ optional :+ col("ts").as("crawled_at"): _*)
+
+  private val obsSalesCount = (col("event_id") % 100).cast(LongType).as("sales_count")
+
+  /** Append each slice to `root/src` and run `op` over the file stream to
+    * completion: one micro-batch per slice, with a query RESTART between
+    * slices, so state crosses batches only through the checkpoint at
+    * `root/ckpt`. Returns the parquet sink dir. `obs` sizes the keyed
+    * state; callers checkpoint it, as each slice write would otherwise
+    * re-run the events scan + filter + projection. */
+  private def restartEachSlice(root: String, obs: DataFrame, slices: Seq[DataFrame])(
+      op: DataFrame => org.apache.spark.sql.Dataset[_]): String = {
+    val s = obs.sparkSession
+    val srcDir = s"$root/src"; val outDir = s"$root/out"
+    // keyed-state shuffle partitions DERIVED from the stream's own
+    // catalog estimate (Streams.stateShufflePartitions' documented
+    // sizing rule — the pre-r19 literal `8` was tuned to this catalog):
+    // the count is pinned into the checkpoint at first start, and every
+    // restart re-opens one state store per partition. One cheap
+    // approx-distinct job over the checkpointed key column pays for it.
+    val statePartitions = Streams.stateShufflePartitions(
+      obs.agg(approx_count_distinct(col("product_id"))).head.getLong(0))
+    slices.foreach { sl =>
+      sl.write.mode("append").parquet(srcDir)
+      // session conf restored after each start (the stream holds its own
+      // copy); a real deployment sizes this to its catalog
+      val before = s.conf.get("spark.sql.shuffle.partitions")
+      s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      try {
+        val q = op(s.readStream.schema(ObsSchema).parquet(srcDir)).writeStream
+          .option("checkpointLocation", s"$root/ckpt")
+          .format("parquet").option("path", outDir).outputMode("append").start()
+        q.processAllAvailable(); q.stop()
+      } finally s.conf.set("spark.sql.shuffle.partitions", before)
+    }
+    outDir
+  }
+
+  /** A streaming CDC sink's change events, by key then event time. */
+  private def streamCdcRows(s: SparkSession, outDir: String): DataFrame =
+    s.read.parquet(outDir)
+      .select(col("product_id"), col("crawl_type"), col("price"),
+        col("previous_price"), col("price_change"), col("sales_change"),
+        date_trunc("second", col("crawled_at")).as("crawled_at"))
+      .orderBy(col("product_id"), col("crawled_at"))
+
+  /** The ingest fixture: `documents` split by `doc_id % 5` into batches
+    * b1..b`batches` (residues 0..batches-1) and a corpus (the rest). The
+    * corpus is indexed at `path` and b1 ingested through Dedup.ingestCycle
+    * — the ledgered path (dedup → append survivors → stats row), so the
+    * oracle gates the exact append it performs. Returns b2..b`batches`. */
+  private def ingestFixture(s: SparkSession, dir: String, path: String,
+      batches: Int): Seq[DataFrame] = {
+    val docs = t(s, dir, "documents")
+    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(
+      docs.filter(col("doc_id") % 5 >= batches), "doc_id", "text"), path)
+    Dedup.ingestCycle(docs.filter(col("doc_id") % 5 === 0), path, "doc_id", "text", threshold = 0.3)
+    (1 until batches).map(i => docs.filter(col("doc_id") % 5 === i))
+  }
+
+  /** A batch's dedup verdicts against the index at `path`. */
+  private def verdicts(s: SparkSession, batch: DataFrame, path: String): DataFrame =
+    Dedup.dedupAgainstIndex(batch, Dedup.readMinhashIndex(s, path),
+      "doc_id", "text", threshold = 0.3)
+      .select(col("id").as("doc_id"), col("is_dup"), col("dup_of"), col("jaccard"))
+
+  /** The id manifest at `path` in the verdict columns, tagged `phase`. */
+  private def manifestListing(s: SparkSession, path: String, phase: Long): DataFrame =
+    Dedup.minhashIndexIds(s, path).select(
+      lit(phase).as("phase"), col("id").as("doc_id"),
+      lit(null).cast(BooleanType).as("is_dup"),
+      lit(null).cast(LongType).as("dup_of"),
+      lit(null).cast(DoubleType).as("jaccard"))
+
+  /** The first `n` embedding vectors, as injected IVF centroids. */
+  private def firstVectors(emb: DataFrame, n: Int): Array[Array[Double]] =
+    // ≤16 rows collected: same capped driver-side exception as readIvf's
+    // centroid load (documented in Ann)
+    emb.filter(col("vec_id") < n)
+      .orderBy("vec_id").select("embedding").collect()
+      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+
+  /** The IVF fixture: an 8-list layout at `path` with INJECTED centroids
+    * (the first 8 embeddings), built over `vec_id % 5 != 4` and then
+    * appended the rest. Returns `embeddings`. */
+  private def ivfFixture(s: SparkSession, dir: String, path: String): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    Ann.writeIvf(Ann.buildIvfFixed(emb.filter(col("vec_id") % 5 =!= 4),
+      "vec_id", "embedding", firstVectors(emb, 8)), path)
+    Ann.appendToIvf(emb.filter(col("vec_id") % 5 === 4), path, "vec_id", "embedding")
+    emb
+  }
+
+  /** The IVF probe: top-5 over 4 lists for every 101st vector. */
+  private def ivfProbe(s: SparkSession, emb: DataFrame, path: String): DataFrame =
+    Ann.ivfTopK(emb.filter(col("vec_id") % 101 === 7), Ann.readIvf(s, path),
+      "vec_id", "embedding", k = 5, nprobe = 4)
+      .withColumn("rank", col("rank").cast(LongType))
 
   // ==========================================================================
   // Queries
@@ -411,19 +602,7 @@ object SparkEntry {
 
     // --- CDC history derivation (J7 + X13–X15 + F7) --------------------------
     "q33_history_cdc" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(
-        col("user_id").as("product_id"),
-        col("value").as("price"),
-        (col("value") + 10.0).as("original_price"),
-        lit(null).cast(DoubleType).as("discount_percent"),
-        (col("event_id") % 100).as("sales_count"),
-        col("ts").as("crawled_at"),
-        col("event_id"))
-      val hist = ev.filter(col("crawled_at") < lit("2024-01-16 00:00:00").cast(TimestampType)).drop("event_id")
-      val batch = Merge.latestPerKey(ev, Seq("product_id"), "crawled_at", Seq(col("event_id").desc)).drop("event_id")
-      History.deriveEvents(batch, hist, None)
-        .withColumn("crawled_at", date_trunc("second", col("crawled_at")))
-        .orderBy(col("product_id"))
+      cdcDerived(s, dir, staleHorizon = None)
     }),
 
     // --- P1/P2/F1: nested→flat transform with normalization + validation ----
@@ -1162,18 +1341,9 @@ object SparkEntry {
     //     ingest path (dedup → append survivors → stats row) — so the
     //     oracle gates the exact append that path performs. ----------------
     "q71_ingest_cycle" -> ((s, dir) => {
-      val scratchDir = scratch("q71", dir)
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 >= 2)
-      val b1 = docs.filter(col("doc_id") % 5 === 0)
-      val b2 = docs.filter(col("doc_id") % 5 === 1)
-      Dedup.writeMinhashIndex(
-        Dedup.buildMinhashIndex(corpus, "doc_id", "text"), scratchDir)
-      Dedup.ingestCycle(b1, scratchDir, "doc_id", "text", threshold = 0.3)
-      Dedup.dedupAgainstIndex(b2, Dedup.readMinhashIndex(s, scratchDir),
-        "doc_id", "text", threshold = 0.3)
-        .select(col("id").as("doc_id"), col("is_dup"), col("dup_of"), col("jaccard"))
-        .orderBy(col("doc_id"))
+      val path = scratch("q71", dir)
+      val Seq(b2) = ingestFixture(s, dir, path, batches = 2)
+      verdicts(s, b2, path).orderBy(col("doc_id"))
     }),
 
     // --- S2 + F6/H4: flat category-list JSON (assembled from region/nation
@@ -1216,22 +1386,12 @@ object SparkEntry {
     //     asserts the file counts actually drop. Like q71 this RUNS index
     //     writes at construction; per-(sfDir, pid) scratch wiped at entry. -
     "q73_compacted_ingest" -> ((s, dir) => {
-      val scratchDir = scratch("q73", dir)
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 >= 3)
-      val b1 = docs.filter(col("doc_id") % 5 === 0)
-      val b2 = docs.filter(col("doc_id") % 5 === 1)
-      val b3 = docs.filter(col("doc_id") % 5 === 2)
-      Dedup.writeMinhashIndex(
-        Dedup.buildMinhashIndex(corpus, "doc_id", "text"), scratchDir)
-      Dedup.ingestCycle(b1, scratchDir, "doc_id", "text", threshold = 0.3)
-      Dedup.compactMinhashIndex(s, scratchDir)
-      Dedup.ingestCycle(b2, scratchDir, "doc_id", "text", threshold = 0.3)
-      Dedup.compactMinhashIndex(s, scratchDir)
-      Dedup.dedupAgainstIndex(b3, Dedup.readMinhashIndex(s, scratchDir),
-        "doc_id", "text", threshold = 0.3)
-        .select(col("id").as("doc_id"), col("is_dup"), col("dup_of"), col("jaccard"))
-        .orderBy(col("doc_id"))
+      val path = scratch("q73", dir)
+      val Seq(b2, b3) = ingestFixture(s, dir, path, batches = 3)
+      Dedup.compactMinhashIndex(s, path)
+      Dedup.ingestCycle(b2, path, "doc_id", "text", threshold = 0.3)
+      Dedup.compactMinhashIndex(s, path)
+      verdicts(s, b3, path).orderBy(col("doc_id"))
     }),
 
     // --- IVF math under the oracle: INJECTED centroids (the first 8
@@ -1245,23 +1405,10 @@ object SparkEntry {
     //     Like q65 this RUNS index writes at construction; per-(sfDir, pid)
     //     scratch wiped at entry. ------------------------------------------
     "q74_ivf_fixed" -> ((s, dir) => {
-      import graft.operators.Ann
-      val scratchDir = scratch("q74", dir)
-      val emb = t(s, dir, "embeddings")
-      // ≤8 rows collected: same capped driver-side exception as readIvf's
-      // centroid load (documented in Ann)
-      val centroids: Array[Array[Double]] = emb.filter(col("vec_id") < 8)
-        .orderBy("vec_id").select("embedding").collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val initial = emb.filter(col("vec_id") % 5 =!= 4)
-      val batch = emb.filter(col("vec_id") % 5 === 4)
-      Ann.writeIvf(Ann.buildIvfFixed(initial, "vec_id", "embedding", centroids), scratchDir)
-      Ann.appendToIvf(batch, scratchDir, "vec_id", "embedding")
-      Ann.compactIvf(s, scratchDir)
-      Ann.ivfTopK(emb.filter(col("vec_id") % 101 === 7), Ann.readIvf(s, scratchDir),
-        "vec_id", "embedding", k = 5, nprobe = 4)
-        .withColumn("rank", col("rank").cast(LongType))
-        .orderBy(col("query_id"), col("rank"))
+      val path = scratch("q74", dir)
+      val emb = ivfFixture(s, dir, path)
+      Ann.compactIvf(s, path)
+      ivfProbe(s, emb, path).orderBy(col("query_id"), col("rank"))
     }),
 
     // --- §2.10 STATEFUL CDC, oracle-gated: flatMapGroupsWithState over a
@@ -1275,54 +1422,12 @@ object SparkEntry {
     //     streaming queries at construction; per-(sfDir, pid) scratch wiped
     //     at entry. ---------------------------------------------------------
     "q75_stateful_cdc" -> ((s, dir) => {
-      import graft.streaming.Streams
+      import s.implicits._
       val root = scratch("q75", dir)
-      val srcDir = s"$root/src"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
-      // checkpointed: each of the three slice writes below re-evaluated the
-      // events scan + filter + projection otherwise
-      val obs = t(s, dir, "events").filter(col("user_id") % 3 === 0).select(
-        concat(lit("u"), col("user_id").cast(StringType)).as("product_id"),
-        col("value").as("price"),
-        (col("event_id") % 100).cast(LongType).as("sales_count"),
-        col("ts").as("crawled_at")).localCheckpoint()
-      // keyed-state shuffle partitions DERIVED from the stream's own
-      // catalog estimate (Streams.stateShufflePartitions' documented
-      // sizing rule — the pre-r19 literal `8` was tuned to this catalog):
-      // the count is pinned into the checkpoint at first start, and every
-      // restart re-opens one state store per partition. One cheap
-      // approx-distinct job over the checkpointed key column pays for it.
-      val statePartitions = graft.streaming.Streams.stateShufflePartitions(
-        obs.agg(approx_count_distinct(col("product_id"))).head.getLong(0))
-      def run(): Unit = {
-        import s.implicits._
-        // session conf restored after each start (the stream holds its own
-        // copy); a real deployment sizes this to its catalog
-        val before = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        try {
-          val src = s.readStream
-            .schema("product_id STRING, price DOUBLE, sales_count BIGINT, crawled_at TIMESTAMP")
-            .parquet(srcDir).as[Streams.ProductObs]
-          val q = Streams.statefulCdc(src).writeStream
-            .option("checkpointLocation", ckpt)
-            .format("parquet").option("path", outDir).outputMode("append").start()
-          q.processAllAvailable(); q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      }
-      val cuts = Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00").map(c => lit(c).cast(TimestampType))
-      val slices = Seq(
-        obs.filter(col("crawled_at") < cuts(0)),
-        obs.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        obs.filter(col("crawled_at") >= cuts(1)))
-      slices.foreach { sl =>
-        sl.write.mode("append").parquet(srcDir)
-        run() // one micro-batch per slice; restart restores state from the checkpoint
-      }
-      s.read.parquet(outDir)
-        .select(col("product_id"), col("crawl_type"), col("price"),
-          col("previous_price"), col("price_change"), col("sales_change"),
-          date_trunc("second", col("crawled_at")).as("crawled_at"))
-        .orderBy(col("product_id"), col("crawled_at"))
+      val obs = streamObs(s, dir, col("user_id") % 3 === 0, obsSalesCount).localCheckpoint()
+      streamCdcRows(s, restartEachSlice(root, obs,
+        slicesAt(obs, "2024-01-11 00:00:00", "2024-01-21 00:00:00"))(
+        src => Streams.statefulCdc(src.as[Streams.ProductObs])))
     }),
 
     // --- §2.10 streaming CDC SINK, oracle-gated end-to-end: three keyed
@@ -1337,40 +1442,8 @@ object SparkEntry {
     //     this RUNS generational writes at construction; per-(sfDir, pid)
     //     scratch wiped at entry. -------------------------------------------
     "q76_cdc_sink" -> ((s, dir) => {
-      val root = scratch("q76", dir)
-      val histPath = s"$root/history"
-      val ev = t(s, dir, "events").select(
-        col("user_id").as("product_id"),
-        col("value").as("price"),
-        (col("value") + 10.0).as("original_price"),
-        lit(null).cast(DoubleType).as("discount_percent"),
-        (col("event_id") % 100).as("sales_count"),
-        col("ts").as("crawled_at"),
-        col("event_id"))
-      val cuts = Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00").map(c => lit(c).cast(TimestampType))
-      val slices = Seq(
-        ev.filter(col("crawled_at") < cuts(0)),
-        ev.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        ev.filter(col("crawled_at") >= cuts(1)))
-      slices.zipWithIndex.foreach { case (sl, i) =>
-        // checkpointed: cdcProcessBatch evaluates its batch twice (the
-        // bucket-prune collect + the derive), and here each evaluation
-        // would re-run the latest-per-key window over the slice — pin the
-        // tiny batch once instead (the streaming sink's batches are cheap
-        // file re-reads and stay unpinned; this is the construction path)
-        val batch = Merge.latestPerKey(sl, Seq("product_id"), "crawled_at",
-          Seq(col("event_id").desc)).drop("event_id").localCheckpoint()
-        graft.streaming.Streams.cdcProcessBatch(batch, histPath, i.toLong)
-      }
-      s.read.parquet(histPath)
-        .select(col("product_id"), col("price"), col("original_price"),
-          col("discount_percent"), col("discount_amount"),
-          col("price_change"), col("price_change_percent"),
-          col("previous_price"), col("previous_original_price"), col("previous_discount_percent"),
-          col("sales_count"), col("sales_change"), col("is_flash_sale"), col("crawl_type"),
-          date_trunc("second", col("crawled_at")).as("crawled_at"),
-          col("batch_id").cast(LongType).as("batch_id"))
-        .orderBy(col("batch_id"), col("product_id"))
+      val histPath = cdcSinkRun(s, dir, "q76")()
+      cdcEventRows(s.read.parquet(histPath))
     }),
 
     // --- S9 for the STREAMING event tree, oracle-gated: the q76 pipeline
@@ -1383,38 +1456,9 @@ object SparkEntry {
     //     the live set). Companion generations under `_latest/` are
     //     untouched by construction. -----------------------------------------
     "q77_event_archive" -> ((s, dir) => {
-      val root = scratch("q77", dir)
-      val histPath = s"$root/history"
-      val ev = t(s, dir, "events").select(
-        col("user_id").as("product_id"),
-        col("value").as("price"),
-        (col("value") + 10.0).as("original_price"),
-        lit(null).cast(DoubleType).as("discount_percent"),
-        (col("event_id") % 100).as("sales_count"),
-        col("ts").as("crawled_at"),
-        col("event_id"))
-      val cuts = Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00").map(c => lit(c).cast(TimestampType))
-      val slices = Seq(
-        ev.filter(col("crawled_at") < cuts(0)),
-        ev.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        ev.filter(col("crawled_at") >= cuts(1)))
-      slices.zipWithIndex.foreach { case (sl, i) =>
-        // checkpointed: cdcProcessBatch evaluates its batch twice (the
-        // bucket-prune collect + the derive), and here each evaluation
-        // would re-run the latest-per-key window over the slice — pin the
-        // tiny batch once instead (the streaming sink's batches are cheap
-        // file re-reads and stay unpinned; this is the construction path)
-        val batch = Merge.latestPerKey(sl, Seq("product_id"), "crawled_at",
-          Seq(col("event_id").desc)).drop("event_id").localCheckpoint()
-        graft.streaming.Streams.cdcProcessBatch(batch, histPath, i.toLong)
-      }
-      graft.streaming.Streams.archiveEventLog(s, histPath, "2024-01-21 00:00:00")
-      s.read.parquet(histPath)
-        .select(col("product_id"), col("price"), col("previous_price"),
-          col("price_change"), col("sales_count"), col("sales_change"),
-          col("crawl_type"), date_trunc("second", col("crawled_at")).as("crawled_at"),
-          col("batch_id").cast(LongType).as("batch_id"))
-        .orderBy(col("product_id"))
+      val histPath = cdcSinkRun(s, dir, "q77")()
+      Streams.archiveEventLog(s, histPath, "2024-01-21 00:00:00")
+      cdcEventSummary(s.read.parquet(histPath)).orderBy(col("product_id"))
     }),
 
     // --- §2.10 batch→streaming MIGRATION, oracle-gated: statefulCdcFrom
@@ -1426,32 +1470,21 @@ object SparkEntry {
     //     sightings — the oracle reproduces this by unioning the seed rows
     //     as virtual order-0 observations under the same lag window. ---------
     "q78_bootstrap_cdc" -> ((s, dir) => {
-      import graft.streaming.Streams
       val root = scratch("q78", dir)
       val srcDir = s"$root/src"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
-      val obs = t(s, dir, "events").filter(col("user_id") % 3 === 0).select(
-        concat(lit("u"), col("user_id").cast(StringType)).as("product_id"),
-        col("value").as("price"),
-        (col("event_id") % 100).cast(LongType).as("sales_count"),
-        col("ts").as("crawled_at"))
+      val obs = streamObs(s, dir, col("user_id") % 3 === 0, obsSalesCount)
       val cut = lit("2024-01-16 00:00:00").cast(TimestampType)
       val snapshot = Merge.latestPerKey(
         obs.filter(col("crawled_at") < cut),
         Seq("product_id"), "crawled_at", Seq(col("price").desc, col("sales_count").desc))
       obs.filter(col("crawled_at") >= cut).write.mode("overwrite").parquet(srcDir)
       import s.implicits._
-      val src = s.readStream
-        .schema("product_id STRING, price DOUBLE, sales_count BIGINT, crawled_at TIMESTAMP")
-        .parquet(srcDir).as[Streams.ProductObs]
+      val src = s.readStream.schema(ObsSchema).parquet(srcDir).as[Streams.ProductObs]
       val q = Streams.statefulCdcFrom(src, snapshot).writeStream
         .option("checkpointLocation", ckpt)
         .format("parquet").option("path", outDir).outputMode("append").start()
       q.processAllAvailable(); q.stop()
-      s.read.parquet(outDir)
-        .select(col("product_id"), col("crawl_type"), col("price"),
-          col("previous_price"), col("price_change"), col("sales_change"),
-          date_trunc("second", col("crawled_at")).as("crawled_at"))
-        .orderBy(col("product_id"), col("crawled_at"))
+      streamCdcRows(s, outDir)
     }),
 
     // --- §2.10 staleness re-classification, oracle-gated: q33's derivation
@@ -1463,19 +1496,7 @@ object SparkEntry {
     //     reference's recency policy, tasks/detail.py:196-216), decided in
     //     event time so it is deterministic and hash-gateable. --------------
     "q79_stale_cdc" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(
-        col("user_id").as("product_id"),
-        col("value").as("price"),
-        (col("value") + 10.0).as("original_price"),
-        lit(null).cast(DoubleType).as("discount_percent"),
-        (col("event_id") % 100).as("sales_count"),
-        col("ts").as("crawled_at"),
-        col("event_id"))
-      val hist = ev.filter(col("crawled_at") < lit("2024-01-16 00:00:00").cast(TimestampType)).drop("event_id")
-      val batch = Merge.latestPerKey(ev, Seq("product_id"), "crawled_at", Seq(col("event_id").desc)).drop("event_id")
-      History.deriveEvents(batch, hist, None, staleHorizon = Some("15 DAYS"))
-        .withColumn("crawled_at", date_trunc("second", col("crawled_at")))
-        .orderBy(col("product_id"))
+      cdcDerived(s, dir, staleHorizon = Some("15 DAYS"))
     }),
 
     // --- archive retention tier, oracle-gated: the q77 pipeline, archival
@@ -1488,38 +1509,10 @@ object SparkEntry {
     //     hash). Like q65/q76 this RUNS generational writes at
     //     construction; per-(sfDir, pid) scratch wiped at entry. -------------
     "q80_archive_compact" -> ((s, dir) => {
-      val root = scratch("q80", dir)
-      val histPath = s"$root/history"
-      val ev = t(s, dir, "events").select(
-        col("user_id").as("product_id"),
-        col("value").as("price"),
-        (col("value") + 10.0).as("original_price"),
-        lit(null).cast(DoubleType).as("discount_percent"),
-        (col("event_id") % 100).as("sales_count"),
-        col("ts").as("crawled_at"),
-        col("event_id"))
-      val cuts = Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00").map(c => lit(c).cast(TimestampType))
-      val slices = Seq(
-        ev.filter(col("crawled_at") < cuts(0)),
-        ev.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        ev.filter(col("crawled_at") >= cuts(1)))
-      slices.zipWithIndex.foreach { case (sl, i) =>
-        // checkpointed: cdcProcessBatch evaluates its batch twice (the
-        // bucket-prune collect + the derive), and here each evaluation
-        // would re-run the latest-per-key window over the slice — pin the
-        // tiny batch once instead (the streaming sink's batches are cheap
-        // file re-reads and stay unpinned; this is the construction path)
-        val batch = Merge.latestPerKey(sl, Seq("product_id"), "crawled_at",
-          Seq(col("event_id").desc)).drop("event_id").localCheckpoint()
-        graft.streaming.Streams.cdcProcessBatch(batch, histPath, i.toLong)
-      }
-      graft.streaming.Streams.archiveEventLog(s, histPath, "2024-01-21 00:00:00")
-      graft.streaming.Streams.compactArchive(s, histPath)
-      s.read.parquet(s"$histPath/_archive")
-        .select(col("product_id"), col("price"), col("previous_price"),
-          col("price_change"), col("sales_count"), col("sales_change"),
-          col("crawl_type"), date_trunc("second", col("crawled_at")).as("crawled_at"),
-          col("batch_id").cast(LongType).as("batch_id"))
+      val histPath = cdcSinkRun(s, dir, "q80")()
+      Streams.archiveEventLog(s, histPath, "2024-01-21 00:00:00")
+      Streams.compactArchive(s, histPath)
+      cdcEventSummary(s.read.parquet(s"$histPath/_archive"))
         .orderBy(col("batch_id"), col("product_id"))
     }),
 
@@ -1537,58 +1530,13 @@ object SparkEntry {
     //     proves the streaming eviction semantics, not just the happy
     //     path. ----------------------------------------------------------
     "q81_event_ttl_cdc" -> ((s, dir) => {
-      import graft.streaming.Streams
+      import s.implicits._
       val root = scratch("q81", dir)
-      val srcDir = s"$root/src"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
-      // checkpointed: each of the six slice writes below re-evaluated the
-      // events scan + filter + projection otherwise
-      val obs = t(s, dir, "events")
-        .filter(col("user_id") % 3 === 0 && col("event_id") % 8 === 0).select(
-          concat(lit("u"), col("user_id").cast(StringType)).as("product_id"),
-          col("value").as("price"),
-          (col("event_id") % 100).cast(LongType).as("sales_count"),
-          col("ts").as("crawled_at")).localCheckpoint()
-      // keyed-state shuffle partitions DERIVED from the stream's own
-      // catalog estimate (q75's rationale, Streams.stateShufflePartitions'
-      // sizing rule): pinned into the checkpoint at first start; every one
-      // of the SIX restarts re-opens one state store per partition
-      val statePartitions = graft.streaming.Streams.stateShufflePartitions(
-        obs.agg(approx_count_distinct(col("product_id"))).head.getLong(0))
-      def run(): Unit = {
-        import s.implicits._
-        // session conf restored after each start (the stream holds its own
-        // copy); a real deployment sizes this to its catalog
-        val before = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        try {
-          val src = s.readStream
-            .schema("product_id STRING, price DOUBLE, sales_count BIGINT, crawled_at TIMESTAMP")
-            .parquet(srcDir).as[Streams.ProductObs]
-          val q = Streams.statefulCdcEventTime(src, ttlMs = 4L * 24 * 3600 * 1000)
-            .writeStream
-            .option("checkpointLocation", ckpt)
-            .format("parquet").option("path", outDir).outputMode("append").start()
-          q.processAllAvailable(); q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      }
-      val cuts = Seq("2024-01-06", "2024-01-11", "2024-01-16", "2024-01-21", "2024-01-26")
-        .map(c => lit(s"$c 00:00:00").cast(TimestampType))
-      val slices = Seq(
-        obs.filter(col("crawled_at") < cuts(0)),
-        obs.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        obs.filter(col("crawled_at") >= cuts(1) && col("crawled_at") < cuts(2)),
-        obs.filter(col("crawled_at") >= cuts(2) && col("crawled_at") < cuts(3)),
-        obs.filter(col("crawled_at") >= cuts(3) && col("crawled_at") < cuts(4)),
-        obs.filter(col("crawled_at") >= cuts(4)))
-      slices.foreach { sl =>
-        sl.write.mode("append").parquet(srcDir)
-        run() // one micro-batch per slice; restart restores watermark + state
-      }
-      s.read.parquet(outDir)
-        .select(col("product_id"), col("crawl_type"), col("price"),
-          col("previous_price"), col("price_change"), col("sales_change"),
-          date_trunc("second", col("crawled_at")).as("crawled_at"))
-        .orderBy(col("product_id"), col("crawled_at"))
+      val obs = streamObs(s, dir, col("user_id") % 3 === 0 && col("event_id") % 8 === 0,
+        obsSalesCount).localCheckpoint()
+      streamCdcRows(s, restartEachSlice(root, obs, slicesAt(obs, FiveDayCuts: _*))(
+        src => Streams.statefulCdcEventTime(src.as[Streams.ProductObs],
+          ttlMs = 4L * 24 * 3600 * 1000)))
     }),
 
     // --- STREAMING EXACT DEDUP under the oracle: dedupStream
@@ -1604,53 +1552,14 @@ object SparkEntry {
     //     watermark recursion q81 pinned down (max event ms over earlier
     //     batches, strict >). -----------------------------------------------
     "q84_stream_dedup" -> ((s, dir) => {
-      import graft.streaming.Streams
       val root = scratch("q84", dir)
-      val srcDir = s"$root/src"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
-      // checkpointed: each of the six slice writes below re-evaluated the
-      // events scan + filter + projection otherwise
-      val obs = t(s, dir, "events")
-        .filter(col("user_id") % 3 === 0 && col("event_id") % 8 === 0).select(
-          concat(lit("u"), col("user_id").cast(StringType)).as("product_id"),
-          col("value").as("price"),
-          (col("event_id") % 100).cast(LongType).as("sales_count"),
-          col("ts").as("crawled_at"),
-          col("event_id")).localCheckpoint()
-      // keyed-state shuffle partitions DERIVED from the stream's own
-      // catalog estimate (q75/q81's rationale) — pinned into the
-      // checkpoint at first start; six restarts re-open one store each
-      val statePartitions = graft.streaming.Streams.stateShufflePartitions(
-        obs.agg(approx_count_distinct(col("product_id"))).head.getLong(0))
-      def run(): Unit = {
-        val before = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        try {
-          val src = s.readStream
-            .schema("product_id STRING, price DOUBLE, sales_count BIGINT, crawled_at TIMESTAMP")
-            .parquet(srcDir)
-          val q = Streams.dedupStream(src, Seq("product_id"), "crawled_at", "4 days")
-            .writeStream
-            .option("checkpointLocation", ckpt)
-            .format("parquet").option("path", outDir).outputMode("append").start()
-          q.processAllAvailable(); q.stop()
-        } finally s.conf.set("spark.sql.shuffle.partitions", before)
-      }
-      val cuts = Seq("2024-01-06", "2024-01-11", "2024-01-16", "2024-01-21", "2024-01-26")
-        .map(c => lit(s"$c 00:00:00").cast(TimestampType))
-      val slices = Seq(
-        obs.filter(col("crawled_at") < cuts(0)),
-        obs.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        obs.filter(col("crawled_at") >= cuts(1) && col("crawled_at") < cuts(2)),
-        obs.filter(col("crawled_at") >= cuts(2) && col("crawled_at") < cuts(3)),
-        obs.filter(col("crawled_at") >= cuts(3) && col("crawled_at") < cuts(4)),
-        obs.filter(col("crawled_at") >= cuts(4)))
-      slices.foreach { sl =>
+      val obs = streamObs(s, dir, col("user_id") % 3 === 0 && col("event_id") % 8 === 0,
+        obsSalesCount, col("event_id")).localCheckpoint()
+      val slices = slicesAt(obs, FiveDayCuts: _*).map(sl =>
         Merge.latestPerKey(sl, Seq("product_id"), "crawled_at",
-          Seq(col("event_id").desc)).drop("event_id")
-          .write.mode("append").parquet(srcDir)
-        run() // one micro-batch per slice; restart restores watermark + state
-      }
-      s.read.parquet(outDir)
+          Seq(col("event_id").desc)).drop("event_id"))
+      s.read.parquet(restartEachSlice(root, obs, slices)(
+        src => Streams.dedupStream(src, Seq("product_id"), "crawled_at", "4 days")))
         .select(col("product_id"), col("price"), col("sales_count"),
           date_trunc("second", col("crawled_at")).as("crawled_at"))
         .orderBy(col("product_id"), col("crawled_at"))
@@ -1665,38 +1574,11 @@ object SparkEntry {
     //     proves the layout migration is invisible to every derived event.
     //     Per-(sfDir, pid) scratch wiped at entry. --------------------------
     "q82_cdc_rebucket" -> ((s, dir) => {
-      val root = scratch("q82", dir)
-      val histPath = s"$root/history"
-      val ev = t(s, dir, "events").select(
-        col("user_id").as("product_id"),
-        col("value").as("price"),
-        (col("value") + 10.0).as("original_price"),
-        lit(null).cast(DoubleType).as("discount_percent"),
-        (col("event_id") % 100).as("sales_count"),
-        col("ts").as("crawled_at"),
-        col("event_id"))
-      val cuts = Seq("2024-01-11 00:00:00", "2024-01-21 00:00:00").map(c => lit(c).cast(TimestampType))
-      val slices = Seq(
-        ev.filter(col("crawled_at") < cuts(0)),
-        ev.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        ev.filter(col("crawled_at") >= cuts(1)))
       val buckets = Seq(4, 4, 8) // reconfigured before batch 2's collapse
-      slices.zipWithIndex.foreach { case (sl, i) =>
-        // checkpointed — q76's rationale: spare the window a second run
-        val batch = Merge.latestPerKey(sl, Seq("product_id"), "crawled_at",
-          Seq(col("event_id").desc)).drop("event_id").localCheckpoint()
-        graft.streaming.Streams.cdcProcessBatch(batch, histPath, i.toLong,
-          collapseEvery = 2, keyBuckets = buckets(i))
-      }
-      s.read.parquet(histPath)
-        .select(col("product_id"), col("price"), col("original_price"),
-          col("discount_percent"), col("discount_amount"),
-          col("price_change"), col("price_change_percent"),
-          col("previous_price"), col("previous_original_price"), col("previous_discount_percent"),
-          col("sales_count"), col("sales_change"), col("is_flash_sale"), col("crawl_type"),
-          date_trunc("second", col("crawled_at")).as("crawled_at"),
-          col("batch_id").cast(LongType).as("batch_id"))
-        .orderBy(col("batch_id"), col("product_id"))
+      cdcEventRows(s.read.parquet(cdcSinkRun(s, dir, "q82") { (batch, histPath, i) =>
+        Streams.cdcProcessBatch(batch, histPath, i,
+          collapseEvery = 2, keyBuckets = buckets(i.toInt))
+      }))
     }),
 
     // --- PROGRESS LEDGER ACCOUNTING under the oracle: six file-source
@@ -1718,26 +1600,14 @@ object SparkEntry {
     //     slices). The listener bus delivers asynchronously; construction
     //     latches until the known number of non-empty slices has landed. --
     "q88_progress_ledger" -> ((s, dir) => {
-      import graft.streaming.Streams
       val root = scratch("q88", dir)
       val srcDir = s"$root/src"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
       val ledgerDir = s"$root/ledger"
       // checkpointed: the per-slice count + write below would otherwise
       // re-run the events scan per action
-      val obs = t(s, dir, "events")
-        .filter(col("user_id") % 3 === 0 && col("event_id") % 8 === 0).select(
-          concat(lit("u"), col("user_id").cast(StringType)).as("product_id"),
-          col("value").as("price"),
-          col("ts").as("crawled_at")).localCheckpoint()
-      val cuts = Seq("2024-01-06", "2024-01-11", "2024-01-16", "2024-01-21", "2024-01-26")
-        .map(c => lit(s"$c 00:00:00").cast(TimestampType))
-      val slices = Seq(
-        obs.filter(col("crawled_at") < cuts(0)),
-        obs.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        obs.filter(col("crawled_at") >= cuts(1) && col("crawled_at") < cuts(2)),
-        obs.filter(col("crawled_at") >= cuts(2) && col("crawled_at") < cuts(3)),
-        obs.filter(col("crawled_at") >= cuts(3) && col("crawled_at") < cuts(4)),
-        obs.filter(col("crawled_at") >= cuts(4)))
+      val obs = streamObs(s, dir,
+        col("user_id") % 3 === 0 && col("event_id") % 8 === 0).localCheckpoint()
+      val slices = slicesAt(obs, FiveDayCuts: _*)
       // the listener bus is asynchronous — the ledger listener's own
       // post-write callback counts data batches down to zero, so the wait
       // is a latch the bus thread releases the instant the last file is
@@ -1807,13 +1677,11 @@ object SparkEntry {
       val idxPath = s"$root/index"; val outPath = s"$root/out"
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 5 >= 3)
-      val b1 = docs.filter(col("doc_id") % 5 === 0)
-      val b2 = docs.filter(col("doc_id") % 5 === 1)
       Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(corpus, "doc_id", "text"), idxPath)
-      graft.streaming.Streams.curationProcessBatch(b1, idxPath, outPath, 0L,
-        "doc_id", "text", Seq("en", "vi"), 0.5, 0.7, 3, 12, 4, 64)
-      graft.streaming.Streams.curationProcessBatch(b2, idxPath, outPath, 1L,
-        "doc_id", "text", Seq("en", "vi"), 0.5, 0.7, 3, 12, 4, 64)
+      Seq(0, 1).foreach { i => // batch i+1 is the doc_id % 5 == i residue
+        Streams.curationProcessBatch(docs.filter(col("doc_id") % 5 === i), idxPath, outPath,
+          i.toLong, "doc_id", "text", Seq("en", "vi"), 0.5, 0.7, 3, 12, 4, 64)
+      }
       s.read.parquet(outPath)
         .select(col("doc_id"), col("batch_id").cast(LongType).as("batch_id"))
         .orderBy(col("batch_id"), col("doc_id"))
@@ -1831,28 +1699,14 @@ object SparkEntry {
     //     and invented nothing. Closes the migration triangle with
     //     q82 (CDC key buckets) and q83 (MinHash band buckets). ------------
     "q86_ivf_rebuild" -> ((s, dir) => {
-      import graft.operators.Ann
-      val scratchDir = scratch("q86", dir)
-      val emb = t(s, dir, "embeddings")
-      val cents8: Array[Array[Double]] = emb.filter(col("vec_id") < 8)
-        .orderBy("vec_id").select("embedding").collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val initial = emb.filter(col("vec_id") % 5 =!= 4)
-      val batch = emb.filter(col("vec_id") % 5 === 4)
-      Ann.writeIvf(Ann.buildIvfFixed(initial, "vec_id", "embedding", cents8), scratchDir)
-      Ann.appendToIvf(batch, scratchDir, "vec_id", "embedding")
-      Ann.compactIvf(s, scratchDir)
+      val path = scratch("q86", dir)
+      val emb = ivfFixture(s, dir, path)
+      Ann.compactIvf(s, path)
       // the rebuild: 16 new centroids, corpus = the layout's own vectors
-      val cents16: Array[Array[Double]] = emb.filter(col("vec_id") < 16)
-        .orderBy("vec_id").select("embedding").collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val fromLayout = Ann.readIvf(s, scratchDir).assigned.drop("list")
-      Ann.writeIvf(Ann.buildIvfFixed(fromLayout, "vec_id", "embedding", cents16), scratchDir)
-      Ann.vacuumIvf(s, scratchDir)
-      Ann.ivfTopK(emb.filter(col("vec_id") % 101 === 7), Ann.readIvf(s, scratchDir),
-        "vec_id", "embedding", k = 5, nprobe = 4)
-        .withColumn("rank", col("rank").cast(LongType))
-        .orderBy(col("query_id"), col("rank"))
+      val fromLayout = Ann.readIvf(s, path).assigned.drop("list")
+      Ann.writeIvf(Ann.buildIvfFixed(fromLayout, "vec_id", "embedding", firstVectors(emb, 16)), path)
+      Ann.vacuumIvf(s, path)
+      ivfProbe(s, emb, path).orderBy(col("query_id"), col("rank"))
     }),
 
     // --- COMPANION DISASTER RECOVERY under the oracle: the q76 pipeline
@@ -1865,45 +1719,19 @@ object SparkEntry {
     //     (previous_* values, change classification) lands identically.
     //     Per-(sfDir, pid) scratch wiped at entry. --------------------------
     "q85_cdc_recover" -> ((s, dir) => {
-      val root = scratch("q85", dir)
-      val histPath = s"$root/history"
-      val ev = t(s, dir, "events").select(
-        col("user_id").as("product_id"),
-        col("value").as("price"),
-        (col("value") + 10.0).as("original_price"),
-        lit(null).cast(DoubleType).as("discount_percent"),
-        (col("event_id") % 100).as("sales_count"),
-        col("ts").as("crawled_at"),
-        col("event_id"))
-      val cuts = Seq("2024-01-08 00:00:00", "2024-01-16 00:00:00", "2024-01-24 00:00:00")
-        .map(c => lit(c).cast(TimestampType))
-      val slices = Seq(
-        ev.filter(col("crawled_at") < cuts(0)),
-        ev.filter(col("crawled_at") >= cuts(0) && col("crawled_at") < cuts(1)),
-        ev.filter(col("crawled_at") >= cuts(1) && col("crawled_at") < cuts(2)),
-        ev.filter(col("crawled_at") >= cuts(2)))
-      def process(i: Int): Unit = {
-        // checkpointed — q76's rationale: spare the window a second run
-        val batch = Merge.latestPerKey(slices(i), Seq("product_id"), "crawled_at",
-          Seq(col("event_id").desc)).drop("event_id").localCheckpoint()
-        graft.streaming.Streams.cdcProcessBatch(batch, histPath, i.toLong)
-      }
+      val histPath = s"${scratch("q85", dir)}/history"
+      val slices = slicesAt(cdcObservations(s, dir),
+        "2024-01-08 00:00:00", "2024-01-16 00:00:00", "2024-01-24 00:00:00")
+      def process(i: Int): Unit =
+        Streams.cdcProcessBatch(latestBatch(slices(i)), histPath, i.toLong)
       process(0); process(1)
       // catastrophe + recovery: the companion tree is lost mid-stream
       val latestRoot = new org.apache.hadoop.fs.Path(s"$histPath/_latest")
       latestRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
         .delete(latestRoot, true)
-      graft.streaming.Streams.cdcRebuildCompanion(s, histPath, nextBatchId = 2L)
+      Streams.cdcRebuildCompanion(s, histPath, nextBatchId = 2L)
       process(2); process(3)
-      s.read.parquet(histPath)
-        .select(col("product_id"), col("price"), col("original_price"),
-          col("discount_percent"), col("discount_amount"),
-          col("price_change"), col("price_change_percent"),
-          col("previous_price"), col("previous_original_price"), col("previous_discount_percent"),
-          col("sales_count"), col("sales_change"), col("is_flash_sale"), col("crawl_type"),
-          date_trunc("second", col("crawled_at")).as("crawled_at"),
-          col("batch_id").cast(LongType).as("batch_id"))
-        .orderBy(col("batch_id"), col("product_id"))
+      cdcEventRows(s.read.parquet(histPath))
     }),
 
     // --- LIVE RE-BUCKETING of the MinHash index under the oracle: the q73
@@ -1914,22 +1742,12 @@ object SparkEntry {
     //     files, so a hash match proves re-bucketing is result-identity.
     //     Per-(sfDir, pid) scratch wiped at entry. --------------------------
     "q83_rebucketed_ingest" -> ((s, dir) => {
-      val scratchDir = scratch("q83", dir)
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 >= 3)
-      val b1 = docs.filter(col("doc_id") % 5 === 0)
-      val b2 = docs.filter(col("doc_id") % 5 === 1)
-      val b3 = docs.filter(col("doc_id") % 5 === 2)
-      Dedup.writeMinhashIndex(
-        Dedup.buildMinhashIndex(corpus, "doc_id", "text"), scratchDir)
-      Dedup.ingestCycle(b1, scratchDir, "doc_id", "text", threshold = 0.3)
-      Dedup.compactMinhashIndex(s, scratchDir)
-      Dedup.ingestCycle(b2, scratchDir, "doc_id", "text", threshold = 0.3)
-      Dedup.compactMinhashIndex(s, scratchDir, targetBuckets = 16)
-      Dedup.dedupAgainstIndex(b3, Dedup.readMinhashIndex(s, scratchDir),
-        "doc_id", "text", threshold = 0.3)
-        .select(col("id").as("doc_id"), col("is_dup"), col("dup_of"), col("jaccard"))
-        .orderBy(col("doc_id"))
+      val path = scratch("q83", dir)
+      val Seq(b2, b3) = ingestFixture(s, dir, path, batches = 3)
+      Dedup.compactMinhashIndex(s, path)
+      Dedup.ingestCycle(b2, path, "doc_id", "text", threshold = 0.3)
+      Dedup.compactMinhashIndex(s, path, targetBuckets = 16)
+      verdicts(s, b3, path).orderBy(col("doc_id"))
     }),
 
     // --- DELETION TIER under the oracle (MinHash): q71's ingest pipeline,
@@ -1943,30 +1761,14 @@ object SparkEntry {
     //     the listing, identically on the anti-join path and the
     //     physically-rewritten layout, and that nothing else was lost. ------
     "q89_index_delete" -> ((s, dir) => {
-      val scratchDir = scratch("q89", dir)
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 >= 2)
-      val b1 = docs.filter(col("doc_id") % 5 === 0)
-      val b2 = docs.filter(col("doc_id") % 5 === 1)
-      Dedup.writeMinhashIndex(
-        Dedup.buildMinhashIndex(corpus, "doc_id", "text"), scratchDir)
-      Dedup.ingestCycle(b1, scratchDir, "doc_id", "text", threshold = 0.3)
-      Dedup.deleteFromMinhashIndex(s, scratchDir,
-        Dedup.minhashIndexIds(s, scratchDir).filter(col("id") % 7 === 0))
-      def verdicts(phase: Int) =
-        Dedup.dedupAgainstIndex(b2, Dedup.readMinhashIndex(s, scratchDir),
-          "doc_id", "text", threshold = 0.3)
-          .select(lit(phase.toLong).as("phase"), col("id").as("doc_id"),
-            col("is_dup"), col("dup_of"), col("jaccard"))
-      val v0 = verdicts(0).localCheckpoint() // pinned BEFORE the rewrite
-      Dedup.compactMinhashIndex(s, scratchDir) // forced by live tombstones
-      val v1 = verdicts(1)
-      val listing = Dedup.minhashIndexIds(s, scratchDir).select(
-        lit(2L).as("phase"), col("id").as("doc_id"),
-        lit(null).cast(BooleanType).as("is_dup"),
-        lit(null).cast(LongType).as("dup_of"),
-        lit(null).cast(DoubleType).as("jaccard"))
-      v0.unionByName(v1).unionByName(listing)
+      val path = scratch("q89", dir)
+      val Seq(b2) = ingestFixture(s, dir, path, batches = 2)
+      Dedup.deleteFromMinhashIndex(s, path,
+        Dedup.minhashIndexIds(s, path).filter(col("id") % 7 === 0))
+      def phase(p: Long) = verdicts(s, b2, path).select(lit(p).as("phase"), col("*"))
+      val v0 = phase(0).localCheckpoint() // pinned BEFORE the rewrite
+      Dedup.compactMinhashIndex(s, path) // forced by live tombstones
+      v0.unionByName(phase(1)).unionByName(manifestListing(s, path, 2L))
         .orderBy(col("phase"), col("doc_id"))
     }),
 
@@ -1979,25 +1781,16 @@ object SparkEntry {
     //     vectors never surface as neighbors on either path and every
     //     surviving neighbor/rank/cosine is untouched. ----------------------
     "q90_ivf_delete" -> ((s, dir) => {
-      import graft.operators.Ann
-      val scratchDir = scratch("q90", dir)
-      val emb = t(s, dir, "embeddings")
-      val centroids: Array[Array[Double]] = emb.filter(col("vec_id") < 8)
-        .orderBy("vec_id").select("embedding").collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val initial = emb.filter(col("vec_id") % 5 =!= 4)
-      val batch = emb.filter(col("vec_id") % 5 === 4)
-      Ann.writeIvf(Ann.buildIvfFixed(initial, "vec_id", "embedding", centroids), scratchDir)
-      Ann.appendToIvf(batch, scratchDir, "vec_id", "embedding")
-      Ann.deleteFromIvf(s, scratchDir,
+      val path = scratch("q90", dir)
+      val emb = ivfFixture(s, dir, path)
+      Ann.deleteFromIvf(s, path,
         emb.filter(col("vec_id") % 9 === 0).select(col("vec_id").as("id")))
       def probe(phase: Int) =
-        Ann.ivfTopK(emb.filter(col("vec_id") % 101 === 7), Ann.readIvf(s, scratchDir),
-          "vec_id", "embedding", k = 5, nprobe = 4)
+        ivfProbe(s, emb, path)
           .select(lit(phase.toLong).as("phase"), col("query_id"),
-            col("rank").cast(LongType).as("rank"), col("neighbor_id"), col("cosine"))
+            col("rank"), col("neighbor_id"), col("cosine"))
       val p0 = probe(0).localCheckpoint() // pinned BEFORE the rewrite
-      Ann.compactIvfOnline(s, scratchDir)
+      Ann.compactIvfOnline(s, path)
       p0.unionByName(probe(1))
         .orderBy(col("phase"), col("query_id"), col("rank"))
     }),
@@ -2014,32 +1807,17 @@ object SparkEntry {
     //     again, its stale rows are gone (duplicate shingles would corrupt
     //     every Jaccard it appears in), and odd multiples stayed dead. -----
     "q91_index_reingest" -> ((s, dir) => {
-      val scratchDir = scratch("q91", dir)
-      val docs = t(s, dir, "documents")
-      val corpus = docs.filter(col("doc_id") % 5 >= 2)
-      val b1 = docs.filter(col("doc_id") % 5 === 0)
-      val b2 = docs.filter(col("doc_id") % 5 === 1)
-      Dedup.writeMinhashIndex(
-        Dedup.buildMinhashIndex(corpus, "doc_id", "text"), scratchDir)
-      Dedup.ingestCycle(b1, scratchDir, "doc_id", "text", threshold = 0.3)
-      val deleted = Dedup.minhashIndexIds(s, scratchDir)
+      val path = scratch("q91", dir)
+      val Seq(b2) = ingestFixture(s, dir, path, batches = 2)
+      val deleted = Dedup.minhashIndexIds(s, path)
         .filter(col("id") % 7 === 0).localCheckpoint()
-      Dedup.deleteFromMinhashIndex(s, scratchDir, deleted)
-      val recrawl = docs.join(
+      Dedup.deleteFromMinhashIndex(s, path, deleted)
+      val recrawl = t(s, dir, "documents").join(
         deleted.filter(col("id") % 14 === 0).select(col("id").as("doc_id")),
         Seq("doc_id"), "left_semi")
-      Dedup.appendToMinhashIndex(recrawl, scratchDir, "doc_id", "text")
-      val verdicts =
-        Dedup.dedupAgainstIndex(b2, Dedup.readMinhashIndex(s, scratchDir),
-          "doc_id", "text", threshold = 0.3)
-          .select(lit(0L).as("phase"), col("id").as("doc_id"),
-            col("is_dup"), col("dup_of"), col("jaccard"))
-      val listing = Dedup.minhashIndexIds(s, scratchDir).select(
-        lit(1L).as("phase"), col("id").as("doc_id"),
-        lit(null).cast(BooleanType).as("is_dup"),
-        lit(null).cast(LongType).as("dup_of"),
-        lit(null).cast(DoubleType).as("jaccard"))
-      verdicts.unionByName(listing)
+      Dedup.appendToMinhashIndex(recrawl, path, "doc_id", "text")
+      verdicts(s, b2, path).select(lit(0L).as("phase"), col("*"))
+        .unionByName(manifestListing(s, path, 1L))
         .orderBy(col("phase"), col("doc_id"))
     }),
 
@@ -2052,25 +1830,12 @@ object SparkEntry {
     //     vectors rank as neighbors again exactly once (surviving stale
     //     rows would duplicate them and shift every rank below). ------------
     "q92_ivf_reingest" -> ((s, dir) => {
-      import graft.operators.Ann
-      val scratchDir = scratch("q92", dir)
-      val emb = t(s, dir, "embeddings")
-      val centroids: Array[Array[Double]] = emb.filter(col("vec_id") < 8)
-        .orderBy("vec_id").select("embedding").collect()
-        .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-      val initial = emb.filter(col("vec_id") % 5 =!= 4)
-      val batch = emb.filter(col("vec_id") % 5 === 4)
-      Ann.writeIvf(Ann.buildIvfFixed(initial, "vec_id", "embedding", centroids), scratchDir)
-      Ann.appendToIvf(batch, scratchDir, "vec_id", "embedding")
-      Ann.deleteFromIvf(s, scratchDir,
+      val path = scratch("q92", dir)
+      val emb = ivfFixture(s, dir, path)
+      Ann.deleteFromIvf(s, path,
         emb.filter(col("vec_id") % 9 === 0).select(col("vec_id").as("id")))
-      Ann.appendToIvf(emb.filter(col("vec_id") % 18 === 0),
-        scratchDir, "vec_id", "embedding")
-      Ann.ivfTopK(emb.filter(col("vec_id") % 101 === 7), Ann.readIvf(s, scratchDir),
-        "vec_id", "embedding", k = 5, nprobe = 4)
-        .select(col("query_id"), col("rank").cast(LongType).as("rank"),
-          col("neighbor_id"), col("cosine"))
-        .orderBy(col("query_id"), col("rank"))
+      Ann.appendToIvf(emb.filter(col("vec_id") % 18 === 0), path, "vec_id", "embedding")
+      ivfProbe(s, emb, path).orderBy(col("query_id"), col("rank"))
     })
   )
 

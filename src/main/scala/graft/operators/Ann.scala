@@ -378,32 +378,16 @@ object Ann {
   private def ivfTombstonesOf(spark: SparkSession, gen: Path): Option[DataFrame] =
     graft.store.Tombstones.of(spark, gen.toString)
 
-  /** Per-generation centroid memo: a committed generation's `centroids`
-    * relation is immutable (appends only touch `assigned`/`ids`; rewrites
-    * commit a NEW generation), yet every [[readIvf]] and [[appendToIvf]]
-    * paid a parquet read + collect JOB for the same few-KB matrix. Keyed by
-    * (gen path, `_COMMITTED` mtime) — the same validator discipline as
-    * Dedup's marker memo: a scratch tree wiped and rebuilt at the same path
-    * commits with a new mtime, so a stale hit is impossible. Bounded LRU. */
-  private val centroidsMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long), Array[Array[Double]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), Array[Array[Double]]]): Boolean =
-        size() > 256
-    })
-
-  private def ivfCentroids(spark: SparkSession, gen: Path): Array[Array[Double]] = {
-    val commit = new Path(gen, "_COMMITTED")
-    val key = scala.util.Try(
-      (gen.toString, fsOf(spark, gen).getFileStatus(commit).getModificationTime)).toOption
-    key.flatMap(k => Option(centroidsMemo.get(k))).getOrElse {
-      val cents = spark.read.parquet(new Path(gen, "centroids").toString)
+  /** A committed generation's `centroids` relation is immutable (appends
+    * only touch `assigned`/`ids`; rewrites commit a NEW generation), so
+    * the parquet read + collect job for this few-KB matrix is paid once
+    * per generation ([[graft.store.Generations.memo]]). */
+  private def ivfCentroids(spark: SparkSession, gen: Path): Array[Array[Double]] =
+    graft.store.Generations.memo(spark, gen, "ivf centroids") {
+      spark.read.parquet(new Path(gen, "centroids").toString)
         .select("list", "centroid").orderBy("list").collect()
         .map(_.getSeq[Double](1).toArray)
-      key.foreach(k => centroidsMemo.put(k, cents))
-      cents
     }
-  }
 
   private def requireGen(spark: SparkSession, path: String): Path =
     graft.store.Generations.requireCommitted(spark, path)

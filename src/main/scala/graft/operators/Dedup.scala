@@ -356,30 +356,15 @@ object Dedup {
   private def bandBucket(c: org.apache.spark.sql.Column, n: Int) = pmod(hash(c), lit(n))
 
   /** Marker metadata of a COMMITTED generation — (bands bucket modulus,
-    * sketch parameters) — resolved from ONE directory listing and memoized.
-    * A generation's markers are created before its `_COMMITTED` lands and
-    * never change after, so they are cacheable for the generation's
-    * lifetime; the cache key carries the `_COMMITTED` marker's modification
-    * time because a scratch tree can be WIPED and rebuilt at the same path
-    * (the bench does exactly that per pass) — same path, new commit, new
-    * mtime, never a stale hit. An uncommitted gen (no marker — only
-    * reachable through maintenance internals) is resolved fresh and not
-    * cached. Bounded LRU: entries are tiny, the cap is hygiene for
-    * long-lived sessions cycling many indexes. */
-  private val genMarkersMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long), (Int, Option[(Int, Int, Int)])](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), (Int, Option[(Int, Int, Int)])]): Boolean =
-        size() > 1024
-    })
-
+    * sketch parameters) — resolved from ONE directory listing. A
+    * generation's markers are created before its `_COMMITTED` lands and
+    * never change after, so they are memoized per generation
+    * ([[graft.store.Generations.memo]]). */
   private def genMarkers(spark: org.apache.spark.sql.SparkSession,
       gen: String): (Int, Option[(Int, Int, Int)]) = {
     val p = new org.apache.hadoop.fs.Path(gen)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commit = new org.apache.hadoop.fs.Path(p, "_COMMITTED")
-    val key = scala.util.Try((gen, fs.getFileStatus(commit).getModificationTime)).toOption
-    key.flatMap(k => Option(genMarkersMemo.get(k))).getOrElse {
+    graft.store.Generations.memo(spark, p, "minhash markers") {
       val names = fs.listStatus(p).map(_.getPath.getName)
       val nbkt = names.collectFirst {
         case n if n.startsWith("_NBKT_") => n.drop("_NBKT_".length).toInt
@@ -402,9 +387,7 @@ object Dedup {
               "(probing with wrong parameters silently declares every " +
               "document unique)"))
       }
-      val v = (nbkt, sketch)
-      key.foreach(k => genMarkersMemo.put(k, v))
-      v
+      (nbkt, sketch)
     }
   }
 
@@ -657,25 +640,15 @@ object Dedup {
     * append adds one to the figure — the same one-per-append growth the
     * pre-delta partitioned appends had. Shingles is the flat dir count.
     * Directory metadata only. */
-  /** Per-gen memo for the bucketed BASE's max per-`__bkt` file count: the
-    * base layout is immutable after commit (appends land in `bands_delta/`,
-    * compactions write a NEW generation), so the up-to-65 directory
-    * listings it costs are paid once per generation. Same key discipline as
-    * [[genMarkersMemo]] (path + `_COMMITTED` mtime survives a same-path
-    * wipe-and-rebuild); the append-mutable delta/shingles listings stay
-    * fresh on every call. */
-  private val baseFilesMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long), java.lang.Integer](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), java.lang.Integer]): Boolean =
-        size() > 1024
-    })
-
   def minhashFileCounts(spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int) = {
     val gen = graft.store.Generations.requireCommitted(spark, path)
     val bandsDir = new org.apache.hadoop.fs.Path(s"$gen/bands")
     val fs = bandsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def baseFilesFresh(): Int = {
+    // the bucketed base is immutable after commit (appends land in
+    // `bands_delta/`, compactions write a NEW generation), so its up-to-65
+    // directory listings are paid once per generation; the append-mutable
+    // delta/shingles listings below stay fresh on every call
+    val baseFiles = graft.store.Generations.memo(spark, gen, "minhash base files") {
       val perBucket =
         if (!fs.exists(bandsDir)) Nil
         else fs.listStatus(bandsDir).toSeq
@@ -684,15 +657,6 @@ object Dedup {
       if (perBucket.nonEmpty) perBucket.max
       else graft.store.Compact.dataFileCount(spark, bandsDir.toString) // legacy flat layout
     }
-    val commit = new org.apache.hadoop.fs.Path(gen, "_COMMITTED")
-    val key = scala.util.Try(
-      (gen.toString, fs.getFileStatus(commit).getModificationTime)).toOption
-    val baseFiles = key.flatMap(k => Option(baseFilesMemo.get(k)).map(_.intValue()))
-      .getOrElse {
-        val n = baseFilesFresh()
-        key.foreach(k => baseFilesMemo.put(k, n))
-        n
-      }
     val deltaDir = new org.apache.hadoop.fs.Path(s"$gen/bands_delta")
     val deltaFiles =
       if (fs.exists(deltaDir)) graft.store.Compact.dataFileCount(spark, deltaDir.toString)

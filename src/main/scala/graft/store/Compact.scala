@@ -97,12 +97,7 @@ object Compact {
     * their open, so an appended or swapped file is always re-read. Bounded
     * LRU so a long-lived session's archival sweeps cannot grow it without
     * limit; entries are ~100 B, so the cap is a few hundred KB. */
-  private val footerRowsMemo = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long, Long), java.lang.Long](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long), java.lang.Long]): Boolean =
-        size() > 4096
-    })
+  private val footerRowsMemo = Generations.boundedLru[(String, Long, Long), java.lang.Long](4096)
 
   /** Total row count of the visible data files under each of `dirs`, read
     * from parquet FOOTERS only: one driver-side footer open per file

@@ -1,5 +1,7 @@
 package graft.store
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
@@ -75,9 +77,59 @@ object Generations {
       s"claimNextGen: could not claim a generation under $root after 100 attempts")
   }
 
-  /** Commit a generation: exclusive `_COMMITTED` create, done LAST. */
-  def commit(spark: SparkSession, gen: Path): Unit =
-    fsOf(spark, gen).create(new Path(gen, "_COMMITTED"), false).close()
+  /** Commit a generation: exclusive `_COMMITTED` create, done LAST. The
+    * marker carries a random token naming this one commit, so [[memo]]
+    * can tell two generations apart that share a path and a marker mtime
+    * (a tree wiped and rebuilt within the filesystem's mtime resolution). */
+  def commit(spark: SparkSession, gen: Path): Unit = {
+    val out = fsOf(spark, gen).create(new Path(gen, "_COMMITTED"), false)
+    try out.write(java.util.UUID.randomUUID().toString.getBytes(UTF_8))
+    finally out.close()
+  }
+
+  private val TokenLength = 36 // a UUID's canonical string form
+
+  /** The commit token in `gen`'s `_COMMITTED` marker. None when the marker
+    * is absent (uncommitted), empty (a layout committed before markers
+    * carried tokens), or still being written by [[commit]]. */
+  private def commitToken(spark: SparkSession, gen: Path): Option[String] = {
+    val marker = new Path(gen, "_COMMITTED")
+    scala.util.Try {
+      val in = fsOf(spark, marker).open(marker)
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
+    }.toOption.filter(_.length == TokenLength)
+  }
+
+  /** A thread-safe map that drops its least recently used entry once it
+    * holds more than `cap`. */
+  private[store] def boundedLru[K, V](cap: Int): java.util.Map[K, V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+          size() > cap
+      })
+
+  // 256 bounds the largest values held here, IVF centroid matrices
+  private val memoMap = boundedLru[(String, String, String), Any](256)
+
+  /** Memoize `load`, a result derived from `gen`'s immutable contents, for
+    * the lifetime of that one committed generation. `what` names the
+    * result, so several can be cached per generation. Whatever an append
+    * mutates (id manifests, delta tiers, tombstones) must NOT be loaded
+    * through here. The key is (gen path, commit token, what): a tree
+    * wiped and rebuilt at the same path commits a new token, so a stale
+    * hit is impossible. A generation without a token — uncommitted, or
+    * committed before markers carried one — is loaded fresh every time
+    * and never cached. */
+  def memo[V](spark: SparkSession, gen: Path, what: String)(load: => V): V =
+    commitToken(spark, gen).fold(load) { token =>
+      val key = (gen.toString, token, what)
+      Option(memoMap.get(key)).getOrElse {
+        val v = load
+        memoMap.put(key, v)
+        v
+      }.asInstanceOf[V]
+    }
 
   /** Drop all but the newest `keep` committed generations, plus any
     * uncommitted strays older than the newest committed one. Run this from

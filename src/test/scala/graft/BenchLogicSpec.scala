@@ -150,64 +150,10 @@ class BenchLogicSpec extends AnyFunSuite {
       Seq(false, true))
   }
 
-  test("ioFlagsLoo: flags the 2-pass dilution shape the in-pool median cannot (BENCH_NOTES_r17 run 5)") {
-    // two under-ceiling readings, one x1.5 the other: the gate's in-pool
-    // median is their midpoint (1.0), so 1.2 reads x1.2 — under relMax
-    // 1.25, unflagged (a 2-pass storm must read >~1.67x its sibling to
-    // trip the in-pool bound); leave-one-out compares directly against
-    // the 0.8 sibling and trips at 1.4
-    assert(Bench.ioFlags(Seq(0.8, 1.2), 1.3, 1.25, 0.1) ===
-      Seq(false, false))
-    assert(Bench.ioFlagsLoo(Seq(0.8, 1.2), 1.3, 1.4, 0.1) ===
-      Seq(false, true))
-  }
-
-  test("ioFlagsLoo: threshold 1.4 spares the adjudicated-clean r16 x1.32 drift pair") {
-    // the r16 campaign's run-wide-drift pass pair sits at x1.32 — clean
-    // by adjudication; at the gate's 1.25 LOO would false-flag it, which
-    // is exactly why the record-only threshold is 1.4 on this host's data
-    assert(Bench.ioFlagsLoo(Seq(1.0, 1.32), 1.3, 1.4, 0.1) ===
-      Seq(false, false))
-  }
-
-  test("ioFlagsLoo: no baseline cases — single reading, and siblings all over the ceiling") {
-    // one reading: no OTHER reading to reference — never flagged
-    assert(Bench.ioFlagsLoo(Seq(1.2), 1.3, 1.4, 0.1) === Seq(false))
-    assert(Bench.ioFlagsLoo(Nil, 1.3, 1.4, 0.1) === Nil)
-    // 0.9's every sibling is over the absolute ceiling — no under-ceiling
-    // baseline, quiet; 2.0/2.1 are over the ceiling themselves and are
-    // never LOO-flagged (ioFlags already owns them — the fields are
-    // deliberately disjoint so io_rel_loo_flagged isolates the new signal)
-    assert(Bench.ioFlagsLoo(Seq(0.9, 2.0, 2.1), 1.3, 1.4, 0.1) ===
-      Seq(false, false, false))
-    // excess floor applies to LOO too: x1.5 on a 0.1s-scale host is
-    // 0.05s of excess — under the floor, unflagged
-    assert(Bench.ioFlagsLoo(Seq(0.10, 0.15), 1.3, 1.4, 0.1) ===
-      Seq(false, false))
-  }
-
-  test("ioSpreadFlagged: majority-contamination tell (r17 advice) — spread over the band flags the run") {
-    // a storm inflating MOST readings while all stay under the 1.3s
-    // ceiling raises the in-pool median to storm level (no per-reading
-    // flag fires), but the clean minority drags the spread open
-    assert(Bench.ioSpreadFlagged(Seq(0.9, 1.25, 1.28, 1.27), 1.3, 1.25, 0.1))
-    // per-reading gate indeed blind here: median 1.26, 1.28/1.26 < 1.25x
-    assert(Bench.ioFlags(Seq(0.9, 1.25, 1.28, 1.27), 1.3, 1.25, 0.1) ===
-      Seq(false, false, false, false))
-    // ordinary jitter: spread x1.18 (the observed clean band) — quiet
-    assert(!Bench.ioSpreadFlagged(Seq(0.85, 0.95, 1.0), 1.3, 1.25, 0.1))
-    // excess floor: wide RATIO on a fast host but 0.06s of spread — quiet
-    assert(!Bench.ioSpreadFlagged(Seq(0.04, 0.10), 1.3, 1.25, 0.1))
-    // under-ceiling pool smaller than 2: nothing to spread
-    assert(!Bench.ioSpreadFlagged(Seq(0.9), 1.3, 1.25, 0.1))
-    assert(!Bench.ioSpreadFlagged(Seq(2.0, 2.5), 1.3, 1.25, 0.1))
-  }
-
   test("compactLine: headline fields present, no per-query payload, always under the driver's 2000-char tail") {
     val line = Bench.compactLine(215.337, "/root/testdata/sf0.1", 3, 2,
       allContaminated = false, fallbackQs = Nil, canaryMinSec = 0.852,
-      ioReadings = Seq(1.012, 0.94, 1.418), ioSpreadFlagged = false,
-      artifactPath = "target/bench_last.json")
+      ioReadings = Seq(1.012, 0.94, 1.418), artifactPath = "target/bench_last.json")
     assert(line.length < 2000)
     assert(line.startsWith("{") && line.endsWith("}"))
     // the driver's contract fields plus every loud verdict
@@ -216,7 +162,6 @@ class BenchLogicSpec extends AnyFunSuite {
       "\"all_passes_contaminated\":false", "\"dirty_fallback_count\":0",
       "\"dirty_fallback_queries\":[]", "\"canary_min_sec\":0.852",
       "\"io_band\":{\"min\":0.940,\"median\":1.012,\"max\":1.418}",
-      "\"io_spread_flagged\":false",
       "\"artifact\":\"target/bench_last.json\"")
       .foreach(f => assert(line.contains(f), s"missing $f in $line"))
     // the ~10kB killers stay in the file: no per-query map, no per_run
@@ -230,8 +175,7 @@ class BenchLogicSpec extends AnyFunSuite {
     val qs = (1 to 92).map(i => f"q$i%02d_some_rather_long_query_name")
     val line = Bench.compactLine(999.0, "/root/testdata/sf0.1", 4, 0,
       allContaminated = true, fallbackQs = qs, canaryMinSec = 0.9,
-      ioReadings = Seq(2.0, 2.1, 2.2, 2.3), ioSpreadFlagged = false,
-      artifactPath = "target/bench_last.json")
+      ioReadings = Seq(2.0, 2.1, 2.2, 2.3), artifactPath = "target/bench_last.json")
     assert(line.length < 2000)
     assert(line.contains("\"all_passes_contaminated\":true"))
     assert(line.contains("\"dirty_fallback_count\":92"))
@@ -243,8 +187,7 @@ class BenchLogicSpec extends AnyFunSuite {
 
   test("compactLine: empty reading list yields a null io band, not a crash") {
     val line = Bench.compactLine(1.0, "sf", 0, 0, allContaminated = true,
-      fallbackQs = Nil, canaryMinSec = 0.9, ioReadings = Nil,
-      ioSpreadFlagged = false, artifactPath = "p")
+      fallbackQs = Nil, canaryMinSec = 0.9, ioReadings = Nil, artifactPath = "p")
     assert(line.contains("\"io_band\":null"))
   }
 }

@@ -541,6 +541,43 @@ class OperatorsSpec extends SparkSpec {
       === Seq((20L, true, Some(11L))))
   }
 
+  test("generation memo: a same-path rebuild with an equal _COMMITTED mtime never serves stale markers") {
+    val corpus = (1 to 8).map(i =>
+      (i.toLong, s"corpus document number $i talks about topic $i in some detail here"))
+      .toDF("doc_id", "text")
+    val batch = (1 to 8).map(i =>
+      (100L + i, s"corpus document number $i talks about topic $i in some detail here"))
+      .toDF("doc_id", "text")
+    val expected = Dedup.dedupAgainstCorpus(batch, corpus, "doc_id", "text", threshold = 0.5)
+      .orderBy("id").select("id", "is_dup", "dup_of")
+      .as[(Long, Boolean, Option[Long])].collect().toSeq
+    assert(expected.forall(_._2), "every batch doc is a planted copy")
+    val dir = java.nio.file.Files.createTempDirectory("mhidx_memo").toString
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(s"$dir/gen_000000/_COMMITTED")
+    val idx = Dedup.buildMinhashIndex(corpus, "doc_id", "text")
+    // rebuild gen_000000 in place at `buckets`, probe it, and compare with
+    // the inline form, which never reads a persisted layout
+    def rebuildAndProbe(buckets: Int, legacyMarker: Boolean, mtime: Option[Long]): Long = {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+      Dedup.writeMinhashIndex(idx.copy(bandBuckets = buckets), dir)
+      if (legacyMarker) { fs.delete(marker, false); fs.create(marker, false).close() }
+      mtime.foreach(fs.setTimes(marker, _, -1L))
+      val read = Dedup.readMinhashIndex(spark, dir)
+      assert(Dedup.dedupAgainstIndex(batch, read, "doc_id", "text", threshold = 0.5)
+        .orderBy("id").select("id", "is_dup", "dup_of")
+        .as[(Long, Boolean, Option[Long])].collect().toSeq === expected)
+      assert(read.bandBuckets === buckets)
+      fs.getFileStatus(marker).getModificationTime
+    }
+    // a stale 2-way modulus would prune the 64-way probe to buckets 0-1
+    val mtime = rebuildAndProbe(2, legacyMarker = false, None)
+    rebuildAndProbe(64, legacyMarker = false, Some(mtime))
+    // markers written before commits carried a token are never cached
+    rebuildAndProbe(2, legacyMarker = true, Some(mtime))
+    rebuildAndProbe(64, legacyMarker = true, Some(mtime))
+  }
+
   test("resolvePaths cycle guards: self-parent and two-node cycles terminate") {
     val cats = Seq(
       ("A", "NodeA", "A"),          // self-parent
