@@ -8,20 +8,29 @@ object Bench {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** A contamination threshold, overridable per host: system property
-    * first (`-Dgraft.bench.<name>=`), then env (`GRAFT_BENCH_<NAME>`), then
-    * the r7-calibrated default. The defaults were calibrated on the round-7
-    * sandbox's host/storage (docs/evidence/bench_r7_*.json) and will
-    * misclassify passes on a machine with a different idle load or write
-    * pattern — the emitted JSON records the thresholds used so any
-    * consumer can re-adjudicate from per_run. */
-  private def threshold(name: String, default: Double): Double =
-    sys.props.get(s"graft.bench.$name")
-      .orElse(sys.env.get("GRAFT_BENCH_" + name.toUpperCase(java.util.Locale.ROOT)))
-      .flatMap(_.toDoubleOption).getOrElse(default)
+  private def jsonList(qs: Seq[String]): String =
+    qs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** Contamination thresholds. The env bounds were calibrated on the
+    * round-7 sandbox's host/storage (docs/evidence/bench_r7_*.json), the
+    * io gate on r15 and its relative bound on r17; on a machine with a
+    * different idle load or write pattern they misclassify passes, so the
+    * artifact records them (`contamination_thresholds`) and any consumer
+    * can re-adjudicate from per_run. */
+  private val Load1mMax = 2.25
+  private val Pass1WrMax = 1400000.0
+  private val Pass2WrMax = 250000.0
+  private val IoCanaryMax = 1.3
+  private val IoCanaryRel = 1.25
+  private val IoRelMinExcessSec = 0.1
+  private val MaxPasses = 4
+  private val OutlierK = 3.0
+  private val OutlierMinExcessSec = 5.0
 
   /** One measured pass plus everything needed to adjudicate its window:
-    * per-query seconds, both env snapshots and their deltas, the
+    * per-query seconds of the queries that succeeded, the names of those
+    * that threw (`failed` — never timed: a crash is not a fast run), both
+    * env snapshots and their deltas, the
     * env-threshold verdict, and both canary readings (CPU + io, with the
     * io canary's own post-sync sector delta). The io-canary FLAG and the
     * combined dirty verdict are NOT stored here: the io gate is
@@ -29,7 +38,7 @@ object Bench {
     * so a pass's flag can change as later passes arrive — flags are
     * re-derived from the full reading list at every decision point. */
   private[graft] final case class Pass(
-      q: Map[String, Double], load0: String, load1: String,
+      q: Map[String, Double], failed: Seq[String], load0: String, load1: String,
       rdDelta: Long, wrDelta: Long, envDirty: Boolean,
       canary: Double, ioCanary: Double, ioWrDelta: Long)
 
@@ -140,17 +149,18 @@ object Bench {
     * artifact (queries, per_run, env, thresholds — ~10 kB) goes to a FILE
     * whose path this line names in `artifact`; every consumer that wants
     * per-query data (bench_minima.py, bench_ab) reads the file. The only
-    * unbounded field is `dirty_fallback_queries` (92 long names would
-    * alone overflow the tail in the pathological all-fallback run), so
-    * the list is capped at 8 names with `dirty_fallback_count` carrying
-    * the true total — the loud verdict survives truncation, the full list
-    * is in the file. */
+    * unbounded fields are the two query lists (92 long names would alone
+    * overflow the tail in the pathological all-fallback or all-failed
+    * run), so `dirty_fallback_queries` and `failed_queries` (queries that
+    * threw in any pass) are capped at 8 names each, with
+    * `dirty_fallback_count` / `failed_count` carrying the true totals —
+    * the loud verdict survives truncation, the full lists are in the
+    * file. */
   private[graft] def compactLine(
       total: Double, sfDir: String, runs: Int, cleanPasses: Int,
       allContaminated: Boolean, fallbackQs: Seq[String], canaryMinSec: Double,
-      ioReadings: Seq[Double], artifactPath: String): String = {
-    val fallbackJson = fallbackQs.take(8).map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
+      ioReadings: Seq[Double], artifactPath: String,
+      failedQs: Seq[String] = Nil): String = {
     val ioBand =
       if (ioReadings.isEmpty) "null"
       else s"""{"min":${fmt(ioReadings.min)},"median":${fmt(median(ioReadings))},"max":${fmt(ioReadings.max)}}"""
@@ -158,7 +168,8 @@ object Bench {
       s""","runs":$runs,"clean_passes":$cleanPasses""" +
       s""","all_passes_contaminated":$allContaminated""" +
       s""","dirty_fallback_count":${fallbackQs.size}""" +
-      s""","dirty_fallback_queries":$fallbackJson""" +
+      s""","dirty_fallback_queries":${jsonList(fallbackQs.take(8))}""" +
+      s""","failed_count":${failedQs.size},"failed_queries":${jsonList(failedQs.take(8))}""" +
       s""","canary_min_sec":${fmt(canaryMinSec)},"io_band":$ioBand""" +
       s""","artifact":"$artifactPath"}"""
   }
@@ -211,10 +222,22 @@ object Bench {
     // two passes per query, report the min — bounds the localCheckpoint/GC
     // run-to-run variance (measured 35-57s spread on identical code) so the
     // number tracks the plan, not the JVM's mood. Both totals are recorded.
-    def pass(): Seq[(String, Double)] =
+    // a query that throws is recorded as failed, not timed: its elapsed
+    // seconds measure how fast it crashed
+    def pass(): Seq[(String, Option[Double])] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try {
+            Phase(spark, name) {
+              val df = fn(spark, sfDir)
+              Phase(spark, "count")(df.count())
+            }
+            true
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            false
+          }
         val sec = (System.nanoTime() - t0) / 1e9
         // drop the query's localCheckpoint blocks NOW (outside its timing):
         // cleanup otherwise rides on GC-triggered weak refs (ContextCleaner),
@@ -231,12 +254,12 @@ object Bench {
         require(graft.operators.Ann.memIvfCacheEmpty,
           s"$name populated Ann.buildIvfCached: localCheckpoint-backed caches " +
             "must not cross bench queries (use persistedIvfCached)")
-        name -> sec
+        name -> (if (ok) Some(sec) else None)
       }
     def timedPass(passIdx: Int): Pass = {
       val canary = canarySec()
       val (load0, rd0, wr0) = IoCanary.envSnapshot()
-      val r = pass().toMap
+      val r = pass()
       val (load1, rd1, wr1) = IoCanary.envSnapshot()
       // SELF-ADJUDICATION: was this pass's window environmentally clean?
       // Calibrated from the six checked-in r7 sf0.1 runs
@@ -251,9 +274,8 @@ object Bench {
       val load1m = load0.split("\\s+").headOption.flatMap(_.toDoubleOption).getOrElse(0.0)
       val wrDelta = wr1 - wr0
       val envDirty =
-        if (passIdx == 0) load1m > threshold("load1m_max", 2.25) ||
-          wrDelta > threshold("pass1_wr_max", 1400000.0)
-        else wrDelta > threshold("pass2_wr_max", 250000.0)
+        if (passIdx == 0) load1m > Load1mMax || wrDelta > Pass1WrMax
+        else wrDelta > Pass2WrMax
       // the I/O canary runs AFTER the closing snapshot: its writes land
       // between measured windows, not inside this pass's wrDelta. Since
       // r16 it is also a GATE, not just adjudication data: r15's nine
@@ -266,7 +288,9 @@ object Bench {
       // canary samples the window right AFTER the pass, so it is a
       // storm-persistence proxy, not an in-window measurement.
       val (ioCanary, ioWr) = IoCanary.sample(spark)
-      Pass(r, load0, load1, rd1 - rd0, wrDelta, envDirty, canary, ioCanary, ioWr)
+      Pass(r.collect { case (q, Some(sec)) => q -> sec }.toMap,
+        r.collect { case (q, None) => q }, load0, load1, rd1 - rd0, wrDelta,
+        envDirty, canary, ioCanary, ioWr)
     }
     // LEADING io sample (r16 verdict): the per-pass canary samples the
     // window right AFTER each pass, so a storm that arrives and dies
@@ -284,16 +308,8 @@ object Bench {
     // band-comparable.
     val (ioWarm, _) = IoCanary.sample(spark)
     val (ioLead, ioLeadWr) = IoCanary.sample(spark)
-    val ioAbs = threshold("io_canary_max", 1.3)
-    // clamped (r17 advice, mirroring max_passes): an override <= 1.0 would
-    // flag every reading above the run's own median — roughly half the
-    // passes could never be clean and the retry budget would silently
-    // exhaust. The floor can only make the bound meaningful, never laxer
-    // than "any excess at all".
-    val ioRel = math.max(1.01, threshold("io_canary_rel", 1.25))
-    val ioRelMinExcess = math.max(0.0, threshold("io_rel_min_excess_sec", 0.1))
     def dirtyFlags(ps: Seq[Pass]): Seq[Boolean] =
-      ps.zip(ioFlags(ps.map(_.ioCanary), ioAbs, ioRel, ioRelMinExcess))
+      ps.zip(ioFlags(ps.map(_.ioCanary), IoCanaryMax, IoCanaryRel, IoRelMinExcessSec))
         .map { case (p, f) => p.envDirty || f }
     // RETRY-UNTIL-CLEAN: a contaminated pass is EXCLUDED from the min-of-N
     // headline (its numbers stay in per_run for adjudication) — and, new
@@ -307,24 +323,20 @@ object Bench {
     // clean count is re-adjudicated over ALL passes each iteration: the
     // relative io bound's reference median moves as readings arrive, so
     // an early pass can be re-flagged by later evidence (and vice versa).
-    // clamped: the override can only EXTEND the budget — a 0/negative value
-    // would run zero passes (passes.head throws), and 1 would silently turn
-    // the min-of-2-clean headline into a single-pass number with no flag
-    val maxPasses = math.max(2, threshold("max_passes", 4.0).toInt)
     val passes = scala.collection.mutable.ArrayBuffer.empty[Pass]
-    while (passes.size < maxPasses &&
+    while (passes.size < MaxPasses &&
         dirtyFlags(passes.toSeq).count(d => !d) < 2) {
       val p = timedPass(passes.size)
       passes += p
       val flagsNow = dirtyFlags(passes.toSeq)
-      if (flagsNow.last && passes.size < maxPasses)
+      if (flagsNow.last && passes.size < MaxPasses)
         System.err.println(s"[bench] pass ${passes.size} contaminated" +
           (if (!p.envDirty) s" (io canary ${fmt(p.ioCanary)}s over gate)" else "") +
-          s"; retrying (${flagsNow.count(d => !d)}/2 clean, budget $maxPasses)")
+          s"; retrying (${flagsNow.count(d => !d)}/2 clean, budget $MaxPasses)")
     }
     // final adjudication: same function, full evidence
     val ioFlagsFinal =
-      ioFlags(passes.map(_.ioCanary).toSeq, ioAbs, ioRel, ioRelMinExcess)
+      ioFlags(passes.map(_.ioCanary).toSeq, IoCanaryMax, IoCanaryRel, IoRelMinExcessSec)
     val dirty = passes.toSeq.zip(ioFlagsFinal).map { case (p, f) => p.envDirty || f }
     val clean = passes.toSeq.zip(dirty).collect { case (p, false) => p }
     val usable = if (clean.nonEmpty) clean else passes.toSeq
@@ -337,17 +349,20 @@ object Bench {
     // boolean makes that state machine-checkable, not a note-string grep.
     val allContaminated = clean.isEmpty
     val fallbackQs = dirtyFallbackQueries(usable.map(_.q), passes.map(_.q).toSeq)
+    val failedQs = passes.flatMap(_.failed).distinct.sorted.toSeq
     // the per-query outlier sweep runs over ALL passes (clean or not): a
     // flagged query inside an env-clean pass is exactly the case the env
     // thresholds cannot see; inside a contaminated pass it just names the
     // victim. The headline already takes min-over-passes — this is the
     // artifact describing its own variance, not a correction.
-    val outliers = perQueryOutliers(passes.map(_.q).toSeq,
-      threshold("outlier_k", 3.0), threshold("outlier_min_excess_sec", 5.0))
+    val outliers = perQueryOutliers(passes.map(_.q).toSeq, OutlierK, OutlierMinExcessSec)
     val outlierNote =
       if (outliers.isEmpty) ""
       else outliers.map { case (i, q, r) =>
         f"$q pass${i + 1} ×$r%.1f" }.mkString("; per-query outliers: ", ", ", "")
+    val failedNote =
+      if (failedQs.isEmpty) ""
+      else failedQs.mkString("; failed queries (left out of the total): ", ", ", "")
     val fallbackNote =
       if (fallbackQs.isEmpty) ""
       else fallbackQs.mkString("; dirty-fallback queries (min from excluded passes only): ", ", ", "")
@@ -355,7 +370,7 @@ object Bench {
       (if (allContaminated) s"all ${passes.size} passes contaminated; min reported, unreliable"
        else if (nDirty > 0) s"$nDirty contaminated pass(es) excluded; " +
          s"headline is min over ${clean.size} clean pass(es)"
-       else "clean") + fallbackNote + outlierNote
+       else "clean") + fallbackNote + outlierNote + failedNote
     val results = passes.flatMap(_.q.keys).distinct.sorted.map { name =>
       val sec = use(name)
       val all = passes.map(_.q.get(name).map(v => f"$v%.2f").getOrElse("-")).mkString(" ")
@@ -379,15 +394,15 @@ object Bench {
         .mkString("{", ",", "}")
     }.mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    val thresholds = s"""{"load1m_max":${fmt(threshold("load1m_max", 2.25))}""" +
-      s""","pass1_wr_max":${fmt(threshold("pass1_wr_max", 1400000.0))}""" +
-      s""","pass2_wr_max":${fmt(threshold("pass2_wr_max", 250000.0))}""" +
-      s""","max_passes":$maxPasses""" +
-      s""","outlier_k":${fmt(threshold("outlier_k", 3.0))}""" +
-      s""","outlier_min_excess_sec":${fmt(threshold("outlier_min_excess_sec", 5.0))}""" +
-      s""","io_canary_max":${fmt(ioAbs)}""" +
-      s""","io_canary_rel":${fmt(ioRel)}""" +
-      s""","io_rel_min_excess_sec":${fmt(ioRelMinExcess)}""" +
+    val thresholds = s"""{"load1m_max":${fmt(Load1mMax)}""" +
+      s""","pass1_wr_max":${fmt(Pass1WrMax)}""" +
+      s""","pass2_wr_max":${fmt(Pass2WrMax)}""" +
+      s""","max_passes":$MaxPasses""" +
+      s""","outlier_k":${fmt(OutlierK)}""" +
+      s""","outlier_min_excess_sec":${fmt(OutlierMinExcessSec)}""" +
+      s""","io_canary_max":${fmt(IoCanaryMax)}""" +
+      s""","io_canary_rel":${fmt(IoCanaryRel)}""" +
+      s""","io_rel_min_excess_sec":${fmt(IoRelMinExcessSec)}""" +
       s""","calibrated_on":"r7 sandbox host (docs/evidence/bench_r7_*.json); io gate r15 (docs/BENCH_NOTES_r15.md); relative io bound r17 (docs/BENCH_NOTES_r17.md)"}"""
     val runTotals = passes.map(p => fmt(p.q.values.sum)).mkString("[", ",", "]")
     val contamArr = dirty.mkString("[", ",", "]")
@@ -401,12 +416,12 @@ object Bench {
           s""","sectors_read_delta":${p.rdDelta},"sectors_written_delta":${p.wrDelta}""" +
           s""","canary_sec":${fmt(p.canary)},"io_canary_sec":${fmt(p.ioCanary)}""" +
           s""","io_canary_wr_delta":${p.ioWrDelta},"io_flagged":$ioF""" +
+          s""","failed":${jsonList(p.failed)}""" +
           s""","contaminated":$d}"""
     }.mkString("[", ",", "]")
     val outliersJson = outliers.map { case (i, q, r) =>
       s"""{"pass":${i + 1},"query":"$q","ratio":${fmt(r)}}""" }.mkString("[", ",", "]")
-    val fallbackJson = fallbackQs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":${passes.size},"clean_passes":${clean.size},"all_passes_contaminated":$allContaminated,"dirty_fallback_queries":$fallbackJson,"run_totals":$runTotals,"contaminated":$contamArr,"contamination_note":"$note","query_outliers":$outliersJson,"canary_sec":$canaryArr,"io_canary_sec":$ioCanaryArr,"io_flagged":$ioFlaggedArr,"io_canary_wr_delta":$ioWrArr,"io_canary_warmup_sec":${fmt(ioWarm)},"io_canary_leading_sec":${fmt(ioLead)},"io_canary_leading_wr_delta":$ioLeadWr,"canary_iters":$CanaryIters,"queries_per_canary":$qsNorm,"contamination_thresholds":$thresholds,"per_run":$runs,"env":$envArr}"""
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":${passes.size},"clean_passes":${clean.size},"all_passes_contaminated":$allContaminated,"dirty_fallback_queries":${jsonList(fallbackQs)},"failed_queries":${jsonList(failedQs)},"run_totals":$runTotals,"contaminated":$contamArr,"contamination_note":"$note","query_outliers":$outliersJson,"canary_sec":$canaryArr,"io_canary_sec":$ioCanaryArr,"io_flagged":$ioFlaggedArr,"io_canary_wr_delta":$ioWrArr,"io_canary_warmup_sec":${fmt(ioWarm)},"io_canary_leading_sec":${fmt(ioLead)},"io_canary_leading_wr_delta":$ioLeadWr,"canary_iters":$CanaryIters,"queries_per_canary":$qsNorm,"contamination_thresholds":$thresholds,"per_run":$runs,"env":$envArr}"""
     // FULL artifact -> FILE; COMPACT headline -> the final stdout line
     // (r17 verdict #1): the full artifact is ~10 kB on one line (92
     // queries x per_run arrays + env) and the driver captures a 2,000-char
@@ -425,7 +440,7 @@ object Bench {
     System.err.println(s"[bench] full artifact -> $artifactPath")
     val compact = compactLine(total, sfDir, passes.size, clean.size,
       allContaminated, fallbackQs, canMin, passes.map(_.ioCanary).toSeq,
-      artifactPath)
+      artifactPath, failedQs)
     // stop Spark BEFORE emitting the JSON line, then quiesce both streams:
     // sbt reads stdout and stderr on separate threads and interleaves them
     // by arrival, so a JSON line printed while per-query stderr lines are

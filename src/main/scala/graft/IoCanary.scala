@@ -2,8 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Fixed-size I/O window canary, shared by [[Bench]] and the measurement
-  * probes (tools/ScaleProbe, IngestProbe, LineageProbe): write a pinned
+/** Fixed-size I/O window canary for [[Bench]]: write a pinned
   * ~70 MB parquet table (2M rows, an incompressible md5 payload), read it
   * back through one shuffle aggregate, report the seconds. The CPU canary
   * gives a unit of "this host's CPU second"; this gives the dimension
@@ -12,14 +11,15 @@ import org.apache.spark.sql.SparkSession
   * loadavg) measure clean. The r15 whole-bench A/B campaign proved this
   * reading — not loadavg, not the write delta, not the CPU canary — is
   * the variable that tracks bench totals (docs/BENCH_NOTES_r15.md Part 2),
-  * and the r16 ScaleProbe 320k-leg scare (112 s vs a same-window 54 s,
-  * adjudicated only by a nine-leg hand-interleaved rerun) is why the
-  * probes now record one reading per leg: a leg's window is adjudicable
-  * from its own output line, no rerun campaign.
+  * and the r16 320k-doc scaling-leg scare (112 s vs a same-window 54 s,
+  * adjudicated only by a nine-leg hand-interleaved rerun; docs/SCALE.md
+  * "Probe window instrumentation (r17)") is why every measured window
+  * records its own reading: it is adjudicable from its own output line,
+  * no rerun campaign.
   *
   * The workload is pinned (row count, partitioning, payload) and callers
   * run it OUTSIDE every measured window — after a bench pass's closing
-  * env snapshot, after a probe leg's timers — so its own ~140k written
+  * env snapshot — so its own ~140k written
   * sectors never contaminate a measured write-delta.
   *
   * Isolation against the page cache (r15 advice): the canary writes under

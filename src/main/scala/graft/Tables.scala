@@ -13,7 +13,8 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+      Phase(spark, "tables.load") {
     // The generated `events` table has stored `ts` as TIMESTAMP(NANOS)
     // (readable only as long, via the legacy conf) in some drops and as
     // TIMESTAMP(MICROS) (which parquet marks NTZ) in others. Normalize by

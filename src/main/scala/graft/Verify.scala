@@ -15,8 +15,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Phase(spark, name) {
+        val df = fn(spark, sfDir)
+        Phase(spark, "write")(df.coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"))
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

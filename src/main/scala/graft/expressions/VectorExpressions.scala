@@ -183,9 +183,10 @@ case class NearestCentroidsExpr(child: Expression,
   *
   * A reference object serializes INSIDE the expression tree: every stage
   * that evaluates the expression ships the whole matrix in its task
-  * binary, and every TASK deserializes it again (IvfPathProbe's dim-768
-  * leg measures the knee — per-stage cost grows linearly in nlist × dim
-  * once the matrix is tens of MB). Behind a Broadcast the tree carries
+  * binary, and every TASK deserializes it again (the dim-768 leg in
+  * docs/SCALE.md "Centroid-matrix plan weight (r11)" measures the knee —
+  * per-stage cost grows linearly in nlist × dim once the matrix is tens
+  * of MB). Behind a Broadcast the tree carries
   * only the handle: the matrix crosses the wire once per executor
   * (torrent blocks), is deserialized once per executor JVM, and is
   * REUSED across every stage and query that probes the same index —

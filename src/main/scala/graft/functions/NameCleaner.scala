@@ -80,7 +80,8 @@ object NameCleaner {
   // \x0E-\x1F), and String.trim strips everything <= U+0020 — so an
   // un-stripped control at the result's edge violates the "output is
   // trimmed" totality contract (PropertySpec caught this on a ScalaCheck
-  // BMP-garbage seed; tools/NameFuzz sweeps it deterministically)
+  // BMP-garbage seed; NameCleanerSpec's whole-BMP sweep pins it
+  // deterministically)
   private val ctrl         = Pattern.compile("\\p{Cntrl}")
 
   /** X8 — remove SKUs, marketing fluff, dimensions, years, noisy symbols;

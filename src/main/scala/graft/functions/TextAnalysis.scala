@@ -25,8 +25,8 @@ object TextAnalysis {
     * from `UTF8String.toLowerCase`; the kernel calls the same ICU
     * primitive — but pays five passes (lower, regex collapse, trim,
     * split, interpreted filter lambda) with three intermediate string
-    * materializations where the kernel makes one scan (ShingleProbe:
-    * 1.0 s → 0.32 s per 100k documents). */
+    * materializations where the kernel makes one scan (1.0 s → 0.32 s
+    * per 100k documents, docs/SCALE.md "Native one-pass tokenizer"). */
   def tokens(c: Column): Column = graft.expressions.VectorExpressions.tokenize(c)
 
   /** Token count, whitespace definition. */
@@ -43,11 +43,11 @@ object TextAnalysis {
     * staging `tokens(c)` into its own projection first). Routed through
     * the native [[graft.expressions.WordNgramsExpr]]: the
     * `array_distinct(transform(sequence(...), i => array_join(slice(...))))`
-    * formulation is result-identical (ExpressionsSpec pins it, and
-    * ShingleProbe found 0 mismatches over 100k real documents) but its
-    * lambda is interpreted per POSITION per document, re-slicing the
-    * array each time — ShingleProbe measures 3.6 s vs 0.9 s native for
-    * 100k docs. This kernel sits under every MinHash/Jaccard operator. */
+    * formulation is result-identical (ExpressionsSpec pins it, and 0
+    * mismatches over 100k real documents) but its lambda is interpreted
+    * per POSITION per document, re-slicing the array each time — 3.6 s
+    * vs 0.9 s native for 100k docs (docs/SCALE.md "Native word-n-gram
+    * shingling"). This kernel sits under every MinHash/Jaccard operator. */
   def shinglesFromTokens(ts: Column, n: Int): Column =
     graft.expressions.VectorExpressions.wordNgrams(ts, n, distinct = true)
 

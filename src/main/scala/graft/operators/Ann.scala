@@ -128,15 +128,16 @@ object Ann {
     * arithmetic and tie order as ONE codegen'd node whose centroid matrix
     * is a reference object. The native form is the production path at
     * EVERY nlist: the tree's cost is in planning/codegen, not arithmetic —
-    * IvfPathProbe (100k × dim-64) measures 26.7 s at nlist=64 against
-    * 0.13 s native with an optimizer OOM at nlist=256 (the scale cliff),
-    * and even at the oracle-gated sizes (nlist 8–16) the tree's planning
-    * tax is measurable: q86 8.4 → 4.8 s, q45 1.2 → 0.5 s, q90 7.3 → 4.5 s
-    * warm when routed native (QueryProbe, sf0.1). The literal formulation
+    * at 100k × dim-64 it measured 26.7 s at nlist=64 against 0.13 s
+    * native with an optimizer OOM at nlist=256 (the scale cliff), and
+    * even at the oracle-gated sizes (nlist 8–16) the tree's planning tax
+    * is measurable: q86 8.4 → 4.8 s, q45 1.2 → 0.5 s, q90 7.3 → 4.5 s
+    * warm when routed native (sf0.1). The literal formulation
     * survives as the INDEPENDENT REFERENCE IMPLEMENTATION AnnSpec pins the
     * native path against — equality including exact distance ties — on top
     * of the DuckDB oracle gating the same math end-to-end (q74/q86/q90).
-    * docs/SCALE.md r10 has the full measurements, including the
+    * docs/SCALE.md "IVF centroid ranking past literal expression trees
+    * (r10)" has the full measurements, including the
     * broadcast-join alternative both formulations beat. */
   private[graft] def rankCentroids(vec: org.apache.spark.sql.Column,
       centroids: Array[Array[Double]], k: Int, literal: Boolean): org.apache.spark.sql.Column =
@@ -149,8 +150,9 @@ object Ann {
     * a codegen reference object. A reference object re-serializes inside
     * EVERY stage's task binary and re-deserializes per task; the broadcast
     * crosses the wire once per executor and is reused across stages and
-    * queries — the win appears once the matrix is tens of MB
-    * (IvfPathProbe's dim-768 leg). 2²⁰ cells ≈ 8 MB of doubles: below it
+    * queries — the win appears once the matrix is tens of MB (the
+    * dim-768 leg in docs/SCALE.md "Centroid-matrix plan weight (r11)").
+    * 2²⁰ cells ≈ 8 MB of doubles: below it
     * the handle's indirection buys nothing, above it the per-stage
     * serialization tax grows linearly while the broadcast's is one-time. */
   private[graft] val BcastCentroidCells: Long = 1L << 20

@@ -76,11 +76,12 @@ object Dedup {
     * semi-joined frame): both evaluations produce the same row set, and
     * the double execution is bounded — shuffle-bearing lineage reuses its
     * exchanges (map sides run once; both branches re-read the same
-    * shuffle files), and tools/LineageProbe measured freeze-first LOSING
-    * to the double evaluation on exactly the Curation shape (2M-row
-    * heavy-projection + semi-join: split 6.5 s vs freeze-first 8.3 s,
-    * floor 2.9 s — materializing the full corpus costs more than
-    * re-running the post-shuffle work; docs/SCALE.md r16). On a
+    * shuffle files), and freeze-first measured LOSING to the double
+    * evaluation on exactly the Curation shape (2M-row heavy-projection +
+    * semi-join: split 6.5 s vs freeze-first 8.3 s, floor 2.9 s —
+    * materializing the full corpus costs more than re-running the
+    * post-shuffle work; docs/SCALE.md "exactDedup derived-input lineage,
+    * measured (r16)"). On a
     * source-shaped input each branch is one scan and the anon branch's
     * IS NULL predicates prune to parquet footers (see the anon-tier
     * comment below).
@@ -447,7 +448,8 @@ object Dedup {
     * Returns the committed generation path. */
   def writeMinhashIndex(idx: MinhashIndex, path: String, filesPerBucket: Int = 1,
       idsFrom: Option[DataFrame] = None, bandsBytesHint: Long = -1L,
-      maxFileBytes: Long = graft.store.Compact.DefaultMaxFileBytes): String = {
+      maxFileBytes: Long = graft.store.Compact.DefaultMaxFileBytes): String =
+      graft.Phase(idx.bands.sparkSession, "index.write") {
     val spark = idx.bands.sparkSession
     val gen = graft.store.Generations.claimNextGen(spark, path)
     // the layout's modulus is the index's bandBuckets — recorded as an
@@ -509,9 +511,9 @@ object Dedup {
     * the partitioned tree: a partitioned append pays per-partition-dir
     * writer + commit overhead LINEAR in the touched-bucket count (measured
     * 1.2–1.7 s for a 4k-row 64-bucket append vs 0.25 s flat —
-    * tools/WritePathProbe; commit-algorithm and codec variants don't move
-    * it), and at corpus scale it is also the small-files shape the
-    * compactor exists to fight — one file per batch beats 64. Probes
+    * docs/SCALE.md "Retired probes"; commit-algorithm and codec variants
+    * don't move it), and at corpus scale it is also the small-files shape
+    * the compactor exists to fight — one file per batch beats 64. Probes
     * partition-prune the base and row-filter the delta on the same `__bkt`
     * predicate (the union pushes the filter into both children);
     * compaction reads through this union and folds the delta back into the
@@ -525,7 +527,8 @@ object Dedup {
     else base
   }
 
-  def readMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String): MinhashIndex = {
+  def readMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String): MinhashIndex =
+      graft.Phase(spark, "index.read") {
     val gen = graft.store.Generations.requireCommitted(spark, path)
     val (bands, shingles) = minusTombstones(spark, gen.toString,
       bandsOf(spark, gen.toString), spark.read.parquet(s"$gen/shingles"))
@@ -747,7 +750,7 @@ object Dedup {
       // failure modes and disjoint output dirs, so they run concurrently
       // (guide §2.6) — each is a small job whose tail previously left the
       // cluster idle while the other waited
-      graft.Timing("append.ids")(ids.coalesce(1)
+      graft.Phase(spark, "append.ids")(ids.coalesce(1)
         .write.mode("append").parquet(s"$gen/ids"))
       // a bare-API caller staged neither relation: one token checkpoint
       // feeds both derivations (the ingestCycle discipline) instead of two
@@ -771,11 +774,11 @@ object Dedup {
         if (docsHint >= 0 && docsHint <= SmallAppendDocs) banded.repartition(1)
         else banded.repartition(col("__bkt"))
       graft.Par.run(
-        () => graft.Timing("append.bands")(
+        () => graft.Phase(spark, "append.bands")(
           // FLAT delta write, __bkt as a data column — see [[bandsOf]] for
           // why appends never write through the partitioned tree
           laid.write.mode("append").parquet(s"$gen/bands_delta")),
-        () => graft.Timing("append.shingles")(
+        () => graft.Phase(spark, "append.shingles")(
           shinglesFrom
             .orElse(stagedToks.map(shinglesFromTokenRows(_, shingleN)))
             .getOrElse(shingleRows(src, idCol, textCol, shingleN))
@@ -809,7 +812,8 @@ object Dedup {
   def dedupAgainstIndex(
       batch: DataFrame, idx: MinhashIndex, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4,
-      maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame = {
+      maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame =
+      graft.Phase(batch.sparkSession, "index.probe") {
     requireSketch(idx.sketch, shingleN, numHashes, bands, "dedupAgainstIndex")
     // ONE tokenize pass for the whole probe: the banding (checkpointed —
     // the candidate probe and the guard both read it) and the verify
@@ -938,7 +942,8 @@ object Dedup {
       bands: Int = 4,
       maxCandidatePairs: Long = DefaultMaxCandidatePairs,
       bandsFrom: Option[DataFrame] = None,
-      shinglesFrom: Option[DataFrame] = None): (DataFrame, IngestStats) = Scratch.scoped {
+      shinglesFrom: Option[DataFrame] = None): (DataFrame, IngestStats) =
+      graft.Phase(batch.sparkSession, "ingest.cycle")(Scratch.scoped {
     // the cycle's OWN scope: every internal scratch checkpoint (band keys
     // inside bandCandidates, the candidate relation, the verify join's
     // pruned shingles, the heal path's frames) is released when the cycle
@@ -947,7 +952,7 @@ object Dedup {
     // (the streaming sinks free them per batch; a bare batch caller
     // manages them like any checkpoint it is handed).
     val spark = batch.sparkSession
-    val idx = graft.Timing("ingest.readIndex")(readMinhashIndex(spark, path))
+    val idx = graft.Phase(spark, "ingest.readIndex")(readMinhashIndex(spark, path))
     requireSketch(idx.sketch, shingleN, numHashes, bands, "ingestCycle")
     // the batch's sketch and shingle relations are staged ONCE per cycle:
     // the banding feeds candidate generation AND the survivor append, the
@@ -961,9 +966,9 @@ object Dedup {
     // within-batch dedup's relations and the cycle skips both passes).
     val (bBands, batchSh) = (bandsFrom, shinglesFrom) match {
       case (Some(b), Some(sh)) => (b, sh)
-      case (Some(b), None) => (b, graft.Timing("ingest.batchShingles")(
+      case (Some(b), None) => (b, graft.Phase(spark, "ingest.batchShingles")(
         shingleRows(batch, idCol, textCol, shingleN).scratchCheckpoint()))
-      case (None, Some(sh)) => (graft.Timing("ingest.batchBands")(
+      case (None, Some(sh)) => (graft.Phase(spark, "ingest.batchBands")(
         minhashBandKeys(batch, idCol, textCol, shingleN, numHashes, bands)
           .scratchCheckpoint()), sh)
       case (None, None) =>
@@ -974,16 +979,16 @@ object Dedup {
         // so they materialize CONCURRENTLY (guide §2.6) — two small jobs
         // back-filling each other's tails instead of two full
         // tokenize+shuffle passes in sequence.
-        val toks = graft.Timing("ingest.batchToks")(
+        val toks = graft.Phase(spark, "ingest.batchToks")(
           tokenRows(batch, idCol, textCol).scratchCheckpoint())
-        graft.Timing("ingest.batchSketch")(Scratch.checkpointPar(
+        graft.Phase(spark, "ingest.batchSketch")(Scratch.checkpointPar(
           bandKeysFromTokens(toks, shingleN, numHashes, bands),
           shinglesFromTokenRows(toks, shingleN)))
     }
-    val cands = graft.Timing("ingest.bandCandidates")(
+    val cands = graft.Phase(spark, "ingest.bandCandidates")(
       bandCandidatesFrom(bBands, idx, maxCandidatePairs)
       .scratchCheckpoint())
-    val verdicts = graft.Timing("ingest.verdicts")(
+    val verdicts = graft.Phase(spark, "ingest.verdicts")(
       Scratch.checkpointEscaping(verdictsFromCandidates(
         batch, cands, idx, idCol, textCol, threshold, shingleN,
         batchShingles = Some(batchSh))))
@@ -991,7 +996,7 @@ object Dedup {
     // run them concurrently (guide §2.6); each is fixed-overhead-bound
     @volatile var aggRow: org.apache.spark.sql.Row = null
     @volatile var candidatePairs = 0L
-    graft.Timing("ingest.agg")(graft.Par.run(
+    graft.Phase(spark, "ingest.agg")(graft.Par.run(
       () => aggRow = verdicts.agg(
         count(lit(1)).as("n"), count(when(col("is_dup"), 1)).as("d")).head,
       () => candidatePairs = cands.count()))
@@ -1005,19 +1010,19 @@ object Dedup {
     // shuffle) — the q71/q73 fixed-job-overhead trim. The staged sketch /
     // shingle relations, semi-joined down to survivors, spare the append
     // its own tokenize + sketch passes over the batch.
-    graft.Timing("ingest.append")(
+    graft.Phase(spark, "ingest.append")(
       appendToMinhashIndex(survivors, path, idCol, textCol, shingleN, numHashes, bands,
         idsFrom = Some(survivorIds),
         docsHint = total - dups,
         bandsFrom = Some(bBands.join(survivorIds, Seq("id"), "left_semi")),
         shinglesFrom = Some(batchSh.join(survivorIds, Seq("id"), "left_semi"))))
-    val (bandsFiles, shinglesFiles) = graft.Timing("ingest.fileCounts")(
+    val (bandsFiles, shinglesFiles) = graft.Phase(spark, "ingest.fileCounts")(
       minhashFileCounts(spark, path))
     (verdicts, IngestStats(
       batchRows = total, candidatePairs = candidatePairs, dups = dups,
       appendedRows = total - dups,
       bandsFiles = bandsFiles, shinglesFiles = shinglesFiles))
-  }
+  })
 
   /** Compact a persisted MinHash index — the maintenance pass for
     * sustained [[appendToMinhashIndex]] ingest (one part-file set per
@@ -1037,7 +1042,7 @@ object Dedup {
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 0, minFiles: Int = 1, keep: Int = 2,
       maxFileBytes: Long = graft.store.Compact.DefaultMaxFileBytes,
-      targetBuckets: Int = 0): Int = {
+      targetBuckets: Int = 0): Int = graft.Phase(spark, "index.compact") {
     import graft.store.Compact
     val gen = graft.store.Generations.requireCommitted(spark, path)
     val (bandsFiles, shinglesFiles) = minhashFileCounts(spark, path)
@@ -1066,8 +1071,8 @@ object Dedup {
     // happening anyway, the new layout's modulus sizes each bucket to ≈
     // one healthy file — a small index collapses to few partition dirs
     // (each `__bkt=` dir costs writer + commit overhead per rewrite AND
-    // an open per probe, WritePathProbe: dir count is the partitioned
-    // write's cost driver), a corpus-scale index keeps the recorded
+    // an open per probe — dir count is the partitioned write's cost
+    // driver, docs/SCALE.md "Retired probes"), a corpus-scale index keeps the recorded
     // count (the clamp: auto never grows the modulus — outgrowing it is
     // the explicit `targetBuckets` migration path). The no-op trigger
     // below deliberately ignores the auto count: an under-threshold index
@@ -1134,7 +1139,8 @@ object Dedup {
     * in a candidate pair: at corpus scale candidates are a tiny fraction of
     * documents, so the two intersection joins and the size aggregate run
     * over candidate shingles only — verify cost is ∝ candidate docs, not
-    * corpus size (measured 59.7 → 32-39 s on the 320 k-doc ScaleProbe). */
+    * corpus size (measured 59.7 → 32-39 s at 320 k docs, docs/SCALE.md
+    * "Measured scaling"). */
   private def verifyJaccard(cands: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
     // no .distinct() on the id union: its only consumer is the left-semi
     // join, which dedups by construction — the distinct added a shuffle of
@@ -1183,8 +1189,8 @@ object Dedup {
     * "inverted" above ~10⁵ documents. Pass `forceInverted = true` when the
     * vocabulary is known to exceed `denseVocabBits` and the probe (and the
     * dense path) are skipped entirely — result-identical, the two paths
-    * compute the same pairs (JaccardProbe measures the probe's cost
-    * disappearing). */
+    * compute the same pairs (the probe's cost disappearing is measured in
+    * docs/SCALE.md "q26 all-pairs n-gram Jaccard"). */
   def ngramJaccardPairs(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double,
@@ -1456,7 +1462,7 @@ object Dedup {
     * per band, selective far past 10⁸ documents, where 16 bits (3 chunks
     * of ~5 bits ≈ 32 keys per band) saturates its keyspace around 10⁴
     * docs and the "banded" self-join is a cross join in disguise
-    * (SimhashProbe measures both; docs/SCALE.md records the numbers).
+    * (both measured in docs/SCALE.md "SimHash fan-out, measured (r13)").
     *
     * Because saturation depends on the CORPUS (a dup-heavy corpus piles
     * into few keys at any width), the fan-out is also MEASURED, not
@@ -1478,7 +1484,7 @@ object Dedup {
     * [[dedupAgainstIndex]]) share this contract. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       bits: Int = 64, maxDist: Int = 2,
-      maxCandidatePairs: Long = SimhashMaxCandidatePairs): DataFrame = {
+      maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame = {
     val banded = simhashBanded(docs, idCol, textCol, bits, maxDist)
     guardSelfJoinFanout(banded, "band", maxCandidatePairs, "simhashPairs",
       s"raise bits (currently $bits; 64 is the max and the default), lower " +
@@ -1492,11 +1498,8 @@ object Dedup {
 
   /** The banding relation [[simhashPairs]] self-joins — one row per
     * (id, fp, band), checkpointed (both join sides would otherwise re-run
-    * the fingerprint scan). `private[graft]` so `tools.SimhashProbe`
-    * measures the REAL banding: the probe carried its own copy of the old
-    * two-half banding for a round after the fix and measured a layout
-    * that no longer existed. */
-  private[graft] def simhashBanded(docs: DataFrame, idCol: String, textCol: String,
+    * the fingerprint scan). */
+  private def simhashBanded(docs: DataFrame, idCol: String, textCol: String,
       bits: Int, maxDist: Int): DataFrame = {
     require(bits >= 1 && bits <= 64, s"bits must be in 1..64, got $bits")
     require(maxDist >= 0 && maxDist + 1 <= bits,
@@ -1542,12 +1545,6 @@ object Dedup {
       if (r.isNullAt(1)) 0L else r.getLong(1),
       r.getLong(2))
   }
-
-  /** [[bandFanoutStats]] on the simhash banding's `band` column — kept under
-    * its historical name so [[graft.tools.SimhashProbe]] and docs/SCALE.md
-    * keep pointing at the exact code the simhash guard runs. */
-  private[graft] def simhashBandStats(banded: DataFrame): BandFanoutStats =
-    bandFanoutStats(banded, "band")
 
   /** Candidate fan-out of a TWO-SIDED band join (probe relation × index
     * relation on `keyCol`): Σ over keys of |left_k|·|right_k| — exactly the
@@ -1634,10 +1631,6 @@ object Dedup {
     * silent N² job; the guard names the fix instead. */
   val DefaultMaxCandidatePairs = 2000000000L
 
-  /** Historical name for [[DefaultMaxCandidatePairs]] (the cap predates the
-    * guard's generalization to the sibling banded joins). */
-  val SimhashMaxCandidatePairs: Long = DefaultMaxCandidatePairs
-
   /** Embedding-cosine near-dup pairs: multi-band sign-LSH candidates, then
     * exact cosine per distinct candidate pair.
     *
@@ -1685,11 +1678,8 @@ object Dedup {
 
   /** The sign-LSH banding relation [[embeddingNearDupPairs]] self-joins —
     * one (id, band) row per document per band, checkpointed (both join
-    * sides would otherwise re-scan the corpus). `private[graft]` so
-    * `tools.FanoutProbe` measures the REAL bucket layout, the same lesson
-    * as [[simhashBanded]]: a probe carrying its own copy of a banding goes
-    * stale the day the banding changes. */
-  private[graft] def embeddingBanded(emb: DataFrame, idCol: String, vecCol: String,
+    * sides would otherwise re-scan the corpus). */
+  private def embeddingBanded(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, bands: Int): DataFrame = {
     // the bands read DISJOINT component ranges, so they must fit the vector:
     // past the end, element_at throws INVALID_ARRAY_INDEX from deep inside

@@ -24,9 +24,10 @@ object Similarity {
     * their lambdas per element outside codegen. At the gated sf0.1 scale
     * the difference is invisible (few scored pairs, dim 64 — A/B probed,
     * no delta), which is exactly why it needed its own measurement: at
-    * corpus shape the HOF form is the dominant per-pair cost — DotProbe
-    * times 2M pairs at 1.5 s (dim 64) to 7–23 s (dim 256–768) interpreted
-    * vs 0.26–0.41 s native. Every cosine in the similarity family
+    * corpus shape the HOF form is the dominant per-pair cost — 2M pairs
+    * take 1.5 s (dim 64) to 7–23 s (dim 256–768) interpreted vs
+    * 0.26–0.41 s native (docs/SCALE.md "Native dot product for the
+    * similarity family (r10)"). Every cosine in the similarity family
     * (brute-force/LSH/IVF scoring, embedding near-dup verify) rides this.
     * The HOF form survives in ExpressionsSpec as the reference
     * implementation. */

@@ -91,7 +91,8 @@ object Curation {
       allowedLangs: Seq[String], minQuality: Double, nearDupThreshold: Double,
       shingleN: Int, numHashes: Int = 12, bands: Int = 4)
       : (DataFrame, StageCounts, KeptSketches) = {
-    val scored = graft.Timing("gate.score")(docs
+    val spark = docs.sparkSession
+    val scored = graft.Phase(spark, "gate.score")(docs
       .select(col(idCol),
         TextAnalysis.langPredict(TextAnalysis.tokens(col(textCol))).as("__lang"),
         TextAnalysis.qualityScore(col(textCol)).as("__q"))
@@ -100,12 +101,12 @@ object Curation {
       .filter(col("__lang").isin(allowedLangs: _*) && col("__q") >= minQuality)
       .select(idCol)
     val gated = docs.join(keepIds, Seq(idCol), "left_semi")
-    val total = graft.Timing("gate.counts")(scored.count())
+    val total = graft.Phase(spark, "gate.counts")(scored.count())
     val nGated = keepIds.count()
 
-    val exact = graft.Timing("gate.exactDedup")(
+    val exact = graft.Phase(spark, "gate.exactDedup")(
       Dedup.exactDedup(gated, idCol, textCol).scratchCheckpoint())
-    val nExact = graft.Timing("gate.exactCount")(exact.count())
+    val nExact = graft.Phase(spark, "gate.exactCount")(exact.count())
 
     // stage the survivors' sketch relations ONCE: the within-batch
     // near-dup pass consumes them here, and the kept subset's view is
@@ -113,19 +114,19 @@ object Curation {
     // tokenize pass feeds both (Dedup.tokenRows checkpointed, banding +
     // shingles derived from it and materialized concurrently — the
     // ingestCycle discipline, guide §2.3/§2.6).
-    val exactToks = graft.Timing("gate.exactToks")(
+    val exactToks = graft.Phase(spark, "gate.exactToks")(
       Dedup.tokenRows(exact, idCol, textCol).scratchCheckpoint())
-    val (exactBands, exactSh) = graft.Timing("gate.exactSketch")(
+    val (exactBands, exactSh) = graft.Phase(spark, "gate.exactSketch")(
       graft.operators.Scratch.checkpointPar(
         Dedup.bandKeysFromTokens(exactToks, shingleN, numHashes, bands),
         Dedup.shinglesFromTokenRows(exactToks, shingleN)))
     val pairs = Dedup.minhashDedupPairs(exact, idCol, textCol, nearDupThreshold,
       shingleN, numHashes, bands,
       shinglesFrom = Some(exactSh), bandsFrom = Some(exactBands))
-    val losers = graft.Timing("gate.nearDupPairs")(
+    val losers = graft.Phase(spark, "gate.nearDupPairs")(
       pairs.select(col("id_b").as(idCol)).distinct().scratchCheckpoint())
     val kept = exact.join(losers, Seq(idCol), "left_anti")
-    val nKept = graft.Timing("gate.keptCount")(kept.count())
+    val nKept = graft.Phase(spark, "gate.keptCount")(kept.count())
     val loserIds = losers.select(col(idCol).as("id"))
     (kept, StageCounts(total, nGated, nExact, nKept),
       KeptSketches(

@@ -791,7 +791,7 @@ object Streams {
       shingleN: Int, numHashes: Int, bands: Int, compactAt: Int): Unit = {
     val spark = batch.sparkSession
     scopedUnpersist(spark) {
-      val b = graft.Timing("cur.batchCkpt")(batch.scratchCheckpoint())
+      val b = graft.Phase(spark, "cur.batchCkpt")(batch.scratchCheckpoint())
       val total = b.count()
       // replay guard: ids in the manifest were appended = kept — re-emit
       // them, pipeline the rest (same manifest-not-bands read as ingestSink)
@@ -801,25 +801,25 @@ object Streams {
       // evaluated lazily after it, one refactor of the manifest read away
       // from seeing the batch's own appended ids. Usually empty — replays
       // are rare — so the pin costs one tiny job.
-      val replayedKept = graft.Timing("cur.replayPin")(
+      val replayedKept = graft.Phase(spark, "cur.replayPin")(
         b.join(known, Seq(idCol), "left_semi").scratchCheckpoint())
       // gates + exact dedup + within-batch near-dup: the SAME stage helper
       // the batch pipeline runs (graft.pipeline.Curation.gateAndDedup) —
       // shared code, not a "same pure expressions" promise kept by
       // copy-paste; a gate or drop-rule change lands on both paths at once
-      val (internalKept, c, sketches) = graft.Timing("cur.gateAndDedup")(
+      val (internalKept, c, sketches) = graft.Phase(spark, "cur.gateAndDedup")(
         graft.pipeline.Curation.gateAndDedupWithSketches(fresh, idCol,
           textCol, allowedLangs, minQuality, nearDupThreshold, shingleN, numHashes, bands))
       // cross-stream near-dup + survivor append, one ingest cycle — fed
       // the within-batch dedup's staged sketch relations so the cycle
       // never re-tokenizes or re-sketches the batch it was just handed
-      val (verdicts, stats) = graft.Timing("cur.ingestCycle")(
+      val (verdicts, stats) = graft.Phase(spark, "cur.ingestCycle")(
         Dedup.ingestCycle(internalKept, indexPath,
           idCol, textCol, nearDupThreshold, shingleN, numHashes, bands,
           bandsFrom = Some(sketches.bands), shinglesFrom = Some(sketches.shingles)))
       val kept = internalKept.join(
         verdicts.filter(!col("is_dup")).select(col("id").as(idCol)), Seq(idCol), "left_semi")
-      graft.Timing("cur.keptWrite")(kept.unionByName(replayedKept)
+      graft.Phase(spark, "cur.keptWrite")(kept.unionByName(replayedKept)
         .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId"))
       val compacted = math.max(stats.bandsFiles, stats.shinglesFiles) > compactAt
       if (compacted) Dedup.compactMinhashIndex(spark, indexPath)

@@ -1,27 +1,30 @@
 package graft.tools
 
-/** Dev tool: dump formatted physical plans of flagship queries to stdout
-  * (captured into docs/PLANS.md as plan-quality evidence). */
+/** Dump each query's final (post-AQE) physical plan to stdout, followed
+  * by one smell line: cartesian products, nested-loop joins and parquet
+  * scans wider than 12 columns (`SMELL <query>: clean` otherwise). With no
+  * query names it covers every SparkEntry query; docs/PLANS.md holds the
+  * captured flagship plans. Queries with construction side effects (index
+  * builds, CDC batches) run them, as in Verify.
+  * Usage: runMain graft.tools.PlanDump <sfDir> <cpus> [query...] */
 object PlanDump {
   def main(a: Array[String]): Unit = {
-    val spark = graft.GraftSession.create("local[8]", 8)
+    require(a.length >= 2, "usage: PlanDump <sfDir> <cpus> [query...]")
+    val (sfDir, cpus) = (a(0), a(1).toInt)
+    val spark = graft.GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (a.nonEmpty) a.toSeq
-      else Seq("q01_pricing_summary", "q05_enrich_join", "q07_latest_per_key",
-        "q08_asof_join", "q24_exact_dedup", "q25_minhash_pairs", "q26_ngram_jaccard",
-        "q27_simhash_pairs", "q31_hierarchy_paths", "q39_star_fact",
-        "q46_detail_merge", "q47_category_counts", "q28_embed_neardup",
-        "q58_tree_flatten", "q62_mixture_sample", "q63_top_tokens",
-        "q66_precedence_merge", "q67_skew_salted",
-        "q45_ivf_topk", "q64_payload_parse", "q65_store_lifecycle",
-        "q68_split_assign", "q69_incremental_dedup", "q70_envelope_roundtrip",
-        "q71_ingest_cycle", "q73_compacted_ingest", "q74_ivf_fixed",
-        "q89_index_delete", "q90_ivf_delete")
+    val names = if (a.length > 2) a.drop(2).toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"===== $n =====")
-      val df = graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
+      val df = graft.SparkEntry.queries(n)(spark, sfDir)
       df.collect() // finalize AQE
-      println(df.queryExecution.executedPlan.toString)
+      val plan = df.queryExecution.executedPlan.toString
+      println(plan)
+      val smells = Seq("CartesianProduct", "BroadcastNestedLoopJoin").filter(plan.contains)
+      val widest = "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(plan)
+        .map(_.group(1).count(_ == ':')).maxOption.getOrElse(0)
+      val all = smells ++ (if (widest > 12) Seq(s"wide-scan($widest cols)") else Nil)
+      println(s"SMELL $n: " + (if (all.isEmpty) "clean" else all.mkString(",")))
     }
     spark.stop()
   }

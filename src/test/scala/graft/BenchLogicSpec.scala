@@ -185,6 +185,26 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(line.contains("\"io_band\":{\"min\":2.000"))
   }
 
+  test("compactLine: 92 failed queries stay under the tail (list capped, count exact)") {
+    // the all-crash run: every query threw in every pass, AND every name is
+    // also a dirty fallback — both capped lists at their longest
+    val qs = (1 to 92).map(i => f"q$i%02d_some_rather_long_query_name")
+    val line = Bench.compactLine(0.0, "/root/testdata/sf0.1", 4, 0,
+      allContaminated = true, fallbackQs = qs, canaryMinSec = 0.9,
+      ioReadings = Seq(2.0, 2.1, 2.2, 2.3), artifactPath = "target/bench_last.json",
+      failedQs = qs)
+    assert(line.length < 2000)
+    assert(line.contains("\"failed_count\":92"))
+    val failedList = line.split("\"failed_queries\":").apply(1).takeWhile(_ != ']')
+    assert(failedList.split("q\\d\\d_some_rather_long_query_name").length - 1 === 8)
+    Seq("\"metric\":\"total\"", "\"value\":0.000", "\"unit\":\"sec\"")
+      .foreach(f => assert(line.contains(f), s"missing $f in $line"))
+    // a run with no failures says so explicitly
+    val clean = Bench.compactLine(1.0, "sf", 2, 2, allContaminated = false,
+      fallbackQs = Nil, canaryMinSec = 0.9, ioReadings = Seq(1.0), artifactPath = "p")
+    assert(clean.contains("\"failed_count\":0,\"failed_queries\":[]"))
+  }
+
   test("compactLine: empty reading list yields a null io band, not a crash") {
     val line = Bench.compactLine(1.0, "sf", 0, 0, allContaminated = true,
       fallbackQs = Nil, canaryMinSec = 0.9, ioReadings = Nil, artifactPath = "p")
