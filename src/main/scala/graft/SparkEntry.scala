@@ -1682,7 +1682,7 @@ object SparkEntry {
         Streams.curationProcessBatch(docs.filter(col("doc_id") % 5 === i), idxPath, outPath,
           i.toLong, "doc_id", "text", Seq("en", "vi"), 0.5, 0.7, 3, 12, 4, 64)
       }
-      s.read.parquet(outPath)
+      Phase(s, "cur.readBack")(s.read.parquet(outPath))
         .select(col("doc_id"), col("batch_id").cast(LongType).as("batch_id"))
         .orderBy(col("batch_id"), col("doc_id"))
     }),

@@ -152,17 +152,48 @@ object Dedup {
     * on one core); at real scale the input has thousands of splits and the
     * shuffle of raw (id, text) rows is still one linear narrow pass.
     * Downstream groupBys/distincts on `id` reuse the partitioning.
-    *
-    * Callers that need BOTH the banding and the shingle relation for the
-    * same rows (the ingest cycle, the index probe, the all-pairs dedup)
-    * checkpoint THIS frame once and derive both from it
-    * ([[bandKeysFromTokens]]/[[shinglesFromTokenRows]]) — tokenization is
-    * the sketch path's dominant per-document cost, and the pre-r19 shape
-    * paid it once per relation (two full tokenize+shuffle passes per
-    * batch; guide §2.3/§2.4 — one pass feeds every consumer). */
+    * Callers that need both sketch relations stage this frame once through
+    * [[sketchesOf]]. */
   private[graft] def tokenRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
       .repartition(col("id"))
+
+  /** The two sketch relations of one document set under one
+    * (shingleN, numHashes, bands) sketch: the (id, bandkey) banding that
+    * candidate generation joins on, and the (id, s) shingles that the
+    * Jaccard verify and the index append read. Built by [[sketchesOf]];
+    * a value handed to [[minhashDedupPairs]], [[appendToMinhashIndex]] or
+    * [[ingestCycle]] must cover the same rows as that call's documents,
+    * under the same sketch parameters (the caller's contract). */
+  final case class Sketches(bands: DataFrame, shingles: DataFrame) {
+    /** Both relations materialized concurrently ([[Scratch.checkpointPar]]:
+      * two narrow derivations over one token checkpoint back-fill each
+      * other's stage tails, guide §2.6), registered with the calling
+      * thread's scratch scope. */
+    def staged: Sketches = {
+      val (b, s) = Scratch.checkpointPar(bands, shingles)
+      Sketches(b, s)
+    }
+  }
+
+  /** The one place a document set is tokenized for sketching: [[tokenRows]]
+    * is checkpointed ONCE and both relations derive lazily from that
+    * checkpoint ([[bandKeysFromTokens]], [[shinglesFromTokenRows]]).
+    * Tokenization is the sketch path's dominant per-document cost, so one
+    * tokenize+shuffle pass feeds both relations and every consumer
+    * (guide §2.3/§2.4). The derivations are narrow map-side work (the
+    * shingle distinct reuses the token frame's hash-by-id partitioning),
+    * so a caller that reads the relations more than once materializes
+    * them with [[Sketches.staged]]; one that reads each once (an append's
+    * write) keeps them lazy. The checkpoint is eager and registers with
+    * the calling thread's scratch scope, so call this on the caller's
+    * thread, never inside a [[graft.Par]] thunk. */
+  private[graft] def sketchesOf(docs: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, numHashes: Int, bands: Int): Sketches = {
+    val toks = tokenRows(docs, idCol, textCol).scratchCheckpoint()
+    Sketches(bandKeysFromTokens(toks, shingleN, numHashes, bands),
+      shinglesFromTokenRows(toks, shingleN))
+  }
 
   /** One row per (id, shingle), DISTINCT per doc: the working relation for
     * MinHash/Jaccard. Per-doc dedup happens at the RELATION level
@@ -182,8 +213,8 @@ object Dedup {
   private[graft] def shingleRows(docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
     shinglesFromTokenRows(tokenRows(docs, idCol, textCol), shingleN)
 
-  /** [[shingleRows]] over an already-staged [[tokenRows]] relation — same
-    * expressions, so a checkpointed token frame yields the identical rows
+  /** [[shingleRows]] over a [[tokenRows]] relation — same expressions, so
+    * [[sketchesOf]]' checkpointed token frame yields the identical rows
     * without re-tokenizing. The distinct's (id, s) grouping is satisfied by
     * the token frame's hash-by-id partitioning (a subset of the keys), so
     * deriving from a checkpoint adds no shuffle. */
@@ -205,10 +236,9 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4): DataFrame =
     bandKeysFromTokens(tokenRows(docs, idCol, textCol), shingleN, numHashes, bands)
 
-  /** [[minhashBandKeys]] over an already-staged [[tokenRows]] relation —
-    * same expressions over the same rows, so callers that stage the token
-    * frame once derive this AND the shingle relation from it without a
-    * second tokenize pass. */
+  /** [[minhashBandKeys]] over a [[tokenRows]] relation — same expressions
+    * over the same rows, so [[sketchesOf]] derives this AND the shingle
+    * relation from one token checkpoint. */
   private[graft] def bandKeysFromTokens(
       toks: DataFrame, shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
     // bands > numHashes would make rows = 0, every band key the constant
@@ -242,17 +272,19 @@ object Dedup {
   def minhashLshCandidates(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4,
-      maxCandidatePairs: Long = DefaultMaxCandidatePairs,
-      bandsFrom: Option[DataFrame] = None): DataFrame = {
+      maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame =
     // localCheckpoint: without it the self-join computes the full signature
     // pass once PER SIDE (no shuffle ⇒ no exchange reuse); the banded
-    // relation is tiny (bands × docs rows of (key, id)). `bandsFrom`: a
-    // caller that already CHECKPOINTED the docs' banding (same rows, same
-    // sketch parameters — the appendToMinhashIndex expert-param contract)
-    // hands it in and skips the sketch pass.
-    val withBands = bandsFrom.getOrElse(
+    // relation is tiny (bands × docs rows of (key, id))
+    candidatesFromBands(
       minhashBandKeys(docs, idCol, textCol, shingleN, numHashes, bands)
-        .scratchCheckpoint())
+        .scratchCheckpoint(),
+      numHashes, bands, maxCandidatePairs)
+
+  /** [[minhashLshCandidates]] over an already-CHECKPOINTED banding
+    * relation: the guard, then the band-key self-join. */
+  private def candidatesFromBands(withBands: DataFrame, numHashes: Int, bands: Int,
+      maxCandidatePairs: Long): DataFrame = {
     guardSelfJoinFanout(withBands, "bandkey", maxCandidatePairs,
       "minhashLshCandidates",
       "run exactDedup first (identical documents share every band key), or " +
@@ -268,35 +300,23 @@ object Dedup {
   /** Verified near-dup pairs: LSH candidates filtered by true shingle-set
     * Jaccard ≥ threshold. Intersections are counted with an equi-join on the
     * exploded shingle relation (|candidates| × shared-shingles work), never
-    * by re-materializing per-doc arrays. */
+    * by re-materializing per-doc arrays.
+    *
+    * `sketches`: the docs' [[Sketches.staged]] relations, when the caller
+    * already has them (the curation stage shares them with the
+    * cross-stream ingest cycle); otherwise they are staged here. Both are
+    * read more than once — the self-join and guard read the banding, the
+    * verify join reads the shingles three times (sizes, id_a side, id_b
+    * side) — so they must be checkpoint-backed. */
   def minhashDedupPairs(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4,
       maxCandidatePairs: Long = DefaultMaxCandidatePairs,
-      shinglesFrom: Option[DataFrame] = None,
-      bandsFrom: Option[DataFrame] = None): DataFrame = {
-    // the verify join reads the exploded shingle relation three times
-    // (sizes, id_a side, id_b side) — materialize it once. `shinglesFrom` /
-    // `bandsFrom`: pre-CHECKPOINTED relations for the same rows under the
-    // same sketch parameters (the appendToMinhashIndex expert-param
-    // contract) — the curation batch stages them once and shares them with
-    // the cross-stream ingest cycle. When NEITHER is staged, one tokenize
-    // pass feeds both (the ingestCycle discipline: tokenRows checkpointed
-    // once, banding + shingles derived and materialized concurrently).
-    val (sh, bandsIn) = (shinglesFrom, bandsFrom) match {
-      case (Some(s0), b) => (s0, b)
-      case (None, b @ Some(_)) =>
-        (shingleRows(docs, idCol, textCol, shingleN).scratchCheckpoint(), b)
-      case (None, None) =>
-        val toks = tokenRows(docs, idCol, textCol).scratchCheckpoint()
-        val (b, s0) = Scratch.checkpointPar(
-          bandKeysFromTokens(toks, shingleN, numHashes, bands),
-          shinglesFromTokenRows(toks, shingleN))
-        (s0, Some(b))
-    }
-    val cands = minhashLshCandidates(docs, idCol, textCol, shingleN, numHashes, bands,
-      maxCandidatePairs, bandsIn)
-    verifyJaccard(cands, sh, threshold)
+      sketches: Option[Sketches] = None): DataFrame = {
+    val sk = sketches.getOrElse(
+      sketchesOf(docs, idCol, textCol, shingleN, numHashes, bands).staged)
+    verifyJaccard(candidatesFromBands(sk.bands, numHashes, bands, maxCandidatePairs),
+      sk.shingles, threshold)
   }
 
   /** A reusable MinHash corpus index: the banding relation (id, bandkey)
@@ -530,8 +550,9 @@ object Dedup {
   def readMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String): MinhashIndex =
       graft.Phase(spark, "index.read") {
     val gen = graft.store.Generations.requireCommitted(spark, path)
-    val (bands, shingles) = minusTombstones(spark, gen.toString,
-      bandsOf(spark, gen.toString), spark.read.parquet(s"$gen/shingles"))
+    val ts = graft.store.Tombstones.of(spark, gen.toString)
+    val bands = graft.store.Tombstones.minus(bandsOf(spark, gen.toString), ts, "id")
+    val shingles = graft.store.Tombstones.minus(spark.read.parquet(s"$gen/shingles"), ts, "id")
     val sketch = genSketch(spark, gen.toString)
     // bands-row upper bound from the id manifest's parquet FOOTERS (docs ×
     // bands-per-doc): driver-side metadata, no Spark job — but only while
@@ -599,20 +620,6 @@ object Dedup {
     * and its no-in-place-rewrite rationale. */
   val TombstoneCompactFiles: Int = graft.store.Tombstones.CompactFiles
 
-  /** The live generation's tombstone relation, if any deletions are
-    * pending compaction. */
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-      gen: String): Option[DataFrame] = graft.store.Tombstones.of(spark, gen)
-
-  /** Anti-join pending tombstones out of the index relations (no-op —
-    * identical frames, unchanged plans — when none are pending). */
-  private def minusTombstones(spark: org.apache.spark.sql.SparkSession, gen: String,
-      bands: DataFrame, shingles: DataFrame): (DataFrame, DataFrame) = {
-    val ts = tombstonesOf(spark, gen)
-    (graft.store.Tombstones.minus(bands, ts, "id"),
-      graft.store.Tombstones.minus(shingles, ts, "id"))
-  }
-
   /** The id manifest of the latest committed generation: one narrow row
     * per indexed document id. This is what per-batch replay guards read —
     * O(corpus ids), a fraction of the bands relation, and never the
@@ -628,7 +635,7 @@ object Dedup {
       else bandsOf(spark, gen.toString).select("id").distinct()
     // a tombstoned id is no longer IN the index — the manifest view agrees
     // with the probe view ([[deleteFromMinhashIndex]]'s contract)
-    tombstonesOf(spark, gen.toString) match {
+    graft.store.Tombstones.of(spark, gen.toString) match {
       case None => base
       case Some(ts) => base.join(broadcast(ts), Seq("id"), "left_anti")
     }
@@ -698,13 +705,13 @@ object Dedup {
     * of paying a 64-way shuffle whose every task writes a near-empty
     * file; large appends keep the shuffle for write parallelism.
     *
-    * `bandsFrom` / `shinglesFrom`: precomputed [[minhashBandKeys]] /
-    * [[shingleRows]] relations FOR THE SAME ROWS AS `batch` under the SAME
-    * sketch parameters (expert plumbing, like `idsFrom` — [[ingestCycle]]
-    * stages both once and reuses them here, sparing the append its own
-    * tokenize + sketch passes over the batch). Row-set equality is the
-    * caller's contract; they stay valid across the heal path because the
-    * heal's checkpoint preserves the batch's row set.
+    * `sketches`: the batch's [[Sketches]] (expert plumbing, like
+    * `idsFrom` — [[ingestCycle]] stages them once and reuses them here,
+    * sparing the append its own tokenize + sketch passes over the batch).
+    * Row-set equality with `batch` is the caller's contract; they stay
+    * valid across the heal path because the heal's checkpoint preserves
+    * the batch's row set. Without them the append derives both from one
+    * lazy [[sketchesOf]]: each relation is read once, by its write.
     *
     * RE-INGEST of a tombstoned id ([[deleteFromMinhashIndex]]'s contract):
     * when the generation carries live tombstones, the batch's ids are
@@ -723,8 +730,7 @@ object Dedup {
       batch: DataFrame, path: String, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4,
       idsFrom: Option[DataFrame] = None, docsHint: Long = -1L,
-      bandsFrom: Option[DataFrame] = None,
-      shinglesFrom: Option[DataFrame] = None): Unit = {
+      sketches: Option[Sketches] = None): Unit = {
     val spark = batch.sparkSession
     val gen0 = graft.store.Generations.requireCommitted(spark, path)
     requireSketch(genSketch(spark, gen0.toString), shingleN, numHashes, bands,
@@ -740,7 +746,7 @@ object Dedup {
     // disagree on the batch's ids — [[TombstoneHeal.resolve]] decides what
     // each write derives from (and what to checkpoint) per tombstone state
     val (src, ids, pinned) = TombstoneHeal.resolve(batch, ids0, idCol,
-      tombstonesOf(spark, gen0.toString))(
+      graft.store.Tombstones.of(spark, gen0.toString))(
       () => compactMinhashIndex(spark, path)) // forced by live tombstones: purge + clear
     // re-resolve: the inline compaction (if any) committed a new generation
     val gen = graft.store.Generations.requireCommitted(spark, path)
@@ -752,17 +758,11 @@ object Dedup {
       // cluster idle while the other waited
       graft.Phase(spark, "append.ids")(ids.coalesce(1)
         .write.mode("append").parquet(s"$gen/ids"))
-      // a bare-API caller staged neither relation: one token checkpoint
-      // feeds both derivations (the ingestCycle discipline) instead of two
-      // tokenize passes. Created on THIS thread — the Par thunks below only
-      // consume it (Par's no-Scratch-inside-thunks contract).
-      val stagedToks =
-        if (bandsFrom.isEmpty && shinglesFrom.isEmpty)
-          Some(tokenRows(src, idCol, textCol).scratchCheckpoint())
-        else None
-      val banded = bandsFrom
-        .orElse(stagedToks.map(bandKeysFromTokens(_, shingleN, numHashes, bands)))
-        .getOrElse(minhashBandKeys(src, idCol, textCol, shingleN, numHashes, bands))
+      // created on THIS thread — the Par thunks below only consume it
+      // (Par's no-Scratch-inside-thunks contract)
+      val sk = sketches.getOrElse(
+        sketchesOf(src, idCol, textCol, shingleN, numHashes, bands))
+      val banded = sk.bands
         .withColumn("__bkt",
           bandBucket(col("bandkey"), genBandBuckets(spark, gen.toString)))
       // repartition(1), NOT coalesce(1): coalesce collapses the UPSTREAM
@@ -779,10 +779,7 @@ object Dedup {
           // why appends never write through the partitioned tree
           laid.write.mode("append").parquet(s"$gen/bands_delta")),
         () => graft.Phase(spark, "append.shingles")(
-          shinglesFrom
-            .orElse(stagedToks.map(shinglesFromTokenRows(_, shingleN)))
-            .getOrElse(shingleRows(src, idCol, textCol, shingleN))
-            .write.mode("append").parquet(s"$gen/shingles")))
+          sk.shingles.write.mode("append").parquet(s"$gen/shingles")))
     } finally pinned.foreach(Bridge.unpersistCheckpoint)
   }
 
@@ -815,17 +812,13 @@ object Dedup {
       maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame =
       graft.Phase(batch.sparkSession, "index.probe") {
     requireSketch(idx.sketch, shingleN, numHashes, bands, "dedupAgainstIndex")
-    // ONE tokenize pass for the whole probe: the banding (checkpointed —
-    // the candidate probe and the guard both read it) and the verify
-    // join's batch shingles both derive from the staged token frame; the
-    // pre-r19 shape tokenized the batch twice (once per relation)
-    val toks = tokenRows(batch, idCol, textCol).scratchCheckpoint()
-    val bBands = bandKeysFromTokens(toks, shingleN, numHashes, bands)
-      .scratchCheckpoint()
+    // only the banding is checkpointed — the candidate probe and the guard
+    // both read it; the verify join reads the batch shingles once
+    val sk = sketchesOf(batch, idCol, textCol, shingleN, numHashes, bands)
+    val bBands = sk.bands.scratchCheckpoint()
     verdictsFromCandidates(batch,
       bandCandidatesFrom(bBands, idx, maxCandidatePairs),
-      idx, idCol, textCol, threshold, shingleN,
-      batchShingles = Some(shinglesFromTokenRows(toks, shingleN)))
+      idx, idCol, threshold, sk.shingles)
   }
 
   /** Candidate (batch id, corpus id) pairs from the banded broadcast probe —
@@ -896,19 +889,14 @@ object Dedup {
   }
 
   /** Verify + best-match + left-join back to the batch — the tail of
-    * [[dedupAgainstIndex]] given an already-built candidate relation.
-    * `batchShingles`: a caller that already materialized the batch's
-    * shingle relation ([[ingestCycle]] stages it once for the verify AND
-    * the append) passes it here and the verify path skips its own
-    * tokenize pass over the batch. */
+    * [[dedupAgainstIndex]] given an already-built candidate relation and
+    * the batch's shingle relation ([[Sketches.shingles]]). */
   private def verdictsFromCandidates(
       batch: DataFrame, cands: DataFrame, idx: MinhashIndex,
-      idCol: String, textCol: String, threshold: Double, shingleN: Int,
-      batchShingles: Option[DataFrame] = None): DataFrame = {
+      idCol: String, threshold: Double, batchSh: DataFrame): DataFrame = {
     // ids are disjoint by contract, so one unioned shingle relation serves
     // both sides of the verify join
-    val sh = batchShingles.getOrElse(shingleRows(batch, idCol, textCol, shingleN))
-      .unionByName(idx.shingles)
+    val sh = batchSh.unionByName(idx.shingles)
     val verified = verifyJaccard(cands, sh, threshold)
     val w = Window.partitionBy(col("id_a")).orderBy(col("jaccard").desc, col("id_b").asc)
     val best = verified.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
@@ -941,8 +929,7 @@ object Dedup {
       threshold: Double, shingleN: Int = 3, numHashes: Int = 12,
       bands: Int = 4,
       maxCandidatePairs: Long = DefaultMaxCandidatePairs,
-      bandsFrom: Option[DataFrame] = None,
-      shinglesFrom: Option[DataFrame] = None): (DataFrame, IngestStats) =
+      sketches: Option[Sketches] = None): (DataFrame, IngestStats) =
       graft.Phase(batch.sparkSession, "ingest.cycle")(Scratch.scoped {
     // the cycle's OWN scope: every internal scratch checkpoint (band keys
     // inside bandCandidates, the candidate relation, the verify join's
@@ -954,44 +941,24 @@ object Dedup {
     val spark = batch.sparkSession
     val idx = graft.Phase(spark, "ingest.readIndex")(readMinhashIndex(spark, path))
     requireSketch(idx.sketch, shingleN, numHashes, bands, "ingestCycle")
-    // the batch's sketch and shingle relations are staged ONCE per cycle:
-    // the banding feeds candidate generation AND the survivor append, the
-    // shingles feed the verify join AND the survivor append — previously
-    // the append re-tokenized + re-sketched the whole batch (the single
-    // largest job of a measured cycle) and the verify re-tokenized it a
-    // third time. Both frames are cycle-scoped scratch — unless the CALLER
-    // already staged them (`bandsFrom`/`shinglesFrom`, same
-    // checkpoint-backed same-rows-same-parameters contract as
-    // [[appendToMinhashIndex]]'s: the curation batch derives them from its
+    // the batch's [[Sketches]] are staged ONCE per cycle: the banding feeds
+    // candidate generation AND the survivor append, the shingles feed the
+    // verify join AND the survivor append, so neither re-tokenizes the
+    // batch (a re-sketch in the append was once the cycle's largest job).
+    // Both frames are cycle-scoped scratch — unless the CALLER already
+    // staged them (`sketches`: the curation batch derives them from its
     // within-batch dedup's relations and the cycle skips both passes).
-    val (bBands, batchSh) = (bandsFrom, shinglesFrom) match {
-      case (Some(b), Some(sh)) => (b, sh)
-      case (Some(b), None) => (b, graft.Phase(spark, "ingest.batchShingles")(
-        shingleRows(batch, idCol, textCol, shingleN).scratchCheckpoint()))
-      case (None, Some(sh)) => (graft.Phase(spark, "ingest.batchBands")(
-        minhashBandKeys(batch, idCol, textCol, shingleN, numHashes, bands)
-          .scratchCheckpoint()), sh)
-      case (None, None) =>
-        // ONE tokenize pass feeds both sketch relations (guide §2.3):
-        // tokenization is the dominant per-document cost, and the banding
-        // and shingle derivations over the staged checkpoint are narrow
-        // map-side work (the distinct reuses the hash-by-id partitioning),
-        // so they materialize CONCURRENTLY (guide §2.6) — two small jobs
-        // back-filling each other's tails instead of two full
-        // tokenize+shuffle passes in sequence.
-        val toks = graft.Phase(spark, "ingest.batchToks")(
-          tokenRows(batch, idCol, textCol).scratchCheckpoint())
-        graft.Phase(spark, "ingest.batchSketch")(Scratch.checkpointPar(
-          bandKeysFromTokens(toks, shingleN, numHashes, bands),
-          shinglesFromTokenRows(toks, shingleN)))
+    val sk = sketches.getOrElse {
+      val unstaged = graft.Phase(spark, "ingest.batchToks")(
+        sketchesOf(batch, idCol, textCol, shingleN, numHashes, bands))
+      graft.Phase(spark, "ingest.batchSketch")(unstaged.staged)
     }
     val cands = graft.Phase(spark, "ingest.bandCandidates")(
-      bandCandidatesFrom(bBands, idx, maxCandidatePairs)
+      bandCandidatesFrom(sk.bands, idx, maxCandidatePairs)
       .scratchCheckpoint())
     val verdicts = graft.Phase(spark, "ingest.verdicts")(
       Scratch.checkpointEscaping(verdictsFromCandidates(
-        batch, cands, idx, idCol, textCol, threshold, shingleN,
-        batchShingles = Some(batchSh))))
+        batch, cands, idx, idCol, threshold, sk.shingles)))
     // two independent driver actions over already-checkpointed frames —
     // run them concurrently (guide §2.6); each is fixed-overhead-bound
     @volatile var aggRow: org.apache.spark.sql.Row = null
@@ -1007,15 +974,16 @@ object Dedup {
     // the survivor ids already sit in the checkpointed verdicts — hand them
     // to the append (skips a batch re-scan + distinct for the manifest) along
     // with the known survivor count (lets a small append skip the bucket
-    // shuffle) — the q71/q73 fixed-job-overhead trim. The staged sketch /
-    // shingle relations, semi-joined down to survivors, spare the append
-    // its own tokenize + sketch passes over the batch.
+    // shuffle) — the q71/q73 fixed-job-overhead trim. The staged sketches,
+    // semi-joined down to survivors, spare the append its own tokenize +
+    // sketch passes over the batch.
     graft.Phase(spark, "ingest.append")(
       appendToMinhashIndex(survivors, path, idCol, textCol, shingleN, numHashes, bands,
         idsFrom = Some(survivorIds),
         docsHint = total - dups,
-        bandsFrom = Some(bBands.join(survivorIds, Seq("id"), "left_semi")),
-        shinglesFrom = Some(batchSh.join(survivorIds, Seq("id"), "left_semi"))))
+        sketches = Some(Sketches(
+          sk.bands.join(survivorIds, Seq("id"), "left_semi"),
+          sk.shingles.join(survivorIds, Seq("id"), "left_semi")))))
     val (bandsFiles, shinglesFiles) = graft.Phase(spark, "ingest.fileCounts")(
       minhashFileCounts(spark, path))
     (verdicts, IngestStats(
@@ -1087,7 +1055,7 @@ object Dedup {
     // pending tombstones force the rewrite regardless of file thresholds:
     // "the next compaction drops deleted rows physically" is the deletion
     // tier's contract, and the filtered read below is what enforces it
-    val hasTombstones = tombstonesOf(spark, gen.toString).isDefined
+    val hasTombstones = graft.store.Tombstones.of(spark, gen.toString).isDefined
     // the no-op comparison uses the RECORDED count (`targetBuckets == 0`
     // keeps the layout "as is" for trigger purposes): only an explicit
     // migration target forces a rewrite by itself
@@ -1117,18 +1085,15 @@ object Dedup {
       threshold: Double, shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4,
       maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame = {
     // the corpus is SMALL by this form's contract ("not worth persisting an
-    // index for"), so its token frame is staged once and both in-memory
-    // index relations derive from it — the lazy buildMinhashIndex form
-    // tokenized the corpus twice (bands checkpoint + verify-join shingles).
-    // The corpus-scale path (writeMinhashIndex) deliberately keeps the lazy
-    // relations instead: a corpus-wide token checkpoint is a cluster-sized
-    // extra copy, worse than the second tokenize pass it would save.
-    val toks = tokenRows(corpus, idCol, textCol).scratchCheckpoint()
+    // index for"), so both in-memory index relations derive from one token
+    // checkpoint — the lazy buildMinhashIndex form tokenized the corpus
+    // twice (bands checkpoint + verify-join shingles). The corpus-scale
+    // path (writeMinhashIndex) deliberately keeps the lazy relations
+    // instead: a corpus-wide token checkpoint is a cluster-sized extra
+    // copy, worse than the second tokenize pass it would save.
+    val sk = sketchesOf(corpus, idCol, textCol, shingleN, numHashes, bands)
     dedupAgainstIndex(batch,
-      MinhashIndex(
-        bandKeysFromTokens(toks, shingleN, numHashes, bands),
-        shinglesFromTokenRows(toks, shingleN),
-        sketch = Some((shingleN, numHashes, bands))),
+      MinhashIndex(sk.bands, sk.shingles, sketch = Some((shingleN, numHashes, bands))),
       idCol, textCol, threshold, shingleN, numHashes, bands, maxCandidatePairs)
   }
 

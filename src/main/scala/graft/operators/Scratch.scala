@@ -51,7 +51,10 @@ private[graft] object Scratch {
   /** Run `body`, then release every scratch checkpoint it registered on
     * this thread — and ONLY those: checkpoints belonging to concurrent
     * queries (or to outer scopes) are untouched. Scopes nest: an inner
-    * scope releases its own frames at its own exit. */
+    * scope releases its own frames at its own exit. Every streaming
+    * `foreachBatch` body runs inside one, so a long-running stream frees
+    * each batch's scratch when the batch ends (see the object doc for why
+    * neither GC nor a context-global sweep can). */
   def scoped[A](body: => A): A = {
     val stack = active.get()
     stack.push(mutable.ArrayBuffer.empty)

@@ -33,21 +33,12 @@ object Curation {
   private[graft] case class StageCounts(
       input: Long, gated: Long, afterExact: Long, afterNearDup: Long)
 
-  /** The kept frame's CHECKPOINT-BACKED sketch relations — (id, bandkey)
-    * banding and (id, s) shingles, lazily anti-joined down from the
-    * exact-dedup survivors' staged checkpoints. The streaming curation
-    * batch hands these to [[Dedup.ingestCycle]] so the cross-stream dedup
-    * never re-tokenizes or re-sketches documents the within-batch dedup
-    * already sketched (the sketch passes are materialized once; the
-    * anti-join re-evaluated per consumer is a broadcast over a tiny loser
-    * set). Valid under the same sketch parameters gateAndDedup ran with. */
-  private[graft] case class KeptSketches(bands: DataFrame, shingles: DataFrame)
-
   /** The within-corpus curation stages — language/quality gates, exact
     * dedup, near-dup removal — shared by [[curate]] and the streaming sink
     * ([[graft.streaming.Streams]]'s curation `foreachBatch`), in ONE place
     * so the two paths cannot silently diverge when a gate expression or a
-    * drop rule changes. Returns the surviving frame plus [[StageCounts]].
+    * drop rule changes. Returns the surviving frame, its [[StageCounts]]
+    * and its [[Dedup.Sketches]].
     *
     * Stage 1: the gates are scored in a NARROW projection — (id, __lang,
     * __q) only — and THAT is what gets checkpointed: a full-width
@@ -71,26 +62,18 @@ object Curation {
     * Stage 3: near-dup removal — drop the larger id of each verified pair.
     * `losers` is checkpointed (tiny — one id per dropped doc) so the
     * ledger's count AND the caller's materialization of the result don't
-    * each re-run the whole MinHash+verify pass. */
+    * each re-run the whole MinHash+verify pass. The pass stages the
+    * exact-dedup survivors' [[Dedup.Sketches]] anyway (checkpointed, the
+    * caller's scratch scope), so the kept subset's view of them — lazily
+    * anti-joined down, a broadcast over the tiny loser set — is returned:
+    * the streaming curation batch hands it to [[Dedup.ingestCycle]], which
+    * then never re-tokenizes or re-sketches the batch. Valid under the
+    * sketch parameters this call ran with. */
   private[graft] def gateAndDedup(
       docs: DataFrame, idCol: String, textCol: String,
       allowedLangs: Seq[String], minQuality: Double, nearDupThreshold: Double,
-      shingleN: Int, numHashes: Int = 12, bands: Int = 4): (DataFrame, StageCounts) = {
-    val (kept, counts, _) = gateAndDedupWithSketches(docs, idCol, textCol,
-      allowedLangs, minQuality, nearDupThreshold, shingleN, numHashes, bands)
-    (kept, counts)
-  }
-
-  /** [[gateAndDedup]] plus the kept frame's [[KeptSketches]] — the stage-3
-    * near-dup pass needs the exact-dedup survivors' banding and shingle
-    * relations anyway, so they are staged ONCE here (checkpointed,
-    * caller's scratch scope) and the kept subset's view is returned for
-    * the caller's cross-stream ingest to reuse. */
-  private[graft] def gateAndDedupWithSketches(
-      docs: DataFrame, idCol: String, textCol: String,
-      allowedLangs: Seq[String], minQuality: Double, nearDupThreshold: Double,
       shingleN: Int, numHashes: Int = 12, bands: Int = 4)
-      : (DataFrame, StageCounts, KeptSketches) = {
+      : (DataFrame, StageCounts, Dedup.Sketches) = {
     val spark = docs.sparkSession
     val scored = graft.Phase(spark, "gate.score")(docs
       .select(col(idCol),
@@ -108,30 +91,20 @@ object Curation {
       Dedup.exactDedup(gated, idCol, textCol).scratchCheckpoint())
     val nExact = graft.Phase(spark, "gate.exactCount")(exact.count())
 
-    // stage the survivors' sketch relations ONCE: the within-batch
-    // near-dup pass consumes them here, and the kept subset's view is
-    // returned for the caller's cross-stream ingest cycle to reuse. ONE
-    // tokenize pass feeds both (Dedup.tokenRows checkpointed, banding +
-    // shingles derived from it and materialized concurrently — the
-    // ingestCycle discipline, guide §2.3/§2.6).
-    val exactToks = graft.Phase(spark, "gate.exactToks")(
-      Dedup.tokenRows(exact, idCol, textCol).scratchCheckpoint())
-    val (exactBands, exactSh) = graft.Phase(spark, "gate.exactSketch")(
-      graft.operators.Scratch.checkpointPar(
-        Dedup.bandKeysFromTokens(exactToks, shingleN, numHashes, bands),
-        Dedup.shinglesFromTokenRows(exactToks, shingleN)))
+    val unstaged = graft.Phase(spark, "gate.exactToks")(
+      Dedup.sketchesOf(exact, idCol, textCol, shingleN, numHashes, bands))
+    val exactSk = graft.Phase(spark, "gate.exactSketch")(unstaged.staged)
     val pairs = Dedup.minhashDedupPairs(exact, idCol, textCol, nearDupThreshold,
-      shingleN, numHashes, bands,
-      shinglesFrom = Some(exactSh), bandsFrom = Some(exactBands))
+      shingleN, numHashes, bands, sketches = Some(exactSk))
     val losers = graft.Phase(spark, "gate.nearDupPairs")(
       pairs.select(col("id_b").as(idCol)).distinct().scratchCheckpoint())
     val kept = exact.join(losers, Seq(idCol), "left_anti")
     val nKept = graft.Phase(spark, "gate.keptCount")(kept.count())
     val loserIds = losers.select(col(idCol).as("id"))
     (kept, StageCounts(total, nGated, nExact, nKept),
-      KeptSketches(
-        exactBands.join(loserIds, Seq("id"), "left_anti"),
-        exactSh.join(loserIds, Seq("id"), "left_anti")))
+      Dedup.Sketches(
+        exactSk.bands.join(loserIds, Seq("id"), "left_anti"),
+        exactSk.shingles.join(loserIds, Seq("id"), "left_anti")))
   }
 
   def curate(
@@ -142,7 +115,7 @@ object Curation {
       shingleN: Int = 3): CurationResult = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (kept, c) = gateAndDedup(
+    val (kept, c, _) = gateAndDedup(
       docs, idCol, textCol, allowedLangs, minQuality, nearDupThreshold, shingleN)
     val ledger = Seq(
       ("input", c.input),

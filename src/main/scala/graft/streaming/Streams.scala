@@ -221,7 +221,7 @@ object Streams {
       collapseEvery: Int = 8, collapseBytesFrac: Double = 0.5,
       staleHorizon: Option[String] = None, keyBuckets: Int = CdcKeyBuckets): Unit = {
     val spark = batch.sparkSession
-    scopedUnpersist(spark) {
+    Scratch.scoped {
       // the batch is deliberately NOT checkpointed (unlike the ingest
       // sinks'): its extra evaluations are the bucket-prune collects —
       // key-column-only, column-pruned at a columnar source — and the one
@@ -521,7 +521,7 @@ object Streams {
     * be recovered and will re-classify as a first sighting; a deployment
     * that wants full rebuildability sizes its purge horizon accordingly. */
   def cdcRebuildCompanion(spark: SparkSession, historyPath: String,
-      nextBatchId: Long, keyBuckets: Int = CdcKeyBuckets): Unit = scopedUnpersist(spark) {
+      nextBatchId: Long, keyBuckets: Int = CdcKeyBuckets): Unit = Scratch.scoped {
     require(nextBatchId >= 1, "nothing to rebuild before the first batch")
     val root = new Path(s"$historyPath/_latest")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -590,22 +590,6 @@ object Streams {
         s"cdcRebuildCompanion: rename($staging -> $root) failed (filesystem returned false)")
     fs.delete(marker, false)
   }
-
-  /** Run `body`, then release the per-batch scratch checkpoints it
-    * registered — the `foreachBatch` twin of the bench's per-query
-    * cleanup. The ingest cycle checkpoints per-batch scratch (band keys,
-    * candidate pairs, the verdict frame), and with a large heap GC rarely
-    * runs, so the ContextCleaner's weak-ref cleanup never fires and a
-    * long-running stream accumulates dead blocks until heavy batches pay
-    * eviction churn (the block-manager pathology docs/BENCH_NOTES_r5.md
-    * measured at 24 GiB). Scoping is by [[graft.operators.Scratch]]'s
-    * thread-confined registry, NOT a context-global `getPersistentRDDs`
-    * diff: the global diff also swept checkpoints a CONCURRENTLY RUNNING
-    * query created in the same window, and a localCheckpoint's blocks are
-    * unrecoverable once unpersisted — one sink's per-batch cleanup could
-    * kill another sink's in-flight batch in a multi-query session. */
-  private def scopedUnpersist[A](spark: SparkSession)(body: => A): A =
-    Scratch.scoped(body)
 
   /** Move a `batch_id=` partition dir under `destRoot`, resolving a
     * pre-existing destination — shared by [[archiveBatchOutputs]] and
@@ -681,7 +665,7 @@ object Streams {
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        scopedUnpersist(spark) {
+        Scratch.scoped {
           // the source is re-read per downstream action otherwise (the
           // guard uses the batch twice, ingestCycle twice more)
           val b = batch.scratchCheckpoint()
@@ -790,7 +774,7 @@ object Streams {
       allowedLangs: Seq[String], minQuality: Double, nearDupThreshold: Double,
       shingleN: Int, numHashes: Int, bands: Int, compactAt: Int): Unit = {
     val spark = batch.sparkSession
-    scopedUnpersist(spark) {
+    graft.Phase(spark, "cur.batch")(Scratch.scoped {
       val b = graft.Phase(spark, "cur.batchCkpt")(batch.scratchCheckpoint())
       val total = b.count()
       // replay guard: ids in the manifest were appended = kept — re-emit
@@ -808,7 +792,7 @@ object Streams {
       // shared code, not a "same pure expressions" promise kept by
       // copy-paste; a gate or drop-rule change lands on both paths at once
       val (internalKept, c, sketches) = graft.Phase(spark, "cur.gateAndDedup")(
-        graft.pipeline.Curation.gateAndDedupWithSketches(fresh, idCol,
+        graft.pipeline.Curation.gateAndDedup(fresh, idCol,
           textCol, allowedLangs, minQuality, nearDupThreshold, shingleN, numHashes, bands))
       // cross-stream near-dup + survivor append, one ingest cycle — fed
       // the within-batch dedup's staged sketch relations so the cycle
@@ -816,7 +800,7 @@ object Streams {
       val (verdicts, stats) = graft.Phase(spark, "cur.ingestCycle")(
         Dedup.ingestCycle(internalKept, indexPath,
           idCol, textCol, nearDupThreshold, shingleN, numHashes, bands,
-          bandsFrom = Some(sketches.bands), shinglesFrom = Some(sketches.shingles)))
+          sketches = Some(sketches)))
       val kept = internalKept.join(
         verdicts.filter(!col("is_dup")).select(col("id").as(idCol)), Seq(idCol), "left_semi")
       graft.Phase(spark, "cur.keptWrite")(kept.unionByName(replayedKept)
@@ -830,7 +814,7 @@ object Streams {
           "dropped_near_dup_batch", "dropped_near_dup_corpus", "kept", "compacted")
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$outPath/_ledger/batch_id=$batchId")
-    }
+    })
   }
 
   /** Operational progress ledger for ANY streaming query — the §2.8 stats
@@ -929,7 +913,7 @@ object Streams {
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        scopedUnpersist(spark) {
+        Scratch.scoped {
           // materialized once: the batch feeds the guard join and the append
           val b = batch.scratchCheckpoint()
           // id manifest, not a distinct over the whole assigned tree

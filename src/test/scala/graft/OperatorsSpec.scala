@@ -578,6 +578,36 @@ class OperatorsSpec extends SparkSpec {
     rebuildAndProbe(64, legacyMarker = true, Some(mtime))
   }
 
+  test("ingestCycle: caller-staged sketches and the cycle's own staging agree") {
+    val corpus = (1 to 12).map(i =>
+      (i.toLong, s"corpus document number $i talks about topic $i in some detail here"))
+      .toDF("doc_id", "text")
+    val batch = Seq(
+      (101L, "corpus document number 3 talks about topic 3 in some detail here"), // exact copy
+      (102L, "corpus document number 7 talks about topic 7 in some more detail here"), // edited copy
+      (103L, "a fresh document that shares nothing with the indexed corpus at all"),
+      (104L, "another new arrival about streaming joins and watermark semantics"))
+      .toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("mhidx_staged")
+    val (bare, staged) = (s"$root/bare", s"$root/staged")
+    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(corpus, "doc_id", "text"), bare)
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(bare), new java.io.File(staged))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val (vBare, sBare) = Dedup.ingestCycle(batch, bare, "doc_id", "text", threshold = 0.5)
+    val (vStaged, sStaged) = Dedup.ingestCycle(batch, staged, "doc_id", "text", threshold = 0.5,
+      sketches = Some(Dedup.sketchesOf(batch, "doc_id", "text", 3, 12, 4).staged))
+    assert(rows(vStaged) === rows(vBare))
+    assert(rows(vBare.filter(col("is_dup")).select("id", "dup_of")) === Seq("101|3", "102|7"))
+    assert(sStaged === sBare)
+    assert(sBare.appendedRows === 2L)
+    assert(rows(Dedup.minhashIndexIds(spark, staged)) === rows(Dedup.minhashIndexIds(spark, bare)))
+    val (iBare, iStaged) = (Dedup.readMinhashIndex(spark, bare), Dedup.readMinhashIndex(spark, staged))
+    assert(rows(iStaged.bands.select("id", "bandkey")) === rows(iBare.bands.select("id", "bandkey")))
+    assert(rows(iStaged.shingles) === rows(iBare.shingles))
+    assert(rows(iBare.shingles.select("id").distinct()).size === 14)
+  }
+
   test("resolvePaths cycle guards: self-parent and two-node cycles terminate") {
     val cats = Seq(
       ("A", "NodeA", "A"),          // self-parent

@@ -30,48 +30,58 @@ class PhaseSpec extends SparkSpec {
     finally sc.setJobDescription(null)
   }
 
-  test("q73_compacted_ingest: every job is labelled query › operator, ingest and compaction phases included") {
-    val q = "q73_compacted_ingest"
-    // jobs launched from this thread (and the Par / broadcast threads that
-    // inherit its local properties) carry the marker; a job from anywhere
-    // else in the shared session is not this query's
-    val marker = "graft.test.phaseSpec"
-    val jobs = mutable.ArrayBuffer.empty[(String, String)] // (description, label)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.synchronized {
-        val p = js.properties
-        if (p != null && p.getProperty(marker) != null)
-          jobs += ((String.valueOf(p.getProperty(Desc)), Phase.of(p).getOrElse("(unlabelled)")))
+  // (query, test-name tail, the operators its jobs may name, label
+  // prefixes that must appear)
+  private val lifecycles = Seq(
+    ("q73_compacted_ingest", "ingest and compaction phases included",
+      Set("tables.load", "index.write", "index.read", "index.compact", "index.probe",
+        "ingest.cycle", "count"),
+      Seq("ingest.cycle › ingest.", "index.compact")),
+    ("q87_curation_stream", "gate, ingest and read-back phases included",
+      Set("tables.load", "index.write", "cur.batch", "cur.readBack", "count"),
+      Seq("cur.batch › cur.gateAndDedup › gate.",
+        "cur.batch › cur.ingestCycle › ingest.cycle › ingest.", "cur.readBack")))
+
+  for ((q, what, operators, mustSee) <- lifecycles)
+    test(s"$q: every job is labelled query › operator, $what") {
+      // jobs launched from this thread (and the Par / broadcast threads
+      // that inherit its local properties) carry the marker; a job from
+      // anywhere else in the shared session is not this query's
+      val marker = "graft.test.phaseSpec"
+      val jobs = mutable.ArrayBuffer.empty[(String, String)] // (description, label)
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit = jobs.synchronized {
+          val p = js.properties
+          if (p != null && p.getProperty(marker) != null)
+            jobs += ((String.valueOf(p.getProperty(Desc)), Phase.of(p).getOrElse("(unlabelled)")))
+        }
       }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(marker, "1")
-    try {
-      val rows = Phase(spark, q) {
-        val df = SparkEntry.queries(q)(spark, sfDir)
-        Phase(spark, "count")(df.count())
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(marker, "1")
+      try {
+        val rows = Phase(spark, q) {
+          val df = SparkEntry.queries(q)(spark, sfDir)
+          Phase(spark, "count")(df.count())
+        }
+        assert(rows > 0)
+      } finally {
+        sc.setLocalProperty(marker, null)
+        Bridge.drainListenerBus(spark)
+        sc.removeSparkListener(listener)
       }
-      assert(rows > 0)
-    } finally {
-      sc.setLocalProperty(marker, null)
-      Bridge.drainListenerBus(spark)
-      sc.removeSparkListener(listener)
+      val seen = jobs.synchronized(jobs.toList)
+      assert(seen.size > 20, s"expected the lifecycle's jobs, saw ${seen.size}")
+      val unlabelled = seen.map(_._2).distinct.filterNot { l =>
+        l.startsWith(s"$q › ") && operators(l.stripPrefix(s"$q › ").split(" › ").head)
+      }
+      assert(unlabelled.isEmpty, s"jobs without an operator label: ${unlabelled.mkString(" | ")}")
+      // the description IS the label, except where Spark's parallel file
+      // listing writes its own
+      val relabelled = seen.filterNot { case (d, l) => d == l || d.startsWith("Listing leaf files") }
+      assert(relabelled.isEmpty, relabelled.distinct.mkString(" | "))
+      val labels = seen.map(_._2).distinct
+      for (m <- mustSee)
+        assert(labels.exists(_.startsWith(s"$q › $m")), s"no $m label: ${labels.mkString(" | ")}")
     }
-    val seen = jobs.synchronized(jobs.toList)
-    assert(seen.size > 20, s"expected the lifecycle's jobs, saw ${seen.size}")
-    val operators = Set("tables.load", "index.write", "index.read",
-      "index.compact", "index.probe", "ingest.cycle", "count")
-    val unlabelled = seen.map(_._2).filterNot { l =>
-      l.startsWith(s"$q › ") && operators(l.stripPrefix(s"$q › ").split(" › ").head)
-    }
-    assert(unlabelled.isEmpty, s"jobs without an operator label: ${unlabelled.distinct.mkString(" | ")}")
-    // the description IS the label, except where Spark's parallel file
-    // listing writes its own
-    val relabelled = seen.filterNot { case (d, l) => d == l || d.startsWith("Listing leaf files") }
-    assert(relabelled.isEmpty, relabelled.distinct.mkString(" | "))
-    val labels = seen.map(_._2).distinct
-    assert(labels.exists(_.startsWith(s"$q › ingest.cycle › ingest.")), labels.mkString(" | "))
-    assert(labels.exists(_.startsWith(s"$q › index.compact")), labels.mkString(" | "))
-  }
 }
