@@ -152,15 +152,17 @@ object Bench {
     * unbounded fields are the two query lists (92 long names would alone
     * overflow the tail in the pathological all-fallback or all-failed
     * run), so `dirty_fallback_queries` and `failed_queries` (queries that
-    * threw in any pass) are capped at 8 names each, with
+    * threw in any pass) are capped at 5 names each, with
     * `dirty_fallback_count` / `failed_count` carrying the true totals —
     * the loud verdict survives truncation, the full lists are in the
-    * file. */
+    * file. `query_sec` keys each timed query's seconds by its unique `qNN`
+    * prefix — 92 full names would alone overflow the tail. Queries
+    * without a time (failed in every pass) are absent. */
   private[graft] def compactLine(
       total: Double, sfDir: String, runs: Int, cleanPasses: Int,
       allContaminated: Boolean, fallbackQs: Seq[String], canaryMinSec: Double,
       ioReadings: Seq[Double], artifactPath: String,
-      failedQs: Seq[String] = Nil): String = {
+      failedQs: Seq[String] = Nil, querySec: Seq[(String, Double)] = Nil): String = {
     val ioBand =
       if (ioReadings.isEmpty) "null"
       else s"""{"min":${fmt(ioReadings.min)},"median":${fmt(median(ioReadings))},"max":${fmt(ioReadings.max)}}"""
@@ -168,10 +170,12 @@ object Bench {
       s""","runs":$runs,"clean_passes":$cleanPasses""" +
       s""","all_passes_contaminated":$allContaminated""" +
       s""","dirty_fallback_count":${fallbackQs.size}""" +
-      s""","dirty_fallback_queries":${jsonList(fallbackQs.take(8))}""" +
-      s""","failed_count":${failedQs.size},"failed_queries":${jsonList(failedQs.take(8))}""" +
+      s""","dirty_fallback_queries":${jsonList(fallbackQs.take(5))}""" +
+      s""","failed_count":${failedQs.size},"failed_queries":${jsonList(failedQs.take(5))}""" +
       s""","canary_min_sec":${fmt(canaryMinSec)},"io_band":$ioBand""" +
-      s""","artifact":"$artifactPath"}"""
+      s""","artifact":"$artifactPath"""" +
+      querySec.map { case (q, sec) => s"\"${q.takeWhile(_ != '_')}\":${fmt(sec)}" }
+        .mkString(""","query_sec":{""", ",", "}}")
   }
 
   /** Fixed deterministic CPU canary: a single-threaded LCG+xorshift loop
@@ -429,8 +433,9 @@ object Bench {
     // because the tail slices the line mid-object. The file keeps the
     // unchanged full format for bench_minima.py/bench_ab; the stdout line
     // carries only the headline fields (total, pass/clean counts, the
-    // loud verdicts, canary min, io band, and the artifact's path) and is
-    // pinned well under the tail by compactLine's cap logic + spec.
+    // loud verdicts, canary min, io band, the artifact's path and each
+    // query's seconds) and is pinned under the tail by compactLine's caps
+    // + spec.
     val artifactPath = sys.props.get("graft.bench.artifact_path")
       .orElse(sys.env.get("GRAFT_BENCH_ARTIFACT_PATH"))
       .getOrElse("target/bench_last.json")
@@ -440,7 +445,7 @@ object Bench {
     System.err.println(s"[bench] full artifact -> $artifactPath")
     val compact = compactLine(total, sfDir, passes.size, clean.size,
       allContaminated, fallbackQs, canMin, passes.map(_.ioCanary).toSeq,
-      artifactPath, failedQs)
+      artifactPath, failedQs, results)
     // stop Spark BEFORE emitting the JSON line, then quiesce both streams:
     // sbt reads stdout and stderr on separate threads and interleaves them
     // by arrival, so a JSON line printed while per-query stderr lines are

@@ -612,8 +612,7 @@ object Ann {
         col(vecCol).as("cv"), Similarity.norm(col(vecCol)).as("cn"))
     val scored = probes.join(corpus, Seq("list"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(Similarity.cosineFromNorms(
-        Similarity.dot(col("qv"), col("cv")), col("qn"), col("cn")), 6))
+      .withColumn("cosine", Similarity.scoredCosine(col("qv"), col("cv"), col("qn"), col("cn")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
@@ -249,11 +249,21 @@ object Dedup {
     val rows = numHashes / bands
     val sig = toks.select(col("id"), graft.expressions.HashExpressions.minhashSignature(
       shinglesFromTokens(col("__toks"), shingleN), numHashes).as("sig"))
-    val bandCols = (0 until bands).map { b =>
-      concat(lit(s"$b:"),
-        md5(concat_ws(",", (b * rows until (b + 1) * rows).map(i => element_at(col("sig"), i + 1)): _*)))
-    }
-    sig.select(col("id"), explode(array(bandCols: _*)).as("bandkey"))
+    bandRows(sig, (0 until bands).map { b =>
+      md5(concat_ws(",", (b * rows until (b + 1) * rows).map(i => element_at(col("sig"), i + 1)): _*))
+    })
+  }
+
+  /** The banding shape every LSH scheme here shares: band b's key
+    * `keys(b)` gets the prefix `b:` (equal raw keys in different bands
+    * must not collide) and the bands explode into one `bandkey` column —
+    * one row per (id, band), carrying `id` and `keep`. [[bandedPairs]]
+    * self-joins the result. The MinHash keys ARE the persisted index's
+    * bands relation (its `__bkt` prune hashes them): their bytes are
+    * pinned by an OperatorsSpec golden. */
+  private def bandRows(df: DataFrame, keys: Seq[Column], keep: Column*): DataFrame = {
+    val prefixed = keys.zipWithIndex.map { case (k, b) => concat(lit(s"$b:"), k) }
+    df.select((col("id") +: keep :+ explode(array(prefixed: _*)).as("bandkey")): _*)
   }
 
   /** Candidate near-dup pairs via MinHash + LSH banding (self-join form of
@@ -262,40 +272,25 @@ object Dedup {
     * The degenerate-PARAMETER shapes are rejected by [[minhashBandKeys]]'
     * require, but saturation is also a property of the CORPUS: identical
     * documents produce identical signatures, so a duplicate-heavy corpus
-    * piles into few band keys and the self-join emits nC2 per pile no
-    * matter how the sketch is parameterized. The fan-out is therefore
-    * MEASURED over the checkpointed banding before the join runs — same
-    * fail-loud discipline as [[simhashPairs]], tiered via
-    * [[guardSelfJoinFanout]] (free C(N,2) bound first, the per-key
-    * histogram only where the bound cannot rule saturation out) — and
-    * EAGER the same way (construction runs the sketch scan + the guard). */
+    * piles into few band keys no matter how the sketch is parameterized.
+    * Guarded and EAGER as [[bandedPairs]] describes. */
   def minhashLshCandidates(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4,
       maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame =
-    // localCheckpoint: without it the self-join computes the full signature
-    // pass once PER SIDE (no shuffle ⇒ no exchange reuse); the banded
-    // relation is tiny (bands × docs rows of (key, id))
     candidatesFromBands(
       minhashBandKeys(docs, idCol, textCol, shingleN, numHashes, bands)
         .scratchCheckpoint(),
       numHashes, bands, maxCandidatePairs)
 
   /** [[minhashLshCandidates]] over an already-CHECKPOINTED banding
-    * relation: the guard, then the band-key self-join. */
+    * relation: [[bandedPairs]] with the MinHash sizing guidance. */
   private def candidatesFromBands(withBands: DataFrame, numHashes: Int, bands: Int,
-      maxCandidatePairs: Long): DataFrame = {
-    guardSelfJoinFanout(withBands, "bandkey", maxCandidatePairs,
-      "minhashLshCandidates",
+      maxCandidatePairs: Long): DataFrame =
+    bandedPairs(withBands, maxCandidatePairs, "minhashLshCandidates",
       "run exactDedup first (identical documents share every band key), or " +
         s"raise numHashes/bands rows per band (currently ${numHashes / bands} " +
         "— more rows per band = more selective keys, at some recall cost)")
-    val a = withBands.select(col("bandkey"), col("id").as("id_a"))
-    val b = withBands.select(col("bandkey"), col("id").as("id_b"))
-    a.join(b, Seq("bandkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
 
   /** Verified near-dup pairs: LSH candidates filtered by true shingle-set
     * Jaccard ≥ threshold. Intersections are counted with an equi-join on the
@@ -374,7 +369,7 @@ object Dedup {
   /** The bucket a band key lands in under an `n`-way layout — Spark's
     * Murmur3 `hash`, stable across JVMs/sessions, so writer and probe
     * always agree on the SAME generation's recorded modulus. */
-  private def bandBucket(c: org.apache.spark.sql.Column, n: Int) = pmod(hash(c), lit(n))
+  private def bandBucket(c: Column, n: Int) = pmod(hash(c), lit(n))
 
   /** Marker metadata of a COMMITTED generation — (bands bucket modulus,
     * sketch parameters) — resolved from ONE directory listing. A
@@ -1122,11 +1117,17 @@ object Dedup {
     inter
       .join(sizes.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
       .join(sizes.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
+      .withColumn("jaccard", jaccard6(col("inter"), col("n_a"), col("n_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
+
+  /** Jaccard from an intersection count and the two set sizes, rounded to
+    * 6 dp: every `>= threshold` decision compares this score, so boundary
+    * pairs decide identically across engines and across the verify,
+    * inverted and dense routes. */
+  private def jaccard6(inter: Column, nA: Column, nB: Column): Column =
+    round(inter.cast("double") / (nA + nB - inter).cast("double"), 6)
 
   /** All-pairs n-gram Jaccard ≥ threshold, exact, via an inverted-index
     * join with a **length filter**: one row per (doc, shingle), self-joined
@@ -1250,8 +1251,7 @@ object Dedup {
       .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"),
         col("x.n").as("n_a"), col("y.n").as("n_b"))
       .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
+      .withColumn("jaccard", jaccard6(col("inter"), col("n_a"), col("n_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -1311,8 +1311,7 @@ object Dedup {
     val interCol = (0 until words).map { w =>
       bit_count(col(s"x.w$w").bitwiseAND(col(s"y.w$w"))).cast("long")
     }.reduce(_ + _)
-    val jaccardCol = round(interCol.cast("double") /
-      (col("x.n") + col("y.n") - interCol).cast("double"), 6)
+    val jaccardCol = jaccard6(interCol, col("x.n"), col("y.n"))
     // The hot-loop threshold is the INTEGER-relaxed form: J = I/(n_a+n_b−I)
     // ≥ t ⟺ I·(1+t) ≥ t·(n_a+n_b), evaluated with ONE pass over the
     // popcount chain and no division/round per pair (jaccardCol references
@@ -1428,42 +1427,24 @@ object Dedup {
     * of ~5 bits ≈ 32 keys per band) saturates its keyspace around 10⁴
     * docs and the "banded" self-join is a cross join in disguise
     * (both measured in docs/SCALE.md "SimHash fan-out, measured (r13)").
-    *
-    * Because saturation depends on the CORPUS (a dup-heavy corpus piles
-    * into few keys at any width), the fan-out is also MEASURED, not
-    * assumed: one aggregate over the checkpointed banding relation counts
-    * the candidate pairs the self-join would emit, and the join only runs
-    * under `maxCandidatePairs` — the same fail-loud discipline as the
-    * Jaccard route's `DenseMaxDocs`, except there is no alternative route
-    * to degrade to, so over the cap the call stops with sizing guidance
-    * instead of running a quiet N² job for days.
-    *
-    * EAGER: constructing the returned DataFrame (before any action on it)
-    * already runs two Spark jobs — the fingerprint+banding scan (the
-    * checkpoint) and the guard (a near-free count over the checkpointed
-    * banding; the per-key stats aggregate only where the C(N,2) bound
-    * cannot rule saturation out). Callers composing plans
-    * speculatively pay both up front; that is the cost of refusing the N²
-    * join before it exists rather than after. All guarded banded joins in
-    * this file ([[minhashLshCandidates]], [[embeddingNearDupPairs]],
-    * [[dedupAgainstIndex]]) share this contract. */
+    * A dup-heavy corpus piles into few keys at any width, so the join is
+    * guarded and EAGER as [[bandedPairs]] describes; there is no
+    * alternative route to degrade to, so over the cap it stops with
+    * sizing guidance. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       bits: Int = 64, maxDist: Int = 2,
-      maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame = {
-    val banded = simhashBanded(docs, idCol, textCol, bits, maxDist)
-    guardSelfJoinFanout(banded, "band", maxCandidatePairs, "simhashPairs",
+      maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame =
+    // the hamming filter over the distinct's grouping column is pushed
+    // through it into the join condition: only near pairs reach the distinct
+    bandedPairs(simhashBanded(docs, idCol, textCol, bits, maxDist),
+      maxCandidatePairs, "simhashPairs",
       s"raise bits (currently $bits; 64 is the max and the default), lower " +
-        "maxDist, run exactDedup first if the corpus is duplicate-heavy")
-    banded.as("x").join(banded.as("y"), col("x.band") === col("y.band") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-        hammingDistance(col("x.fp"), col("y.fp")).as("hamming"))
-      .distinct()
+        "maxDist, run exactDedup first if the corpus is duplicate-heavy",
+      hammingDistance(col("x.fp"), col("y.fp")).as("hamming"))
       .filter(col("hamming") <= maxDist)
-  }
 
   /** The banding relation [[simhashPairs]] self-joins — one row per
-    * (id, fp, band), checkpointed (both join sides would otherwise re-run
-    * the fingerprint scan). */
+    * (id, fp, bandkey), checkpointed. */
   private def simhashBanded(docs: DataFrame, idCol: String, textCol: String,
       bits: Int, maxDist: Int): DataFrame = {
     require(bits >= 1 && bits <= 64, s"bits must be in 1..64, got $bits")
@@ -1475,16 +1456,13 @@ object Dedup {
         graft.expressions.HashExpressions.simhash64(col("__toks"), bits).as("fp"))
     val nb = maxDist + 1
     val bounds = (0 to nb).map(i => i * bits / nb)
-    val bandCols = (0 until nb).map { b =>
+    bandRows(fp, (0 until nb).map { b =>
       val lo = bounds(b); val width = bounds(b + 1) - lo
       // (1L << 64) wraps to 1L, so a single full-width chunk (bits = 64,
       // maxDist = 0) would mask every fingerprint to 0 — one constant band
       val mask = if (width >= 64) -1L else (1L << width) - 1
-      concat(lit(s"$b:"), shiftright(col("fp"), lo)
-        .bitwiseAND(lit(mask)).cast("string"))
-    }
-    fp.select(col("id"), col("fp"), explode(array(bandCols: _*)).as("band"))
-      .scratchCheckpoint()
+      shiftright(col("fp"), lo).bitwiseAND(lit(mask)).cast("string")
+    }, col("fp")).scratchCheckpoint()
   }
 
   /** Candidate fan-out of a banding relation: Σ over band keys of nC2 —
@@ -1494,13 +1472,9 @@ object Dedup {
     * banding. */
   final case class BandFanoutStats(candidatePairs: Double, maxBucket: Long, distinctBands: Long)
 
-  /** Candidate fan-out of a banded SELF-join keyed on `keyCol`: Σ over keys
-    * of nC2 — exactly the row count the self-join will emit. One cheap
-    * aggregate over the (already-materialized) banding relation. Generic
-    * across the simhash / MinHash-LSH / sign-LSH routes: saturation depends
-    * on the CORPUS (a duplicate-heavy corpus piles into few keys at ANY
-    * parameterization), so every banded self-join measures before joining. */
-  private[graft] def bandFanoutStats(banded: DataFrame, keyCol: String = "band"): BandFanoutStats = {
+  /** [[BandFanoutStats]] of a SELF-join keyed on `keyCol` ([[bandedPairs]]'
+    * `bandkey`, the inverted n-gram route's shingle). */
+  private[graft] def bandFanoutStats(banded: DataFrame, keyCol: String): BandFanoutStats = {
     val r = banded.groupBy(keyCol)
       .agg(count(lit(1)).as("c"))
       .agg(sum(col("c").cast("double") * (col("c") - 1) / 2).as("pairs"),
@@ -1575,6 +1549,33 @@ object Dedup {
         maxCandidatePairs, what, guidance)
   }
 
+  /** THE banded self-join of the near-dup operators ([[minhashLshCandidates]]
+    * and [[minhashDedupPairs]], [[simhashPairs]], [[embeddingNearDupPairs]]):
+    * distinct (id_a, id_b, pairCols...) over every two rows of `banded`
+    * ([[bandRows]]' shape) sharing a `bandkey`, id_a < id_b. `pairCols`
+    * may read `x.<col>` / `y.<col>`; a caller's filter on one is pushed
+    * through the distinct into the join condition. `banded` must be
+    * CHECKPOINTED: the guard and both join sides read it, and a
+    * shuffle-free self-join reuses no exchange.
+    *
+    * MEASURED: saturation is a property of the CORPUS (duplicate-heavy
+    * data piles into few keys at any parameterization), so the join runs
+    * only under `maxCandidatePairs` ([[guardSelfJoinFanout]]); past it the
+    * call fails naming `what` and the scheme's sizing `guidance`.
+    *
+    * EAGER: constructing the returned DataFrame already runs the caller's
+    * banding checkpoint and the guard — the cost of refusing the N² join
+    * before it exists rather than after. The two-sided index probe
+    * ([[dedupAgainstIndex]]) keeps the same contract via [[guardJoinFanout]]. */
+  private def bandedPairs(banded: DataFrame, maxCandidatePairs: Long, what: String,
+      guidance: String, pairCols: Column*): DataFrame = {
+    guardSelfJoinFanout(banded, "bandkey", maxCandidatePairs, what, guidance)
+    banded.as("x").join(banded.as("y"),
+        col("x.bandkey") === col("y.bandkey") && col("x.id") < col("y.id"))
+      .select((col("x.id").as("id_a") +: col("y.id").as("id_b") +: pairCols): _*)
+      .distinct()
+  }
+
   /** Shared guard body: every banded candidate join measures its exact
     * fan-out first and refuses to run past the cap with route-specific
     * sizing guidance — the alternative is a silent N² job for days. */
@@ -1608,42 +1609,31 @@ object Dedup {
     * back, so each pair pays exactly one dot product and the banded relation
     * that self-joins carries no vector payload.
     *
-    * Like every banded self-join here the bucket fan-out is MEASURED over
-    * the checkpointed banding before the join runs (a corpus of identical
-    * or co-directional vectors piles into one bucket per band at any
-    * `planes`), and construction is EAGER the same way as [[simhashPairs]]
-    * — the bucketing scan and the guard aggregate run before any action. */
+    * Like every banded self-join here it is guarded and EAGER as
+    * [[bandedPairs]] describes: a corpus of identical or co-directional
+    * vectors piles into one bucket per band at any `planes`. */
   def embeddingNearDupPairs(
       emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, planes: Int = 8, bands: Int = 4,
       maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame = {
     val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
       Similarity.norm(col(vecCol)).as("nrm"))
-    val banded = embeddingBanded(emb, idCol, vecCol, planes, bands)
-    guardSelfJoinFanout(banded, "band", maxCandidatePairs,
-      "embeddingNearDupPairs",
+    val cand = bandedPairs(embeddingBanded(emb, idCol, vecCol, planes, bands),
+      maxCandidatePairs, "embeddingNearDupPairs",
       s"raise planes (currently $planes — each extra plane roughly halves " +
         "bucket occupancy), or drop exact-duplicate vectors first (identical " +
         "vectors share every bucket)")
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b")).distinct()
-    // verify: join vectors back by id (two pruned corpus scans — the scale
-    // shape; vectors never ride through the band self-join).
-    // threshold compares the 6-dp-rounded cosine so the boundary decision is
-    // identical across engines regardless of FP summation order
     cand
       .join(base.select(col("id").as("id_a"), col("v").as("va"), col("nrm").as("na")), Seq("id_a"))
       .join(base.select(col("id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), Seq("id_b"))
-      .withColumn("cosine", round(Similarity.cosineFromNorms(
-        Similarity.dot(col("va"), col("vb")), col("na"), col("nb")), 6))
+      .withColumn("cosine",
+        Similarity.scoredCosine(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
   /** The sign-LSH banding relation [[embeddingNearDupPairs]] self-joins —
-    * one (id, band) row per document per band, checkpointed (both join
-    * sides would otherwise re-scan the corpus). */
+    * one (id, bandkey) row per document per band, checkpointed. */
   private def embeddingBanded(emb: DataFrame, idCol: String, vecCol: String,
       planes: Int, bands: Int): DataFrame = {
     // the bands read DISJOINT component ranges, so they must fit the vector:
@@ -1655,10 +1645,8 @@ object Dedup {
         s"bands ($bands) x planes ($planes) = ${bands * planes} components, " +
           s"but the embedding has only ${r.getInt(0)} dimensions")
     }
-    val bandCols = (0 until bands).map { b =>
-      concat(lit(s"$b:"), Similarity.signBucketAt(col(vecCol), b * planes, planes).cast("string"))
-    }
-    emb.select(col(idCol).as("id"), explode(array(bandCols: _*)).as("band"))
-      .scratchCheckpoint()
+    bandRows(emb.select(col(idCol).as("id"), col(vecCol)), (0 until bands).map { b =>
+      Similarity.signBucketAt(col(vecCol), b * planes, planes).cast("string")
+    }).scratchCheckpoint()
   }
 }

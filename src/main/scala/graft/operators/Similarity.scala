@@ -55,6 +55,12 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     cosineFromNorms(dot(a, b), norm(a), norm(b))
 
+  /** The cosine every pairwise plan ranks and thresholds on: rounded to
+    * 6 dp, so boundary decisions match across engines whatever the
+    * floating-point summation order. */
+  private[graft] def scoredCosine(a: Column, b: Column, na: Column, nb: Column): Column =
+    round(cosineFromNorms(dot(a, b), na, nb), 6)
+
   /** Sign-LSH bucket id from the signs of the first `planes` components.
     * Deterministic and portable (no random hyperplane matrix to ship);
     * components of learned embeddings are near-orthogonal enough for
@@ -79,9 +85,8 @@ object Similarity {
 
   /** Brute-force cosine top-k: for every query row, the k nearest corpus
     * rows (excluding self-matches by id). Query side is broadcast.
-    * Ranking is on the 6-dp-rounded cosine (ties → neighbor_id) so the
-    * ordering is deterministic and identical across engines regardless of
-    * floating-point summation order. */
+    * Ranking is on the [[scoredCosine]] (ties → neighbor_id), so the
+    * ordering is deterministic. */
   def bruteForceTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
@@ -90,8 +95,7 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       norm(col(vecCol)).as("cn"))
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        round(cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")), 6))
+      .withColumn("cosine", scoredCosine(col("qv"), col("cv"), col("qn"), col("cn")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -126,8 +130,7 @@ object Similarity {
         "bucket occupancy), split the query set, or use the IVF index " +
         "(Ann.ivfTopK) for corpus-scale query sets")
     val scored = q.join(c, Seq("bucket")).filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        round(cosineFromNorms(dot(col("qv"), col("cv")), col("qn"), col("cn")), 6))
+      .withColumn("cosine", scoredCosine(col("qv"), col("cv"), col("qn"), col("cn")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))

@@ -150,10 +150,11 @@ class BenchLogicSpec extends AnyFunSuite {
       Seq(false, true))
   }
 
-  test("compactLine: headline fields present, no per-query payload, always under the driver's 2000-char tail") {
+  test("compactLine: headline fields present, per-query seconds keyed by qNN, always under the driver's 2000-char tail") {
     val line = Bench.compactLine(215.337, "/root/testdata/sf0.1", 3, 2,
       allContaminated = false, fallbackQs = Nil, canaryMinSec = 0.852,
-      ioReadings = Seq(1.012, 0.94, 1.418), artifactPath = "target/bench_last.json")
+      ioReadings = Seq(1.012, 0.94, 1.418), artifactPath = "target/bench_last.json",
+      querySec = Seq("q01_pricing_summary" -> 0.4123, "q25_minhash_pairs" -> 12.0))
     assert(line.length < 2000)
     assert(line.startsWith("{") && line.endsWith("}"))
     // the driver's contract fields plus every loud verdict
@@ -164,9 +165,34 @@ class BenchLogicSpec extends AnyFunSuite {
       "\"io_band\":{\"min\":0.940,\"median\":1.012,\"max\":1.418}",
       "\"artifact\":\"target/bench_last.json\"")
       .foreach(f => assert(line.contains(f), s"missing $f in $line"))
-    // the ~10kB killers stay in the file: no per-query map, no per_run
+    // each query's seconds at 3 decimals under its qNN prefix; the
+    // ~10kB killers (full-name map, per_run arrays) stay in the file
+    assert(line.endsWith(""","query_sec":{"q01":0.412,"q25":12.000}}"""), line)
     assert(!line.contains("\"queries\""))
     assert(!line.contains("\"per_run\""))
+    // no timed query: an empty map, still valid JSON
+    val none = Bench.compactLine(0.0, "sf", 1, 1, allContaminated = false,
+      fallbackQs = Nil, canaryMinSec = 0.9, ioReadings = Seq(1.0), artifactPath = "p")
+    assert(none.endsWith(""","query_sec":{}}"""), none)
+  }
+
+  test("compactLine: worst case — 92 timed queries, longest real names failed and fallback — fits the tail") {
+    // every driver query timed at 999.999 s (a query that threw in one pass
+    // and ran in another is both failed and timed, so 92 times plus both
+    // lists is the upper bound), the longest real names in both capped
+    // lists, an sf path longer than the usual one
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size === 92)
+    assert(names.map(_.takeWhile(_ != '_')).distinct.size === 92, "qNN keys must be unique")
+    val longest = names.sortBy(n => (-n.length, n)).take(8)
+    val line = Bench.compactLine(92 * 999.999, "/data/graft/testdata/sf0.1", 4, 0,
+      allContaminated = true, fallbackQs = longest, canaryMinSec = 999.999,
+      ioReadings = Seq(999.999, 999.999), artifactPath = "target/bench_last.json",
+      failedQs = longest, querySec = names.map(_ -> 999.999))
+    assert(line.length < 2000, s"${line.length} chars: $line")
+    assert(line.contains("\"failed_count\":8") && line.contains("\"dirty_fallback_count\":8"))
+    assert(line.split(":999.999").length - 1 >= 92)
+    names.foreach(n => assert(line.contains("\"" + n.takeWhile(_ != '_') + "\":999.999"), n))
   }
 
   test("compactLine: pathological all-fallback run stays under the tail (list capped, count exact)") {
@@ -179,8 +205,8 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(line.length < 2000)
     assert(line.contains("\"all_passes_contaminated\":true"))
     assert(line.contains("\"dirty_fallback_count\":92"))
-    // exactly 8 names listed
-    assert(line.split("q\\d\\d_some_rather_long_query_name").length - 1 === 8)
+    // exactly 5 names listed
+    assert(line.split("q\\d\\d_some_rather_long_query_name").length - 1 === 5)
     // io band survives even when every reading is contaminated
     assert(line.contains("\"io_band\":{\"min\":2.000"))
   }
@@ -196,7 +222,7 @@ class BenchLogicSpec extends AnyFunSuite {
     assert(line.length < 2000)
     assert(line.contains("\"failed_count\":92"))
     val failedList = line.split("\"failed_queries\":").apply(1).takeWhile(_ != ']')
-    assert(failedList.split("q\\d\\d_some_rather_long_query_name").length - 1 === 8)
+    assert(failedList.split("q\\d\\d_some_rather_long_query_name").length - 1 === 5)
     Seq("\"metric\":\"total\"", "\"value\":0.000", "\"unit\":\"sec\"")
       .foreach(f => assert(line.contains(f), s"missing $f in $line"))
     // a run with no failures says so explicitly

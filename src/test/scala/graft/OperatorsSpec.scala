@@ -390,6 +390,30 @@ class OperatorsSpec extends SparkSpec {
     assert(got == Seq((1L, 2L)))
   }
 
+  test("minhashBandKeys: the persisted (id, bandkey) format matches the checked-in golden") {
+    // the band-key strings ARE the persisted index's bands relation, and
+    // the `__bkt` prune hashes them: a drift in the `b:` prefix, the md5
+    // over the band's hashes or the explode would orphan every written
+    // index. Round-trip and oracle tests cannot see such a drift (both
+    // sides run the same code), so the rows are pinned literally
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "an entirely unrelated corpus document about spark physical plans"),
+      (3L, "Ünïcode  tokens, punctuation! and MIXED case words here")).toDF("doc_id", "text")
+    val got = Dedup.minhashBandKeys(docs, "doc_id", "text")
+      .orderBy("id", "bandkey").as[(Long, String)].collect()
+      .map { case (id, k) => s"$id,$k" }.mkString("\n")
+    if (sys.props.get("graft.test.writeGolden").contains("1")) {
+      GoldenResource.write("/minhash_bandkeys_golden.txt",
+        "src/test/resources/minhash_bandkeys_golden.txt", got + "\n")
+      info("golden regenerated (source tree + test classpath)")
+    } else {
+      assert(got === GoldenResource.read("/minhash_bandkeys_golden.txt"),
+        "MinHash band keys diverged from the checked-in golden: every " +
+          "persisted index written before this change would stop matching")
+    }
+  }
+
   test("dedupAgainstCorpus flags batch near-dups of the corpus, passes fresh docs") {
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -1152,6 +1176,27 @@ class OperatorsSpec extends SparkSpec {
       Dedup.minhashLshCandidates(docs, "doc_id", "text", maxCandidatePairs = 100000L))
     assert(exact.exists(_.contains("hashpartitioning(bandkey")),
       "past the bound, the exact per-key histogram must run before the join")
+    // the two-sided tier (guardJoinFanout) behind the index probe: a
+    // 20-doc batch against the written 200-doc index bounds the fan-out
+    // at |batch bands|·|index rows| = 80 x 800 = 64,000 pairs
+    val dir = java.nio.file.Files.createTempDirectory("mhidx_tier").toString
+    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(docs, "doc_id", "text"), dir)
+    val idx = Dedup.readMinhashIndex(spark, dir)
+    val batch = (1001L to 1020L)
+      .map(i => (i, s"fresh batch text $i on subject ${i % 5} with its own tail $i"))
+      .toDF("doc_id", "text").localCheckpoint()
+    def probe(cap: Long) =
+      plansDuring(Dedup.dedupAgainstIndex(batch, idx, "doc_id", "text",
+        threshold = 0.5, maxCandidatePairs = cap))
+    val probeSkipped = probe(Dedup.DefaultMaxCandidatePairs)
+    assert(probeSkipped.nonEmpty, "construction must run the probe's guard")
+    assert(!probeSkipped.exists(_.contains("hashpartitioning(bandkey")),
+      "under the two-sided bound, no construction-phase plan may aggregate on the band key:\n" +
+        probeSkipped.find(_.contains("hashpartitioning(bandkey")).getOrElse("").take(1500))
+    // below the 64,000 bound, above the exact fan-out (fresh text shares
+    // next to no band keys with the index): the histogram runs, the probe passes
+    assert(probe(10000L).exists(_.contains("hashpartitioning(bandkey")),
+      "past the two-sided bound, the exact per-key histogram must run before the probe")
   }
 
   test("ngramJaccard inverted-route fan-out guard trips on a boilerplate-shingle corpus") {
