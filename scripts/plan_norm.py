@@ -16,7 +16,8 @@ is dropped.
 
 What is rewritten, because it differs between two runs of one commit:
   - expression ids `#123` and exchange ids `plan_id=45`;
-  - the per-process scratch dir `<tmp>/graft_<q>_<sfDir key>_<pid>`;
+  - the per-process scratch dirs `<tmp>/graft_<q>_<sfDir key>_<pid>` and
+    `<tmp>/graft_ivf_<sfDir key>_<pid>` (q45's persisted IVF layout);
   - AQE query-stage numbers (`ShuffleQueryStage 7`) and whole-stage
     codegen ids (`*(3)`), which follow the order stages happen to finish.
 """
@@ -28,6 +29,7 @@ RULES = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"(?:file:)?[^\s\[\],()]*/graft_(q\d+)_[^/\s\],]*_\d+"), r"<scratch:\1>"),
+    (re.compile(r"(?:file:)?[^\s\[\],()]*/graft_ivf_[^/\s\],]*_\d+"), "<scratch:ivf>"),
     (re.compile(r"\b(\w*QueryStage) \d+"), r"\1 N"),
     (re.compile(r"\*\(\d+\)"), "*(N)"),
 ]

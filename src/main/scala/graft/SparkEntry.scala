@@ -1618,8 +1618,7 @@ object SparkEntry {
         if (p.numInputRows > 0) gate.synchronized { landed.incrementAndGet(); gate.notifyAll() })
       var nonEmpty = 0L
       try {
-        val fs = new org.apache.hadoop.fs.Path(srcDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val fs = graft.store.Partitions.fs(s, new org.apache.hadoop.fs.Path(srcDir))
         fs.mkdirs(new org.apache.hadoop.fs.Path(srcDir))
         var q: org.apache.spark.sql.streaming.StreamingQuery = null
         slices.zipWithIndex.foreach { case (sl, i) =>
@@ -1727,8 +1726,7 @@ object SparkEntry {
       process(0); process(1)
       // catastrophe + recovery: the companion tree is lost mid-stream
       val latestRoot = new org.apache.hadoop.fs.Path(s"$histPath/_latest")
-      latestRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(latestRoot, true)
+      graft.store.Partitions.fs(s, latestRoot).delete(latestRoot, true)
       Streams.cdcRebuildCompanion(s, histPath, nextBatchId = 2L)
       process(2); process(3)
       cdcEventRows(s.read.parquet(histPath))

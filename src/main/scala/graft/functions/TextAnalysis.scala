@@ -64,15 +64,6 @@ object TextAnalysis {
       sequence(lit(0), lit(numHashes - 1)),
       i => array_min(transform(shingles, s => md5(concat(i.cast(StringType), lit("|"), s)))))
 
-  /** LSH band keys from a MinHash signature: `bands` buckets of width
-    * signature.size/bands, each hashed to one md5 key. Two documents are
-    * dedup candidates iff they share ≥1 band key. */
-  def lshBandKeys(signature: Column, bands: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => concat(b.cast(StringType), lit(":"),
-        md5(array_join(slice(signature, b * (size(signature) / bands) + 1, size(signature) / bands), ","))))
-
   /** Per-token hash array for SimHash: leading 8 md5 hex chars as a long.
     * Materialize this as its own column before calling
     * [[simhashFromHashes]] — the fingerprint references the array `bits`

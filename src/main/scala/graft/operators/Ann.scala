@@ -1,14 +1,14 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.operators.Scratch.Ops
+import graft.store.Partitions
 
 /** IVF (inverted-file) approximate nearest neighbour — the scale path for
   * similarity search beyond [[Similarity.lshTopK]]'s sign buckets.
@@ -211,31 +211,6 @@ object Ann {
     else rankCentroids(vec, centroids, k, literal = false)
   }
 
-  /** Build-once cache keyed by corpus identity (the sf dir in this repo's
-    * drivers). In production the IVF index is built offline and amortized
-    * over many probe batches — a benchmark of the probe path must not
-    * re-pay the KMeans build per query, so the first call materializes the
-    * assigned corpus (localCheckpoint) and later calls reuse it.
-    *
-    * NOT bench-safe: the cached index holds localCheckpointed blocks, and
-    * Bench's deterministic per-query unpersist would destroy their only
-    * copy (later references fail with lost-checkpoint errors, they do not
-    * recompute). Bench-reachable queries must use [[persistedIvfCached]];
-    * Bench asserts this cache stays empty ([[memIvfCacheEmpty]]). */
-  private val ivfCache = scala.collection.concurrent.TrieMap[String, IvfIndex]()
-  def buildIvfCached(key: String, corpus: => DataFrame, idCol: String, vecCol: String,
-      nlist: Int, seed: Long = 42L): IvfIndex =
-    ivfCache.getOrElseUpdate(key, {
-      val idx = buildIvf(corpus, idCol, vecCol, nlist, seed)
-      val mat = idx.assigned.localCheckpoint()
-      mat.count()
-      IvfIndex(mat, idx.centroids)
-    })
-
-  /** True iff no localCheckpoint-backed index is cached — the invariant
-    * Bench enforces after its per-query unpersist (see [[buildIvfCached]]). */
-  private[graft] def memIvfCacheEmpty: Boolean = ivfCache.isEmpty
-
   /** Build-once cache serving the PERSISTED layout: first call builds the
     * index, writes it via [[writeIvf]] to a fixed scratch dir keyed by the
     * corpus identity AND the JVM pid (two concurrent graft JVMs — a Bench
@@ -259,9 +234,6 @@ object Ann {
       writeIvf(buildIvf(df, idCol, vecCol, nlist, seed), path)
       readIvf(df.sparkSession, path)
     })
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The type with every nullability flag forced true — for comparisons
     * that must ignore nullability (Spark's `sameType` is private). */
@@ -338,7 +310,7 @@ object Ann {
     val gen = requireGen(spark, path)
     val ids = new Path(gen, "ids")
     val base =
-      if (fsOf(spark, ids).exists(ids)) spark.read.parquet(ids.toString)
+      if (Partitions.fs(spark, ids).exists(ids)) spark.read.parquet(ids.toString)
       else {
         val assigned = spark.read.parquet(new Path(gen, "assigned").toString)
         assigned.select(col(assigned.columns.head).as("id")).distinct()
@@ -505,11 +477,9 @@ object Ann {
     latestIvfGen(spark, path) match {
       case None => Map.empty
       case Some(gen) =>
-        val assigned = new Path(gen, "assigned")
-        fsOf(spark, assigned).listStatus(assigned).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("list="))
-          .map(st => st.getPath.getName.stripPrefix("list=").toInt ->
-            graft.store.Compact.dataFileCount(spark, st.getPath.toString))
+        Partitions.list(spark, new Path(gen, "assigned"), "list")
+          .map { case (list, dir) =>
+            list.toInt -> graft.store.Compact.dataFileCount(spark, dir.toString) }
           .toMap
     }
 
@@ -563,7 +533,7 @@ object Ann {
     val idx = readIvf(spark, path)
     val gen0 = requireGen(spark, path)
     val assigned = new Path(gen0, "assigned")
-    val bytes = fsOf(spark, assigned).getContentSummary(assigned).getLength
+    val bytes = Partitions.fs(spark, assigned).getContentSummary(assigned).getLength
     val perList = bytes / math.max(1, idx.centroids.length)
     val filesPerList = math.max(1L, (perList + maxFileBytes - 1) / maxFileBytes).toInt
     val idCol = col(idx.assigned.columns.head)
@@ -610,13 +580,7 @@ object Ann {
       .filter(col("list").isin(probeLists: _*))
       .select(col(idCol).as("neighbor_id"), col("list"),
         col(vecCol).as("cv"), Similarity.norm(col(vecCol)).as("cn"))
-    val scored = probes.join(corpus, Seq("list"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", Similarity.scoredCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    Similarity.topKByCosine(
+      probes.join(corpus, Seq("list")).filter(col("query_id") =!= col("neighbor_id")), k)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
 import graft.functions.TextAnalysis._
 import graft.operators.Scratch.Ops
+import graft.store.Partitions
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard, embedding-cosine near-dup (builder-prompt
@@ -379,7 +380,7 @@ object Dedup {
   private def genMarkers(spark: org.apache.spark.sql.SparkSession,
       gen: String): (Int, Option[(Int, Int, Int)]) = {
     val p = new org.apache.hadoop.fs.Path(gen)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Partitions.fs(spark, p)
     graft.store.Generations.memo(spark, p, "minhash markers") {
       val names = fs.listStatus(p).map(_.getPath.getName)
       val nbkt = names.collectFirst {
@@ -501,7 +502,7 @@ object Dedup {
           writeShingles)
     }
     val genPath = new org.apache.hadoop.fs.Path(gen.toString)
-    val genFs = genPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val genFs = Partitions.fs(spark, genPath)
     genFs.create(new org.apache.hadoop.fs.Path(genPath, s"_NBKT_${idx.bandBuckets}"), false).close()
     // the sketch marker (see genSketch) — carried through compaction via
     // readMinhashIndex's populated struct
@@ -537,7 +538,7 @@ object Dedup {
   private def bandsOf(spark: org.apache.spark.sql.SparkSession, gen: String): DataFrame = {
     val base = spark.read.parquet(s"$gen/bands")
     val delta = new org.apache.hadoop.fs.Path(s"$gen/bands_delta")
-    if (delta.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(delta))
+    if (Partitions.fs(spark, delta).exists(delta))
       base.unionByName(spark.read.parquet(delta.toString))
     else base
   }
@@ -556,7 +557,7 @@ object Dedup {
     // scan rather than paying thousands of sequential footer opens
     val bound = sketch.flatMap { case (_, _, nb) =>
       val ids = new org.apache.hadoop.fs.Path(s"$gen/ids")
-      val fs = ids.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = Partitions.fs(spark, ids)
       if (!fs.exists(ids)) None
       else {
         val files = graft.store.Compact.dataFiles(spark, ids.toString)
@@ -624,7 +625,7 @@ object Dedup {
   def minhashIndexIds(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val gen = graft.store.Generations.requireCommitted(spark, path)
     val ids = new org.apache.hadoop.fs.Path(s"$gen/ids")
-    val fs = ids.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Partitions.fs(spark, ids)
     val base =
       if (fs.exists(ids)) spark.read.parquet(ids.toString)
       else bandsOf(spark, gen.toString).select("id").distinct()
@@ -648,17 +649,14 @@ object Dedup {
   def minhashFileCounts(spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int) = {
     val gen = graft.store.Generations.requireCommitted(spark, path)
     val bandsDir = new org.apache.hadoop.fs.Path(s"$gen/bands")
-    val fs = bandsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Partitions.fs(spark, bandsDir)
     // the bucketed base is immutable after commit (appends land in
     // `bands_delta/`, compactions write a NEW generation), so its up-to-65
     // directory listings are paid once per generation; the append-mutable
     // delta/shingles listings below stay fresh on every call
     val baseFiles = graft.store.Generations.memo(spark, gen, "minhash base files") {
-      val perBucket =
-        if (!fs.exists(bandsDir)) Nil
-        else fs.listStatus(bandsDir).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("__bkt="))
-          .map(st => graft.store.Compact.dataFileCount(spark, st.getPath.toString))
+      val perBucket = Partitions.list(spark, bandsDir, "__bkt")
+        .map { case (_, bkt) => graft.store.Compact.dataFileCount(spark, bkt.toString) }
       if (perBucket.nonEmpty) perBucket.max
       else graft.store.Compact.dataFileCount(spark, bandsDir.toString) // legacy flat layout
     }
@@ -1023,7 +1021,7 @@ object Dedup {
     // salts the bucket shuffle when one bucket's share exceeds a healthy
     // file.
     val bandsPath = new org.apache.hadoop.fs.Path(s"$gen/bands")
-    val bandsFs = bandsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bandsFs = Partitions.fs(spark, bandsPath)
     val deltaPath = new org.apache.hadoop.fs.Path(s"$gen/bands_delta")
     // the rewrite reads base ∪ delta ([[bandsOf]] via readMinhashIndex),
     // so the sizing/ hint bytes must cover both tiers

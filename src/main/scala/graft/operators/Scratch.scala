@@ -25,8 +25,7 @@ import org.apache.spark.sql.graftx.Bridge
   * [[scoped]] block active on the calling thread. No scope active (the
   * batch/query paths — Bench sweeps per query, callers manage their own
   * frames) means plain `localCheckpoint` behavior. Frames with a
-  * deliberately LONGER lifetime (the cross-query `buildIvfCached` frame)
-  * must NOT route through here.
+  * deliberately LONGER lifetime must NOT route through here.
   *
   * Release is idempotent with the operators' own eager frees (the CC
   * loop's per-round release, [[TombstoneHeal]]'s finally): unpersisting an

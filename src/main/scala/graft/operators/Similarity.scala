@@ -94,11 +94,18 @@ object Similarity {
       norm(col(vecCol)).as("qn")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       norm(col(vecCol)).as("cn"))
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", scoredCosine(col("qv"), col("cv"), col("qn"), col("cn")))
+    topKByCosine(q.join(c, col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** The ranking every top-k search shares: each candidate pair of
+    * `pairs` (`query_id`, `qv`, `qn`, `neighbor_id`, `cv`, `cn`) scored by
+    * [[scoredCosine]], the k best per query kept, ties broken by
+    * `neighbor_id`. Returns (query_id, rank, neighbor_id, cosine). */
+  private[operators] def topKByCosine(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
+    pairs.withColumn("cosine", scoredCosine(col("qv"), col("cv"), col("qn"), col("cn")))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
@@ -129,12 +136,6 @@ object Similarity {
       s"raise planes (currently $planes — each extra plane roughly halves " +
         "bucket occupancy), split the query set, or use the IVF index " +
         "(Ann.ivfTopK) for corpus-scale query sets")
-    val scored = q.join(c, Seq("bucket")).filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", scoredCosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
+    topKByCosine(q.join(c, Seq("bucket")).filter(col("query_id") =!= col("neighbor_id")), k)
   }
 }

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Maintenance compaction for the engine's append-only parquet trees.
@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * exactly (result-identity is oracle-gated by q73 and asserted by
   * CompactSpec).
   *
-  * Swap discipline (same checked-boolean rules as `Store.archiveHistory`):
+  * Swap discipline (every FileSystem boolean through [[Partitions.checked]]):
   * the rewrite lands in a hidden sibling (`.compact_tmp_<name>` — dot-prefix
   * dirs are invisible to Spark/Hadoop input listing, so a concurrent reader
   * of the parent never sees it), then dir → `.compact_old_<name>`,
@@ -27,11 +27,12 @@ import org.apache.spark.sql.SparkSession
   * Concurrency contract: directory renames can't be paired atomically, so
   * a reader that LISTS during the instant between the two renames can see
   * the leaf missing, and one that listed before the swap can hit deleted
-  * files — the same exposure `Store.archiveHistory`'s partition moves and
-  * `vacuum`'s deletes already have. In-place compaction is therefore a
-  * MAINTENANCE operation under the store's single-writer discipline (run
-  * it from the ingest owner between batches, like a Postgres VACUUM), not
-  * a concurrent-with-probes background job. The generation-backed index
+  * files — the same exposure the [[Partitions]] moves of
+  * `Store.archiveHistory` and `vacuum`'s deletes already have. In-place
+  * compaction is therefore a MAINTENANCE operation under the store's
+  * single-writer discipline (run it from the ingest owner between
+  * batches, like a Postgres VACUUM), not a concurrent-with-probes
+  * background job. The generation-backed index
   * layouts have READER-ATOMIC alternatives that sidestep this entirely —
   * `Dedup.compactMinhashIndex` and `Ann.compactIvfOnline` write the
   * compacted data as a new committed generation (`Generations`), so
@@ -53,18 +54,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Compact {
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def checked(ok: Boolean, what: String): Unit =
-    if (!ok) throw new java.io.IOException(
-      s"compact: $what failed (filesystem returned false)")
+  import Partitions.checked
 
   /** Visible data files directly under `dir` (hidden `_`/`.` entries —
     * `_SUCCESS`, checksums, in-flight compaction siblings — excluded). */
   def dataFiles(spark: SparkSession, dir: String): Seq[Path] = {
     val p = new Path(dir)
-    val f = fsOf(spark, p)
+    val f = Partitions.fs(spark, p)
     if (!f.exists(p)) Nil
     else f.listStatus(p).toSeq
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
@@ -81,7 +77,7 @@ object Compact {
     * auto-sized target file count derives from. Metadata only. */
   def dataSizeBytes(spark: SparkSession, dir: String): Long = {
     val p = new Path(dir)
-    val f = fsOf(spark, p)
+    val f = Partitions.fs(spark, p)
     dataFiles(spark, dir).map(f.getFileStatus(_).getLen).sum
   }
 
@@ -108,7 +104,7 @@ object Compact {
     * per ingest batch — O(file count) metadata, not O(bytes). */
   def footerRowCount(spark: SparkSession, dirs: Seq[Path]): Long =
     dirs.iterator.flatMap { d =>
-      val fs = fsOf(spark, d)
+      val fs = Partitions.fs(spark, d)
       dataFiles(spark, d.toString).iterator.map { f =>
         val st = fs.getFileStatus(f)
         val key = (f.toString, st.getLen, st.getModificationTime)
@@ -148,7 +144,7 @@ object Compact {
       targetFiles: Int = 0, minFiles: Int = 1,
       maxFileBytes: Long = DefaultMaxFileBytes): Boolean = {
     val p = new Path(dir)
-    val f = fsOf(spark, p)
+    val f = Partitions.fs(spark, p)
     val n = dataFileCount(spark, dir)
     val target = resolveTarget(targetFiles, dataSizeBytes(spark, dir), maxFileBytes)
     if (n <= math.max(minFiles, target)) return false
@@ -157,9 +153,9 @@ object Compact {
     f.delete(tmp, true); f.delete(old, true) // stale leftovers from a crash
     spark.read.parquet(dir).coalesce(target)
       .write.mode("overwrite").parquet(tmp.toString)
-    checked(f.rename(p, old), s"rename($p -> $old)")
-    checked(f.rename(tmp, p), s"rename($tmp -> $p)")
-    checked(f.delete(old, true), s"delete($old)")
+    checked(f.rename(p, old), s"compact: rename($p -> $old)")
+    checked(f.rename(tmp, p), s"compact: rename($tmp -> $p)")
+    checked(f.delete(old, true), s"compact: delete($old)")
     true
   }
 
@@ -172,18 +168,14 @@ object Compact {
   def partitionedDir(spark: SparkSession, dir: String, prefix: String,
       targetFiles: Int = 0, minFiles: Int = 1,
       maxFileBytes: Long = DefaultMaxFileBytes): Int = {
-    val p = new Path(dir)
-    val f = fsOf(spark, p)
-    if (!f.exists(p)) return 0
-    val children = f.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix + "="))
+    val children = Partitions.list(spark, new Path(dir), prefix).map(_._2)
     // children are disjoint leaf dirs rewritten independently — run a few
     // rewrites concurrently (guide §2.6) so one child's coalesce tail does
     // not leave the cluster idle while the next child waits; the swap
     // discipline is per-child and unaffected by ordering
     val rewritten = new java.util.concurrent.atomic.AtomicInteger(0)
-    graft.Par.runBounded(children, maxConcurrent = 4) { st =>
-      if (leafDir(spark, st.getPath.toString, targetFiles, minFiles, maxFileBytes))
+    graft.Par.runBounded(children, maxConcurrent = 4) { child =>
+      if (leafDir(spark, child.toString, targetFiles, minFiles, maxFileBytes))
         rewritten.incrementAndGet()
     }
     rewritten.get()

@@ -2,7 +2,7 @@ package graft.store
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Shared generation-directory machinery for persisted index layouts
@@ -16,12 +16,9 @@ import org.apache.spark.sql.SparkSession
   * that resolved the previous generation just before a commit landed. */
 object Generations {
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   def genDirs(spark: SparkSession, root: String): Seq[Path] = {
     val r = new Path(root)
-    val f = fsOf(spark, r)
+    val f = Partitions.fs(spark, r)
     if (!f.exists(r)) Nil
     else f.listStatus(r).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen_"))
@@ -29,7 +26,7 @@ object Generations {
   }
 
   def isCommitted(spark: SparkSession, gen: Path): Boolean =
-    fsOf(spark, gen).exists(new Path(gen, "_COMMITTED"))
+    Partitions.fs(spark, gen).exists(new Path(gen, "_COMMITTED"))
 
   /** The latest COMMITTED generation — what readers resolve. Uncommitted
     * dirs (a write in flight, or a crashed one) are invisible. */
@@ -55,7 +52,7 @@ object Generations {
     while (n < limit) {
       val gen = new Path(new Path(root), f"gen_$n%06d")
       val claim = new Path(gen, "_CLAIM")
-      val f = fsOf(spark, gen)
+      val f = Partitions.fs(spark, gen)
       // Only "this number is already claimed" advances to the next number.
       // Any other IOException (permissions, quota, a network-FS hiccup) is a
       // real failure and must surface — swallowing it would silently skip
@@ -82,7 +79,7 @@ object Generations {
     * can tell two generations apart that share a path and a marker mtime
     * (a tree wiped and rebuilt within the filesystem's mtime resolution). */
   def commit(spark: SparkSession, gen: Path): Unit = {
-    val out = fsOf(spark, gen).create(new Path(gen, "_COMMITTED"), false)
+    val out = Partitions.fs(spark, gen).create(new Path(gen, "_COMMITTED"), false)
     try out.write(java.util.UUID.randomUUID().toString.getBytes(UTF_8))
     finally out.close()
   }
@@ -95,7 +92,7 @@ object Generations {
   private def commitToken(spark: SparkSession, gen: Path): Option[String] = {
     val marker = new Path(gen, "_COMMITTED")
     scala.util.Try {
-      val in = fsOf(spark, marker).open(marker)
+      val in = Partitions.fs(spark, marker).open(marker)
       try new String(in.readAllBytes(), UTF_8) finally in.close()
     }.toOption.filter(_.length == TokenLength)
   }
@@ -146,11 +143,8 @@ object Generations {
     val newest = committed.last.getName
     val drop = genDirs(spark, root).filter(g =>
       !keepNames(g.getName) && g.getName < newest)
-    drop.foreach { g =>
-      if (!fsOf(spark, g).delete(g, true))
-        throw new java.io.IOException(
-          s"Generations.vacuum: delete($g) failed (filesystem returned false)")
-    }
+    drop.foreach(g => Partitions.checked(
+      Partitions.fs(spark, g).delete(g, true), s"Generations.vacuum: delete($g)"))
     drop.size
   }
 }

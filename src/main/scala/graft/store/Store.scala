@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,22 +31,13 @@ import graft.operators.Merge
   */
 class Store(spark: SparkSession, root: String, buckets: Int = 0) {
 
-  private def fs(p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** RAW generation listing — includes a crashed writer's partial
     * directory. Generation NUMBERING must see those (re-issuing a partial
     * generation's number would collide with its never-deleted claim
     * tombstone and wedge the table); READERS must not — they go through
     * [[committedGens]]. */
-  private def gens(table: String): Seq[String] = {
-    val dir = new Path(s"$root/$table")
-    val f = fs(dir)
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen_"))
-      .map(_.getPath.getName).sorted
-  }
+  private def gens(table: String): Seq[String] =
+    Generations.genDirs(spark, s"$root/$table").map(_.getName)
 
   /** A generation is COMMITTED iff the write that produced it ran to
     * completion — witnessed by the committer's own `_SUCCESS` marker (the
@@ -58,7 +49,7 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     * existence RPC per check. */
   private def isCommitted(table: String, gen: String): Boolean = {
     val marker = new Path(s"$root/$table/$gen/_SUCCESS")
-    fs(marker).exists(marker)
+    Partitions.fs(spark, marker).exists(marker)
   }
 
   private def committedGens(table: String): Seq[String] =
@@ -92,12 +83,12 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     spark.sql(s"DROP TABLE IF EXISTS ${catalogName(table, gen)}")
     val legacy = s"graft_${table}_$gen".replaceAll("[^a-zA-Z0-9_]", "_")
     if (spark.catalog.tableExists(legacy)) {
-      val mine = { val p = new Path(s"$root/$table/$gen"); fs(p).makeQualified(p) }
+      val mine = { val p = new Path(s"$root/$table/$gen"); Partitions.fs(spark, p).makeQualified(p) }
       val loc = spark.sql(s"DESCRIBE FORMATTED $legacy").collect()
         .find(_.getString(0).trim == "Location").map(_.getString(1).trim)
       val owned = loc.exists { l =>
         val p = new Path(l)
-        fs(p).makeQualified(p) == mine
+        Partitions.fs(spark, p).makeQualified(p) == mine
       }
       if (owned) spark.sql(s"DROP TABLE IF EXISTS $legacy")
     }
@@ -125,7 +116,7 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     * into support for concurrent writers. */
   private def claimGen(table: String, gen: String): Unit = {
     val dir = new Path(s"$root/$table")
-    val f = fs(dir)
+    val f = Partitions.fs(spark, dir)
     f.mkdirs(dir)
     val marker = new Path(dir, s".claim_$gen")
     try f.create(marker, false).close()
@@ -215,12 +206,9 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     * key should use the `latest` companion instead. */
   def history(table: String, since: Option[String] = None): Option[DataFrame] = {
     val dir = new Path(s"$root/$table/append")
-    val f = fs(dir)
     // a fully-archived table leaves the append dir with no partition dirs —
     // schema inference over it would fail, so treat it as never-written
-    if (!f.exists(dir) ||
-        !f.listStatus(dir).exists(st => st.isDirectory && st.getPath.getName.startsWith("__date=")))
-      None
+    if (Partitions.list(spark, dir, "__date").isEmpty) None
     else {
       val df = spark.read.parquet(dir.toString)
       Some(since.fold(df)(d => df.filter(col("__date") >= d)).drop("__date"))
@@ -282,15 +270,12 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     dropGens.foreach { g =>
       dropCatalogEntries(table, g)
       val p = new Path(s"$root/$table/$g")
-      // like archiveHistory's renames: FileSystem.delete reports failure as
-      // `false` on some implementations — an unchecked false would return a
-      // dropped-count that includes a generation still on disk
-      if (!fs(p).delete(p, true))
-        throw new java.io.IOException(
-          s"vacuum: delete($p) failed (filesystem returned false)")
+      // an unchecked false would return a dropped-count that includes a
+      // generation still on disk
+      Partitions.checked(Partitions.fs(spark, p).delete(p, true), s"vacuum: delete($p)")
       // the generation's claim tombstone (see claimGen) goes with it; its
       // number can never be re-issued (numbering only moves forward)
-      fs(p).delete(new Path(s"$root/$table/.claim_$g"), false)
+      Partitions.fs(spark, p).delete(new Path(s"$root/$table/.claim_$g"), false)
     }
     dropGens.size
   }
@@ -338,38 +323,22 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     * job, no data pages). Ref: postgres_storage.py:1825-1848.
     */
   def archiveHistory(table: String, cutoff: String, tsCol: String = "crawled_at"): Long = {
-    val dir = new Path(s"$root/$table/append")
-    val f = fs(dir)
-    if (!f.exists(dir)) return 0L
-    val expired = f.listStatus(dir).toSeq.filter { st =>
-      val name = st.getPath.getName
-      st.isDirectory && name.startsWith("__date=") &&
-        name.stripPrefix("__date=") < cutoff // yyyy-MM-dd sorts lexicographically
-    }
+    val expired = Partitions.list(spark, new Path(s"$root/$table/append"), "__date")
+      .collect { case (date, p) if date < cutoff => p } // yyyy-MM-dd sorts lexicographically
     if (expired.isEmpty) return 0L
-    val n = Compact.footerRowCount(spark, expired.map(_.getPath))
+    val n = Compact.footerRowCount(spark, expired)
     val destRoot = new Path(s"$root/${table}_archive/append")
-    // FileSystem.mkdirs/rename report failure as `false`, not an exception,
-    // on several implementations (object stores especially) — an unchecked
-    // false here would leave the partition live while the returned count
-    // already includes it. Fail loudly instead: the caller can re-run, the
-    // move is idempotent (already-moved partitions hit the merge branch).
-    def checked(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"archiveHistory: $what failed (filesystem returned false)")
-    checked(f.mkdirs(destRoot), s"mkdirs($destRoot)")
-    expired.foreach { st =>
-      val dest = new Path(destRoot, st.getPath.getName)
-      if (!f.exists(dest)) checked(f.rename(st.getPath, dest), s"rename(${st.getPath} -> $dest)")
-      else {
-        // partition already archived once (re-run with a later cutoff after
-        // late-arriving appends) — move the files into the existing dir;
-        // parquet part-file names carry task UUIDs so they never collide
-        f.listStatus(st.getPath).foreach { part =>
-          val pdest = new Path(dest, part.getPath.getName)
-          checked(f.rename(part.getPath, pdest), s"rename(${part.getPath} -> $pdest)")
-        }
-        checked(f.delete(st.getPath, true), s"delete(${st.getPath})")
-      }
+    val f = Partitions.fs(spark, destRoot)
+    // a failed move leaves the partition live while the returned count
+    // already includes it, so every boolean is checked. The caller can
+    // re-run: an already-archived date (a later cutoff after late-arriving
+    // appends) merges into its archived copy.
+    Partitions.checked(f.mkdirs(destRoot), s"archiveHistory: mkdirs($destRoot)")
+    expired.foreach { src =>
+      val dest = new Path(destRoot, src.getName)
+      if (!f.exists(dest))
+        Partitions.checked(f.rename(src, dest), s"archiveHistory: rename($src -> $dest)")
+      else Partitions.mergeInto(f, src, dest, "archiveHistory")
     }
     n
   }

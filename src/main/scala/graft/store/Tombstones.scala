@@ -38,7 +38,7 @@ private[graft] object Tombstones {
     * pending compaction. */
   def of(spark: SparkSession, gen: String): Option[DataFrame] = {
     val p = new Path(s"$gen/tombstones")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+    if (Partitions.fs(spark, p).exists(p))
       Some(spark.read.parquet(p.toString))
     else None
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.hadoop.fs.Path
 
 import graft.operators.{Dedup, History, Merge}
-import graft.store.Generations
+import graft.store.{Generations, Partitions}
 import graft.operators.Scratch
 import graft.operators.Scratch.Ops
 
@@ -160,7 +160,7 @@ object Streams {
   private def cdcGensBelow(spark: SparkSession, historyPath: String,
       batchId: Long): Seq[CdcGen] = {
     val marker = rebuildMarker(historyPath)
-    if (marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker))
+    if (Partitions.fs(spark, marker).exists(marker))
       throw new IllegalStateException(
         s"CDC companion at $historyPath has an interrupted rebuild ($marker exists) — " +
           "re-run cdcRebuildCompanion to complete recovery before resuming the sink")
@@ -173,13 +173,11 @@ object Streams {
     // recovery instead. Cost: this listing runs only when gens is empty,
     // i.e. normally just the stream's very first batch over an empty tree.
     if (gens.isEmpty && batchId > 0) {
-      val root = new Path(historyPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val priorData = fs.exists(root) && fs.listStatus(root).exists { st =>
-        val n = st.getPath.getName
-        n == "_archive" || (st.isDirectory && n.startsWith("batch_id=") &&
-          scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption.exists(_ < batchId))
-      }
+      val archive = new Path(s"$historyPath/_archive")
+      val priorData = Partitions.fs(spark, archive).exists(archive) ||
+        Partitions.list(spark, new Path(historyPath), "batch_id").exists { case (id, _) =>
+          scala.util.Try(id.toLong).toOption.exists(_ < batchId)
+        }
       if (priorData) throw new IllegalStateException(
         s"CDC companion at $historyPath has NO committed generation below batch " +
           s"$batchId, but earlier event partitions exist — the `_latest` tree was " +
@@ -196,7 +194,7 @@ object Streams {
       .filter { case (id, p) => id < batchId && Generations.isCommitted(spark, p) }
       .sortBy(_._1)
       .map { case (id, p) =>
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = Partitions.fs(spark, p)
         val names = fs.listStatus(p).map(_.getPath.getName)
         val buckets = names.collectFirst {
           case n if n.startsWith("_NBKT_") => n.drop("_NBKT_".length).toInt
@@ -270,7 +268,7 @@ object Streams {
       val lastFullIdx = gens.lastIndexWhere(_.isFull)
       val bytesDue = lastFullIdx >= 0 && deltasSinceFull > 0 && {
         def stateBytes(p: Path): Long = {
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val fs = Partitions.fs(spark, p)
           val st = new Path(p, "state")
           if (fs.exists(st)) fs.getContentSummary(st).getLength else 0L
         }
@@ -307,7 +305,7 @@ object Streams {
       // drop the NEWEST generation). Twelve digits outlive any stream; the
       // layout is new in r7, so there is no narrower legacy data to match.
       val gen = new Path(new Path(root), f"gen_$batchId%012d")
-      val fs = gen.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = Partitions.fs(spark, gen)
       // a replayed batch rewrites its own generation (deterministic from
       // the strictly-earlier generations + the batch, so the rewrite is
       // byte-identical)
@@ -420,7 +418,7 @@ object Streams {
       // skipped, not schema-inferred over
       val dirs = fromFull.map(g => (new Path(g.path, "state"), g.buckets, g.id))
         .filter { case (d, _, _) =>
-          val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val fs = Partitions.fs(spark, d)
           fs.exists(d) && fs.listStatus(d).exists { st =>
             val n = st.getPath.getName
             // data = __kbkt= partition dirs (bucketed layout; they DO start
@@ -478,12 +476,8 @@ object Streams {
     val fulls = gens.filter(_.isFull)
     if (fulls.size >= 2) {
       val floor = fulls(fulls.size - 2).id
-      gens.filter(_.id < floor).foreach { g =>
-        val fs = g.path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.delete(g.path, true))
-          throw new java.io.IOException(
-            s"cdcVacuum: delete(${g.path}) failed (filesystem returned false)")
-      }
+      gens.filter(_.id < floor).foreach(g => Partitions.checked(
+        Partitions.fs(spark, g.path).delete(g.path, true), s"cdcVacuum: delete(${g.path})"))
     }
   }
 
@@ -524,7 +518,7 @@ object Streams {
       nextBatchId: Long, keyBuckets: Int = CdcKeyBuckets): Unit = Scratch.scoped {
     require(nextBatchId >= 1, "nothing to rebuild before the first batch")
     val root = new Path(s"$historyPath/_latest")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Partitions.fs(spark, root)
     // tombstone FIRST (overwrite-create: a re-run after a crash finds it
     // already planted and proceeds) — from here until the swap completes,
     // every companion read fails loudly instead of anchoring on a
@@ -539,10 +533,8 @@ object Streams {
     // under _archive, and a bare read of the root (only underscore dirs
     // left — invisible to the reader) would die on schema inference with
     // the recovery marker already planted, wedging the companion.
-    val histRoot = new Path(historyPath)
-    val liveParts = (if (fs.exists(histRoot)) fs.listStatus(histRoot).toSeq else Nil)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-      .map(_.getPath.toString)
+    val liveParts = Partitions.list(spark, new Path(historyPath), "batch_id")
+      .map(_._2.toString)
     val arch = new Path(s"$historyPath/_archive")
     val srcs =
       (if (liveParts.nonEmpty)
@@ -583,11 +575,14 @@ object Streams {
     Generations.commit(spark, gen)
     // the swap: drop the old tree, move the staged one in, clear the
     // tombstone — in that order, so a crash between any two steps leaves
-    // the marker guarding the gap
-    fs.delete(root, true)
-    if (!fs.rename(staging, root))
-      throw new java.io.IOException(
-        s"cdcRebuildCompanion: rename($staging -> $root) failed (filesystem returned false)")
+    // the marker guarding the gap. The delete is checked too: on the local
+    // filesystem a rename onto a surviving `_latest` copies the staged
+    // tree INTO it and reports success, clearing the marker over the old
+    // generations. (An absent `_latest` — the lost-tree case — has nothing
+    // to delete.)
+    Partitions.checked(!fs.exists(root) || fs.delete(root, true),
+      s"cdcRebuildCompanion: delete($root)")
+    Partitions.checked(fs.rename(staging, root), s"cdcRebuildCompanion: rename($staging -> $root)")
     fs.delete(marker, false)
   }
 
@@ -606,28 +601,20 @@ object Streams {
     *    existing path returns false) — the archived copy is REPLACED
     *    instead.
     *  - dest present and src INCOMPLETE: residue of an interrupted
-    *    file-level merge (this branch's own crash window) — move the
-    *    remaining children; one that already made it across is dropped.
-    *    Complete-partition replacement above never leaves this state (a
-    *    whole-dir rename is atomic on HDFS-like filesystems), so the
-    *    branch is a recovery path, not a steady state. */
+    *    file-level merge (this branch's own crash window) —
+    *    [[Partitions.mergeInto]] moves the remaining children; one that
+    *    already made it across is dropped. Complete-partition replacement
+    *    above never leaves this state (a whole-dir rename is atomic on
+    *    HDFS-like filesystems), so the branch is a recovery path, not a
+    *    steady state. */
   private def moveOrMergePartition(fs: org.apache.hadoop.fs.FileSystem,
       src: Path, destRoot: Path, what: String): Unit = {
-    def checked(ok: Boolean, op: String): Unit =
-      if (!ok) throw new java.io.IOException(s"$what: $op failed (filesystem returned false)")
     val dest = new Path(destRoot, src.getName)
-    if (!fs.exists(dest)) checked(fs.rename(src, dest), s"rename($src -> $dest)")
+    if (!fs.exists(dest)) Partitions.checked(fs.rename(src, dest), s"$what: rename($src -> $dest)")
     else if (fs.exists(new Path(src, "_SUCCESS"))) {
-      checked(fs.delete(dest, true), s"delete($dest)")
-      checked(fs.rename(src, dest), s"rename($src -> $dest)")
-    } else {
-      fs.listStatus(src).foreach { part =>
-        val pdest = new Path(dest, part.getPath.getName)
-        if (fs.exists(pdest)) checked(fs.delete(part.getPath, true), s"delete(${part.getPath})")
-        else checked(fs.rename(part.getPath, pdest), s"rename(${part.getPath} -> $pdest)")
-      }
-      checked(fs.delete(src, true), s"delete($src)")
-    }
+      Partitions.checked(fs.delete(dest, true), s"$what: delete($dest)")
+      Partitions.checked(fs.rename(src, dest), s"$what: rename($src -> $dest)")
+    } else Partitions.mergeInto(fs, src, dest, what)
   }
 
   /** Continuous near-dup ingest — the streaming closure of the ingest loop
@@ -973,20 +960,13 @@ object Streams {
   def archiveBatchOutputs(spark: SparkSession, path: String, keepLatest: Int): Long = {
     require(keepLatest >= 1, "keepLatest must be >= 1")
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    val parts = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
-      .sortBy(st => st.getPath.getName.stripPrefix("batch_id=").toLong)
-    val expired = parts.dropRight(keepLatest)
+    val expired = Partitions.list(spark, root, "batch_id")
+      .sortBy(_._1.toLong).map(_._2).dropRight(keepLatest)
     if (expired.isEmpty) return 0L
+    val fs = Partitions.fs(spark, root)
     val destRoot = new Path(root, "_archive")
-    def checked(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"archiveBatchOutputs: $what failed (filesystem returned false)")
-    checked(fs.mkdirs(destRoot), s"mkdirs($destRoot)")
-    expired.foreach(st =>
-      moveOrMergePartition(fs, st.getPath, destRoot, "archiveBatchOutputs"))
+    Partitions.checked(fs.mkdirs(destRoot), s"archiveBatchOutputs: mkdirs($destRoot)")
+    expired.foreach(moveOrMergePartition(fs, _, destRoot, "archiveBatchOutputs"))
     expired.size.toLong
   }
 
@@ -1017,34 +997,27 @@ object Streams {
   def archiveEventLog(spark: SparkSession, historyPath: String, cutoff: String,
       tsCol: String = "crawled_at"): Long = {
     val root = new Path(historyPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    val parts = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
+    val parts = Partitions.list(spark, root, "batch_id")
     if (parts.isEmpty) return 0L
     // per-partition max(ts): batch_id comes from the dir name via basePath
     val live = spark.read.option("basePath", historyPath)
-      .parquet(parts.map(_.getPath.toString): _*)
+      .parquet(parts.map(_._2.toString): _*)
     val expired = live.groupBy("batch_id")
       .agg(max(col(tsCol)).as("__max_ts"))
       .filter(col("__max_ts") < lit(cutoff).cast("timestamp"))
       .select(col("batch_id").cast("long")).collect().map(_.getLong(0)).toSet
     if (expired.isEmpty) return 0L
-    val expiredDirs = parts.filter(st =>
-      expired.contains(st.getPath.getName.stripPrefix("batch_id=").toLong))
+    val expiredDirs = parts.collect { case (id, p) if expired.contains(id.toLong) => p }
     // row count from parquet FOOTERS, not a scan: the return value must not
     // cost O(archived bytes) — a horizon sweep over months of partitions
     // would otherwise re-read everything it is about to rename away. One
     // driver-side footer open per expired file (bounded by the sweep's own
     // file count), no Spark job, no data pages touched.
-    val n = graft.store.Compact.footerRowCount(spark, expiredDirs.map(_.getPath))
+    val n = graft.store.Compact.footerRowCount(spark, expiredDirs)
+    val fs = Partitions.fs(spark, root)
     val destRoot = new Path(root, "_archive")
-    def checked(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"archiveEventLog: $what failed (filesystem returned false)")
-    checked(fs.mkdirs(destRoot), s"mkdirs($destRoot)")
-    expiredDirs.foreach(st =>
-      moveOrMergePartition(fs, st.getPath, destRoot, "archiveEventLog"))
+    Partitions.checked(fs.mkdirs(destRoot), s"archiveEventLog: mkdirs($destRoot)")
+    expiredDirs.foreach(moveOrMergePartition(fs, _, destRoot, "archiveEventLog"))
     n
   }
 
@@ -1088,19 +1061,12 @@ object Streams {
     * the retention policy; nothing in the engine calls it implicitly. */
   def purgeArchive(spark: SparkSession, path: String, belowBatchId: Long): Long = {
     val root = new Path(s"$path/_archive")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    val expired = fs.listStatus(root).toSeq.filter { st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-        st.getPath.getName.stripPrefix("batch_id=").toLong < belowBatchId
-    }
+    val expired = Partitions.list(spark, root, "batch_id")
+      .collect { case (id, p) if id.toLong < belowBatchId => p }
     if (expired.isEmpty) return 0L
-    val n = graft.store.Compact.footerRowCount(spark, expired.map(_.getPath))
-    expired.foreach { st =>
-      if (!fs.delete(st.getPath, true))
-        throw new java.io.IOException(
-          s"purgeArchive: delete(${st.getPath}) failed (filesystem returned false)")
-    }
+    val n = graft.store.Compact.footerRowCount(spark, expired)
+    val fs = Partitions.fs(spark, root)
+    expired.foreach(p => Partitions.checked(fs.delete(p, true), s"purgeArchive: delete($p)"))
     n
   }
 

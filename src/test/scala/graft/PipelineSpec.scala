@@ -37,6 +37,17 @@ class FailDeleteGenFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     else super.delete(p, recursive)
 }
 
+/** Local filesystem whose renames return `false` when the destination
+  * already exists, as HDFS and S3A do (the local filesystem silently
+  * replaces a file). Asserts that re-archiving a date whose live and
+  * archived copies both carry a committer `_SUCCESS` merges around it. */
+class NoClobberRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "noclobber"
+  override def getUri: java.net.URI = java.net.URI.create("noclobber:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (exists(dst)) false else super.rename(src, dst)
+}
+
 /** End-to-end pipeline spec mirroring the reference's
   * tests/test_transform_load.py fixture (2 valid nested products + invalid
   * price + missing id + duplicate), driven through transform → store upsert
@@ -160,6 +171,26 @@ class PipelineSpec extends SparkSpec {
     // nothing was counted as archived AND the partition is still live
     assert(store.history("hist").get.count() == 2)
     assert(store.history("hist_archive").isEmpty)
+  }
+
+  test("re-archiving a compacted date succeeds on a filesystem whose renames never clobber") {
+    spark.sparkContext.hadoopConfiguration.set("fs.noclobber.impl",
+      classOf[NoClobberRenameFs].getName)
+    val root = "noclobber://" + Files.createTempDirectory("graft_rearch").toString
+    val store = new Store(spark, root)
+    def append(id: String, t: String): Unit = store.appendHistory("hist",
+      Seq((id, 1.0, java.sql.Timestamp.valueOf(t))).toDF("product_id", "price", "crawled_at"))
+    append("p1", "2024-01-01 08:00:00"); append("p2", "2024-01-01 09:00:00")
+    assert(store.compactHistory("hist") == 1)
+    assert(store.archiveHistory("hist", "2024-03-01") == 2)
+    // late appends to the archived date, compacted in turn: the live and
+    // the archived copy of __date=2024-01-01 now both hold a _SUCCESS
+    append("p3", "2024-01-01 10:00:00"); append("p4", "2024-01-01 11:00:00")
+    assert(store.compactHistory("hist") == 1)
+    assert(store.archiveHistory("hist", "2024-03-01") == 2)
+    assert(store.history("hist").isEmpty)
+    assert(store.history("hist_archive").get.count() == 4)
+    assert(store.archiveHistory("hist", "2024-03-01") == 0)
   }
 
   test("vacuum surfaces a delete that fails non-exceptionally") {

@@ -13,6 +13,17 @@ case class Crawl(product_id: String, price: Double, original_price: Double,
 case class DocRow(doc_id: Long, text: String)
 case class VecRow(vec_id: Long, embedding: Seq[Float])
 
+/** Local filesystem that refuses, by returning `false`, to delete an
+  * existing `_latest` companion tree. Asserts that `cdcRebuildCompanion`
+  * checks that delete: on the local filesystem the rename that follows
+  * would copy the rebuilt tree INTO the surviving one and report success. */
+class FailDeleteLatestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "faildeletelatest"
+  override def getUri: java.net.URI = java.net.URI.create("faildeletelatest:///")
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    if (p.getName == "_latest" && exists(p)) false else super.delete(p, recursive)
+}
+
 /** Streaming specs: MemoryStream-driven micro-batches, results compared to
   * the batch twins of the same transforms. */
 class StreamsSpec extends SparkSpec {
@@ -1418,6 +1429,34 @@ class StreamsSpec extends SparkSpec {
     assert(lrow(1).getAs[Long]("rows") === b1df.count())
     assert(lrow(1).getAs[Long]("appended") === 0L)
     assert(lrow(2).getAs[Long]("appended") === b2df.count())
+  }
+
+  test("cdcRebuildCompanion surfaces a delete of the old tree that fails non-exceptionally") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faildeletelatest.impl",
+      classOf[FailDeleteLatestFs].getName)
+    val dir = Files.createTempDirectory("graft_cdc_rebuild_nodelete").toString
+    val histPath = s"$dir/history"
+    def day(d: Int) = ts(f"2024-07-$d%02d 00:00:00")
+    Streams.cdcProcessBatch(Seq(Crawl("p0", 100.0, 200.0, null, 1L, day(1)),
+      Crawl("p1", 50.0, 60.0, null, 1L, day(1))).toDF, histPath, 0L)
+    Streams.cdcProcessBatch(Seq(Crawl("p0", 111.0, 200.0, null, 1L, day(2))).toDF,
+      histPath, 1L)
+    val want = Streams.cdcState(spark, histPath, 2L).get
+      .collect().map(_.toString).sorted.toSeq
+    val boom = intercept[java.io.IOException](
+      Streams.cdcRebuildCompanion(spark, "faildeletelatest://" + histPath, 2L))
+    assert(boom.getMessage.contains("cdcRebuildCompanion"), boom.getMessage)
+    // the marker still guards the half-swapped companion
+    val marker = new org.apache.hadoop.fs.Path(s"$histPath/_latest_REBUILDING")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(marker))
+    val guard = intercept[IllegalStateException](Streams.cdcState(spark, histPath, 2L))
+    assert(guard.getMessage.contains("interrupted rebuild"), guard.getMessage)
+    // a re-run on a filesystem that deletes completes recovery
+    Streams.cdcRebuildCompanion(spark, histPath, 2L)
+    assert(!fs.exists(marker))
+    assert(Streams.cdcState(spark, histPath, 2L).get
+      .collect().map(_.toString).sorted.toSeq === want)
   }
 
   test("a lost _latest tree without a marker fails the next batch loudly, recoverable by rebuild") {
