@@ -19,7 +19,10 @@ What is rewritten, because it differs between two runs of one commit:
   - the per-process scratch dirs `<tmp>/graft_<q>_<sfDir key>_<pid>` and
     `<tmp>/graft_ivf_<sfDir key>_<pid>` (q45's persisted IVF layout);
   - AQE query-stage numbers (`ShuffleQueryStage 7`) and whole-stage
-    codegen ids (`*(3)`), which follow the order stages happen to finish.
+    codegen ids (`*(3)`), which follow the order stages happen to finish;
+  - lambda variable numbers (`lambda x_4`), a JVM-wide counter that moves
+    whenever an earlier query builds one more higher-order function, and
+    JVM lambda class names (`$$Lambda$5580/0x…@786332de`).
 """
 import difflib
 import re
@@ -32,6 +35,8 @@ RULES = [
     (re.compile(r"(?:file:)?[^\s\[\],()]*/graft_ivf_[^/\s\],]*_\d+"), "<scratch:ivf>"),
     (re.compile(r"\b(\w*QueryStage) \d+"), r"\1 N"),
     (re.compile(r"\*\(\d+\)"), "*(N)"),
+    (re.compile(r"\blambda (\w+?)_\d+#"), r"lambda \1_N#"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda<N>"),
 ]
 SBT_NOISE = ("[error]", "[warn]", "[success]")
 

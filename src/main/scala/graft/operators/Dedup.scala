@@ -496,7 +496,7 @@ object Dedup {
         graft.Par.run(
           () => {
             writeBands()
-            spark.read.parquet(s"$gen/bands").select("id").distinct()
+            Partitions.read(spark, s"$gen/bands").select("id").distinct()
               .write.mode("overwrite").parquet(s"$gen/ids")
           },
           writeShingles)
@@ -536,10 +536,10 @@ object Dedup {
     * next generation's bucketed base. Same base-plus-flat-delta discipline
     * as the CDC companion's collapse-vs-delta generations. */
   private def bandsOf(spark: org.apache.spark.sql.SparkSession, gen: String): DataFrame = {
-    val base = spark.read.parquet(s"$gen/bands")
+    val base = Partitions.read(spark, s"$gen/bands")
     val delta = new org.apache.hadoop.fs.Path(s"$gen/bands_delta")
     if (Partitions.fs(spark, delta).exists(delta))
-      base.unionByName(spark.read.parquet(delta.toString))
+      base.unionByName(Partitions.read(spark, delta.toString))
     else base
   }
 
@@ -548,7 +548,7 @@ object Dedup {
     val gen = graft.store.Generations.requireCommitted(spark, path)
     val ts = graft.store.Tombstones.of(spark, gen.toString)
     val bands = graft.store.Tombstones.minus(bandsOf(spark, gen.toString), ts, "id")
-    val shingles = graft.store.Tombstones.minus(spark.read.parquet(s"$gen/shingles"), ts, "id")
+    val shingles = graft.store.Tombstones.minus(Partitions.read(spark, s"$gen/shingles"), ts, "id")
     val sketch = genSketch(spark, gen.toString)
     // bands-row upper bound from the id manifest's parquet FOOTERS (docs ×
     // bands-per-doc): driver-side metadata, no Spark job — but only while
@@ -627,7 +627,7 @@ object Dedup {
     val ids = new org.apache.hadoop.fs.Path(s"$gen/ids")
     val fs = Partitions.fs(spark, ids)
     val base =
-      if (fs.exists(ids)) spark.read.parquet(ids.toString)
+      if (fs.exists(ids)) Partitions.read(spark, ids.toString)
       else bandsOf(spark, gen.toString).select("id").distinct()
     // a tombstoned id is no longer IN the index — the manifest view agrees
     // with the probe view ([[deleteFromMinhashIndex]]'s contract)

@@ -1,70 +1,79 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Hierarchy / graph-ish operators (SURVEY.md §2.9, H1–H6, D2).
   *
   * The reference walks `parent_url` chains row-at-a-time with a visited-set
   * cycle guard and a depth cap of 10 (`postgres_storage.py:487-562`). The
-  * Spark shape is a bounded iterative self-join: each round extends every
-  * node's ancestor path by one hop; nodes whose parent is missing or already
-  * in the path (cycle) stop extending. Depth is bounded (≤5 levels in the
-  * reference, `MAX_CATEGORY_LEVELS`), so this is a fixed small number of
-  * broadcast joins — no GraphX, no driver loop over rows.
+  * Spark shape is a bounded walk over a broadcast lookup: each step extends
+  * every node's ancestor path by one hop; nodes whose parent is missing or
+  * already in the path (cycle) stop extending. Depth is bounded (≤5 levels
+  * in the reference, `MAX_CATEGORY_LEVELS`), so this is a fixed small number
+  * of map lookups in one projection — no GraphX, no driver loop over rows.
   *
   * Scale: the parent table is a dim (≈1k rows in the reference); we
-  * `broadcast` it every round so path materialization over N rows is N×depth
-  * map-side work with zero shuffles.
+  * `broadcast` it once as a one-row map so path materialization over N rows
+  * is N×depth map-side work with zero shuffles.
   */
 object Hierarchy {
 
   /** H1 — materialize root-first name paths for every node.
     * Input: url, name, parent_url. Output: adds `category_path`
-    * (array<string>, root first, ≤ maxDepth) and `level` (= size(path)).
+    * (array<string>, root first, ≤ maxLevels) and `level` (= size(path)).
     *
-    * Deliberately ONE lazy plan, no mid-loop materialization: an r19
-    * experiment checkpointed the frontier every 3 rounds to cap the plan
-    * the driver optimizes (the un-cut chain re-plans as 110 broadcast
-    * joins through repairParents' consumers), and a clean-window
-    * same-session A/B measured it ~1 s SLOWER warm (q59 2.2–3.4 s plain
-    * vs 3.5–3.6 s checkpointed): the extra materialization jobs' fixed
-    * cost exceeds the planning they save — CollapseProject's
-    * duplication guard keeps the mega-plan's optimizer cost linear, and
-    * the storm-window measurement that motivated the change did not
-    * reproduce. Reverted; recorded here so the next optimizer does not
-    * re-try it without new evidence. */
+    * One projection over a broadcast lookup: the parent relation is
+    * aggregated once into a one-row `map<url, struct<name, parent>>`
+    * (null urls left out — they can never be a parent), that row is
+    * broadcast-cross-joined onto every node, and each chain is walked
+    * with `aggregate` over `maxDepth` steps. A step hops to the parent
+    * when the parent's NAME is non-null and the cursor is not already in
+    * the walked path (`array_contains(seen, cursor)`, the cycle guard);
+    * otherwise the walk stops. The plan no longer depends on `maxDepth`.
+    * It replaced `maxDepth` unrolled broadcast joins, whose planning was
+    * most of warm q59 (1.79 s of driver gap in 2.08 s at sf0.01).
+    * An r19 frontier checkpoint every 3 rounds had cut that plan too, but
+    * measured ~1 s SLOWER warm: its extra materialization jobs cost more
+    * than the planning they saved. Do not re-try it.
+    *
+    * Urls are the categories' upsert key, so they are unique; a parent
+    * relation with a repeated url fails the action with an error naming
+    * `resolvePaths` rather than resolving a node twice.
+    *
+    * Scale: a map lookup scans the keys, so a step costs O(|parents|) —
+    * fine for a category dim (≈1k rows in the reference), not for a
+    * parent relation of millions. */
   def resolvePaths(categories: DataFrame, maxDepth: Int = 10, maxLevels: Int = 5): DataFrame = {
-    val parents = categories.select(
-      col("url").as("__p_url"), col("name").as("__p_name"),
-      col("parent_url").as("__p_parent"))
-    var cur = categories
-      .withColumn("category_path", array(col("name")))
-      .withColumn("__cursor", col("parent_url"))
-      .withColumn("__seen", array(col("url")))
-    var i = 0
-    while (i < maxDepth) {
-      cur = cur
-        .join(broadcast(parents), col("__cursor") === col("__p_url"), "left")
-        .withColumn("__cycle", array_contains(col("__seen"), col("__cursor")))
-        .withColumn("category_path",
-          when(col("__p_name").isNotNull && !col("__cycle"),
-            concat(array(col("__p_name")), col("category_path")))
-            .otherwise(col("category_path")))
-        .withColumn("__seen",
-          when(col("__p_name").isNotNull && !col("__cycle"),
-            concat(col("__seen"), array(col("__cursor"))))
-            .otherwise(col("__seen")))
-        .withColumn("__cursor",
-          when(col("__p_name").isNotNull && !col("__cycle"), col("__p_parent"))
-            .otherwise(lit(null)))
-        .drop("__p_url", "__p_name", "__p_parent", "__cycle")
-      i += 1
+    // one task gathers the dim: the broadcast collects it to the driver
+    // anyway, and a shuffle to one partition would only add a stage
+    val entries = categories.where(col("url").isNotNull).coalesce(1)
+      .agg(collect_list(struct(col("url"),
+        struct(col("name"), col("parent_url").as("parent")).as("node"))).as("e"))
+    val lookup = entries.select(
+      when(size(array_distinct(col("e.url"))) === size(col("e")), map_from_entries(col("e")))
+        .otherwise(raise_error(lit("resolvePaths: the parent relation repeats a url " +
+          "(urls are the categories' upsert key)"))).as("__parents"))
+    def step(s: Column): Column = {
+      val p = element_at(col("__parents"), s("cursor"))
+      val hop = p("name").isNotNull && !array_contains(s("seen"), s("cursor"))
+      struct(
+        when(hop, concat(array(p("name")), s("path"))).otherwise(s("path")).as("path"),
+        when(hop, p("parent")).as("cursor"),
+        when(hop, concat(s("seen"), array(s("cursor")))).otherwise(s("seen")).as("seen"))
     }
-    cur.drop("__cursor", "__seen")
-      .withColumn("category_path", slice(col("category_path"), 1, maxLevels))
+    // typed as the join chain typed it: elements nullable (a looked-up
+    // name), the path itself not — a walk never yields null, and the
+    // coalesce only carries that to the declared type
+    val own = array(col("name")).cast(ArrayType(categories.schema("name").dataType))
+    val start = struct(own.as("path"), col("parent_url").as("cursor"), array(col("url")).as("seen"))
+    val walked = aggregate(array_repeat(lit(0), maxDepth), start, (s, _) => step(s), _("path"))
+    categories.crossJoin(broadcast(lookup))
+      .withColumn("category_path", slice(coalesce(walked, own), 1, maxLevels))
       .withColumn("level", size(col("category_path")))
+      .drop("__parents")
   }
 
   /** H4 — is_leaf: url never appears as someone's parent_url.

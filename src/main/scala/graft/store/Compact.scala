@@ -111,10 +111,7 @@ object Compact {
         val hit = footerRowsMemo.get(key)
         if (hit != null) hit.longValue()
         else {
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              f, spark.sparkContext.hadoopConfiguration))
-          val n = try rd.getRecordCount finally rd.close()
+          val n = Partitions.footer(spark, f)(_.getRecordCount)
           footerRowsMemo.put(key, n)
           n
         }

@@ -29,9 +29,10 @@ object Generations {
     Partitions.fs(spark, gen).exists(new Path(gen, "_COMMITTED"))
 
   /** The latest COMMITTED generation — what readers resolve. Uncommitted
-    * dirs (a write in flight, or a crashed one) are invisible. */
+    * dirs (a write in flight, or a crashed one) are invisible. Probed
+    * newest-first, so a committed head costs one existence RPC. */
   def latestCommitted(spark: SparkSession, root: String): Option[Path] =
-    genDirs(spark, root).filter(isCommitted(spark, _)).lastOption
+    genDirs(spark, root).reverseIterator.find(isCommitted(spark, _))
 
   def requireCommitted(spark: SparkSession, root: String): Path =
     latestCommitted(spark, root).getOrElse(throw new java.io.FileNotFoundException(

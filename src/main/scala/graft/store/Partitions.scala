@@ -1,11 +1,18 @@
 package graft.store
 
+import scala.util.Try
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The filesystem steps every persisted tree shares — Store tables, the
   * streaming event tree and its `_archive`, the MinHash index, the IVF
-  * layout — written once.
+  * layout — written once, including the parquet read of such a tree
+  * ([[read]]).
   *
   * Several Hadoop FileSystem implementations (object stores especially)
   * report a failed `rename`/`delete`/`mkdirs` as `false`, not as an
@@ -32,6 +39,57 @@ private[graft] object Partitions {
       case st if st.isDirectory && st.getPath.getName.startsWith(prefix) =>
         st.getPath.getName.stripPrefix(prefix) -> st.getPath
     }
+  }
+
+  /** Read a parquet tree graft itself wrote (a flat directory or one
+    * with `key=` partition directories) without Spark's schema-inference
+    * job. A plain `spark.read.parquet(dir)` launches a Spark job on every
+    * call to read the first data file's footer; a committed tree never
+    * changes, so the same footer is read here on the driver instead, and
+    * its `org.apache.spark.sql.parquet.row.metadata` schema — what Spark's
+    * own inference returns — is handed to `spark.read.schema`. Partition
+    * columns are still discovered from the paths, with their inferred
+    * types. A directory without a data file, or a file without Spark's
+    * schema key, takes the plain read, errors included. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    footerSchema(spark, new Path(dir)) match {
+      case Some(s) => spark.read.schema(s).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+
+  /** Spark's listing filter: `_` and `.` names are hidden, except `key=`
+    * partition directories, and so are in-flight `._COPYING_` files. */
+  private def visible(name: String): Boolean =
+    !(name.startsWith(".") || (name.startsWith("_") && !name.contains("=")) ||
+      name.endsWith("._COPYING_"))
+
+  /** The first data file in path order — the file Spark's inference reads
+    * — descending into partition directories in name order. */
+  private def firstDataFile(f: FileSystem, dir: Path): Option[Path] = {
+    val (files, dirs) = f.listStatus(dir).filter(st => visible(st.getPath.getName))
+      .sortBy(_.getPath.getName).partition(_.isFile)
+    files.headOption.map(_.getPath)
+      .orElse(dirs.iterator.flatMap(d => firstDataFile(f, d.getPath)).nextOption())
+  }
+
+  private def footerSchema(spark: SparkSession, dir: Path): Option[StructType] = {
+    val f = fs(spark, dir)
+    if (!Try(f.getFileStatus(dir).isDirectory).getOrElse(false)) None
+    else firstDataFile(f, dir).flatMap { file =>
+      val json = footer(spark, file)(
+        _.getFooter.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      Option(json).flatMap(j => Try(DataType.fromJson(j)).toOption).collect {
+        case s: StructType => s
+      }
+    }
+  }
+
+  /** Open one parquet file's footer on the driver (no Spark job, no data
+    * pages), apply `read`, close it. */
+  def footer[T](spark: SparkSession, file: Path)(read: ParquetFileReader => T): T = {
+    val rd = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try read(rd) finally rd.close()
   }
 
   /** Merge partition directory `src` into an EXISTING copy `dest`: move

@@ -12,7 +12,7 @@ import graft.operators.Merge
   *
   * Layout: each table is a directory of parquet "generations". A write
   * produces a new generation = merge(current snapshot, batch) so reads are
-  * always one `spark.read.parquet` of the latest generation (no log replay,
+  * always one parquet read of the latest generation (no log replay,
   * no small-file accumulation).
   *
   * Scale: the merge is a single key-partitioned shuffle of snapshot ∪ batch.
@@ -55,8 +55,10 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
   private def committedGens(table: String): Seq[String] =
     gens(table).filter(isCommitted(table, _))
 
+  /** Newest-first: one existence RPC when the newest generation is
+    * committed, however many generations are retained. */
   private def latestGen(table: String): Option[String] =
-    committedGens(table).lastOption
+    gens(table).reverseIterator.find(isCommitted(table, _))
 
   /** Catalog names are scoped by a digest of `root`: two stores with
     * different roots but the same table name and bucket count would
@@ -95,12 +97,13 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
   }
 
   /** One generation's frame: the catalog entry when it exists (carries
-    * bucket metadata -> bucket-aligned joins), else a plain parquet read of
-    * the same files — the single read expression every snapshot API uses. */
+    * bucket metadata -> bucket-aligned joins), else a parquet read of the
+    * same files through [[Partitions.read]] (no schema-inference job) —
+    * the single read expression every snapshot API uses. */
   private def readGen(table: String, g: String): DataFrame =
     if (buckets > 0 && spark.catalog.tableExists(catalogName(table, g)))
       spark.table(catalogName(table, g))
-    else spark.read.parquet(s"$root/$table/$g")
+    else Partitions.read(spark, s"$root/$table/$g")
 
   /** Claim the next generation number with an atomic exclusive create of a
     * `.claim_gen_N` marker. Generation numbering is otherwise
@@ -210,7 +213,7 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     // schema inference over it would fail, so treat it as never-written
     if (Partitions.list(spark, dir, "__date").isEmpty) None
     else {
-      val df = spark.read.parquet(dir.toString)
+      val df = Partitions.read(spark, dir.toString)
       Some(since.fold(df)(d => df.filter(col("__date") >= d)).drop("__date"))
     }
   }

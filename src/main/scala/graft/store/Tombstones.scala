@@ -39,7 +39,7 @@ private[graft] object Tombstones {
   def of(spark: SparkSession, gen: String): Option[DataFrame] = {
     val p = new Path(s"$gen/tombstones")
     if (Partitions.fs(spark, p).exists(p))
-      Some(spark.read.parquet(p.toString))
+      Some(Partitions.read(spark, p.toString))
     else None
   }
 

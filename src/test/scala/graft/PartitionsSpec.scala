@@ -1,0 +1,121 @@
+package graft
+
+import java.nio.file.Files
+
+import scala.collection.mutable
+import scala.util.Try
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.Bridge
+
+import graft.operators.Dedup
+import graft.store.{Partitions, Store}
+
+/** `Partitions.read`, the one parquet read of a tree graft wrote: its
+  * schema is the one Spark's inference returns, for every tree shape, and
+  * the generation reads built on it launch no Spark job at construction. */
+class PartitionsSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  private lazy val fixture = {
+    val root = tmp("graft_read")
+    val store = new Store(spark, root)
+    val products = Seq(
+      ("a", 1.5, Seq("x", "y"), "2024-01-01 10:00:00", ("s1", true)),
+      ("b", 2.5, Seq.empty[String], "2024-01-02 11:00:00", ("s2", false)))
+      .toDF("product_id", "price", "tags", "crawled_at", "seller")
+      .withColumn("crawled_at", to_timestamp(col("crawled_at")))
+    store.upsert("products", products, Seq("product_id"))
+    store.upsert("products", products.withColumn("price", col("price") * 2), Seq("product_id"))
+    store.appendHistory("history", products)
+    store.upsert("empty", products.limit(0), Seq("product_id"))
+    // a MinHash index with a bucketed base, a flat delta and tombstones
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy cat"),
+      (3L, "a completely different sentence about spark"),
+      (4L, "another unrelated line of text for the index")).toDF("doc_id", "text")
+    val index = s"$root/index"
+    val gen = Dedup.writeMinhashIndex(
+      Dedup.buildMinhashIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text"), index)
+    Dedup.appendToMinhashIndex(docs.filter(col("doc_id") > 2), index, "doc_id", "text")
+    Dedup.deleteFromMinhashIndex(spark, index, Seq(3L).toDF("id"))
+    (root, store, index, gen)
+  }
+
+  test("Partitions.read returns Spark's inferred schema for every tree graft writes") {
+    val (root, _, _, gen) = fixture
+    val trees = Seq(
+      "flat Store generation" -> s"$root/products/gen_000001",
+      "__date history tree" -> s"$root/history/append",
+      "empty-DataFrame generation" -> s"$root/empty/gen_000000",
+      "__bkt bands base" -> s"$gen/bands",
+      "flat bands delta" -> s"$gen/bands_delta",
+      "shingles" -> s"$gen/shingles",
+      "ids" -> s"$gen/ids",
+      "tombstones" -> s"$gen/tombstones")
+    for ((what, dir) <- trees) {
+      val want = spark.read.parquet(dir)
+      val got = Partitions.read(spark, dir)
+      assert(got.schema === want.schema, what)
+      assert(got.except(want).isEmpty && want.except(got).isEmpty, what)
+    }
+    assert(Partitions.read(spark, s"$root/history/append").schema("__date").dataType
+      === org.apache.spark.sql.types.DateType)
+    assert(Partitions.read(spark, s"$gen/bands_delta").columns.contains("__bkt"))
+  }
+
+  test("Partitions.read of a dir without a data file fails exactly as the plain read does") {
+    val empty = tmp("graft_read_empty")
+    val onlyMarker = tmp("graft_read_marker")
+    Files.createFile(java.nio.file.Paths.get(onlyMarker, "_SUCCESS"))
+    val emptyPartition = tmp("graft_read_part")
+    Files.createDirectories(java.nio.file.Paths.get(emptyPartition, "__date=2024-01-01"))
+    for (dir <- Seq(empty, onlyMarker, emptyPartition, s"$empty/absent")) {
+      val want = Try(spark.read.parquet(dir).schema)
+      val got = Try(Partitions.read(spark, dir).schema)
+      assert(want.isFailure, dir)
+      assert(got.failed.get.getClass === want.failed.get.getClass, dir)
+      assert(got.failed.get.getMessage === want.failed.get.getMessage, dir)
+    }
+  }
+
+  /** Jobs launched on this thread while `f` runs, as their descriptions. */
+  private def jobsOf[T](f: => T): (T, Seq[String]) = {
+    val marker = "graft.test.partitionsSpec"
+    val jobs = mutable.ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.synchronized {
+        val p = js.properties
+        if (p != null && p.getProperty(marker) != null)
+          jobs += String.valueOf(p.getProperty("spark.job.description"))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(marker, "1")
+    val out = try f finally {
+      sc.setLocalProperty(marker, null)
+      Bridge.drainListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+    (out, jobs.synchronized(jobs.toList))
+  }
+
+  test("snapshot, snapshotAt and history launch no Spark job at construction") {
+    val (_, store, index, _) = fixture
+    val (frames, jobs) = jobsOf(Seq(store.snapshot("products"), store.snapshotAt("products", 0),
+      store.history("history"), store.history("history", Some("2024-01-02"))).map(_.get))
+    assert(jobs.isEmpty, jobs.mkString(" | "))
+    assert(frames.map(_.count()) === Seq(2L, 2L, 2L, 1L))
+    // the MinHash index read: only the 64 `__bkt=` dirs' parallel listing
+    // remains (the inference jobs of bands, delta, shingles and
+    // tombstones are gone)
+    val (_, indexJobs) = jobsOf(Dedup.readMinhashIndex(spark, index))
+    assert(indexJobs.forall(_.startsWith("Listing leaf files")), indexJobs.mkString(" | "))
+    assert(indexJobs.size <= 1, indexJobs.mkString(" | "))
+  }
+}

@@ -70,7 +70,8 @@ class PlanSpec extends SparkSpec {
     // against a broadcast side: brute-force ANN and single-row
     // reference-time joins
     val bnljAllowed = Set("q29_ann_topk", "q41_staleness_skip", "q42_crawl_coverage",
-      "q65_store_lifecycle") // single-row totals broadcast-cross-joined onto the snapshot
+      "q65_store_lifecycle", // single-row totals broadcast-cross-joined onto the snapshot
+      "q31_hierarchy_paths", "q59_parent_repair") // resolvePaths' one-row parent map
     SparkEntry.queries.foreach { case (name, fn) =>
       val p = plan(fn(spark, sfDir))
       assert(!p.contains("CartesianProduct"), s"$name plans a cartesian product")
