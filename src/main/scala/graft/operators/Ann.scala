@@ -291,7 +291,7 @@ object Ann {
         graft.Par.run(
           () => {
             writeAssigned()
-            writeIds(spark.read.parquet(new Path(gen, "assigned").toString)
+            writeIds(Partitions.read(spark, new Path(gen, "assigned").toString)
               .select(col(idCol).as("id")).distinct())
           },
           writeCentroids)
@@ -310,9 +310,9 @@ object Ann {
     val gen = requireGen(spark, path)
     val ids = new Path(gen, "ids")
     val base =
-      if (Partitions.fs(spark, ids).exists(ids)) spark.read.parquet(ids.toString)
+      if (Partitions.fs(spark, ids).exists(ids)) Partitions.read(spark, ids.toString)
       else {
-        val assigned = spark.read.parquet(new Path(gen, "assigned").toString)
+        val assigned = Partitions.read(spark, new Path(gen, "assigned").toString)
         assigned.select(col(assigned.columns.head).as("id")).distinct()
       }
     ivfTombstonesOf(spark, gen) match {
@@ -358,7 +358,7 @@ object Ann {
     * per generation ([[graft.store.Generations.memo]]). */
   private def ivfCentroids(spark: SparkSession, gen: Path): Array[Array[Double]] =
     graft.store.Generations.memo(spark, gen, "ivf centroids") {
-      spark.read.parquet(new Path(gen, "centroids").toString)
+      Partitions.read(spark, new Path(gen, "centroids").toString)
         .select("list", "centroid").orderBy("list").collect()
         .map(_.getSeq[Double](1).toArray)
     }
@@ -375,7 +375,7 @@ object Ann {
   def readIvf(spark: SparkSession, path: String): IvfIndex = {
     val gen = requireGen(spark, path)
     val centroids = ivfCentroids(spark, gen)
-    val assigned = spark.read.parquet(new Path(gen, "assigned").toString)
+    val assigned = Partitions.read(spark, new Path(gen, "assigned").toString)
     val live = graft.store.Tombstones.minus(assigned,
       ivfTombstonesOf(spark, gen), assigned.columns.head)
     IvfIndex(live, centroids)
@@ -432,7 +432,7 @@ object Ann {
   def appendToIvf(batch: DataFrame, path: String, idCol: String, vecCol: String): Unit = {
     val spark = batch.sparkSession
     val gen0 = requireGen(spark, path)
-    val existing = spark.read.parquet(new Path(gen0, "assigned").toString).schema
+    val existing = Partitions.read(spark, new Path(gen0, "assigned").toString).schema
     for (c <- Seq(idCol, vecCol)) {
       require(existing.fieldNames.contains(c),
         s"appendToIvf: persisted layout at $gen0 has columns " +

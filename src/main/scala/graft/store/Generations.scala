@@ -5,15 +5,23 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Shared generation-directory machinery for persisted index layouts
-  * (`Ann`'s IVF tree, `Dedup`'s MinHash index): each rebuild or online
-  * compaction writes a fresh `gen_NNNNNN/` dir and commits it by creating
-  * a `_COMMITTED` marker LAST, so readers — which always resolve the
-  * latest COMMITTED generation — never observe a half-written layout.
-  * The marker create is exclusive (no overwrite): two racing writers that
-  * picked the same number fail loudly instead of interleaving. Superseded
-  * generations are dropped by [[vacuum]]; `keep ≥ 2` protects a reader
-  * that resolved the previous generation just before a commit landed. */
+/** The one generation protocol of every persisted tree: `Store`'s keyed
+  * tables, `Ann`'s IVF tree, `Dedup`'s MinHash index and the streaming CDC
+  * companion. A write claims a fresh `gen_NNNNNN/` dir with an exclusive
+  * `_CLAIM` create ([[tryClaim]]) before any data lands, and commits it by
+  * creating a `_COMMITTED` marker LAST ([[commit]]), so readers — which
+  * always resolve the latest COMMITTED generation — never observe a
+  * half-written layout. Numbering moves past every listed dir, committed
+  * or not, so a crashed writer's stray is never reused.
+  *
+  * What a lost claim race does is the caller's choice. An index rebuild
+  * ([[claimNextGen]]) advances to the next number: its content does not
+  * depend on the generation it follows. A `Store` upsert claims exactly
+  * the number after the last one it listed and FAILS when that is taken:
+  * it merged the snapshot it listed, so moving on would silently drop the
+  * other writer's rows. Superseded generations are dropped by [[vacuum]];
+  * `keep ≥ 2` protects a reader that resolved the previous generation just
+  * before a commit landed. */
 object Generations {
 
   def genDirs(spark: SparkSession, root: String): Seq[Path] = {
@@ -25,8 +33,25 @@ object Generations {
       .map(_.getPath).sortBy(_.getName)
   }
 
-  def isCommitted(spark: SparkSession, gen: Path): Boolean =
-    Partitions.fs(spark, gen).exists(new Path(gen, "_COMMITTED"))
+  /** Generation dir `n` under `root`. */
+  private[store] def genPath(root: String, n: Int): Path = new Path(new Path(root), f"gen_$n%06d")
+
+  /** The number one past the newest of `listed` (a [[genDirs]] result). */
+  private[store] def nextNumber(listed: Seq[Path]): Int =
+    listed.lastOption.map(_.getName.drop(4).toInt + 1).getOrElse(0)
+
+  /** A generation is committed when its `_COMMITTED` marker exists. A
+    * `Store` generation written before Store claimed through here carries
+    * no marker: its commit was the committer's root `_SUCCESS`, and it has
+    * no `_CLAIM`, so `_SUCCESS` without `_CLAIM` counts too. A claimed
+    * generation whose data landed (`_SUCCESS`) but whose commit did not
+    * stays uncommitted. Index, IVF and companion generations never hold a
+    * root `_SUCCESS`, so for them the marker alone decides. */
+  def isCommitted(spark: SparkSession, gen: Path): Boolean = {
+    val f = Partitions.fs(spark, gen)
+    f.exists(new Path(gen, "_COMMITTED")) ||
+      (f.exists(new Path(gen, "_SUCCESS")) && !f.exists(new Path(gen, "_CLAIM")))
+  }
 
   /** The latest COMMITTED generation — what readers resolve. Uncommitted
     * dirs (a write in flight, or a crashed one) are invisible. Probed
@@ -38,41 +63,35 @@ object Generations {
     latestCommitted(spark, root).getOrElse(throw new java.io.FileNotFoundException(
       s"no committed generation under $root"))
 
-  /** CLAIM the next generation path with an atomic exclusive `_CLAIM`
-    * create before any data is written. Without the claim, two concurrent
-    * writers could pick the same number and the second's
-    * `mode("overwrite")` write would clobber the first's files BEFORE its
-    * commit marker lands — corrupting a generation that then commits as
-    * if whole. With it, the loser of the create race simply advances to
-    * the next number. Numbering moves past every existing dir, committed
-    * or not, so a crashed writer's stray is never reused. */
-  def claimNextGen(spark: SparkSession, root: String): Path = {
-    var n = genDirs(spark, root).lastOption
-      .map(_.getName.drop(4).toInt + 1).getOrElse(0)
-    val limit = n + 100 // a hundred simultaneous writers means something is wrong
-    while (n < limit) {
-      val gen = new Path(new Path(root), f"gen_$n%06d")
-      val claim = new Path(gen, "_CLAIM")
-      val f = Partitions.fs(spark, gen)
-      // Only "this number is already claimed" advances to the next number.
-      // Any other IOException (permissions, quota, a network-FS hiccup) is a
-      // real failure and must surface — swallowing it would silently skip
-      // generation numbers or spin to the misleading could-not-claim error.
-      // FileSystem.create(overwrite=false) is check-then-create on the local
-      // filesystem (best-effort atomic there; truly atomic on HDFS), so the
-      // race window is the create itself — which still lands in the
-      // FileAlreadyExistsException arm.
-      try {
-        f.create(claim, false).close()
-        return gen
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => n += 1
-        case _: java.nio.file.FileAlreadyExistsException => n += 1
-        case _: java.io.IOException if f.exists(claim) => n += 1
-      }
+  /** CLAIM generation dir `gen` with an atomic exclusive `_CLAIM` create,
+    * before any data is written; false when another writer already holds
+    * it. Without the claim, two writers could pick the same number and the
+    * second's write would clobber the first's files BEFORE its commit
+    * marker lands. Only "already exists" means taken: any other
+    * IOException (permissions, quota, a network-FS hiccup) is a real
+    * failure and surfaces. FileSystem.create(overwrite=false) is
+    * check-then-create on the local filesystem (best-effort atomic there;
+    * truly atomic on HDFS), so the race window is the create itself —
+    * which still lands in the FileAlreadyExistsException arm. */
+  def tryClaim(spark: SparkSession, gen: Path): Boolean = {
+    val claim = new Path(gen, "_CLAIM")
+    val f = Partitions.fs(spark, claim)
+    try { f.create(claim, false).close(); true }
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case _: java.nio.file.FileAlreadyExistsException => false
+      case _: java.io.IOException if f.exists(claim) => false
     }
-    throw new java.io.IOException(
-      s"claimNextGen: could not claim a generation under $root after 100 attempts")
+  }
+
+  /** Claim the next free generation for an index rebuild: the loser of a
+    * claim race simply advances to the next number. */
+  def claimNextGen(spark: SparkSession, root: String): Path = {
+    val first = nextNumber(genDirs(spark, root))
+    // a hundred simultaneous writers means something is wrong
+    (first until first + 100).iterator.map(genPath(root, _)).find(tryClaim(spark, _))
+      .getOrElse(throw new java.io.IOException(
+        s"claimNextGen: could not claim a generation under $root after 100 attempts"))
   }
 
   /** Commit a generation: exclusive `_COMMITTED` create, done LAST. The
@@ -129,23 +148,34 @@ object Generations {
       }.asInstanceOf[V]
     }
 
-  /** Drop all but the newest `keep` committed generations, plus any
-    * uncommitted strays older than the newest committed one. Run this from
-    * the maintenance cycle only, never concurrently with a rebuild: an
-    * in-flight writer that was overtaken by a faster-committing one is
-    * indistinguishable from a crashed stray and would be deleted mid-write.
-    * (Readers are unaffected either way — they resolve the newest
-    * COMMITTED generation, which a deleted stray never becomes.) */
-  def vacuum(spark: SparkSession, root: String, keep: Int = 2): Int = {
+  /** What [[vacuum]] drops, oldest first: all but the newest `keep`
+    * committed generations, plus any uncommitted stray older than the
+    * newest committed one. Never a dir above the newest committed
+    * generation: that may be a writer's in flight. */
+  def superseded(spark: SparkSession, root: String, keep: Int): Seq[Path] = {
     require(keep >= 1, "keep must be >= 1")
-    val committed = genDirs(spark, root).filter(isCommitted(spark, _))
-    if (committed.isEmpty) return 0
-    val keepNames = committed.takeRight(keep).map(_.getName).toSet
-    val newest = committed.last.getName
-    val drop = genDirs(spark, root).filter(g =>
-      !keepNames(g.getName) && g.getName < newest)
-    drop.foreach(g => Partitions.checked(
-      Partitions.fs(spark, g).delete(g, true), s"Generations.vacuum: delete($g)"))
-    drop.size
+    val all = genDirs(spark, root)
+    val committed = all.filter(isCommitted(spark, _)).map(_.getName)
+    if (committed.isEmpty) Nil
+    else {
+      val keepNames = committed.takeRight(keep).toSet
+      all.filter(g => !keepNames(g.getName) && g.getName < committed.last)
+    }
   }
+
+  /** Delete generation dirs, each checked; `op` names the public call. */
+  private[store] def delete(spark: SparkSession, gens: Seq[Path], op: String): Int = {
+    gens.foreach(g =>
+      Partitions.checked(Partitions.fs(spark, g).delete(g, true), s"$op: delete($g)"))
+    gens.size
+  }
+
+  /** Drop the [[superseded]] generations. Run this from the maintenance
+    * cycle only, never concurrently with a rebuild: an in-flight writer
+    * that was overtaken by a faster-committing one is indistinguishable
+    * from a crashed stray and would be deleted mid-write. (Readers are
+    * unaffected either way — they resolve the newest COMMITTED generation,
+    * which a deleted stray never becomes.) */
+  def vacuum(spark: SparkSession, root: String, keep: Int = 2): Int =
+    delete(spark, superseded(spark, root, keep), "Generations.vacuum")
 }

@@ -28,37 +28,20 @@ import graft.operators.Merge
   * a current-snapshot companion so CDC never replays the log at all. All
   * directory listing goes through the Hadoop FileSystem API — `root` may be
   * any Hadoop-supported URI (file:, hdfs:, s3a:, ...), never `java.io.File`.
+  *
+  * Generations follow the one [[Generations]] protocol: each upsert claims
+  * `gen_N/_CLAIM`, writes its data at the generation root, and commits with
+  * `_COMMITTED`; readers see committed generations only, so a crashed
+  * upsert is invisible and numbered past. The store is SINGLE-WRITER per
+  * table (the reference's Postgres serializes writers for free): an upsert
+  * claims exactly the number after the last one it listed, and a taken
+  * claim fails it with an IOException instead of moving on — it merged the
+  * snapshot it listed, so a later number would drop the other writer's
+  * rows. Generations written before this protocol (a root `_SUCCESS`, no
+  * `_CLAIM`) still read as committed; their sibling `.claim_gen_N` files
+  * are ignored and never created again.
   */
 class Store(spark: SparkSession, root: String, buckets: Int = 0) {
-
-  /** RAW generation listing — includes a crashed writer's partial
-    * directory. Generation NUMBERING must see those (re-issuing a partial
-    * generation's number would collide with its never-deleted claim
-    * tombstone and wedge the table); READERS must not — they go through
-    * [[committedGens]]. */
-  private def gens(table: String): Seq[String] =
-    Generations.genDirs(spark, s"$root/$table").map(_.getName)
-
-  /** A generation is COMMITTED iff the write that produced it ran to
-    * completion — witnessed by the committer's own `_SUCCESS` marker (the
-    * default FileOutputCommitter writes it last; deployments that disable
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs` lose this store's
-    * crash-visibility guarantee). Without the gate, an upsert crashing
-    * mid-write leaves a partial directory that sorts LAST — and every
-    * reader would silently serve the truncated snapshot as current. One
-    * existence RPC per check. */
-  private def isCommitted(table: String, gen: String): Boolean = {
-    val marker = new Path(s"$root/$table/$gen/_SUCCESS")
-    Partitions.fs(spark, marker).exists(marker)
-  }
-
-  private def committedGens(table: String): Seq[String] =
-    gens(table).filter(isCommitted(table, _))
-
-  /** Newest-first: one existence RPC when the newest generation is
-    * committed, however many generations are retained. */
-  private def latestGen(table: String): Option[String] =
-    gens(table).reverseIterator.find(isCommitted(table, _))
 
   /** Catalog names are scoped by a digest of `root`: two stores with
     * different roots but the same table name and bucket count would
@@ -100,68 +83,58 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     * bucket metadata -> bucket-aligned joins), else a parquet read of the
     * same files through [[Partitions.read]] (no schema-inference job) —
     * the single read expression every snapshot API uses. */
-  private def readGen(table: String, g: String): DataFrame =
-    if (buckets > 0 && spark.catalog.tableExists(catalogName(table, g)))
-      spark.table(catalogName(table, g))
-    else Partitions.read(spark, s"$root/$table/$g")
+  private def readGen(table: String, gen: Path): DataFrame =
+    if (buckets > 0 && spark.catalog.tableExists(catalogName(table, gen.getName)))
+      spark.table(catalogName(table, gen.getName))
+    else Partitions.read(spark, gen.toString)
 
-  /** Claim the next generation number with an atomic exclusive create of a
-    * `.claim_gen_N` marker. Generation numbering is otherwise
-    * read-increment-write: two concurrent upserts that both listed the same
-    * latest generation would race to the same `gen_N` and silently clobber
-    * each other. The marker create (`FileSystem.create` with
-    * overwrite=false) is atomic on the FileSystem API, so the second writer
-    * fails loudly here instead. Claims are tombstones — never deleted on
-    * success, so a raced number is never reused; [[vacuum]] removes the
-    * ones belonging to dropped generations. The store remains a
-    * SINGLE-WRITER-per-table design (the reference's Postgres serializes
-    * writers for free); this guard turns a violation into an error, not
-    * into support for concurrent writers. */
-  private def claimGen(table: String, gen: String): Unit = {
-    val dir = new Path(s"$root/$table")
-    val f = Partitions.fs(spark, dir)
-    f.mkdirs(dir)
-    val marker = new Path(dir, s".claim_$gen")
-    try f.create(marker, false).close()
-    catch { case e: java.io.IOException =>
-      throw new java.io.IOException(
-        s"claimGen: $table/$gen already claimed — a concurrent writer is " +
-          "upserting this table (the store is single-writer per table)", e)
-    }
-  }
-
-  private def writeGen(table: String, df: DataFrame, keys: Seq[String] = Nil): Unit = {
-    // numbering over the RAW listing: a crashed writer's partial directory
-    // must not have its number re-issued (its claim tombstone lives on)
-    val next = f"gen_${gens(table).lastOption.map(_.drop(4).toInt + 1).getOrElse(0)}%06d"
-    // captured BEFORE the write: computed after, latestGen would already BE
-    // `next` and the superseded-entry drop below would never fire — the
-    // metastore then leaks one entry per upsert between vacuums
-    val prev = latestGen(table)
-    claimGen(table, next)
+  /** Write the table's next generation, `merge` of its latest snapshot (None
+    * when never written). The claim is the one number after the newest
+    * listed dir, committed or not, so a crashed writer's stray is numbered
+    * past; a taken claim fails the upsert (see the class doc). The data
+    * lands at the generation root in append mode, which keeps `_CLAIM`: an
+    * overwrite deletes it, and so does `saveAsTable` on a new table (a CTAS
+    * that overwrites). A bucketed generation first registers its catalog
+    * table at the claimed dir, then appends into it. */
+  private def writeGen(table: String, keys: Seq[String])(
+      merge: Option[DataFrame] => DataFrame): Unit = {
+    val dir = s"$root/$table"
+    val listed = Generations.genDirs(spark, dir)
+    // resolved BEFORE the write: after it, the newest committed generation
+    // would already BE the new one and the superseded-entry drop below
+    // would never fire — the metastore then leaks one entry per upsert
+    val prev = listed.reverseIterator.find(Generations.isCommitted(spark, _))
+    val df = merge(prev.map(readGen(table, _)))
+    val gen = Generations.genPath(dir, Generations.nextNumber(listed))
+    if (!Generations.tryClaim(spark, gen)) throw new java.io.IOException(
+      s"upsert: $table/${gen.getName} already claimed — a concurrent writer is " +
+        "upserting this table (the store is single-writer per table)")
     if (buckets > 0 && keys.nonEmpty) {
-      df.write.mode("overwrite")
-        .bucketBy(buckets, keys.head, keys.tail: _*)
-        .sortBy(keys.head, keys.tail: _*)
-        .option("path", s"$root/$table/$next")
-        .saveAsTable(catalogName(table, next))
-      // the previous generation's catalog entry is now dead weight — drop
-      // the metadata only (files stay: snapshot() can still path-read them)
-      prev.foreach(dropCatalogEntries(table, _))
-    } else df.write.mode("overwrite").parquet(s"$root/$table/$next")
+      val name = catalogName(table, gen.getName)
+      val cols = keys.map(k => s"`${k.replace("`", "``")}`").mkString(", ")
+      spark.sql(s"CREATE TABLE $name (${df.schema.toDDL}) USING parquet " +
+        s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO $buckets BUCKETS " +
+        s"LOCATION '${gen.toString.replace("'", "\\'")}'")
+      df.write.mode("append").insertInto(name)
+    } else df.write.mode("append").parquet(gen.toString)
+    Generations.commit(spark, gen)
+    // the previous generation's catalog entry is now dead weight — drop
+    // the metadata only (files stay: snapshotAt can still path-read them)
+    if (buckets > 0 && keys.nonEmpty) prev.foreach(p => dropCatalogEntries(table, p.getName))
   }
 
   /** Latest snapshot of a keyed table (empty option when never written).
     * Prefers the catalog entry (carries bucket metadata → bucket-aligned
     * joins); falls back to a plain parquet read of the generation path. */
   def snapshot(table: String): Option[DataFrame] =
-    latestGen(table).map(readGen(table, _))
+    Generations.latestCommitted(spark, s"$root/$table").map(readGen(table, _))
 
   /** Retained generation ids of a keyed table, ascending — what
     * [[snapshotAt]] accepts. Depth is bounded by [[vacuum]]'s keep
     * window. */
   def generations(table: String): Seq[Int] =
-    committedGens(table).map(_.drop(4).toInt)
+    Generations.genDirs(spark, s"$root/$table")
+      .filter(Generations.isCommitted(spark, _)).map(_.getName.drop(4).toInt)
 
   /** TIME TRAVEL: the table's snapshot AS OF a retained generation.
     * Every upsert writes a complete immutable generation, so pinning a
@@ -177,23 +150,21 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     * path-read the same files unbucketed — correct, just not
     * bucket-aligned. */
   def snapshotAt(table: String, generation: Int): Option[DataFrame] = {
-    val g = f"gen_$generation%06d"
-    // one existence RPC, not a listing of the whole table dir — and the
+    val g = Generations.genPath(s"$root/$table", generation)
+    // existence RPCs, not a listing of the whole table dir — and the
     // COMMITTED gate: a crashed writer's partial generation must never be
     // served as a "complete immutable" snapshot
-    if (generation < 0 || !isCommitted(table, g)) None
+    if (generation < 0 || !Generations.isCommitted(spark, g)) None
     else Some(readGen(table, g))
   }
 
   /** S6/S7/J6 — upsert a batch into a keyed table with the reference's
     * COALESCE(NULLIF(new,''), old) column semantics. */
-  def upsert(table: String, batch: DataFrame, keys: Seq[String]): Unit = {
-    val merged = snapshot(table) match {
+  def upsert(table: String, batch: DataFrame, keys: Seq[String]): Unit =
+    writeGen(table, keys) {
       case Some(old) => Merge.upsertMerge(old, batch, keys)
       case None      => batch
     }
-    writeGen(table, merged, keys)
-  }
 
   /** S8 — append-only history, date-partitioned for pruning at scale. */
   def appendHistory(table: String, events: DataFrame, tsCol: String = "crawled_at"): Unit =
@@ -226,25 +197,27 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
   def upsertLatest(table: String, events: DataFrame, keys: Seq[String],
       tsCol: String = "crawled_at", tieBreakers: Seq[Column] = Nil): Unit = {
     val newLatest = Merge.latestPerKey(events, keys, tsCol, tieBreakers)
-    val merged = snapshot(s"${table}_latest") match {
+    writeGen(s"${table}_latest", keys) {
       case Some(old) => Merge.latestPerKey(old.unionByName(newLatest), keys, tsCol, tieBreakers)
       case None      => newLatest
     }
-    writeGen(s"${table}_latest", merged, keys)
   }
 
   /** The current-snapshot companion maintained by [[upsertLatest]]. */
   def latest(table: String): Option[DataFrame] = snapshot(s"${table}_latest")
 
-  /** Drop all but the newest `keep` generations of a keyed table. The
-    * generation design trades write simplicity for one obsolete snapshot
-    * dir per upsert — without GC that is unbounded storage growth (at
-    * 100 TB, a full dead copy per run). Deleting is a directory remove per
-    * dropped generation via the FileSystem API (no data read), plus the
-    * catalog entry if one is still registered. The newest `keep`
-    * generations are never touched, so concurrent readers of the current
-    * snapshot are safe; `keep ≥ 2` also protects a reader that resolved
-    * the previous generation just before an in-flight upsert committed.
+  /** Drop the table's superseded generations by [[Generations]]' rule:
+    * all but the newest `keep` committed generations, plus uncommitted
+    * strays below the newest committed one; a dir above it may be an
+    * in-flight upsert's and is never touched. The generation design trades
+    * write simplicity for one obsolete snapshot dir per upsert — without
+    * GC that is unbounded storage growth (at 100 TB, a full dead copy per
+    * run). Each dropped generation costs its catalog entries, if still
+    * registered, and one checked directory delete (no data read). The
+    * newest `keep` committed generations are never touched, so concurrent
+    * readers of the current snapshot are safe; `keep ≥ 2` also protects a
+    * reader that resolved the previous generation just before an
+    * in-flight upsert committed.
     *
     * PINNED-SNAPSHOT RETENTION CONTRACT (the [[snapshotAt]] side of the
     * index tree's `keep = 2` discipline, stated here because vacuum is
@@ -261,26 +234,9 @@ class Store(spark: SparkSession, root: String, buckets: Int = 0) {
     * file listing, and no surviving generation shares those files
     * (PipelineSpec pins both behaviors). */
   def vacuum(table: String, keep: Int = 2): Int = {
-    require(keep >= 1, "keep must be >= 1")
-    // the keep window counts COMMITTED generations (a reader can only hold
-    // those); an uncommitted partial is garbage and drops with everything
-    // below the window — EXCEPT the raw-newest, which may be an in-flight
-    // writer's directory (crashed partials stop being raw-newest at the
-    // next upsert and are reclaimed then)
-    val all = gens(table)
-    val keepSet = committedGens(table).takeRight(keep).toSet
-    val dropGens = all.filterNot(keepSet.contains).filterNot(all.lastOption.contains)
-    dropGens.foreach { g =>
-      dropCatalogEntries(table, g)
-      val p = new Path(s"$root/$table/$g")
-      // an unchecked false would return a dropped-count that includes a
-      // generation still on disk
-      Partitions.checked(Partitions.fs(spark, p).delete(p, true), s"vacuum: delete($p)")
-      // the generation's claim tombstone (see claimGen) goes with it; its
-      // number can never be re-issued (numbering only moves forward)
-      Partitions.fs(spark, p).delete(new Path(s"$root/$table/.claim_$g"), false)
-    }
-    dropGens.size
+    val drop = Generations.superseded(spark, s"$root/$table", keep)
+    drop.foreach(g => dropCatalogEntries(table, g.getName))
+    Generations.delete(spark, drop, "vacuum")
   }
 
   /** Compact the history table's `__date=` partitions: every

@@ -439,7 +439,7 @@ object Streams {
         // deltas/legacy gens (deltas are O(batch); a legacy full gen
         // re-anchors bucketed at its next collapse).
         val frames = dirs.map { case (d, nbkt, genId) =>
-          val df = spark.read.parquet(d.toString)
+          val df = Partitions.read(spark, d.toString)
           val bucketed = df.columns.contains("__kbkt")
           val pruned = pruneTo.flatMap(_.get(if (bucketed) nbkt else flatModulus)) match {
             case Some(b) if bucketed => df.filter(col("__kbkt").isin(b: _*))
@@ -540,7 +540,7 @@ object Streams {
       (if (liveParts.nonEmpty)
         Seq(spark.read.option("basePath", historyPath).parquet(liveParts: _*))
       else Nil) ++
-        (if (fs.exists(arch)) Seq(spark.read.parquet(arch.toString)) else Nil)
+        (if (fs.exists(arch)) Seq(Partitions.read(spark, arch.toString)) else Nil)
     require(srcs.nonEmpty,
       s"cdcRebuildCompanion: no event partitions under $historyPath (live or " +
         "archived) — there is nothing to rebuild the companion from")
@@ -701,7 +701,7 @@ object Streams {
     * batch path's [[graft.operators.Dedup.IngestStats]] return value gives
     * callers directly, which a fire-and-forget streaming query cannot. */
   def ingestLedger(spark: SparkSession, verdictsPath: String): DataFrame =
-    spark.read.parquet(s"$verdictsPath/_ledger")
+    Partitions.read(spark, s"$verdictsPath/_ledger")
 
   /** Continuous corpus curation — the streaming closure of
     * [[graft.pipeline.Curation.curate]], against a PERSISTED cross-stream
@@ -945,7 +945,7 @@ object Streams {
   /** The persisted per-batch ledger an [[annIngestSink]] run maintains
     * under its index root — the IVF twin of [[ingestLedger]]. */
   def annIngestLedger(spark: SparkSession, indexPath: String): DataFrame =
-    spark.read.parquet(s"$indexPath/_ledger")
+    Partitions.read(spark, s"$indexPath/_ledger")
 
   /** Archive all but the newest `keepLatest` `batch_id=` partitions of a
     * per-batch output tree ([[ingestSink]] verdicts, [[annIngestSink]]

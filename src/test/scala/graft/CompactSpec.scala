@@ -5,6 +5,20 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Ann, Dedup}
 import graft.store.{Compact, Store}
 
+/** Local filesystem on which another writer has already claimed
+  * `gen_000002` of every tree: the exclusive create of its `_CLAIM` throws
+  * FileAlreadyExistsException, as the loser of a claim race sees it. */
+class ClaimRaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "claimrace"
+  override def getUri: java.net.URI = java.net.URI.create("claimrace:///")
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream =
+    if (!overwrite && f.getName == "_CLAIM" && f.getParent.getName == "gen_000002")
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$f already exists")
+    else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+}
+
 /** Compaction of the append-only trees (history, MinHash index, IVF lists):
   * file counts must DROP and results must be IDENTICAL — the relational
   * identity is additionally oracle-gated by q73 (MinHash) and q74 (IVF);
@@ -508,23 +522,27 @@ class CompactSpec extends SparkSpec {
   }
 
   test("Store claim guard: a concurrent writer's claim fails the upsert loudly") {
-    val root = tmp("graft_claim")
-    val store = new Store(spark, root)
+    spark.sparkContext.hadoopConfiguration.set("fs.claimrace.impl",
+      classOf[ClaimRaceFs].getName)
+    val dir = tmp("graft_claim")
+    val store = new Store(spark, "claimrace://" + dir)
     val batch = Seq(("p1", 1.0)).toDF("product_id", "price")
     store.upsert("products", batch, Seq("product_id"))       // gen_000000
     store.upsert("products", batch, Seq("product_id"))       // gen_000001
     assert(store.snapshot("products").get.count() === 1)
-    // simulate a racing writer that already claimed the next generation
-    val claim = new java.io.File(s"$root/products/.claim_gen_000002")
-    assert(claim.createNewFile())
+    // a racing writer wins the create of gen_000002/_CLAIM after this
+    // upsert listed the table: the upsert must fail, not move on to
+    // gen_000003 with a merge of the snapshot it listed
     val e = intercept[java.io.IOException] {
       store.upsert("products", batch, Seq("product_id"))
     }
     assert(e.getMessage.contains("single-writer"))
-    // the claim tombstones survive vacuum only for live generations
+    assert(store.generations("products") === Seq(0, 1))
+    assert(store.snapshot("products").get.count() === 1)
+    // vacuum drops superseded generations together with their claims
     assert(store.vacuum("products", keep = 1) === 1)
-    assert(!new java.io.File(s"$root/products/.claim_gen_000000").exists())
-    assert(new java.io.File(s"$root/products/.claim_gen_000001").exists())
+    assert(!new java.io.File(s"$dir/products/gen_000000").exists())
+    assert(new java.io.File(s"$dir/products/gen_000001/_CLAIM").exists())
   }
 
   test("ingestCycle ledger: batch rows, candidates, dups, appended, file counts") {

@@ -9,8 +9,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.Bridge
 
-import graft.operators.Dedup
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+import graft.operators.{Ann, Dedup}
 import graft.store.{Partitions, Store}
+import graft.streaming.Streams
 
 /** `Partitions.read`, the one parquet read of a tree graft wrote: its
   * schema is the one Spark's inference returns, for every tree shape, and
@@ -46,6 +49,45 @@ class PartitionsSpec extends SparkSpec {
     (root, store, index, gen)
   }
 
+  /** The IVF layout, the streaming CDC companion and its event archive,
+    * and the ledgers of both ingest sinks, each written by its operator. */
+  private lazy val streamFixture = {
+    implicit val sqlCtx = spark.sqlContext
+    val root = tmp("graft_read_streams")
+    // IVF: `list=` partitioned assignments, the id manifest, the centroids;
+    // the ANN sink's ledger lands under the index root
+    val emb = Tables.load(spark, sfDir, "embeddings").filter(col("vec_id") < 60)
+    val ivf = s"$root/ivf"
+    val ivfGen = Ann.writeIvf(
+      Ann.buildIvf(emb.filter(col("vec_id") < 40), "vec_id", "embedding", nlist = 2), ivf)
+    val vecs = MemoryStream[VecRow]
+    val annQ = Streams.annIngestSink(vecs.toDF, ivf, s"$root/ivf_ckpt", "vec_id", "embedding")
+    vecs.addData(emb.filter(col("vec_id") >= 40).select("vec_id", "embedding").as[VecRow]
+      .collect().toSeq: _*)
+    annQ.processAllAvailable(); annQ.stop()
+    // the MinHash sink's ledger lands beside its verdicts
+    val index = s"$root/index"
+    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(
+      Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text"),
+      "doc_id", "text"), index)
+    val docs = MemoryStream[DocRow]
+    val verdicts = s"$root/verdicts"
+    val ingestQ = Streams.ingestSink(docs.toDF, index, verdicts, s"$root/ingest_ckpt",
+      "doc_id", "text", threshold = 0.3)
+    docs.addData(DocRow(2L, "the quick brown fox jumps over the lazy cat"),
+      DocRow(3L, "a completely different sentence about spark"))
+    ingestQ.processAllAvailable(); ingestQ.stop()
+    // CDC: batch 0 seeds a bucketed full collapse, batch 1 a flat delta;
+    // archiving moves batch 0's event partition under `_archive`
+    val hist = s"$root/history"
+    def crawl(id: String, price: Double, day: Int) = Crawl(id, price, 200.0, null, 1L,
+      java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:00"))
+    Streams.cdcProcessBatch(Seq(crawl("p1", 100.0, 1), crawl("p2", 110.0, 1)).toDF, hist, 0L)
+    Streams.cdcProcessBatch(Seq(crawl("p1", 120.0, 2)).toDF, hist, 1L)
+    assert(Streams.archiveEventLog(spark, hist, "2024-01-02 00:00:00") > 0)
+    (ivfGen, ivf, verdicts, hist)
+  }
+
   test("Partitions.read returns Spark's inferred schema for every tree graft writes") {
     val (root, _, _, gen) = fixture
     val trees = Seq(
@@ -57,7 +99,17 @@ class PartitionsSpec extends SparkSpec {
       "shingles" -> s"$gen/shingles",
       "ids" -> s"$gen/ids",
       "tombstones" -> s"$gen/tombstones")
-    for ((what, dir) <- trees) {
+    val (ivfGen, ivf, verdicts, hist) = streamFixture
+    val streamTrees = Seq(
+      "IVF assigned" -> s"$ivfGen/assigned",
+      "IVF ids" -> s"$ivfGen/ids",
+      "IVF centroids" -> s"$ivfGen/centroids",
+      "bucketed companion full" -> s"$hist/_latest/gen_000000000000/state",
+      "flat companion delta" -> s"$hist/_latest/gen_000000000001/state",
+      "event _archive" -> s"$hist/_archive",
+      "ingest ledger" -> s"$verdicts/_ledger",
+      "ANN ingest ledger" -> s"$ivf/_ledger")
+    for ((what, dir) <- trees ++ streamTrees) {
       val want = spark.read.parquet(dir)
       val got = Partitions.read(spark, dir)
       assert(got.schema === want.schema, what)
@@ -66,6 +118,11 @@ class PartitionsSpec extends SparkSpec {
     assert(Partitions.read(spark, s"$root/history/append").schema("__date").dataType
       === org.apache.spark.sql.types.DateType)
     assert(Partitions.read(spark, s"$gen/bands_delta").columns.contains("__bkt"))
+    // the companion trees have the shapes their names say
+    assert(Partitions.read(spark, s"$hist/_latest/gen_000000000000/state").columns
+      .contains("__kbkt"))
+    assert(!Partitions.read(spark, s"$hist/_latest/gen_000000000001/state").columns
+      .contains("__kbkt"))
   }
 
   test("Partitions.read of a dir without a data file fails exactly as the plain read does") {

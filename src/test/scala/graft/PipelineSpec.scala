@@ -354,6 +354,84 @@ class PipelineSpec extends SparkSpec {
     assert(store.generations("products") == Seq(0, 2))
   }
 
+  test("a claimed generation whose data landed but whose commit did not stays invisible") {
+    val root = Files.createTempDirectory("graft_uncommitted").toString
+    val store = new Store(spark, root)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def marker(table: String, gen: Int, name: String) =
+      fs.exists(new org.apache.hadoop.fs.Path(f"$root/$table/gen_$gen%06d/$name"))
+    store.upsert("products", Seq(("a", 1.0)).toDF("product_id", "price"), Seq("product_id"))
+    // a real upsert claims and commits through Generations: an overwrite-
+    // mode write would have deleted the claim it made before writing
+    assert(marker("products", 0, "_CLAIM") && marker("products", 0, "_COMMITTED"))
+    // an upsert that died between its data write and its commit: claim,
+    // data and the committer's _SUCCESS, but no _COMMITTED
+    val dir = new org.apache.hadoop.fs.Path(s"$root/products/gen_000001")
+    fs.create(new org.apache.hadoop.fs.Path(dir, "_CLAIM"), false).close()
+    Seq(("partial", 666.0)).toDF("product_id", "price").write.mode("append").parquet(dir.toString)
+    assert(marker("products", 1, "_SUCCESS") && !marker("products", 1, "_COMMITTED"))
+    assert(store.generations("products") == Seq(0))
+    assert(store.snapshot("products").get.select("price").as[Double].collect().toSeq
+      == Seq(1.0))
+    assert(store.snapshotAt("products", 1).isEmpty)
+    // the next upsert numbers past it; vacuum reclaims it once it sits
+    // below the newest committed generation
+    store.upsert("products", Seq(("a", 2.0)).toDF("product_id", "price"), Seq("product_id"))
+    assert(store.generations("products") == Seq(0, 2))
+    assert(store.snapshot("products").get.select("price").as[Double].collect().toSeq
+      == Seq(2.0))
+    assert(store.vacuum("products", keep = 2) == 1)
+    assert(!fs.exists(dir))
+    // the bucketed write registers its catalog table first and appends
+    // into it, so its generations carry both markers too
+    val bstore = new Store(spark, root, buckets = 4)
+    bstore.upsert("bucketed", Seq(("a", 1.0)).toDF("product_id", "price"), Seq("product_id"))
+    bstore.upsert("bucketed", Seq(("b", 2.0)).toDF("product_id", "price"), Seq("product_id"))
+    assert(marker("bucketed", 1, "_CLAIM") && marker("bucketed", 1, "_COMMITTED"))
+    assert(bstore.snapshot("bucketed").get.orderBy("product_id")
+      .select("product_id", "price").as[(String, Double)].collect().toSeq
+      == Seq(("a", 1.0), ("b", 2.0)))
+  }
+
+  test("a store tree in the pre-Generations layout reads as before and upserts past it") {
+    val root = Files.createTempDirectory("graft_legacy_layout").toString
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def path(name: String) = new org.apache.hadoop.fs.Path(s"$root/products/$name")
+    // the old format: committed generations hold only the committer's root
+    // _SUCCESS, each claimed by a sibling .claim_gen_N file; gen_000002 is
+    // a crashed upsert's partial (data, no _SUCCESS)
+    for ((price, g) <- Seq(1.0, 2.0, 666.0).zipWithIndex) {
+      Seq(("a", price)).toDF("product_id", "price").write.parquet(path(f"gen_$g%06d").toString)
+      fs.create(path(f".claim_gen_$g%06d"), false).close()
+    }
+    assert(fs.delete(path("gen_000002/_SUCCESS"), false))
+    val store = new Store(spark, root)
+    def prices(df: org.apache.spark.sql.DataFrame) = df.select("price").as[Double].collect().toSeq
+    assert(store.generations("products") == Seq(0, 1))
+    assert(prices(store.snapshot("products").get) == Seq(2.0))
+    assert(prices(store.snapshotAt("products", 0).get) == Seq(1.0))
+    assert(store.snapshotAt("products", 2).isEmpty)
+    // the partial is the newest dir — possibly a writer in flight — so
+    // vacuum leaves it, as it did before
+    assert(store.vacuum("products", keep = 2) == 0)
+    // the next upsert numbers past every legacy dir and commits the new way
+    store.upsert("products", Seq(("b", 3.0)).toDF("product_id", "price"), Seq("product_id"))
+    assert(store.generations("products") == Seq(0, 1, 3))
+    assert(fs.exists(path("gen_000003/_CLAIM")) && fs.exists(path("gen_000003/_COMMITTED")))
+    assert(!fs.exists(path(".claim_gen_000003")))
+    assert(store.snapshot("products").get.orderBy("product_id")
+      .select("product_id", "price").as[(String, Double)].collect().toSeq
+      == Seq(("a", 2.0), ("b", 3.0)))
+    // the partial now sits below the newest committed generation
+    assert(store.vacuum("products", keep = 1) == 3)
+    assert(store.generations("products") == Seq(3))
+    assert((0 to 2).forall(g => !fs.exists(path(f"gen_$g%06d"))))
+    // legacy claim files are ignored, not read and not reclaimed
+    assert(fs.exists(path(".claim_gen_000000")))
+  }
+
   test("store works against an explicit file: URI (Hadoop FS read path)") {
     val root = "file:" + Files.createTempDirectory("graft_uri").toString
     val store = new Store(spark, root)
