@@ -23,9 +23,11 @@ import graft.store.Partitions
   *    shingles(tokens(text)) would re-tokenize the document once per
   *    shingle (measured 25×). Deeply nested HOF trees under a Generate are
   *    also super-linear in OPTIMIZER time — both forbidden shapes here.
-  *  - the only shuffles are a narrow repartition that spreads sketch work
-  *    across the cluster and the band-key join, whose fan-out is
-  *    controlled by (numHashes, bands). Never O(n²).
+  *  - the sketch path's shuffles are the hash-by-id repartition of the
+  *    token rows and the band-key join, whose fan-out is controlled by
+  *    (numHashes, bands). Never O(n²). Shingle sets are one map-side
+  *    array per document, and the Jaccard verify meets each candidate
+  *    pair's two sets by id.
   *  - n-gram Jaccard joins the inverted index with a length filter in the
   *    join condition so size-incompatible pairs never reach the aggregate.
   *  - embedding near-dup goes through sign-LSH buckets first.
@@ -147,13 +149,14 @@ object Dedup {
   }
 
   /** One (id, __toks) row per document, hash-partitioned by id — the shared
-    * TOKENIZE pass both sketch relations derive from. The repartition
-    * spreads the normalize+tokenize work across the cluster even when the
-    * source has few splits (a 1-file local table would otherwise tokenize
-    * on one core); at real scale the input has thousands of splits and the
-    * shuffle of raw (id, text) rows is still one linear narrow pass.
-    * Downstream groupBys/distincts on `id` reuse the partitioning.
-    * Callers that need both sketch relations stage this frame once through
+    * TOKENIZE pass both sketch relations derive from. The repartition does
+    * NOT spread the tokenize work: tokenize is a projection below the
+    * exchange, so it runs map-side, one task per input split, and AQE
+    * coalesces a small batch's post-shuffle partitions (measured on a
+    * 1,200-document batch, 4 cores: 4 map tasks, then 1 post-shuffle task
+    * and a 1-task signature job). What the exchange buys is the hash-by-id
+    * layout downstream id-keyed joins and aggregates reuse. Callers that
+    * need both sketch relations stage this frame once through
     * [[sketchesOf]]. */
   private[graft] def tokenRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
@@ -161,7 +164,7 @@ object Dedup {
 
   /** The two sketch relations of one document set under one
     * (shingleN, numHashes, bands) sketch: the (id, bandkey) banding that
-    * candidate generation joins on, and the (id, s) shingles that the
+    * candidate generation joins on, and the (id, s) shingle sets that the
     * Jaccard verify and the index append read. Built by [[sketchesOf]];
     * a value handed to [[minhashDedupPairs]], [[appendToMinhashIndex]] or
     * [[ingestCycle]] must cover the same rows as that call's documents,
@@ -182,8 +185,7 @@ object Dedup {
     * checkpoint ([[bandKeysFromTokens]], [[shinglesFromTokenRows]]).
     * Tokenization is the sketch path's dominant per-document cost, so one
     * tokenize+shuffle pass feeds both relations and every consumer
-    * (guide §2.3/§2.4). The derivations are narrow map-side work (the
-    * shingle distinct reuses the token frame's hash-by-id partitioning),
+    * (guide §2.3/§2.4). The derivations are narrow map-side projections,
     * so a caller that reads the relations more than once materializes
     * them with [[Sketches.staged]]; one that reads each once (an append's
     * write) keeps them lazy. The checkpoint is eager and registers with
@@ -196,34 +198,50 @@ object Dedup {
       shinglesFromTokenRows(toks, shingleN))
   }
 
-  /** One row per (id, shingle), DISTINCT per doc: the working relation for
-    * MinHash/Jaccard. Per-doc dedup happens at the RELATION level
-    * (explode raw n-grams, then `.distinct()`) — `array_distinct` inside
-    * the projection is O(T²) string comparisons per document and measured
-    * 3× slower than the exploded hash-dedup at sf0.1.
+  /** One row per document, (id, s: array<bigint>): the document's shingle
+    * SET, the working relation for the Jaccard verify. `s` holds the
+    * DISTINCT xxhash64 fingerprints of its word n-grams (guide §2.3 —
+    * narrower types: every consumer compares shingles for EQUALITY only,
+    * so an 8-byte long does the job of a multi-tens-of-bytes n-gram string
+    * in the persisted index and the verify — the standard
+    * shingle-fingerprint trade: a 64-bit collision inside one verified
+    * pair's shingle union is the only way a result could move, and every
+    * oracle run re-proves the corpus collision-free. The MinHash SIGNATURE
+    * path is untouched — its md5-over-string hash family is
+    * oracle-pinned.) A null text has a null set; an empty text, or one
+    * shorter than `shingleN`, has the one n-gram of its whole token run.
     *
-    * `s` is the shingle's xxhash64, NOT the string (guide §2.3 — narrower
-    * types: every consumer compares shingles for EQUALITY only, so an
-    * 8-byte long does the same job as a multi-tens-of-bytes n-gram string
-    * through the distinct, the persisted index's shingles relation, and
-    * the verify joins' shuffles — the standard shingle-fingerprint trade:
-    * a 64-bit collision inside one verified pair's shingle union is the
-    * only way a result could move, and every oracle run re-proves the
-    * corpus collision-free. The MinHash SIGNATURE path is untouched — its
-    * md5-over-string hash family is oracle-pinned.) */
+    * The set is one map-side projection of the token array: no explode
+    * and no (id, s) distinct shuffle (the row-per-shingle relation needed
+    * both). The dedup runs over the 8-byte hashes, one hash-set pass per
+    * document, not over the n-gram strings. A committed document's set
+    * never changes, so the persisted index stores it in exactly the form
+    * [[verifyJaccard]] reads. */
   private[graft] def shingleRows(docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
     shinglesFromTokenRows(tokenRows(docs, idCol, textCol), shingleN)
 
   /** [[shingleRows]] over a [[tokenRows]] relation — same expressions, so
     * [[sketchesOf]]' checkpointed token frame yields the identical rows
-    * without re-tokenizing. The distinct's (id, s) grouping is satisfied by
-    * the token frame's hash-by-id partitioning (a subset of the keys), so
-    * deriving from a checkpoint adds no shuffle. */
+    * without re-tokenizing. The n-grams are staged as the HOF's argument,
+    * not inside its lambda (the lambda only hashes). */
   private[graft] def shinglesFromTokenRows(toks: DataFrame, shingleN: Int): DataFrame =
-    toks
-      .select(col("id"), explode(rawNgrams(col("__toks"), shingleN)).as("__sraw"))
-      .select(col("id"), xxhash64(col("__sraw")).as("s"))
-      .distinct()
+    toks.select(col("id"),
+      array_distinct(transform(rawNgrams(col("__toks"), shingleN), xxhash64(_))).as("s"))
+
+  /** A generation's shingles relation as one (id, s: array<bigint>) row per
+    * document. Generations written before the set layout hold one
+    * (id, s: bigint) row per shingle — the relation's own footer schema
+    * ([[Partitions.read]]) says which — and are grouped into sets here.
+    * [[appendToMinhashIndex]] and [[compactMinhashIndex]] rewrite such a
+    * generation in the set layout before anything is added to it, so no
+    * generation ever holds both. */
+  private def shingleSets(raw: DataFrame): DataFrame =
+    if (rowPerShingle(raw)) raw.groupBy("id").agg(collect_list(col("s")).as("s"))
+    else raw
+
+  /** True for the pre-set layout, one (id, s: bigint) row per shingle. */
+  private def rowPerShingle(raw: DataFrame): Boolean =
+    raw.schema("s").dataType == org.apache.spark.sql.types.LongType
 
   /** One row per (id, bandkey): the LSH banding relation. The signature is
     * the native [[graft.expressions.MinHashSignatureExpr]] — one codegen'd
@@ -294,16 +312,21 @@ object Dedup {
         "— more rows per band = more selective keys, at some recall cost)")
 
   /** Verified near-dup pairs: LSH candidates filtered by true shingle-set
-    * Jaccard ≥ threshold. Intersections are counted with an equi-join on the
-    * exploded shingle relation (|candidates| × shared-shingles work), never
-    * by re-materializing per-doc arrays.
+    * Jaccard ≥ threshold. Each candidate pair meets its two stored shingle
+    * sets by id and scores their intersection in one expression
+    * ([[verifyJaccard]]): |candidates| × set-size work, with no exploded
+    * per-shingle relation and no shingle-keyed shuffle. (An earlier form
+    * counted intersections with an equi-join on exploded (id, s) rows so
+    * as never to re-materialize per-document arrays; stored as one set row
+    * per document, the arrays are built once, map-side, and the verify
+    * reads them as stored — docs/SCALE.md "Measured scaling".)
     *
     * `sketches`: the docs' [[Sketches.staged]] relations, when the caller
     * already has them (the curation stage shares them with the
     * cross-stream ingest cycle); otherwise they are staged here. Both are
     * read more than once — the self-join and guard read the banding, the
-    * verify join reads the shingles three times (sizes, id_a side, id_b
-    * side) — so they must be checkpoint-backed. */
+    * verify reads the shingle sets on both sides of the pair — so they
+    * must be checkpoint-backed. */
   def minhashDedupPairs(
       docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4,
@@ -312,12 +335,13 @@ object Dedup {
     val sk = sketches.getOrElse(
       sketchesOf(docs, idCol, textCol, shingleN, numHashes, bands).staged)
     verifyJaccard(candidatesFromBands(sk.bands, numHashes, bands, maxCandidatePairs),
-      sk.shingles, threshold)
+      sk.shingles, sk.shingles, threshold)
   }
 
   /** A reusable MinHash corpus index: the banding relation (id, bandkey)
-    * for candidate generation and the exploded shingle relation (id, s) for
-    * exact-Jaccard verification. At corpus scale both are computed ONCE per
+    * for candidate generation and the shingle-set relation (id, s) for
+    * exact-Jaccard verification ([[shingleRows]]). At corpus scale both
+    * are computed ONCE per
     * corpus generation and persisted ([[writeMinhashIndex]]); every incoming
     * batch then dedups against the index ([[dedupAgainstIndex]]) without
     * ever re-reading, re-tokenizing, or re-sketching the corpus — the
@@ -548,7 +572,8 @@ object Dedup {
     val gen = graft.store.Generations.requireCommitted(spark, path)
     val ts = graft.store.Tombstones.of(spark, gen.toString)
     val bands = graft.store.Tombstones.minus(bandsOf(spark, gen.toString), ts, "id")
-    val shingles = graft.store.Tombstones.minus(Partitions.read(spark, s"$gen/shingles"), ts, "id")
+    val shingles = shingleSets(
+      graft.store.Tombstones.minus(Partitions.read(spark, s"$gen/shingles"), ts, "id"))
     val sketch = genSketch(spark, gen.toString)
     // bands-row upper bound from the id manifest's parquet FOOTERS (docs ×
     // bands-per-doc): driver-side metadata, no Spark job — but only while
@@ -725,9 +750,13 @@ object Dedup {
       idsFrom: Option[DataFrame] = None, docsHint: Long = -1L,
       sketches: Option[Sketches] = None): Unit = {
     val spark = batch.sparkSession
-    val gen0 = graft.store.Generations.requireCommitted(spark, path)
-    requireSketch(genSketch(spark, gen0.toString), shingleN, numHashes, bands,
+    val cur = graft.store.Generations.requireCommitted(spark, path)
+    requireSketch(genSketch(spark, cur.toString), shingleN, numHashes, bands,
       "appendToMinhashIndex")
+    // set rows never land beside row-per-shingle rows: an old-layout
+    // generation is rewritten in the set layout first ([[shingleSets]])
+    if (rowPerShingle(Partitions.read(spark, s"$cur/shingles"))) compactMinhashIndex(spark, path)
+    val gen0 = graft.store.Generations.requireCommitted(spark, path)
     // .distinct() on idsFrom too: callers pass verdict rows (one per batch
     // row by contract), but a batch that violates ids-uniqueness would
     // otherwise write duplicate manifest entries that inflate every future
@@ -795,8 +824,8 @@ object Dedup {
     * Scale shape: the batch is assumed ≪ corpus, so the batch's banding
     * relation BROADCASTS against the corpus index — candidate generation is
     * a map-side probe of the index scan, no shuffle of corpus data; the
-    * verify join then touches only candidate documents' shingles
-    * ([[verifyJaccard]] semi-joins the shingle relation down first). Cost
+    * verify join then touches only candidate documents' shingle sets (the
+    * index's sets are semi-joined down to the candidate ids first). Cost
     * per ingest is ∝ batch size + candidate fan-out, independent of corpus
     * size beyond the one linear index scan. */
   def dedupAgainstIndex(
@@ -887,10 +916,15 @@ object Dedup {
   private def verdictsFromCandidates(
       batch: DataFrame, cands: DataFrame, idx: MinhashIndex,
       idCol: String, threshold: Double, batchSh: DataFrame): DataFrame = {
-    // ids are disjoint by contract, so one unioned shingle relation serves
-    // both sides of the verify join
-    val sh = batchSh.unionByName(idx.shingles)
-    val verified = verifyJaccard(cands, sh, threshold)
+    // a candidate pair is (batch id, index id), so each side's sets come
+    // from its own relation. The batch is small by contract: its sets
+    // broadcast, as its bands did for the candidate join. The index's sets
+    // are semi-joined down to the candidate ids first — the id list
+    // broadcasts, so the corpus-scale scan is filtered map-side and never
+    // shuffled, and only candidate documents' sets reach the pair join
+    val idxSets = idx.shingles.join(
+      broadcast(cands.select(col("id_b").as("id"))), Seq("id"), "left_semi")
+    val verified = verifyJaccard(cands, broadcast(batchSh), idxSets, threshold)
     val w = Window.partitionBy(col("id_a")).orderBy(col("jaccard").desc, col("id_b").asc)
     val best = verified.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .select(col("id_a").as("id"), col("id_b").as("dup_of"), col("jaccard"))
@@ -946,21 +980,21 @@ object Dedup {
         sketchesOf(batch, idCol, textCol, shingleN, numHashes, bands))
       graft.Phase(spark, "ingest.batchSketch")(unstaged.staged)
     }
+    // the ledger's counts ride on the checkpoints that materialize the
+    // frames anyway (`observe`: the localCheckpoint action completes the
+    // Observation), so no count job re-reads them
+    val candObs, verdictObs = new org.apache.spark.sql.Observation()
     val cands = graft.Phase(spark, "ingest.bandCandidates")(
       bandCandidatesFrom(sk.bands, idx, maxCandidatePairs)
+      .observe(candObs, count(lit(1)).as("n"))
       .scratchCheckpoint())
     val verdicts = graft.Phase(spark, "ingest.verdicts")(
       Scratch.checkpointEscaping(verdictsFromCandidates(
-        batch, cands, idx, idCol, threshold, sk.shingles)))
-    // two independent driver actions over already-checkpointed frames —
-    // run them concurrently (guide §2.6); each is fixed-overhead-bound
-    @volatile var aggRow: org.apache.spark.sql.Row = null
-    @volatile var candidatePairs = 0L
-    graft.Phase(spark, "ingest.agg")(graft.Par.run(
-      () => aggRow = verdicts.agg(
-        count(lit(1)).as("n"), count(when(col("is_dup"), 1)).as("d")).head,
-      () => candidatePairs = cands.count()))
-    val (total, dups) = (aggRow.getLong(0), aggRow.getLong(1))
+        batch, cands, idx, idCol, threshold, sk.shingles)
+        .observe(verdictObs, count(lit(1)).as("n"), count(when(col("is_dup"), 1)).as("d"))))
+    val candidatePairs = candObs.get("n").asInstanceOf[Long]
+    val (total, dups) = (verdictObs.get("n").asInstanceOf[Long],
+      verdictObs.get("d").asInstanceOf[Long])
     val survivorIds = verdicts.filter(!col("is_dup")).select(col("id"))
     val survivors = batch.join(
       survivorIds.select(col("id").as(idCol)), Seq(idCol), "left_semi")
@@ -998,8 +1032,10 @@ object Dedup {
     * id+string rows, a fraction of corpus text size); trigger it from
     * [[IngestStats]] file counts, not per batch. Result-identical — q73
     * oracle-gates an ingest run with a compaction after each append;
-    * CompactSpec asserts rows and the file-count drop. Returns 1 if a new
-    * generation was written, 0 if the index was under the threshold. */
+    * CompactSpec asserts rows and the file-count drop. Live tombstones and
+    * the row-per-shingle shingles layout ([[shingleSets]]) force the
+    * rewrite whatever the file counts. Returns 1 if a new generation was
+    * written, 0 if the index was under the threshold. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 0, minFiles: Int = 1, keep: Int = 2,
       maxFileBytes: Long = graft.store.Compact.DefaultMaxFileBytes,
@@ -1049,10 +1085,13 @@ object Dedup {
     // "the next compaction drops deleted rows physically" is the deletion
     // tier's contract, and the filtered read below is what enforces it
     val hasTombstones = graft.store.Tombstones.of(spark, gen.toString).isDefined
+    // so does the row-per-shingle layout: the rewrite reads it as sets
+    // ([[shingleSets]]), so the next generation is in the set layout
+    val oldLayout = rowPerShingle(Partitions.read(spark, s"$gen/shingles"))
     // the no-op comparison uses the RECORDED count (`targetBuckets == 0`
     // keeps the layout "as is" for trigger purposes): only an explicit
     // migration target forces a rewrite by itself
-    if (!hasTombstones && (targetBuckets == 0 || targetBuckets == curBuckets) &&
+    if (!hasTombstones && !oldLayout && (targetBuckets == 0 || targetBuckets == curBuckets) &&
         bandsFiles <= math.max(minFiles, filesPerBucket) &&
         shinglesFiles <= math.max(minFiles, shinglesTarget)) 0
     else {
@@ -1090,35 +1129,37 @@ object Dedup {
       idCol, textCol, threshold, shingleN, numHashes, bands, maxCandidatePairs)
   }
 
-  /** Join candidate (id_a,id_b) pairs against the exploded shingle relation,
-    * count intersections, attach set sizes, filter on 6-dp-rounded Jaccard.
+  /** Score candidate (id_a, id_b) pairs by the Jaccard of their stored
+    * shingle sets — `id_a`'s from `shA`, `id_b`'s from `shB` — and keep
+    * those at or above `threshold` (6-dp rounded).
     *
-    * The shingle relation is first SEMI-JOINED down to documents that appear
-    * in a candidate pair: at corpus scale candidates are a tiny fraction of
-    * documents, so the two intersection joins and the size aggregate run
-    * over candidate shingles only — verify cost is ∝ candidate docs, not
-    * corpus size (measured 59.7 → 32-39 s at 320 k docs, docs/SCALE.md
-    * "Measured scaling"). */
-  private def verifyJaccard(cands: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
-    // no .distinct() on the id union: its only consumer is the left-semi
-    // join, which dedups by construction — the distinct added a shuffle of
-    // the candidate ids to every verify pass for nothing (guide §2.4: a
-    // distinct on data whose consumer doesn't need it)
-    val candIds = cands.select(col("id_a").as("id"))
-      .unionByName(cands.select(col("id_b").as("id")))
-    val shc = sh.join(candIds, Seq("id"), "left_semi").scratchCheckpoint()
-    val sizes = shc.groupBy("id").agg(count(lit(1)).as("n"))
-    val inter = cands
-      .join(shc.select(col("id").as("id_a"), col("s")), Seq("id_a"))
-      .join(shc.select(col("id").as("id_b"), col("s")), Seq("id_b", "s"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
+    * Verify by id: each pair joins its two sets on `id_a` and `id_b`, and
+    * one codegen'd `array_intersect` counts the overlap; the inner joins
+    * keep only candidate documents' sets. The exploded form this replaces
+    * semi-joined a row-per-shingle relation down to the candidates,
+    * checkpointed it, and needed a per-id sizes aggregate, an (id_b, s)
+    * join, an intersection groupBy and two joins back to the sizes. A
+    * 1,200-document ingest cycle's verify fell from 14 jobs / 0.83 s to
+    * 7 / 0.2 s, and [[minhashDedupPairs]] over 320 k documents (4 cores)
+    * from 64–67 s to 32 s (docs/SCALE.md "Measured scaling").
+    *
+    * A pair is kept only when its sets share a shingle (`inter >= 1`),
+    * the only pairs the join-based count could ever emit. The guard also
+    * keeps null sets (null text) out: two such documents share every
+    * MinHash band key, and their score would otherwise be null or, where
+    * `size(null)` is −1 (ANSI mode off), a spurious 1.0. */
+  private def verifyJaccard(cands: DataFrame, shA: DataFrame, shB: DataFrame,
+      threshold: Double): DataFrame =
+    cands
+      .join(shA.select(col("id").as("id_a"), col("s").as("sa")), Seq("id_a"))
+      .join(shB.select(col("id").as("id_b"), col("s").as("sb")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sa"), col("sb"))).as("inter"),
+        size(col("sa")).as("n_a"), size(col("sb")).as("n_b"))
+      .filter(col("inter") >= 1)
       .withColumn("jaccard", jaccard6(col("inter"), col("n_a"), col("n_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
 
   /** Jaccard from an intersection count and the two set sizes, rounded to
     * 6 dp: every `>= threshold` decision compares this score, so boundary

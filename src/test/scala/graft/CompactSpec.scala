@@ -295,9 +295,10 @@ class CompactSpec extends SparkSpec {
     // the re-added id is live again with NO stale duplicates (duplicate
     // shingle rows would corrupt every Jaccard the id participates in)
     val rawSh = spark.read.parquet(s"$gen1/shingles").filter(col("id") === back)
-    assert(rawSh.count() === rawSh.select("s").distinct().count(),
-      "stale shingle rows survived the re-ingest purge")
-    assert(rawSh.count() > 0)
+      .select(col("s")).as[Seq[Long]].collect()
+    assert(rawSh.length === 1, "stale shingle rows survived the re-ingest purge")
+    assert(rawSh.head.nonEmpty && rawSh.head.distinct.size === rawSh.head.size,
+      "the re-added shingle set must be non-empty and distinct")
     val rawBands = spark.read.parquet(s"$gen1/bands").filter(col("id") === back)
     assert(rawBands.count() === rawBands.select("bandkey").distinct().count())
     assert(spark.read.parquet(s"$gen1/ids").filter(col("id") === back).count() === 1)

@@ -414,6 +414,33 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("shingleRows: the persisted xxhash64 shingle sets match the checked-in golden") {
+    // the fingerprints ARE the persisted index's shingles relation, and an
+    // index written earlier is verified against a new batch's sets: a
+    // drift in the tokenizer, the n-gram join or the hash seed would make
+    // every stored set disjoint from every new one. The golden was recorded
+    // from the row-per-shingle layout's (id, s) rows, grouped by id, so it
+    // also pins that the set layout holds exactly those fingerprints
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "an entirely unrelated corpus document about spark physical plans"),
+      (3L, "Ünïcode  tokens, punctuation! and MIXED case words here")).toDF("doc_id", "text")
+    val sets = Dedup.shingleRows(docs, "doc_id", "text", 3).as[(Long, Seq[Long])].collect()
+    assert(sets.forall { case (_, s) => s.distinct.size == s.size },
+      "a stored shingle set repeats a fingerprint")
+    val got = sets.sortBy(_._1)
+      .map { case (id, s) => s"$id:" + s.sorted.mkString(",") }.mkString("\n")
+    if (sys.props.get("graft.test.writeGolden").contains("1")) {
+      GoldenResource.write("/minhash_shingles_golden.txt",
+        "src/test/resources/minhash_shingles_golden.txt", got + "\n")
+      info("golden regenerated (source tree + test classpath)")
+    } else {
+      assert(got === GoldenResource.read("/minhash_shingles_golden.txt"),
+        "shingle fingerprints diverged from the checked-in golden: every " +
+          "persisted index written before this change would stop matching")
+    }
+  }
+
   test("dedupAgainstCorpus flags batch near-dups of the corpus, passes fresh docs") {
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),

@@ -1309,7 +1309,10 @@ class StreamsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$gen1/ids")
       .filter(col("id").isin(deleted: _*)).count() === 5L)
     val sh = spark.read.parquet(s"$gen1/shingles").filter(col("id").isin(deleted: _*))
-    assert(sh.count() === sh.distinct().count())
+      .select(col("id"), col("s")).as[(Long, Seq[Long])].collect()
+    assert(sh.map(_._1).sorted.toSeq === deleted.sorted,
+      "exactly one shingle-set row per re-ingested id")
+    assert(sh.forall { case (_, s) => s.distinct.size == s.size })
   }
 
   test("annIngestSink: a takedown'd vector re-streamed through the sink heals the index") {
