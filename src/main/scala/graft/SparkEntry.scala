@@ -532,8 +532,8 @@ object SparkEntry {
     }),
 
     // --- all-pairs n-gram Jaccard via inverted-index join --------------------
-    //     (the auto dense-vs-inverted route probe stays: r18 measured the
-    //     forceInverted bypass at ×2.46 SLOWER here — this corpus's 2-gram
+    //     (the auto dense-vs-inverted route probe is the only route: r18
+    //     measured a probe bypass at ×2.46 SLOWER here — this corpus's 2-gram
     //     vocabulary fits the dense bitmap route, and the probe's one
     //     vocabulary shuffle is far cheaper than losing it) -----------------
     "q26_ngram_jaccard" -> ((s, dir) => {

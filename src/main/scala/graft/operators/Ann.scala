@@ -493,8 +493,7 @@ object Ann {
     * compaction that must not pause probes, use [[compactIvfOnline]].
     * Result-identical (q74 probes a compacted layout; CompactSpec asserts
     * rows and file counts). Returns the number of list dirs rewritten. */
-  def compactIvf(spark: SparkSession, path: String,
-      targetFiles: Int = 0, minFiles: Int = 1): Int =
+  def compactIvf(spark: SparkSession, path: String): Int =
     latestIvfGen(spark, path) match {
       case None => 0
       case Some(gen) =>
@@ -503,10 +502,9 @@ object Ann {
         // so the two passes overlap (guide §2.6).
         var rewritten = 0
         graft.Par.run(
-          () => graft.store.Compact.leafDir(spark, new Path(gen, "ids").toString,
-            targetFiles, minFiles),
+          () => graft.store.Compact.leafDir(spark, new Path(gen, "ids").toString),
           () => rewritten = graft.store.Compact.partitionedDir(
-            spark, new Path(gen, "assigned").toString, "list", targetFiles, minFiles))
+            spark, new Path(gen, "assigned").toString, "list"))
         rewritten
     }
 
@@ -535,7 +533,7 @@ object Ann {
     val assigned = new Path(gen0, "assigned")
     val bytes = Partitions.fs(spark, assigned).getContentSummary(assigned).getLength
     val perList = bytes / math.max(1, idx.centroids.length)
-    val filesPerList = math.max(1L, (perList + maxFileBytes - 1) / maxFileBytes).toInt
+    val filesPerList = graft.store.Compact.resolveTarget(perList, maxFileBytes)
     val idCol = col(idx.assigned.columns.head)
     val re =
       if (filesPerList == 1) idx.assigned.repartition(col("list"))
@@ -543,7 +541,7 @@ object Ann {
     // the id set is unchanged by compaction — carry the manifest over,
     // coalesced from its accumulated append files to a byte-sized target
     // (coalesce(1) would cap the rewrite at one task at corpus scale)
-    val idsTarget = graft.store.Compact.resolveTarget(0,
+    val idsTarget = graft.store.Compact.resolveTarget(
       graft.store.Compact.dataSizeBytes(spark, new Path(gen0, "ids").toString), maxFileBytes)
     val gen = writeIvf(IvfIndex(re, idx.centroids), path,
       idsFrom = Some(ivfIds(spark, path).coalesce(idsTarget)))

@@ -1036,8 +1036,7 @@ object Dedup {
     * the row-per-shingle shingles layout ([[shingleSets]]) force the
     * rewrite whatever the file counts. Returns 1 if a new generation was
     * written, 0 if the index was under the threshold. */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFiles: Int = 0, minFiles: Int = 1, keep: Int = 2,
+  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession, path: String, keep: Int = 2,
       maxFileBytes: Long = graft.store.Compact.DefaultMaxFileBytes,
       targetBuckets: Int = 0): Int = graft.Phase(spark, "index.compact") {
     import graft.store.Compact
@@ -1049,10 +1048,10 @@ object Dedup {
     // swap as a plain compaction; the new generation records its count and
     // every probe/append follows it. 0 keeps the recorded count.
     val curBuckets = genBandBuckets(spark, gen.toString)
-    // targetFiles = 0 auto-sizes per relation from its byte size (files come
+    // each relation sizes from its bytes by Compact's one rule (files come
     // out ≈ maxFileBytes and the write keeps one task per output file — a
     // fixed small target would cap the whole rewrite stage's parallelism,
-    // see Compact's scaladoc). Bands auto-size is PER BUCKET: the layout's
+    // see Compact's scaladoc). Bands sizing is PER BUCKET: the layout's
     // bytes spread over the TARGET count's dirs, and writeMinhashIndex
     // salts the bucket shuffle when one bucket's share exceeds a healthy
     // file.
@@ -1074,13 +1073,11 @@ object Dedup {
     // the explicit `targetBuckets` migration path). The no-op trigger
     // below deliberately ignores the auto count: an under-threshold index
     // is never rewritten JUST to shrink its bucket count.
-    val autoBuckets = math.max(1, math.min(curBuckets,
-      ((bandsBytes + maxFileBytes - 1) / maxFileBytes).toInt))
+    val autoBuckets = math.min(curBuckets, Compact.resolveTarget(bandsBytes, maxFileBytes))
     val newBuckets = if (targetBuckets > 0) targetBuckets else autoBuckets
-    val filesPerBucket = Compact.resolveTarget(
-      targetFiles, bandsBytes / newBuckets, maxFileBytes)
+    val filesPerBucket = Compact.resolveTarget(bandsBytes / newBuckets, maxFileBytes)
     val shinglesTarget = Compact.resolveTarget(
-      targetFiles, Compact.dataSizeBytes(spark, s"$gen/shingles"), maxFileBytes)
+      Compact.dataSizeBytes(spark, s"$gen/shingles"), maxFileBytes)
     // pending tombstones force the rewrite regardless of file thresholds:
     // "the next compaction drops deleted rows physically" is the deletion
     // tier's contract, and the filtered read below is what enforces it
@@ -1092,15 +1089,14 @@ object Dedup {
     // keeps the layout "as is" for trigger purposes): only an explicit
     // migration target forces a rewrite by itself
     if (!hasTombstones && !oldLayout && (targetBuckets == 0 || targetBuckets == curBuckets) &&
-        bandsFiles <= math.max(minFiles, filesPerBucket) &&
-        shinglesFiles <= math.max(minFiles, shinglesTarget)) 0
+        bandsFiles <= filesPerBucket && shinglesFiles <= shinglesTarget) 0
     else {
       val idx = readMinhashIndex(spark, path)
       // compaction never changes the id set — carry the manifest over
       // (coalesced from its accumulated append files) instead of paying a
       // fresh distinct over the whole bands relation
       val idsTarget = Compact.resolveTarget(
-        targetFiles, Compact.dataSizeBytes(spark, s"$gen/ids"), maxFileBytes)
+        Compact.dataSizeBytes(spark, s"$gen/ids"), maxFileBytes)
       writeMinhashIndex(MinhashIndex(
         idx.bands, idx.shingles.coalesce(shinglesTarget), newBuckets), path, filesPerBucket,
         idsFrom = Some(minhashIndexIds(spark, path).coalesce(idsTarget)),
@@ -1183,23 +1179,16 @@ object Dedup {
     * make everything collide anyway (measured: prefix filtering left 7.9M of
     * 12.5M possible pairs on the synthetic corpus while doubling the joins).
     *
-    * `forceInverted`: the ROUTE BYPASS for corpus-scale callers. The
-    * dense-vs-inverted route is decided by a vocabulary probe —
-    * `distinct().limit(bits+1)` over the shingle relation — which, despite
-    * collecting at most bits+1 strings, still SHUFFLES the whole shingle
-    * vocabulary before the limit applies (LIMIT needs the distinct's
-    * exchange underneath it). At audit scale (this operator's contract,
-    * docs/SCALE.md) that probe is noise; a corpus-scale caller would pay
-    * one vocabulary-wide shuffle for a routing decision that is always
-    * "inverted" above ~10⁵ documents. Pass `forceInverted = true` when the
-    * vocabulary is known to exceed `denseVocabBits` and the probe (and the
-    * dense path) are skipped entirely — result-identical, the two paths
-    * compute the same pairs (the probe's cost disappearing is measured in
-    * docs/SCALE.md "q26 all-pairs n-gram Jaccard"). */
+    * The dense-vs-inverted route is decided by a vocabulary probe —
+    * `distinct().limit(bits+1)` over the shingle relation — which shuffles
+    * the whole shingle vocabulary before the limit applies. At audit scale
+    * (this operator's contract, docs/SCALE.md) that is noise; corpus-scale
+    * near-dup work routes to [[minhashDedupPairs]]. `denseVocabBits = 0`
+    * routes every non-empty corpus inverted. */
   def ngramJaccardPairs(
       docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double,
-      denseVocabBits: Int = DenseVocabBits, forceInverted: Boolean = false,
+      denseVocabBits: Int = DenseVocabBits,
       maxCandidatePairs: Long = DefaultMaxCandidatePairs): DataFrame = {
     // ONE corpus scan materializes the exploded shingle relation — RAW
     // (id, shingle) rows, duplicates included: the dense path's bit_or is
@@ -1216,8 +1205,6 @@ object Dedup {
       .select(col("id"), explode(rawNgrams(col("__toks"), shingleN)).as("__sraw"))
       .select(col("id"), xxhash64(col("__sraw")).as("s"))
       .scratchCheckpoint()
-    if (forceInverted)
-      return ngramJaccardInverted(sh.distinct(), threshold, maxCandidatePairs)
     // Size probe AND dense vocab in one pass: distinct().limit(bits + 1)
     // stops the limit at denseVocabBits + 1 rows, so a big vocabulary
     // collects at most bits+1 hashes (route decision), a small one
@@ -1272,8 +1259,8 @@ object Dedup {
       maxCandidatePairs: Long): DataFrame = {
     val sh = sh0.scratchCheckpoint()
     guardSelfJoinFanout(sh, "s", maxCandidatePairs, "ngramJaccardPairs(inverted)",
-      "raise shingleN (bigger n ⇒ rarer shingles; forceInverted does not " +
-        "change the fan-out), drop boilerplate documents first, or run " +
+      "raise shingleN (bigger n ⇒ rarer shingles), drop boilerplate " +
+        "documents first, or run " +
         "exactDedup — a shingle shared by every same-length document emits " +
         "nC2 rows from one key")
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))

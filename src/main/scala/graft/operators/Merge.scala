@@ -21,14 +21,15 @@ object Merge {
     *
     * Keys are PRIMARY keys and must be non-null (they are NOT NULL in the
     * reference schema; F1 validation drops null-id rows upstream). The join
-    * uses plain equality, NOT `<=>`: Catalyst rewrites null-safe keys into
-    * coalesce/isnull expression pairs whose hash never matches a bucketed
-    * layout, which would force the snapshot side to re-shuffle and defeat
-    * [[graft.store.Store]]'s bucketed generations.
+    * uses plain equality, NOT `<=>`: with non-null keys it is exact, and
+    * Catalyst would rewrite each null-safe key into a coalesce/isnull
+    * expression pair — two hashed join keys where one suffices.
     *
-    * Scale: one shuffle on `keys` for the batch side only when the snapshot
-    * is bucketed (Store with buckets > 0); both sides otherwise. AQE
-    * handles skew. No driver-side state.
+    * Scale: one key-partitioned shuffle of snapshot ∪ batch — both sides
+    * hash on `keys`. [[graft.store.Store]] writes every generation as plain
+    * parquet read by path, so no layout metadata lets either side skip it
+    * (a catalog-held bucketed layout would not outlive the session that
+    * wrote it). AQE handles skew. No driver-side state.
     */
   def upsertMerge(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String]): DataFrame = {
     val valueCols = newDf.columns.filterNot(keys.contains)

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Maintenance compaction for the engine's append-only parquet trees.
@@ -21,8 +21,12 @@ import org.apache.spark.sql.SparkSession
   * dirs are invisible to Spark/Hadoop input listing, so a concurrent reader
   * of the parent never sees it), then dir → `.compact_old_<name>`,
   * tmp → dir, delete old. Each FileSystem boolean is checked and fails
-  * loudly; a crash between the two renames leaves `.compact_old_<name>`
-  * intact for manual recovery, never a half-written live dir.
+  * loudly. Every compaction of a dir first settles what an interrupted
+  * one left ([[recover]]): an `old` beside a `tmp` means the swap stopped
+  * between its renames, so `old` holds the dir's only copy and goes back
+  * (merged into the dir if appends recreated it); a lone `tmp` or a lone
+  * `old` is a redundant copy and is deleted. [[partitionedDir]] also
+  * finds a partition whose only copy sits in its `old` sibling.
   *
   * Concurrency contract: directory renames can't be paired atomically, so
   * a reader that LISTS during the instant between the two renames can see
@@ -43,14 +47,14 @@ import org.apache.spark.sql.SparkSession
   * trigger signal), not per batch. The rewrite is `coalesce`, not
   * `repartition`: no shuffle, just fewer output files.
   *
-  * File-count sizing: `targetFiles = 0` (the default) auto-sizes to
-  * `ceil(dirBytes / maxFileBytes)` — compacted files come out ≈ 128 MB and
-  * the rewrite keeps one task per output file, so its parallelism grows
-  * with the data. This matters at scale: a FIXED small target (the
-  * tempting `1`) would funnel an arbitrarily large directory through that
-  * many tasks, because `coalesce(n)` caps the whole stage — scan included
-  * — at n tasks. At test scale the auto target resolves to 1 and behaves
-  * exactly like the fixed default did.
+  * File-count sizing, the one rule every compaction uses
+  * ([[resolveTarget]]): `ceil(dirBytes / maxFileBytes)` files, and a dir
+  * already at or under that count is skipped. Compacted files come out
+  * ≈ 128 MB and the rewrite keeps one task per output file, so its
+  * parallelism grows with the data. A FIXED small target (the tempting
+  * `1`) would funnel an arbitrarily large directory through that many
+  * tasks, because `coalesce(n)` caps the whole stage — scan included — at
+  * n tasks. At test scale the target resolves to 1.
   */
 object Compact {
 
@@ -118,36 +122,52 @@ object Compact {
       }
     }.sum
 
-  /** `targetFiles` if explicit (> 0), else `ceil(bytes / maxFileBytes)`. */
-  def resolveTarget(targetFiles: Int, bytes: Long, maxFileBytes: Long): Int = {
-    require(targetFiles >= 0, "targetFiles must be >= 0 (0 = auto-size)")
+  /** How many files `bytes` of data compact into: `ceil(bytes /
+    * maxFileBytes)`, at least 1. */
+  def resolveTarget(bytes: Long, maxFileBytes: Long): Int = {
     require(maxFileBytes > 0, "maxFileBytes must be > 0")
-    if (targetFiles > 0) targetFiles
-    else math.max(1L, math.min(Int.MaxValue, (bytes + maxFileBytes - 1) / maxFileBytes)).toInt
+    math.max(1L, math.min(Int.MaxValue, (bytes + maxFileBytes - 1) / maxFileBytes)).toInt
   }
+
+  private val TmpPrefix = ".compact_tmp_"
+  private val OldPrefix = ".compact_old_"
+
+  /** Settle what an interrupted swap of `p` left behind (see the object
+    * doc). `tmp` is renamed onto `p` only after `p` moved to `old`, so an
+    * `old` beside a `tmp` is the only copy of `p`'s rows: it goes back —
+    * renamed onto a missing `p`, else merged into the `p` that appends
+    * recreated — before `tmp` is dropped. Without a `tmp`, `old` is the
+    * pre-swap copy of a completed rewrite; without an `old`, `tmp` is an
+    * unfinished rewrite. Either is deleted. */
+  private def recover(f: FileSystem, p: Path, tmp: Path, old: Path): Unit =
+    if (f.exists(old) && f.exists(tmp)) {
+      if (!f.exists(p)) checked(f.rename(old, p), s"compact: rename($old -> $p)")
+      else Partitions.mergeInto(f, old, p, "compact")
+      checked(f.delete(tmp, true), s"compact: delete($tmp)")
+    } else Seq(tmp, old).filter(f.exists).foreach { stale =>
+      checked(f.delete(stale, true), s"compact: delete($stale)")
+    }
 
   /** Compact one parquet LEAF directory (a flat dir of part files — an
     * unpartitioned relation, or one `key=value` partition dir read without
-    * its parent) down to `targetFiles` files (0 = auto-size from the dir's
-    * byte size, see [[resolveTarget]]). No-op unless the current data file
-    * count exceeds both `minFiles` and the resolved target. Returns true
-    * iff a rewrite happened.
+    * its parent) down to [[resolveTarget]] files for its byte size, after
+    * settling an interrupted earlier compaction of it. No-op unless the
+    * dir holds more data files than that target. Returns true iff a
+    * rewrite happened.
     *
     * Reading the leaf directly keeps a partition dir's file schema intact
     * (the partition column lives in the dir name, not the files), so the
     * swapped-in rewrite is byte-compatible with what partition discovery
     * expects. */
   def leafDir(spark: SparkSession, dir: String,
-      targetFiles: Int = 0, minFiles: Int = 1,
       maxFileBytes: Long = DefaultMaxFileBytes): Boolean = {
     val p = new Path(dir)
     val f = Partitions.fs(spark, p)
-    val n = dataFileCount(spark, dir)
-    val target = resolveTarget(targetFiles, dataSizeBytes(spark, dir), maxFileBytes)
-    if (n <= math.max(minFiles, target)) return false
-    val tmp = new Path(p.getParent, s".compact_tmp_${p.getName}")
-    val old = new Path(p.getParent, s".compact_old_${p.getName}")
-    f.delete(tmp, true); f.delete(old, true) // stale leftovers from a crash
+    val tmp = new Path(p.getParent, TmpPrefix + p.getName)
+    val old = new Path(p.getParent, OldPrefix + p.getName)
+    recover(f, p, tmp, old)
+    val target = resolveTarget(dataSizeBytes(spark, dir), maxFileBytes)
+    if (dataFileCount(spark, dir) <= target) return false
     spark.read.parquet(dir).coalesce(target)
       .write.mode("overwrite").parquet(tmp.toString)
     checked(f.rename(p, old), s"compact: rename($p -> $old)")
@@ -160,19 +180,27 @@ object Compact {
     * `__date=` partition of a history table, every `list=` dir of an IVF
     * layout). Partition-local: each child is rewritten independently, so
     * cost ∝ the data in partitions that actually accumulated files, and
-    * auto-sizing (`targetFiles = 0`) resolves per child from that child's
-    * bytes. Returns the number of partitions rewritten. */
+    * the target resolves per child from that child's bytes. The same
+    * listing finds a partition that is missing while its
+    * `.compact_old_` sibling holds its rows (a swap interrupted between
+    * its renames); [[leafDir]] puts it back. Returns the number of
+    * partitions rewritten. */
   def partitionedDir(spark: SparkSession, dir: String, prefix: String,
-      targetFiles: Int = 0, minFiles: Int = 1,
       maxFileBytes: Long = DefaultMaxFileBytes): Int = {
-    val children = Partitions.list(spark, new Path(dir), prefix).map(_._2)
+    val d = new Path(dir)
+    val f = Partitions.fs(spark, d)
+    val listed = if (!f.exists(d)) Nil else f.listStatus(d).toSeq
+    val live = Partitions.named(listed, prefix)
+    val stranded = Partitions.named(listed, OldPrefix + prefix).map(_._1)
+      .filterNot(live.map(_._1).toSet)
+    val children = live.map(_._2) ++ stranded.map(v => new Path(d, s"$prefix=$v"))
     // children are disjoint leaf dirs rewritten independently — run a few
     // rewrites concurrently (guide §2.6) so one child's coalesce tail does
     // not leave the cluster idle while the next child waits; the swap
     // discipline is per-child and unaffected by ordering
     val rewritten = new java.util.concurrent.atomic.AtomicInteger(0)
     graft.Par.runBounded(children, maxConcurrent = 4) { child =>
-      if (leafDir(spark, child.toString, targetFiles, minFiles, maxFileBytes))
+      if (leafDir(spark, child.toString, maxFileBytes))
         rewritten.incrementAndGet()
     }
     rewritten.get()

@@ -2,7 +2,7 @@ package graft.store
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -33,9 +33,14 @@ private[graft] object Partitions {
     * `dir`, in listing order; empty when `dir` does not exist. */
   def list(spark: SparkSession, dir: Path, key: String): Seq[(String, Path)] = {
     val f = fs(spark, dir)
+    if (!f.exists(dir)) Nil else named(f.listStatus(dir).toSeq, key)
+  }
+
+  /** [[list]] over a listing already made: the value and path of each
+    * `key=` directory among `listed`, in order. */
+  def named(listed: Seq[FileStatus], key: String): Seq[(String, Path)] = {
     val prefix = key + "="
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq.collect {
+    listed.collect {
       case st if st.isDirectory && st.getPath.getName.startsWith(prefix) =>
         st.getPath.getName.stripPrefix(prefix) -> st.getPath
     }

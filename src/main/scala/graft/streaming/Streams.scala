@@ -355,15 +355,9 @@ object Streams {
     * surface so specs can assert the derive input is the companion — a
     * bounded set of `_latest` generation directories, O(keys +
     * collapseEvery·batch) rows — and not the accumulated `batch_id=` event
-    * partitions. `pruneTo` restricts the read to the given `__kbkt`
-    * buckets UNDER THE DEFAULT [[CdcKeyBuckets]] MODULUS (what the
-    * per-batch derive does with the batch's own bucket set); generations
-    * recorded with a different count are read unpruned — a safe superset.
-    * Correct for any key set that hashes into those buckets. */
-  def cdcState(spark: SparkSession, historyPath: String, batchId: Long,
-      pruneTo: Option[Seq[Int]] = None): Option[DataFrame] =
-    cdcStateFrom(spark, cdcGensBelow(spark, historyPath, batchId),
-      pruneTo.map(b => Map(CdcKeyBuckets -> b)))
+    * partitions. The pruned read for a key set is [[cdcStateForKeys]]. */
+  def cdcState(spark: SparkSession, historyPath: String, batchId: Long): Option[DataFrame] =
+    cdcStateFrom(spark, cdcGensBelow(spark, historyPath, batchId))
 
   /** [[cdcState]] pruned for a specific KEY SET — exactly the read the
     * per-batch derive performs: each full collapse partition-prunes under
@@ -1038,10 +1032,8 @@ object Streams {
     * per-partition file explosion would have been one). Single-writer
     * discipline: run it from the archival owner — the archive has no
     * hot-path readers. Returns the number of partitions rewritten. */
-  def compactArchive(spark: SparkSession, path: String,
-      targetFiles: Int = 0, minFiles: Int = 1): Int =
-    graft.store.Compact.partitionedDir(
-      spark, s"$path/_archive", "batch_id", targetFiles, minFiles)
+  def compactArchive(spark: SparkSession, path: String): Int =
+    graft.store.Compact.partitionedDir(spark, s"$path/_archive", "batch_id")
 
   /** Final retention tier: DELETE archived `batch_id=` partitions with id
     * strictly below `belowBatchId`. [[archiveEventLog]] /

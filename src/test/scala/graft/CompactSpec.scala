@@ -19,6 +19,21 @@ class ClaimRaceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
 }
 
+/** Local filesystem whose NEXT rename of a `.compact_tmp_` dir onto its
+  * live name returns `false` once [[FailSwapOnceFs.armed]] is set — a
+  * compaction interrupted between its two swap renames, with the live
+  * dir already moved to `.compact_old_`. */
+class FailSwapOnceFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "failswap"
+  override def getUri: java.net.URI = java.net.URI.create("failswap:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (src.getName.startsWith(".compact_tmp_") && FailSwapOnceFs.armed.getAndSet(false)) false
+    else super.rename(src, dst)
+}
+object FailSwapOnceFs {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+
 /** Compaction of the append-only trees (history, MinHash index, IVF lists):
   * file counts must DROP and results must be IDENTICAL — the relational
   * identity is additionally oracle-gated by q73 (MinHash) and q74 (IVF);
@@ -56,6 +71,40 @@ class CompactSpec extends SparkSpec {
     assert(digest() === before)
     // idempotent: nothing left above the threshold
     assert(store.compactHistory("hist") === 0)
+  }
+
+  test("a compaction interrupted between its swap renames loses no rows on retry") {
+    spark.sparkContext.hadoopConfiguration.set("fs.failswap.impl",
+      classOf[FailSwapOnceFs].getName)
+    val dir = tmp("graft_compact_swap")
+    val store = new Store(spark, "failswap://" + dir)
+    def append(table: String, id: String): Unit = store.appendHistory(table,
+      Seq((id, 1.0, java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
+        .toDF("product_id", "price", "crawled_at"))
+    def ids(table: String) = store.history(table).map(
+      _.select("product_id").as[String].collect().sorted.toSeq).getOrElse(Nil)
+    def interrupt(table: String): Unit = {
+      append(table, "p1"); append(table, "p2")
+      FailSwapOnceFs.armed.set(true)
+      val e = intercept[java.io.IOException](store.compactHistory(table))
+      assert(e.getMessage.contains("compact: rename"), e.getMessage)
+      // the partition's only copy now sits in the hidden .compact_old_ dir
+      assert(ids(table) === Nil)
+    }
+    // retry alone: the stray's partition is missing, and the retry puts it
+    // back before compacting it
+    interrupt("retry")
+    assert(store.compactHistory("retry") === 1)
+    assert(ids("retry") === Seq("p1", "p2"))
+    // appends recreate the partition first: the retry merges the stray
+    // into it instead of deleting it as a stale leftover
+    interrupt("appended")
+    append("appended", "p3"); append("appended", "p4")
+    assert(store.compactHistory("appended") === 1)
+    assert(ids("appended") === Seq("p1", "p2", "p3", "p4"))
+    // and nothing of either swap is left behind
+    for (table <- Seq("retry", "appended"))
+      assert(!new java.io.File(s"$dir/$table/append").list().exists(_.startsWith(".compact_")))
   }
 
   test("compactArchive (history): archived date partitions compact, rows conserved") {
@@ -487,7 +536,7 @@ class CompactSpec extends SparkSpec {
 
   test("auto-sized target: output file count tracks bytes/maxFileBytes, not a fixed 1") {
     // at 100 TB a fixed target would funnel the rewrite through that many
-    // tasks (coalesce caps the stage); targetFiles = 0 sizes the output to
+    // tasks (coalesce caps the stage); resolveTarget sizes the output to
     // ≈ maxFileBytes per file. Shrink maxFileBytes to a third of the dir so
     // the auto target resolves to 3 at test scale.
     val dir = tmp("graft_autosize") + "/leaf"
@@ -497,7 +546,7 @@ class CompactSpec extends SparkSpec {
     assert(Compact.dataFileCount(spark, dir) === 6)
     val bytes = Compact.dataSizeBytes(spark, dir)
     val maxFB = (bytes + 2) / 3
-    assert(Compact.resolveTarget(0, bytes, maxFB) === 3)
+    assert(Compact.resolveTarget(bytes, maxFB) === 3)
     assert(Compact.leafDir(spark, dir, maxFileBytes = maxFB))
     assert(Compact.dataFileCount(spark, dir) === 3)
     assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq === before)

@@ -779,12 +779,6 @@ class OperatorsSpec extends SparkSpec {
       denseVocabBits = 0))
     assert(dense.nonEmpty)
     assert(dense === inverted)
-    // forceInverted skips the vocabulary probe entirely — the corpus-scale
-    // route bypass must be result-identical even on a corpus the probe
-    // would have routed DENSE
-    val forced = canon(graft.operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text", 2, 0.5,
-      forceInverted = true))
-    assert(dense === forced)
   }
 
   test("exactDedup passes null-text rows through instead of collapsing them to one") {
@@ -1230,13 +1224,13 @@ class OperatorsSpec extends SparkSpec {
     // every document shares every shingle, so one shingle key emits nC2
     // join rows and the length filter cannot help (all docs the same
     // length) — the KEYED-join sibling of the banded saturation shape.
-    // forceInverted pins the hazardous route (the dense path absorbs tiny
-    // vocabularies without the self-join).
+    // denseVocabBits = 0 pins the hazardous route (the dense path absorbs
+    // tiny vocabularies without the self-join).
     val docs = (1L to 60L).map(i => (i, "identical boilerplate text repeated verbatim"))
       .toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException](
       Dedup.ngramJaccardPairs(docs, "doc_id", "text", shingleN = 3, threshold = 0.8,
-        forceInverted = true, maxCandidatePairs = 100L).count())
+        denseVocabBits = 0, maxCandidatePairs = 100L).count())
     assert(e.getMessage.contains("ngramJaccardPairs(inverted)"), e.getMessage)
     assert(e.getMessage.contains("maxCandidatePairs"), e.getMessage)
     assert(e.getMessage.contains("shingleN"), e.getMessage)
@@ -1245,7 +1239,7 @@ class OperatorsSpec extends SparkSpec {
     // corpus passes under the same cap
     val deduped = Dedup.exactDedup(docs, "doc_id", "text")
     assert(Dedup.ngramJaccardPairs(deduped, "doc_id", "text", shingleN = 3,
-      threshold = 0.8, forceInverted = true, maxCandidatePairs = 100L).count() === 0L)
+      threshold = 0.8, denseVocabBits = 0, maxCandidatePairs = 100L).count() === 0L)
   }
 
   test("exactDedup handles MapType payload columns and keeps identical anon rows") {

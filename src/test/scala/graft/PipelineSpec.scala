@@ -156,6 +156,26 @@ class PipelineSpec extends SparkSpec {
     assert(store.archiveHistory("crawl_history", "2024-03-01") == 0) // idempotent
   }
 
+  test("archiveHistory refuses a cutoff that is not an ISO yyyy-MM-dd date") {
+    val root = Files.createTempDirectory("graft_arch_cutoff").toString
+    val store = new Store(spark, root)
+    store.appendHistory("hist", Seq(
+      ("p1", 1.0, java.sql.Timestamp.valueOf("2024-01-03 08:00:00")),
+      ("p2", 2.0, java.sql.Timestamp.valueOf("2024-01-10 08:00:00")))
+      .toDF("product_id", "price", "crawled_at"))
+    // as strings, "2024-01-03" < "2024-01-03 00:00:00" would archive the
+    // cutoff day itself, and "2024-1-5" sorts after every January date
+    for (bad <- Seq("2024-01-03 00:00:00", "2024-1-5", "2024-02-30", "")) {
+      val e = intercept[IllegalArgumentException](store.archiveHistory("hist", bad))
+      assert(e.getMessage.contains("cutoff") && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    assert(store.history("hist").get.count() == 2)
+    assert(store.history("hist_archive").isEmpty)
+    // the ISO form archives strictly before the cutoff day
+    assert(store.archiveHistory("hist", "2024-01-03") == 0)
+    assert(store.archiveHistory("hist", "2024-01-04") == 1)
+  }
+
   test("archiveHistory surfaces a rename that fails non-exceptionally " +
       "and leaves the partition live") {
     spark.sparkContext.hadoopConfiguration.set("fs.failrename.impl",
@@ -209,7 +229,7 @@ class PipelineSpec extends SparkSpec {
   test("multi-batch store lifecycle: 3 days of upsert+history+latest+archive " +
       "match a sequential model") {
     val root = Files.createTempDirectory("graft_life").toString
-    val store = new Store(spark, root, buckets = 4)
+    val store = new Store(spark, root)
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // 3 daily batches; day2 carries a null price for p1 (upsert must keep old)
     val days = Seq(
@@ -292,35 +312,6 @@ class PipelineSpec extends SparkSpec {
     assert(store.generations("products") == Seq(2, 3))
     assert(store.snapshotAt("products", 1).isEmpty)
     assert(store.snapshotAt("products", 99).isEmpty)
-    // bucketed store: older generations path-read (catalog entry only
-    // exists for the latest), latest prefers the catalog
-    val broot = Files.createTempDirectory("graft_tt_b").toString
-    val bstore = new Store(spark, broot, buckets = 4)
-    bstore.upsert("p", Seq(("a", 1.0)).toDF("product_id", "price"), Seq("product_id"))
-    bstore.upsert("p", Seq(("a", 2.0)).toDF("product_id", "price"), Seq("product_id"))
-    assert(bstore.snapshotAt("p", 0).get.select("price").as[Double].collect().toSeq == Seq(1.0))
-    assert(bstore.snapshotAt("p", 1).get.select("price").as[Double].collect().toSeq == Seq(2.0))
-    // ... and "only for the latest" is enforced, not aspirational: the
-    // superseded entry was DROPPED at upsert time (computed after the
-    // write, the drop never fired and the metastore leaked one entry per
-    // upsert between vacuums)
-    assert(spark.catalog.listTables().where("name LIKE 'graft_p_gen%'")
-      .count() === 1)
-  }
-
-  test("two stores with the same table name and bucket count never share catalog entries") {
-    val rootA = Files.createTempDirectory("graft_iso_a").toString
-    val rootB = Files.createTempDirectory("graft_iso_b").toString
-    val a = new Store(spark, rootA, buckets = 4)
-    val b = new Store(spark, rootB, buckets = 4)
-    a.upsert("products", Seq(("a", 1.0)).toDF("product_id", "price"), Seq("product_id"))
-    b.upsert("products", Seq(("b", 9.0)).toDF("product_id", "price"), Seq("product_id"))
-    // an unscoped catalog name would have let B's saveAsTable re-point A's
-    // entry at B's files — A would then silently serve B's rows
-    assert(a.snapshot("products").get.select("product_id").as[String].collect().toSeq
-      == Seq("a"))
-    assert(b.snapshot("products").get.select("product_id").as[String].collect().toSeq
-      == Seq("b"))
   }
 
   test("a crashed writer's partial generation is invisible to readers and reclaimed by vacuum") {
@@ -383,15 +374,6 @@ class PipelineSpec extends SparkSpec {
       == Seq(2.0))
     assert(store.vacuum("products", keep = 2) == 1)
     assert(!fs.exists(dir))
-    // the bucketed write registers its catalog table first and appends
-    // into it, so its generations carry both markers too
-    val bstore = new Store(spark, root, buckets = 4)
-    bstore.upsert("bucketed", Seq(("a", 1.0)).toDF("product_id", "price"), Seq("product_id"))
-    bstore.upsert("bucketed", Seq(("b", 2.0)).toDF("product_id", "price"), Seq("product_id"))
-    assert(marker("bucketed", 1, "_CLAIM") && marker("bucketed", 1, "_COMMITTED"))
-    assert(bstore.snapshot("bucketed").get.orderBy("product_id")
-      .select("product_id", "price").as[(String, Double)].collect().toSeq
-      == Seq(("a", 1.0), ("b", 2.0)))
   }
 
   test("a store tree in the pre-Generations layout reads as before and upserts past it") {
@@ -432,6 +414,26 @@ class PipelineSpec extends SparkSpec {
     assert(fs.exists(path(".claim_gen_000000")))
   }
 
+  test("a generation an older version wrote bucketed through the catalog reads by path") {
+    val root = Files.createTempDirectory("graft_bucketed_layout").toString
+    // what the bucketed layout left on disk: bucket-numbered part files and
+    // the committer's _SUCCESS at the generation root; its catalog entry
+    // lived only in the writing session
+    Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)).toDF("product_id", "price")
+      .write.bucketBy(4, "product_id").sortBy("product_id")
+      .option("path", s"$root/products/gen_000000").saveAsTable("graft_bucketed_layout")
+    spark.sql("DROP TABLE graft_bucketed_layout")
+    val store = new Store(spark, root)
+    store.upsert("products", Seq(("b", 9.0), ("d", 4.0)).toDF("product_id", "price"),
+      Seq("product_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("product_id")
+      .select("product_id", "price").as[(String, Double)].collect().toSeq
+    assert(rows(store.snapshotAt("products", 0).get) == Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)))
+    assert(rows(store.snapshot("products").get) ==
+      Seq(("a", 1.0), ("b", 9.0), ("c", 3.0), ("d", 4.0)))
+    assert(store.generations("products") == Seq(0, 1))
+  }
+
   test("store works against an explicit file: URI (Hadoop FS read path)") {
     val root = "file:" + Files.createTempDirectory("graft_uri").toString
     val store = new Store(spark, root)
@@ -460,33 +462,6 @@ class PipelineSpec extends SparkSpec {
     assert(got == Seq(("p1", 9.0), ("p2", 2.0)))
     // and the full log is intact (companion is additive, not a replacement)
     assert(store.history("h").get.count() == 3)
-  }
-
-  test("bucketed store: correct across runs, merge shuffles only the batch side") {
-    val root = Files.createTempDirectory("graft_bucket").toString
-    val store = new Store(spark, root, buckets = 4)
-    store.upsert("products",
-      Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)).toDF("product_id", "price"),
-      Seq("product_id"))
-    store.upsert("products",
-      Seq(("b", 9.0), ("d", 4.0)).toDF("product_id", "price"), Seq("product_id"))
-    val snap = store.snapshot("products").get
-    assert(snap.orderBy("product_id").select("product_id", "price")
-      .as[(String, Double)].collect().toSeq ==
-      Seq(("a", 1.0), ("b", 9.0), ("c", 3.0), ("d", 4.0)))
-    // the NEXT merge against the bucketed snapshot must shuffle only the
-    // batch side: exactly one Exchange in the plan (snapshot side reads
-    // bucket-aligned from the catalog entry)
-    val batch3 = Seq(("e", 5.0)).toDF("product_id", "price")
-    val plan = graft.operators.Merge
-      .upsertMerge(store.snapshot("products").get, batch3, Seq("product_id"))
-      .queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges == 1, s"expected 1 Exchange (batch side only), got $exchanges:\n${plan.take(3000)}")
-    // vacuum on a bucketed store: old generation dirs (and any catalog
-    // entries) go; the live bucketed snapshot still reads correctly
-    assert(store.vacuum("products", keep = 1) == 1)
-    assert(store.snapshot("products").get.count() == 4)
   }
 
   test("history events conform to the declared crawl_history schema") {
@@ -526,37 +501,6 @@ class PipelineSpec extends SparkSpec {
     assert(causes(e).exists(c => c.isInstanceOf[java.io.FileNotFoundException] ||
       Option(c.getMessage).exists(m => m.contains("FileNotFound") || m.contains("does not exist"))),
       s"expected a loud missing-files failure, got: $e")
-  }
-
-  test("pre-rootTag legacy catalog entries are swept by vacuum/upsert, but only this root's") {
-    val root = Files.createTempDirectory("graft_legacy").toString
-    val store = new Store(spark, root, buckets = 4)
-    store.upsert("p", Seq(("a", 1.0)).toDF("product_id", "price"), Seq("product_id"))
-    store.upsert("p", Seq(("a", 2.0)).toDF("product_id", "price"), Seq("product_id"))
-    store.upsert("p", Seq(("a", 3.0)).toDF("product_id", "price"), Seq("product_id"))
-    // simulate the pre-upgrade state: untagged entries registered against
-    // this store's generation dirs (what writeGen used to create) ...
-    spark.sql(s"CREATE TABLE graft_p_gen_000000 (product_id STRING, price DOUBLE) " +
-      s"USING parquet LOCATION '$root/p/gen_000000'")
-    // ... and a FOREIGN store's same-named entry (the untagged namespace is
-    // shared across roots — that collision is why rootTag exists)
-    val foreignRoot = Files.createTempDirectory("graft_legacy_foreign").toString
-    Seq(("z", 9.0)).toDF("product_id", "price").write.parquet(s"$foreignRoot/p/gen_000001")
-    spark.sql(s"CREATE TABLE graft_p_gen_000001 (product_id STRING, price DOUBLE) " +
-      s"USING parquet LOCATION '$foreignRoot/p/gen_000001'")
-    store.vacuum("p", keep = 1)
-    // this root's legacy entry is gone with its generation; the foreign
-    // store's entry — whose location is under a DIFFERENT root — survives
-    assert(!spark.catalog.tableExists("graft_p_gen_000000"))
-    assert(spark.catalog.tableExists("graft_p_gen_000001"))
-    spark.sql("DROP TABLE graft_p_gen_000001")
-    // the upsert path sweeps too: a legacy entry for the superseded latest
-    val gens = store.generations("p")
-    val prevGen = f"gen_${gens.last}%06d"
-    spark.sql(s"CREATE TABLE graft_p_$prevGen (product_id STRING, price DOUBLE) " +
-      s"USING parquet LOCATION '$root/p/$prevGen'")
-    store.upsert("p", Seq(("a", 4.0)).toDF("product_id", "price"), Seq("product_id"))
-    assert(!spark.catalog.tableExists(s"graft_p_$prevGen"))
   }
 
   test("rejectReason labels a NULL url bad_url, not unknown (rlike(NULL) skipped the branch)") {

@@ -166,8 +166,7 @@ class StreamsSpec extends SparkSpec {
         org.apache.spark.sql.functions.hash(col("product_id")),
         org.apache.spark.sql.functions.lit(Streams.CdcKeyBuckets)).as("b"))
       .distinct().as[Int].collect().toSet
-    val prunedSt = Streams.cdcState(spark, histPath, 3L,
-      pruneTo = Some(b1Buckets.toSeq)).get
+    val prunedSt = Streams.cdcStateForKeys(spark, histPath, 3L, touch(1).toDF).get
     // the bucket filter must land as a PARTITION filter on the companion
     // scans (partitions never opened), not a post-read filter; inputFiles
     // can't show this — it lists the relation pre-pruning
