@@ -114,7 +114,9 @@ object SparkEntry {
       process: (DataFrame, String, Long) => Unit = Streams.cdcProcessBatch(_, _, _)): String = {
     val histPath = s"${scratch(query, dir)}/history"
     slicesAt(cdcObservations(s, dir), "2024-01-11 00:00:00", "2024-01-21 00:00:00")
-      .zipWithIndex.foreach { case (sl, i) => process(latestBatch(sl), histPath, i.toLong) }
+      .zipWithIndex.foreach { case (sl, i) =>
+        process(Phase(s, "cdc.input")(latestBatch(sl)), histPath, i.toLong)
+      }
     histPath
   }
 
@@ -1443,7 +1445,7 @@ object SparkEntry {
     //     scratch wiped at entry. -------------------------------------------
     "q76_cdc_sink" -> ((s, dir) => {
       val histPath = cdcSinkRun(s, dir, "q76")()
-      cdcEventRows(s.read.parquet(histPath))
+      cdcEventRows(Phase(s, "cdc.readBack")(s.read.parquet(histPath)))
     }),
 
     // --- S9 for the STREAMING event tree, oracle-gated: the q76 pipeline
@@ -1458,7 +1460,8 @@ object SparkEntry {
     "q77_event_archive" -> ((s, dir) => {
       val histPath = cdcSinkRun(s, dir, "q77")()
       Streams.archiveEventLog(s, histPath, "2024-01-21 00:00:00")
-      cdcEventSummary(s.read.parquet(histPath)).orderBy(col("product_id"))
+      cdcEventSummary(Phase(s, "cdc.readBack")(s.read.parquet(histPath)))
+        .orderBy(col("product_id"))
     }),
 
     // --- §2.10 batch→streaming MIGRATION, oracle-gated: statefulCdcFrom
@@ -1512,7 +1515,7 @@ object SparkEntry {
       val histPath = cdcSinkRun(s, dir, "q80")()
       Streams.archiveEventLog(s, histPath, "2024-01-21 00:00:00")
       Streams.compactArchive(s, histPath)
-      cdcEventSummary(s.read.parquet(s"$histPath/_archive"))
+      cdcEventSummary(Phase(s, "cdc.readBack")(s.read.parquet(s"$histPath/_archive")))
         .orderBy(col("batch_id"), col("product_id"))
     }),
 
@@ -1575,10 +1578,11 @@ object SparkEntry {
     //     Per-(sfDir, pid) scratch wiped at entry. --------------------------
     "q82_cdc_rebucket" -> ((s, dir) => {
       val buckets = Seq(4, 4, 8) // reconfigured before batch 2's collapse
-      cdcEventRows(s.read.parquet(cdcSinkRun(s, dir, "q82") { (batch, histPath, i) =>
+      val histPath = cdcSinkRun(s, dir, "q82") { (batch, histPath, i) =>
         Streams.cdcProcessBatch(batch, histPath, i,
           collapseEvery = 2, keyBuckets = buckets(i.toInt))
-      }))
+      }
+      cdcEventRows(Phase(s, "cdc.readBack")(s.read.parquet(histPath)))
     }),
 
     // --- PROGRESS LEDGER ACCOUNTING under the oracle: six file-source

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Maintenance compaction for the engine's append-only parquet trees.
@@ -61,29 +61,28 @@ object Compact {
   import Partitions.checked
 
   /** Visible data files directly under `dir` (hidden `_`/`.` entries —
-    * `_SUCCESS`, checksums, in-flight compaction siblings — excluded). */
-  def dataFiles(spark: SparkSession, dir: String): Seq[Path] = {
-    val p = new Path(dir)
-    val f = Partitions.fs(spark, p)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq
+    * `_SUCCESS`, checksums, in-flight compaction siblings — excluded), as
+    * the one `listStatus` of `dir` returned them: their lengths and mtimes
+    * need no further stat. Empty when `dir` does not exist. */
+  private def dataStatuses(spark: SparkSession, dir: Path): Seq[FileStatus] =
+    try Partitions.fs(spark, dir).listStatus(dir).toSeq
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
         && !st.getPath.getName.startsWith("."))
-      .map(_.getPath)
-  }
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** Visible data files directly under `dir`. */
+  def dataFiles(spark: SparkSession, dir: String): Seq[Path] =
+    dataStatuses(spark, new Path(dir)).map(_.getPath)
 
   /** Number of visible data files directly under `dir` — the compaction
     * trigger signal (see the ingest ledger). */
   def dataFileCount(spark: SparkSession, dir: String): Int =
-    dataFiles(spark, dir).size
+    dataStatuses(spark, new Path(dir)).size
 
   /** Total bytes of visible data files directly under `dir` — what the
-    * auto-sized target file count derives from. Metadata only. */
-  def dataSizeBytes(spark: SparkSession, dir: String): Long = {
-    val p = new Path(dir)
-    val f = Partitions.fs(spark, p)
-    dataFiles(spark, dir).map(f.getFileStatus(_).getLen).sum
-  }
+    * auto-sized target file count derives from. One listing, no stat. */
+  def dataSizeBytes(spark: SparkSession, dir: String): Long =
+    dataStatuses(spark, new Path(dir)).map(_.getLen).sum
 
   /** Compacted files aim at ~128 MB — the conventional parquet sweet spot
     * (big enough to amortize footer/open cost, small enough to split). */
@@ -92,9 +91,10 @@ object Compact {
   /** Per-file footer row-count memo, keyed by (path, length, mtime): a
     * parquet part file is immutable once visible (appends create NEW
     * task-UUID files, compactions swap whole directories), so the key
-    * identifies the bytes and a hit spares the footer open. The directory
-    * LISTING stays fresh on every call — only already-seen files skip
-    * their open, so an appended or swapped file is always re-read. Bounded
+    * identifies the bytes and a hit spares the footer open. The key's
+    * length and mtime come from the directory listing, which stays fresh
+    * on every call — only already-seen files skip their open, so an
+    * appended or swapped file is always re-read. Bounded
     * LRU so a long-lived session's archival sweeps cannot grow it without
     * limit; entries are ~100 B, so the cap is a few hundred KB. */
   private val footerRowsMemo = Generations.boundedLru[(String, Long, Long), java.lang.Long](4096)
@@ -107,20 +107,16 @@ object Compact {
     * rename away, and how the MinHash probe guard derives its row bound
     * per ingest batch — O(file count) metadata, not O(bytes). */
   def footerRowCount(spark: SparkSession, dirs: Seq[Path]): Long =
-    dirs.iterator.flatMap { d =>
-      val fs = Partitions.fs(spark, d)
-      dataFiles(spark, d.toString).iterator.map { f =>
-        val st = fs.getFileStatus(f)
-        val key = (f.toString, st.getLen, st.getModificationTime)
-        val hit = footerRowsMemo.get(key)
-        if (hit != null) hit.longValue()
-        else {
-          val n = Partitions.footer(spark, f)(_.getRecordCount)
-          footerRowsMemo.put(key, n)
-          n
-        }
+    dirs.iterator.flatMap(d => dataStatuses(spark, d).iterator.map { st =>
+      val key = (st.getPath.toString, st.getLen, st.getModificationTime)
+      val hit = footerRowsMemo.get(key)
+      if (hit != null) hit.longValue()
+      else {
+        val n = Partitions.footer(spark, st)(_.getRecordCount)
+        footerRowsMemo.put(key, n)
+        n
       }
-    }.sum
+    }).sum
 
   /** How many files `bytes` of data compact into: `ceil(bytes /
     * maxFileBytes)`, at least 1. */
@@ -166,9 +162,10 @@ object Compact {
     val tmp = new Path(p.getParent, TmpPrefix + p.getName)
     val old = new Path(p.getParent, OldPrefix + p.getName)
     recover(f, p, tmp, old)
-    val target = resolveTarget(dataSizeBytes(spark, dir), maxFileBytes)
-    if (dataFileCount(spark, dir) <= target) return false
-    spark.read.parquet(dir).coalesce(target)
+    val files = dataStatuses(spark, p)
+    val target = resolveTarget(files.map(_.getLen).sum, maxFileBytes)
+    if (files.size <= target) return false
+    Partitions.read(spark, dir).coalesce(target)
       .write.mode("overwrite").parquet(tmp.toString)
     checked(f.rename(p, old), s"compact: rename($p -> $old)")
     checked(f.rename(tmp, p), s"compact: rename($tmp -> $p)")

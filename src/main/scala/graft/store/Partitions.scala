@@ -70,10 +70,10 @@ private[graft] object Partitions {
 
   /** The first data file in path order — the file Spark's inference reads
     * — descending into partition directories in name order. */
-  private def firstDataFile(f: FileSystem, dir: Path): Option[Path] = {
+  private def firstDataFile(f: FileSystem, dir: Path): Option[FileStatus] = {
     val (files, dirs) = f.listStatus(dir).filter(st => visible(st.getPath.getName))
       .sortBy(_.getPath.getName).partition(_.isFile)
-    files.headOption.map(_.getPath)
+    files.headOption
       .orElse(dirs.iterator.flatMap(d => firstDataFile(f, d.getPath)).nextOption())
   }
 
@@ -90,10 +90,11 @@ private[graft] object Partitions {
   }
 
   /** Open one parquet file's footer on the driver (no Spark job, no data
-    * pages), apply `read`, close it. */
-  def footer[T](spark: SparkSession, file: Path)(read: ParquetFileReader => T): T = {
+    * pages), apply `read`, close it. `file` is the file's status from a
+    * listing, so the open needs no stat of its own. */
+  def footer[T](spark: SparkSession, file: FileStatus)(read: ParquetFileReader => T): T = {
     val rd = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
     try read(rd) finally rd.close()
   }
 

@@ -77,12 +77,20 @@ object Streams {
     * a full O(catalog) rewrite per micro-batch — made the companion write
     * the dominant cost at a 10⁹-key catalog with minute-level batches),
     * and the per-batch READ partition-prunes: full collapses are laid out
-    * by `__kbkt = hash(key) % [[CdcKeyBuckets]]` and the derive reads only
-    * the batch's buckets of them (state for keys outside the batch cannot
-    * affect its events; flat deltas are O(batch) and row-filtered), so a
-    * micro-batch touching few keys reads O(catalog × touched-buckets/64 +
+    * by `__kbkt = hash(key) % n` and the derive reads only the batch's
+    * buckets of them (state for keys outside the batch cannot affect its
+    * events; flat deltas are O(batch) and row-filtered), so a micro-batch
+    * touching few keys reads O(catalog × touched-buckets/n +
     * collapseEvery·batch), not the whole companion. Only the
     * every-collapseEvery-th collapse pays a full read+write.
+    *
+    * `keyBuckets` sets `n`. The default `0` sizes each full collapse from
+    * the bytes it folds ([[cdcAutoKeyBuckets]]: one bucket per ~128 MB,
+    * capped at [[CdcKeyBuckets]]), so a small companion is one `__kbkt=0`
+    * dir that the derive reads whole, without a bucket-set collect or a
+    * listing job. A value above 0 writes every full with exactly that many
+    * buckets — the explicit migration path for a catalog whose per-bucket
+    * bytes outgrew the cap.
     *
     * At-least-once `foreachBatch` delivery CONVERGES: a replayed batch
     * resolves only generations with id STRICTLY below its own — its
@@ -100,7 +108,7 @@ object Streams {
   def cdcSink(batchStream: DataFrame, historyPath: String, checkpointPath: String,
       collapseEvery: Int = 8, collapseBytesFrac: Double = 0.5,
       staleHorizon: Option[String] = None,
-      keyBuckets: Int = CdcKeyBuckets): StreamingQuery =
+      keyBuckets: Int = 0): StreamingQuery =
     batchStream.writeStream
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -114,12 +122,13 @@ object Streams {
   private val CdcStateCols = Seq(
     "product_id", "price", "original_price", "discount_percent", "sales_count", "crawled_at")
 
-  /** DEFAULT number of key-hash partition dirs in each companion full
-    * collapse. The per-batch derive needs previous state for the BATCH's
-    * keys only, so collapses are laid out by
-    * `__kbkt = hash(product_id) % keyBuckets` and the derive's companion
-    * read partition-prunes to the batch's bucket set — O(touched buckets)
-    * of the catalog instead of the whole companion per micro-batch, the
+  /** The CAP of the automatic key-bucket count of a companion full
+    * collapse ([[cdcAutoKeyBuckets]]), and the count of legacy fulls that
+    * predate the `_NBKT_<n>` marker. The per-batch derive needs previous
+    * state for the BATCH's keys only, so collapses are laid out by
+    * `__kbkt = hash(product_id) % n` and the derive's companion read
+    * partition-prunes to the batch's bucket set — O(touched buckets) of
+    * the catalog instead of the whole companion per micro-batch, the
     * read-side twin of the delta-write bound. A key hashes to the same
     * bucket in every generation WITH THE SAME COUNT, and each generation
     * RECORDS its own count (`_NBKT_<n>` marker beside `_FULL`), so the
@@ -128,10 +137,21 @@ object Streams {
     * migration. 64 keeps the bucket list a bounded driver-side literal
     * (same capped-collect exception as the MinHash band buckets); a
     * catalog large enough that catalog/64 outgrows a healthy derive read
-    * restarts the sink with a bigger `keyBuckets` and the next full
-    * collapse adopts it — no offline rewrite, older fulls keep pruning
-    * under their recorded count until vacuumed. */
+    * restarts the sink with an explicit, bigger `keyBuckets` and the next
+    * full collapse adopts it — no offline rewrite, older fulls keep
+    * pruning under their recorded count until vacuumed. */
   val CdcKeyBuckets = 64
+
+  /** Key buckets of a full collapse that folds `bytes` of companion and
+    * event data when the sink's `keyBuckets` is left at 0: Compact's one
+    * sizing rule (one bucket per [[graft.store.Compact.DefaultMaxFileBytes]],
+    * at least 1), capped at [[CdcKeyBuckets]]. Dirs track per-bucket
+    * BYTES: below ~128 MB the whole state is one bucket, which the derive
+    * reads whole (docs/SCALE.md, "Bucket counts are per-generation
+    * properties"). */
+  private[graft] def cdcAutoKeyBuckets(bytes: Long): Int =
+    math.min(CdcKeyBuckets,
+      graft.store.Compact.resolveTarget(bytes, graft.store.Compact.DefaultMaxFileBytes))
 
   private def keyBucket(c: org.apache.spark.sql.Column, n: Int) =
     pmod(hash(c), lit(n))
@@ -214,28 +234,30 @@ object Streams {
     * overlay; the bytes trigger bounds the overlay the moment it outgrows
     * the fraction. Both are decided from COMMITTED strictly-earlier
     * generations only (immutable bytes, vacuum-protected), so a replayed
-    * batch makes the identical delta-vs-full choice. */
+    * batch makes the identical delta-vs-full choice. A full collapse gets
+    * `keyBuckets` key buckets, or with `keyBuckets = 0` the
+    * [[cdcAutoKeyBuckets]] count for the bytes it folds. Jobs are labelled
+    * `cdc.prune` (the bucket-set collect), `cdc.derive`, `cdc.write` and
+    * `cdc.vacuum`. */
   private[graft] def cdcProcessBatch(batch: DataFrame, historyPath: String, batchId: Long,
       collapseEvery: Int = 8, collapseBytesFrac: Double = 0.5,
-      staleHorizon: Option[String] = None, keyBuckets: Int = CdcKeyBuckets): Unit = {
+      staleHorizon: Option[String] = None, keyBuckets: Int = 0): Unit = {
     val spark = batch.sparkSession
     Scratch.scoped {
       // the batch is deliberately NOT checkpointed (unlike the ingest
-      // sinks'): its extra evaluations are the bucket-prune collects —
+      // sinks'): its extra evaluation is the bucket-prune collect —
       // key-column-only, column-pruned at a columnar source — and the one
       // full-width use is deriveEvents, whose output is what gets pinned.
-      // A full-width batch checkpoint would trade those narrow scans for a
+      // A full-width batch checkpoint would trade that narrow scan for a
       // second copy of the whole batch in executor storage.
       val gens = cdcGensBelow(spark, historyPath, batchId)
       // the derive needs previous state for the BATCH's keys only — prune
-      // the companion read to their buckets, computed PER MODULUS in play
-      // (each full collapse's recorded count + the configured count for
-      // flat deltas; one tiny distinct-collect per modulus, ≤ 2 outside a
-      // migration window — the same capped driver-side collect as before)
-      val prev = cdcStateFrom(spark, gens,
-        pruneTo = Some(bucketSetsFor(batch, gens, keyBuckets)),
-        flatModulus = keyBuckets)
-        .getOrElse(batch.select(CdcStateCols.map(col): _*).limit(0))
+      // the companion read to their buckets. Flat deltas row-filter under
+      // the anchor full's recorded count, so the batch has ONE modulus and
+      // at most one tiny distinct-collect (none when that count is 1)
+      val lastFullIdx = gens.lastIndexWhere(_.isFull)
+      val modulus = if (lastFullIdx >= 0) gens(lastFullIdx).buckets else CdcKeyBuckets
+      val pruneTo = graft.Phase(spark, "cdc.prune")(bucketSetsFor(batch, gens, modulus))
       // materialized once: the events feed both the partition write and the
       // companion write (and the scoped wrapper frees the blocks per batch).
       // `staleHorizon` applies History's event-time staleness rule: state
@@ -250,7 +272,11 @@ object Streams {
       // change — no_change observations do not refresh it — matching the
       // reference's probe-the-last-stored-history-row shape (its history
       // also only holds should_log rows, postgres_storage.py:1283-1305).
-      val events = History.deriveEvents(batch, prev, None, staleHorizon).scratchCheckpoint()
+      val events = graft.Phase(spark, "cdc.derive") {
+        val prev = cdcStateFrom(spark, gens, Some(pruneTo), modulus)
+          .getOrElse(batch.select(CdcStateCols.map(col): _*).limit(0))
+        History.deriveEvents(batch, prev, None, staleHorizon).scratchCheckpoint()
+      }
       // the batch's delta: its own changed rows only, collapsed to one per
       // key below. A no_change row never enters any generation — it carries
       // values identical to the state it matched, so dropping it cannot
@@ -264,22 +290,21 @@ object Streams {
       // only — committed parquet bytes never change and cdcVacuum keeps
       // every generation at or after the second-newest full — so a replay
       // makes the identical choice.
-      val deltasSinceFull = gens.reverse.takeWhile(!_.isFull).size
-      val lastFullIdx = gens.lastIndexWhere(_.isFull)
-      val bytesDue = lastFullIdx >= 0 && deltasSinceFull > 0 && {
-        def stateBytes(p: Path): Long = {
-          val fs = Partitions.fs(spark, p)
-          val st = new Path(p, "state")
-          if (fs.exists(st)) fs.getContentSummary(st).getLength else 0L
-        }
-        val fullBytes = stateBytes(gens(lastFullIdx).path)
-        val deltaBytes = gens.drop(lastFullIdx + 1).map(g => stateBytes(g.path)).sum
-        fullBytes > 0 && deltaBytes >= collapseBytesFrac * fullBytes
+      val deltasSinceFull = gens.size - 1 - lastFullIdx
+      def bytesOf(p: Path): Long = {
+        val fs = Partitions.fs(spark, p)
+        if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
       }
-      val isFull = gens.isEmpty || !gens.exists(_.isFull) ||
-        deltasSinceFull + 1 >= collapseEvery || bytesDue
-      // a collapse folds the WHOLE catalog — unpruned read — not just the
-      // batch's buckets
+      // the state bytes a collapse folds: what cdcStateFrom reads — the
+      // anchor full and the deltas after it (every generation of a legacy
+      // layout without `_FULL` markers)
+      lazy val foldedBytes = gens.drop(math.max(lastFullIdx, 0))
+        .map(g => bytesOf(new Path(g.path, "state")))
+      val bytesDue = lastFullIdx >= 0 && deltasSinceFull > 0 && {
+        val fullBytes = foldedBytes.head
+        fullBytes > 0 && foldedBytes.tail.sum >= collapseBytesFrac * fullBytes
+      }
+      val isFull = lastFullIdx < 0 || deltasSinceFull + 1 >= collapseEvery || bytesDue
       // tie-break discipline (matching cdcStateFrom's): on a crawled_at tie
       // the CURRENT batch's row supersedes resolved prior state — batch
       // recency, the reference's last-write-wins upsert order — and the
@@ -290,14 +315,6 @@ object Streams {
       // generation-rewrite contract requires.
       val valueTieBreaks = Seq(col("price").desc, col("sales_count").desc,
         col("original_price").desc, col("discount_percent").desc)
-      val next =
-        if (isFull) Merge.latestPerKey(
-          cdcStateFrom(spark, gens).getOrElse(delta.limit(0))
-            .withColumn("__cur", lit(0)).unionByName(delta.withColumn("__cur", lit(1))),
-          Seq("product_id"), "crawled_at", col("__cur").desc +: valueTieBreaks)
-          .drop("__cur")
-        else Merge.latestPerKey(delta,
-          Seq("product_id"), "crawled_at", valueTieBreaks)
       val root = s"$historyPath/_latest"
       // %012d, not Generations' %06d: companion generation NAMES carry the
       // batch id, and vacuum/latest resolution sort lexicographically — a
@@ -310,42 +327,61 @@ object Streams {
       // the strictly-earlier generations + the batch, so the rewrite is
       // byte-identical)
       fs.delete(gen, true)
-      // Only COLLAPSES get the bucketed layout: they are the catalog-sized
-      // relation the per-batch prune pays for. A delta is O(batch) — its
-      // read costs nothing to leave whole, and partitioning it would write
-      // ≤ CdcKeyBuckets tiny files per micro-batch for no read saving
-      // (measured 3× on the q76 gate). Deltas stay one flat file
-      // (repartition, never coalesce — coalesce would single-thread the
-      // upstream derive); cdcStateFrom row-filters them when pruning.
-      //
-      // The batch's EVENT-partition write and its COMPANION-state write
-      // both derive from the checkpointed `events` and land in disjoint
-      // trees, so they run concurrently (guide §2.6). Ordering between
-      // them was never load-bearing: the companion's commit marker lands
-      // AFTER both (below), derives read strictly-earlier generations
-      // only, and a replayed batch rewrites both deterministically.
-      graft.Par.run(
-        () => events.write.mode("overwrite")
-          .parquet(s"$historyPath/batch_id=$batchId"),
-        () =>
-          if (isFull)
-            next.withColumn("__kbkt", keyBucket(col("product_id"), keyBuckets))
-              .repartition(col("__kbkt"))
-              .write.mode("overwrite").partitionBy("__kbkt")
-              .parquet(new Path(gen, "state").toString)
-          else
-            next.repartition(1)
-              .write.mode("overwrite").parquet(new Path(gen, "state").toString))
-      if (isFull) {
-        fs.create(new Path(gen, "_FULL"), false).close()
-        // record the layout's bucket count beside the data so every future
-        // derive prunes THIS generation under the modulus it was written
-        // with — what makes a live keyBuckets reconfiguration safe
-        fs.create(new Path(gen, s"_NBKT_$keyBuckets"), false).close()
+      val eventDir = new Path(s"$historyPath/batch_id=$batchId")
+      def writeEvents(): Unit = events.write.mode("overwrite").parquet(eventDir.toString)
+      graft.Phase(spark, "cdc.write") {
+        if (isFull) {
+          // a collapse folds the WHOLE catalog — unpruned read — not just
+          // the batch's buckets. Only COLLAPSES get the bucketed layout:
+          // they are the catalog-sized relation the per-batch prune pays
+          // for. Their count is sized from the bytes they fold — the
+          // folded state plus this batch's event partition, written first
+          // so that a first full, with nothing to fold, is sized too — and
+          // recorded beside the data (`_NBKT_<n>`), so every future derive
+          // prunes THIS generation under the modulus it was written with:
+          // what makes a count change between collapses safe.
+          writeEvents()
+          val buckets = if (keyBuckets > 0) keyBuckets
+            else cdcAutoKeyBuckets(foldedBytes.sum + bytesOf(eventDir))
+          writeFull(Merge.latestPerKey(
+            cdcStateFrom(spark, gens).getOrElse(delta.limit(0))
+              .withColumn("__cur", lit(0)).unionByName(delta.withColumn("__cur", lit(1))),
+            Seq("product_id"), "crawled_at", col("__cur").desc +: valueTieBreaks)
+            .drop("__cur"), gen, buckets)
+        } else {
+          // A delta is O(batch) — its read costs nothing to leave whole,
+          // and partitioning it would write up to a bucket count of tiny
+          // files per micro-batch for no read saving (measured 3× on the
+          // q76 gate). Deltas stay one flat file (repartition, never
+          // coalesce — coalesce would single-thread the upstream derive);
+          // cdcStateFrom row-filters them when pruning. The event write and
+          // the delta write both derive from the checkpointed `events` and
+          // land in disjoint trees, so they run concurrently (guide §2.6):
+          // the companion's commit marker lands AFTER both (below), derives
+          // read strictly-earlier generations only, and a replayed batch
+          // rewrites both deterministically.
+          graft.Par.run(
+            () => writeEvents(),
+            () => Merge.latestPerKey(delta, Seq("product_id"), "crawled_at", valueTieBreaks)
+              .repartition(1).write.mode("overwrite").parquet(new Path(gen, "state").toString))
+        }
       }
       Generations.commit(spark, gen)
-      cdcVacuum(spark, historyPath, batchId + 1)
+      graft.Phase(spark, "cdc.vacuum")(cdcVacuum(spark, historyPath, batchId + 1))
     }
+  }
+
+  /** Write `state` as companion generation `gen`'s full collapse: one
+    * `__kbkt=` dir per non-empty key bucket of `buckets`, then the `_FULL`
+    * marker and the `_NBKT_<buckets>` marker every later read prunes this
+    * generation under. The caller commits. */
+  private def writeFull(state: DataFrame, gen: Path, buckets: Int): Unit = {
+    state.withColumn("__kbkt", keyBucket(col("product_id"), buckets))
+      .repartition(col("__kbkt"))
+      .write.mode("overwrite").partitionBy("__kbkt").parquet(new Path(gen, "state").toString)
+    val fs = Partitions.fs(state.sparkSession, gen)
+    fs.create(new Path(gen, "_FULL"), false).close()
+    fs.create(new Path(gen, s"_NBKT_$buckets"), false).close()
   }
 
   /** The latest-per-key CDC state batch `batchId` must derive against:
@@ -372,16 +408,19 @@ object Streams {
 
   /** The batch's key-bucket sets, one per MODULUS in play — the ANCHOR
     * full collapse's recorded count plus `flatModulus` for the deltas; one
-    * tiny distinct-collect per modulus (≤ 2 — exactly 2 only inside a
-    * migration window where the anchor's count differs from the configured
-    * one). Only the newest full matters: [[cdcStateFrom]] reads from the
-    * anchor onward, so pre-anchor fulls retained by the vacuum window must
-    * not charge the batch an extra collect for bucket sets that are never
-    * consulted. */
+    * tiny distinct-collect per modulus (the derive passes the anchor's
+    * count as `flatModulus`, so it has one). Only the newest full matters:
+    * [[cdcStateFrom]] reads from the anchor onward, so pre-anchor fulls
+    * retained by the vacuum window must not charge the batch an extra
+    * collect for bucket sets that are never consulted. A modulus of 1 gets
+    * no entry — every key is in bucket 0, so its filter would prune
+    * nothing — and neither does anything when there is no generation. */
   private def bucketSetsFor(keys: DataFrame, gens: Seq[CdcGen],
       flatModulus: Int): Map[Int, Seq[Int]] = {
     val anchor = gens.lastIndexWhere(_.isFull)
-    val moduli = ((if (anchor >= 0) Seq(gens(anchor).buckets) else Nil) :+ flatModulus).distinct
+    val moduli = if (gens.isEmpty) Nil
+      else ((if (anchor >= 0) Seq(gens(anchor).buckets) else Nil) :+ flatModulus).distinct
+        .filter(_ > 1)
     moduli.map { m =>
       m -> keys.select(keyBucket(col("product_id"), m).as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq
@@ -560,12 +599,7 @@ object Streams {
     val staging = new Path(s"$historyPath/_latest_rebuild")
     fs.delete(staging, true) // debris from a previous interrupted recovery
     val gen = new Path(staging, f"gen_${nextBatchId - 1}%012d")
-    state.withColumn("__kbkt", keyBucket(col("product_id"), keyBuckets))
-      .repartition(col("__kbkt"))
-      .write.mode("overwrite").partitionBy("__kbkt")
-      .parquet(new Path(gen, "state").toString)
-    fs.create(new Path(gen, "_FULL"), false).close()
-    fs.create(new Path(gen, s"_NBKT_$keyBuckets"), false).close()
+    writeFull(state, gen, keyBuckets)
     Generations.commit(spark, gen)
     // the swap: drop the old tree, move the staged one in, clear the
     // tombstone — in that order, so a crash between any two steps leaves

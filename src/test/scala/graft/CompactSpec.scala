@@ -34,6 +34,35 @@ object FailSwapOnceFs {
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
 
+/** Local filesystem that counts the `listStatus` and `getFileStatus`
+  * calls made on it, per path. Only outermost calls count: the stat a
+  * listing or an open makes of each file inside the filesystem is not a
+  * call the caller made. */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  override def getScheme: String = "counting"
+  override def getUri: java.net.URI = java.net.URI.create("counting:///")
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] =
+    CountingFs.count("listStatus", p)(super.listStatus(p))
+  override def getFileStatus(p: Path): org.apache.hadoop.fs.FileStatus =
+    CountingFs.count("getFileStatus", p)(super.getFileStatus(p))
+  override def open(p: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
+    CountingFs.count("open", p)(super.open(p, bufferSize))
+}
+object CountingFs {
+  private val calls = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+  private val depth = ThreadLocal.withInitial[Integer](() => 0)
+  def count[T](op: String, p: org.apache.hadoop.fs.Path)(f: => T): T = {
+    if (depth.get == 0) calls.synchronized(calls += ((op, p.toUri.getPath)))
+    depth.set(depth.get + 1)
+    try f finally depth.set(depth.get - 1)
+  }
+  def reset(): Unit = calls.synchronized(calls.clear())
+  /** Calls of `op` on paths that `which` accepts. */
+  def of(op: String)(which: String => Boolean): Int =
+    calls.synchronized(calls.count { case (o, p) => o == op && which(p) })
+}
+
 /** Compaction of the append-only trees (history, MinHash index, IVF lists):
   * file counts must DROP and results must be IDENTICAL — the relational
   * identity is additionally oracle-gated by q73 (MinHash) and q74 (IVF);
@@ -105,6 +134,32 @@ class CompactSpec extends SparkSpec {
     // and nothing of either swap is left behind
     for (table <- Seq("retry", "appended"))
       assert(!new java.io.File(s"$dir/$table/append").list().exists(_.startsWith(".compact_")))
+  }
+
+  test("Compact lists a dir once for its count, bytes, compaction check and footer row counts") {
+    spark.sparkContext.hadoopConfiguration.set("fs.counting.impl", classOf[CountingFs].getName)
+    val local = tmp("graft_compact_count") + "/leaf"
+    val dir = "counting://" + local
+    (1 to 30).map(i => (i.toLong, s"row $i")).toDF("id", "text").repartition(3)
+      .write.parquet(dir)
+    def listings = CountingFs.of("listStatus")(_ == local)
+    def fileStats = CountingFs.of("getFileStatus")(p => p.startsWith(local + "/part-"))
+    def measured[T](f: => T): (T, Int, Int) = {
+      CountingFs.reset()
+      val out = f
+      (out, listings, fileStats)
+    }
+    assert(measured(Compact.dataFileCount(spark, dir)) === ((3, 1, 0)))
+    val (bytes, l, s) = measured(Compact.dataSizeBytes(spark, dir))
+    assert(bytes > 0 && l === 1 && s === 0)
+    // at a 1-byte file budget the leaf is already under its target: the
+    // check alone, on one listing
+    assert(measured(Compact.leafDir(spark, dir, maxFileBytes = 1L)) === ((false, 1, 0)))
+    // footer row counts key their memo on the listing's length and mtime,
+    // on a miss and on a hit alike
+    val leaf = Seq(new org.apache.hadoop.fs.Path(dir))
+    assert(measured(Compact.footerRowCount(spark, leaf)) === ((30L, 1, 0)))
+    assert(measured(Compact.footerRowCount(spark, leaf)) === ((30L, 1, 0)))
   }
 
   test("compactArchive (history): archived date partitions compact, rows conserved") {

@@ -34,6 +34,10 @@ class PartitionsSpec extends SparkSpec {
     store.upsert("products", products, Seq("product_id"))
     store.upsert("products", products.withColumn("price", col("price") * 2), Seq("product_id"))
     store.appendHistory("history", products)
+    // two appends, then a compaction rewrites each `__date=` leaf
+    store.appendHistory("compacted", products)
+    store.appendHistory("compacted", products)
+    assert(store.compactHistory("compacted") === 2)
     store.upsert("empty", products.limit(0), Seq("product_id"))
     // a MinHash index with a bucketed base, a flat delta and tombstones
     val docs = Seq(
@@ -93,6 +97,7 @@ class PartitionsSpec extends SparkSpec {
     val trees = Seq(
       "flat Store generation" -> s"$root/products/gen_000001",
       "__date history tree" -> s"$root/history/append",
+      "compacted __date leaf" -> s"$root/compacted/append/__date=2024-01-01",
       "empty-DataFrame generation" -> s"$root/empty/gen_000000",
       "__bkt bands base" -> s"$gen/bands",
       "flat bands delta" -> s"$gen/bands_delta",

@@ -40,7 +40,11 @@ class PhaseSpec extends SparkSpec {
     ("q87_curation_stream", "gate, ingest and read-back phases included",
       Set("tables.load", "index.write", "cur.batch", "cur.readBack", "count"),
       Seq("cur.batch › cur.gateAndDedup › gate.",
-        "cur.batch › cur.ingestCycle › ingest.cycle › ingest.", "cur.readBack")))
+        "cur.batch › cur.ingestCycle › ingest.cycle › ingest.", "cur.readBack")),
+    ("q76_cdc_sink", "derive and write phases included",
+      Set("tables.load", "cdc.input", "cdc.prune", "cdc.derive", "cdc.write", "cdc.vacuum",
+        "cdc.readBack", "count"),
+      Seq("cdc.derive", "cdc.write")))
 
   for ((q, what, operators, mustSee) <- lifecycles)
     test(s"$q: every job is labelled query › operator, $what") {

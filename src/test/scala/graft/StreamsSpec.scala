@@ -150,9 +150,12 @@ class StreamsSpec extends SparkSpec {
     def isFull(id: Long) = fs.exists(new org.apache.hadoop.fs.Path(genDir(id), "_FULL"))
     def stateRows(id: Long) =
       spark.read.parquet(new org.apache.hadoop.fs.Path(genDir(id), "state").toString).count()
-    Streams.cdcProcessBatch(seed.toDF, histPath, 0L, collapseEvery = 3)
-    Streams.cdcProcessBatch(touch(1).toDF, histPath, 1L, collapseEvery = 3)
-    Streams.cdcProcessBatch(touch(2).toDF, histPath, 2L, collapseEvery = 3)
+    Streams.cdcProcessBatch(seed.toDF, histPath, 0L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
+    Streams.cdcProcessBatch(touch(1).toDF, histPath, 1L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
+    Streams.cdcProcessBatch(touch(2).toDF, histPath, 2L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
     // batch 0 seeds a full base; batches 1-2 write O(batch) deltas — 3 rows
     // each against a 50-key catalog, NOT a full rewrite
     assert(isFull(0) && stateRows(0) === 50)
@@ -193,27 +196,33 @@ class StreamsSpec extends SparkSpec {
     // replay of a DELTA batch converges: byte-identical events + state
     val ev2 = spark.read.parquet(s"$histPath/batch_id=2").collect().map(_.toString).sorted.toSeq
     val st3 = Streams.cdcState(spark, histPath, 3L).get.collect().map(_.toString).sorted.toSeq
-    Streams.cdcProcessBatch(touch(2).toDF, histPath, 2L, collapseEvery = 3)
+    Streams.cdcProcessBatch(touch(2).toDF, histPath, 2L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
     assert(spark.read.parquet(s"$histPath/batch_id=2")
       .collect().map(_.toString).sorted.toSeq === ev2)
     assert(Streams.cdcState(spark, histPath, 3L).get
       .collect().map(_.toString).sorted.toSeq === st3)
     assert(!isFull(2), "a replayed delta batch must re-decide delta")
     // the third delta-candidate collapses: full state, one row per key
-    Streams.cdcProcessBatch(touch(3).toDF, histPath, 3L, collapseEvery = 3)
+    Streams.cdcProcessBatch(touch(3).toDF, histPath, 3L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
     assert(isFull(3) && stateRows(3) === 50)
     // replay of a COLLAPSE batch converges too (decision and bytes)
     val st4 = Streams.cdcState(spark, histPath, 4L).get.collect().map(_.toString).sorted.toSeq
-    Streams.cdcProcessBatch(touch(3).toDF, histPath, 3L, collapseEvery = 3)
+    Streams.cdcProcessBatch(touch(3).toDF, histPath, 3L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
     assert(isFull(3) && stateRows(3) === 50)
     assert(Streams.cdcState(spark, histPath, 4L).get
       .collect().map(_.toString).sorted.toSeq === st4)
     // two more deltas, then the second collapse at batch 6 — vacuum drops
     // everything strictly older than the SECOND-newest full (gen_3): the
     // retained window still reconstructs any state a replay can ask for
-    Streams.cdcProcessBatch(touch(4).toDF, histPath, 4L, collapseEvery = 3)
-    Streams.cdcProcessBatch(touch(5).toDF, histPath, 5L, collapseEvery = 3)
-    Streams.cdcProcessBatch(touch(6).toDF, histPath, 6L, collapseEvery = 3)
+    Streams.cdcProcessBatch(touch(4).toDF, histPath, 4L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
+    Streams.cdcProcessBatch(touch(5).toDF, histPath, 5L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
+    Streams.cdcProcessBatch(touch(6).toDF, histPath, 6L, collapseEvery = 3,
+      keyBuckets = Streams.CdcKeyBuckets)
     assert(isFull(6))
     val remaining = graft.store.Generations.genDirs(spark, latestRoot.toString)
       .map(_.getName.drop(4).toLong).toSet
@@ -229,6 +238,91 @@ class StreamsSpec extends SparkSpec {
       .select("product_id", "price")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got === want)
+  }
+
+  test("cdcAutoKeyBuckets: one key bucket per 128 MB folded, capped at CdcKeyBuckets") {
+    val mb128 = 128L << 20
+    assert(Streams.cdcAutoKeyBuckets(0L) === 1)
+    assert(Streams.cdcAutoKeyBuckets(mb128) === 1)
+    assert(Streams.cdcAutoKeyBuckets(mb128 + 1) === 2)
+    assert(Streams.cdcAutoKeyBuckets(100L << 30) === Streams.CdcKeyBuckets)
+  }
+
+  test("cdc companion: auto-sized fulls are one bucket, deltas skip the prune, rows equal a 64-bucket twin") {
+    val dir = Files.createTempDirectory("graft_cdc_auto").toString
+    val (auto, fixed) = (s"$dir/auto/history", s"$dir/fixed/history")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def day(d: Int) = ts(f"2024-06-$d%02d 00:00:00")
+    val seed = (0 until 40).map(i => Crawl(s"p$i", 100.0 + i, 200.0, null, 1L, day(1)))
+    def touch(k: Int) = (0 until 4).map { j =>
+      val i = 4 * (k - 1) + j
+      Crawl(s"p$i", 100.0 + i + k, 200.0, null, 1L, day(k + 1))
+    }
+    val batches = seed +: (1 to 4).map(touch)
+    def gen(h: String, id: Long) = new org.apache.hadoop.fs.Path(s"$h/_latest", f"gen_$id%012d")
+    def isFull(h: String, id: Long) = fs.exists(new org.apache.hadoop.fs.Path(gen(h, id), "_FULL"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // (description, label) of every job this thread launches in `f`
+    def jobsOf(f: => Unit): Seq[(String, String)] = {
+      val marker = "graft.test.cdcAuto"
+      val jobs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.synchronized {
+            val p = js.properties
+            if (p != null && p.getProperty(marker) != null) jobs += ((
+              String.valueOf(p.getProperty("spark.job.description")),
+              Phase.of(p).getOrElse("")))
+          }
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(marker, "1")
+      try f finally {
+        sc.setLocalProperty(marker, null)
+        org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark)
+        sc.removeSparkListener(listener)
+      }
+      jobs.synchronized(jobs.toList)
+    }
+    def run(i: Int): (Seq[(String, String)], Seq[(String, String)]) = {
+      val a = jobsOf(Streams.cdcProcessBatch(batches(i).toDF, auto, i.toLong, collapseEvery = 2))
+      val f = jobsOf(Streams.cdcProcessBatch(batches(i).toDF, fixed, i.toLong, collapseEvery = 2,
+        keyBuckets = Streams.CdcKeyBuckets))
+      // batch for batch, the auto layout derives and keeps the same rows
+      assert(rows(spark.read.parquet(s"$auto/batch_id=$i")) ===
+        rows(spark.read.parquet(s"$fixed/batch_id=$i")), s"events of batch $i")
+      assert(rows(Streams.cdcState(spark, auto, i + 1L).get) ===
+        rows(Streams.cdcState(spark, fixed, i + 1L).get), s"state after batch $i")
+      (a, f)
+    }
+    def assertOneBucket(id: Long): Unit = {
+      val g = gen(auto, id)
+      assert(fs.exists(new org.apache.hadoop.fs.Path(g, "_NBKT_1")), s"gen $id count marker")
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(g, "state")).map(_.getPath.getName)
+        .filter(_.startsWith("__kbkt=")).toSeq === Seq("__kbkt=0"), s"gen $id layout")
+    }
+    // batches 0, 2 and 4 collapse (collapseEvery = 2); each auto full is
+    // one `__kbkt=0` dir, recorded as `_NBKT_1` (checked before a later
+    // collapse's vacuum drops it)
+    val jobs = (0 until batches.size).map { i =>
+      val js = run(i)
+      assert(isFull(auto, i.toLong) === (i % 2 == 0), s"batch $i")
+      if (i % 2 == 0) assertOneBucket(i.toLong)
+      js
+    }
+    assert(fs.exists(new org.apache.hadoop.fs.Path(gen(fixed, 4L), "_NBKT_64")))
+    // a delta against a one-bucket full runs no bucket-set collect and no
+    // parallel listing; the 64-bucket twin's delta does collect
+    for (i <- Seq(1, 3)) {
+      val (a, f) = jobs(i)
+      assert(!a.exists(_._2.contains("cdc.prune")), a.mkString(" | "))
+      assert(!a.exists(_._1.startsWith("Listing leaf files")), a.mkString(" | "))
+      assert(f.exists(_._2.contains("cdc.prune")), f.mkString(" | "))
+    }
+    // a replayed collapse rewrites the same rows and the same layout
+    run(4)
+    assertOneBucket(4L)
   }
 
   test("progress ledger: one queryable row per micro-batch, for any streaming query") {
